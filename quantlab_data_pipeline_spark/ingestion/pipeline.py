@@ -13,15 +13,29 @@ output while the independent branches (prices / fundamentals / analyst
 manifest shapes, and the data_sources.yml provenance log match the
 reference so downstream consumers see an identical layout.
 
+Spark actions are budgeted, because at this data size each job's
+fixed cost (planning, AQE re-planning, codegen, scheduling) outweighs
+its task time:
+
+- one collect per driver-side dimension: the universe's permnos, the
+  CCM links' gvkeys, and the IBES-CRSP mapping, which is collected once
+  (:func:`..localframe.localize`) and then feeds both analyst branches'
+  ticker lists and broadcast sides without re-running its join;
+- one write execution per output, with the row count observed by the
+  write itself; independent writes (processed and metadata tables
+  together) run concurrently under the caller's job group;
+- no read-backs: the field manifest is built from the column names of
+  the frames just written, not from their footers.
+
 Overwrite semantics are intentionally preserved: every run recomputes
 and overwrites all outputs (SURVEY §7.3 trap 5 — do not silently make
 this incremental).
 
 Scale note (100 TB design point): outputs are written as parquet
-directories; pass ``partition_by={"prices_daily": ["year"], ...}``
-after adding a year column to get partition-pruned layouts for the big
-facts. The default layout mirrors the reference (one dataset per
-``<name>.parquet`` path) so the handler contract holds for both.
+directories; pass ``partition_by_year=True`` to get year-partitioned,
+prunable layouts for the two big facts. The default layout mirrors the
+reference (one dataset per ``<name>.parquet`` path) so the handler
+contract holds for both.
 """
 
 from __future__ import annotations
@@ -34,6 +48,7 @@ from datetime import datetime, timezone
 from pathlib import Path
 
 import yaml
+from pyspark import inheritable_thread_target
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
@@ -58,7 +73,7 @@ from ..operators.dividends import attach_close_prices
 from ..operators.factors import join_momentum
 from ..operators.intervals import derive_ibes_coverage
 from ..schemas import FIELD_MAP, SCHEMAS
-from ..localframe import local_df
+from ..localframe import local_df, localize
 from ..session import get_spark
 from ..sources.fred import Fetcher, fetch_macro, http_fred_fetcher
 from ..sources.wrds import JdbcWrdsSource, WrdsSource
@@ -100,7 +115,7 @@ def _write(
     partition_cols: list[str] | None = None,
     single_file: bool = False,
     dynamic: bool = False,
-) -> None:
+) -> list[str]:
     """Parquet sink (S2): overwrite, logging the row count observed by
     the write job itself (``df.observe`` piggybacks a count on the
     write action — zero extra jobs, unlike a post-write re-read, which
@@ -111,47 +126,57 @@ def _write(
     200-row dim is small-file pollution for downstream scans. Facts
     keep their natural parallelism.
 
-    ``dynamic`` (with ``partition_cols``) switches to dynamic
+    ``dynamic`` (with ``partition_cols``) switches this write to dynamic
     partition overwrite: only the partitions PRESENT in ``df`` are
     replaced, the rest of the table is untouched. This is the
     incremental-update path at 100 TB — re-ingesting one month rewrites
-    one year partition, not a 25-year history."""
+    one year partition, not a 25-year history. It is a per-write
+    option, so concurrent writes never see each other's mode.
+
+    Returns the dataset's column names as ``spark.read.parquet(path)``
+    reports them: the frame's columns with the partition columns last.
+    The field manifest is built from these, not from re-read footers."""
     obs = Observation()
     df = df.observe(obs, F.count(F.lit(1)).alias("rows"))
     if single_file:
         df = df.coalesce(1)
-    spark = df.sparkSession
-    mode_key = "spark.sql.sources.partitionOverwriteMode"
-    previous = spark.conf.get(mode_key, "static")
-    if dynamic and partition_cols:
-        spark.conf.set(mode_key, "dynamic")
-    try:
-        writer = df.write.mode("overwrite")
-        if partition_cols:
-            writer = writer.partitionBy(*partition_cols)
-        writer.parquet(str(path))
-    finally:
-        spark.conf.set(mode_key, previous)
+    parts = partition_cols or []
+    writer = df.write.mode("overwrite")
+    if parts:
+        writer = writer.partitionBy(*parts)
+        if dynamic:
+            writer = writer.option("partitionOverwriteMode", "dynamic")
+    writer.parquet(str(path))
     logger.info("Wrote %s rows to %s", obs.get["rows"], path)
+    return [c for c in df.columns if c not in parts] + parts
 
 
-def _write_many(jobs: list[tuple], max_parallel: int = 4) -> None:
+def _write_many(jobs: list[tuple], max_parallel: int = 4) -> dict[str, list[str]]:
     """Run independent write actions concurrently: Spark's scheduler
     interleaves jobs submitted from different threads, so N small
     writes overlap instead of paying N sequential job latencies (and on
     a cluster, writes that individually under-utilize executors share
-    them). Exceptions propagate from the pool."""
+    them). Each pool task runs under the caller's job group and
+    description. Exceptions propagate from the pool.
 
-    def one(job: tuple) -> None:
+    Returns ``{str(path): written column names}`` (see :func:`_write`)."""
+
+    def one(job: tuple) -> list[str]:
         df, path, kw = job
-        _write(df, path, **kw)
+        return _write(df, path, **kw)
 
     if max_parallel <= 1 or len(jobs) <= 1:
-        for j in jobs:
-            one(j)
-        return
-    with ThreadPoolExecutor(max_workers=max_parallel) as ex:
-        list(ex.map(one, jobs))
+        names = [one(j) for j in jobs]
+    else:
+        spark = jobs[0][0].sparkSession
+        with ThreadPoolExecutor(max_workers=max_parallel) as ex:
+            # One wrapper per job: each copies the caller's local
+            # properties, so no two threads share one properties object.
+            futures = [
+                ex.submit(inheritable_thread_target(spark)(one), j) for j in jobs
+            ]
+            names = [f.result() for f in futures]
+    return {str(path): cols for (_, path, _), cols in zip(jobs, names)}
 
 
 def _canon(df: DataFrame, table: str) -> DataFrame:
@@ -161,12 +186,10 @@ def _canon(df: DataFrame, table: str) -> DataFrame:
     return df.select(*names) if set(names) <= set(df.columns) else df
 
 
-def _schema_names(spark: SparkSession, path: Path) -> list[str]:
-    """S6: parquet schema introspection."""
-    try:
-        return spark.read.parquet(str(path)).schema.names
-    except Exception as exc:  # pragma: no cover - diagnostics only
-        return [f"<failed to read cols: {exc}>"]
+def _ibes_tickers(idxref: DataFrame) -> list[str]:
+    """Distinct IBES tickers of the mapping. On the driver-local mapping
+    ``ingest`` passes (:func:`..localframe.localize`) this runs no job."""
+    return sorted({r["ticker"] for r in idxref.select("ticker").collect()} - {None})
 
 
 # ----------------------------------------------------------- step builders
@@ -281,8 +304,9 @@ def build_consensus(
     source: WrdsSource, idxref: DataFrame, start: str, end: str
 ) -> DataFrame:
     """Step 8 (J7 + A2): IBES summary -> permno with validity window,
-    then first-non-null dedup per (date, asset_id)."""
-    tickers = [r["ticker"] for r in idxref.select("ticker").distinct().collect()]
+    then first-non-null dedup per (date, asset_id). Pass ``idxref``
+    localized: its tickers and broadcast side then read driver rows."""
+    tickers = _ibes_tickers(idxref)
     if not tickers:
         spark = idxref.sparkSession
         return local_df(spark, [], ", ".join(f"{c} string" for c in _CONSENSUS_COLS))
@@ -320,8 +344,9 @@ def build_ratings_history(
 ) -> DataFrame:
     """Step 9 (J8 + A3): analyst-level detail -> permno. The reference's
     candidate-column probing (anndats/statpers, analys/amaskcd, ...)
-    becomes explicit coalesces over whichever candidates exist."""
-    tickers = [r["ticker"] for r in idxref.select("ticker").distinct().collect()]
+    becomes explicit coalesces over whichever candidates exist. Pass
+    ``idxref`` localized, as for :func:`build_consensus`."""
+    tickers = _ibes_tickers(idxref)
     if not tickers:
         spark = idxref.sparkSession
         return local_df(spark, [], ", ".join(f"{c} string" for c in _HISTORY_COLS))
@@ -502,8 +527,10 @@ def ingest(
     membership = build_membership(universe, calendar, start, end)
     end_step(step)
 
+    # The mapping is a per-asset dimension read by four actions (two
+    # ticker lists, two broadcast joins): run its interval join once.
     step = start_step("Build IBES-CRSP mapping (CUSIP)")
-    idxref = build_idxref(source, permnos, start, end)
+    idxref = localize(build_idxref(source, permnos, start, end))
     end_step(step)
 
     step = start_step("Download daily prices/returns")
@@ -546,14 +573,15 @@ def ingest(
     dividends = build_dividends(source, prices_monthly, prices, permnos, start, end)
     end_step(step)
 
+    written: dict[str, list[str]] = {}
     step = start_step("Write raw snapshots" if save_raw else "Skip raw snapshots")
     if save_raw:
-        _write_many([
+        written.update(_write_many([
             (prices, raw_dir / "prices_raw.parquet", {}),
             (universe, raw_dir / "sp500_membership_raw.parquet", {}),
             (assets_master, raw_dir / "assets_master_raw.parquet", {}),
             (fundamentals, raw_dir / "fundamentals_raw.parquet", {}),
-            (idxref, raw_dir / "ibes_idxref_raw.parquet", {}),
+            (idxref, raw_dir / "ibes_idxref_raw.parquet", {"single_file": True}),
             (consensus, raw_dir / "analyst_consensus_raw.parquet", {}),
             (ratings, raw_dir / "analyst_ratings_history_raw.parquet", {}),
             (ff_raw, raw_dir / "style_factors_raw.parquet", {}),
@@ -563,7 +591,7 @@ def ingest(
             (dlret_daily, raw_dir / "dlret_daily_raw.parquet", {}),
             (dlret_monthly, raw_dir / "dlret_monthly_raw.parquet", {}),
             (dividends, raw_dir / "dividends_monthly_raw.parquet", {}),
-        ])
+        ]))
     end_step(step)
 
     step = start_step("Write processed datasets")
@@ -575,7 +603,10 @@ def ingest(
         year_cols = None
         prices_out = _canon(prices, "prices_daily")
         returns_out = _canon(returns, "returns_daily")
-    _write_many([
+    universe_out = _canon(
+        membership.withColumnRenamed("in_sp500", "in_universe"), "universe_sp500"
+    )
+    written.update(_write_many([
         (prices_out, processed / "prices_daily.parquet", {"partition_cols": year_cols}),
         (returns_out, processed / "returns_daily.parquet", {"partition_cols": year_cols}),
         (_canon(membership, "sp500_membership"), processed / "sp500_membership.parquet", {}),
@@ -588,7 +619,10 @@ def ingest(
         (_canon(benchmark, "benchmarks"), processed / "benchmarks.parquet", {"single_file": True}),
         (_canon(returns_monthly, "returns_monthly"), processed / "returns_monthly.parquet", {}),
         (_canon(dividends, "dividends_monthly"), processed / "dividends_monthly.parquet", {}),
-    ])
+        (_canon(assets_master, "assets_master"), meta / "assets_master.parquet", {"single_file": True}),
+        (universe_out, meta / "universe_sp500.parquet", {}),
+        (_canon(calendar, "trading_calendar"), meta / "trading_calendar.parquet", {"single_file": True}),
+    ]))
     from ..storage.bucketing import root_scoped_table, write_bucketed
 
     for df_, base in (
@@ -609,16 +643,6 @@ def ingest(
     end_step(step)
 
     step = start_step("Write metadata and manifests")
-    _write(_canon(assets_master, "assets_master"), meta / "assets_master.parquet", single_file=True)
-    _write(
-        _canon(
-            membership.withColumnRenamed("in_sp500", "in_universe"),
-            "universe_sp500",
-        ),
-        meta / "universe_sp500.parquet",
-    )
-    _write(_canon(calendar, "trading_calendar"), meta / "trading_calendar.parquet", single_file=True)
-
     provenance = {
         "ingested_at_utc": datetime.now(timezone.utc).isoformat(),
         "params": {
@@ -656,23 +680,22 @@ def ingest(
     with (meta / "data_sources.yml").open("w", encoding="utf-8") as fh:
         yaml.safe_dump(provenance, fh)
 
+    # Every dataset was written above: its columns are known without
+    # reading a footer back.
     manifest: list[dict] = []
     for name, info in provenance["datasets"].items():
         if name == "raw":
-            for raw_name, raw_path in (info or {}).items():
-                if not raw_path:
-                    continue
-                for col in _schema_names(spark, Path(raw_path)):
-                    manifest.append({
-                        "dataset": raw_name, "type": "raw",
-                        "source": "raw_snapshot", "path": raw_path, "column": col,
-                    })
-            continue
-        for col in _schema_names(spark, Path(info["path"])):
-            manifest.append({
-                "dataset": name, "type": "processed",
-                "source": info["source"], "path": info["path"], "column": col,
-            })
+            entries = [
+                (raw_name, "raw", "raw_snapshot", raw_path)
+                for raw_name, raw_path in info.items() if raw_path
+            ]
+        else:
+            entries = [(name, "processed", info["source"], info["path"])]
+        for dataset, kind, src, path in entries:
+            manifest.extend(
+                {"dataset": dataset, "type": kind, "source": src, "path": path, "column": col}
+                for col in written[path]
+            )
 
     with (meta / "field_manifest.yml").open("w", encoding="utf-8") as fh:
         yaml.safe_dump(manifest, fh)

@@ -14,12 +14,19 @@ Error contracts preserved:
 
 Public ``get_*`` methods return pandas (drop-in for the reference);
 ``get_*_df`` variants return the lazy Spark DataFrame for composition.
+
+Each table is resolved once per handler: the first read of a table
+lists its files and infers its schema (a Spark job), later reads reuse
+that scan. A resolution is keyed on the dataset path's modification
+stamp (inode + mtime), so a re-ingest into the same root — which
+replaces the path — is picked up by the next read. The driver-side
+assets dimension (the ticker map) follows the same rule.
 """
 
 from __future__ import annotations
 
 from pathlib import Path
-from typing import Optional
+from typing import Callable, Optional, TypeVar
 
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
@@ -52,6 +59,8 @@ _DATE_COLS: dict[str, list[str]] = {
 
 _META_TABLES = {"assets_master", "universe_sp500", "trading_calendar"}
 
+_T = TypeVar("_T")
+
 
 class LocalParquetDataHandler(DataHandler):
     """Local parquet-backed implementation of :class:`DataHandler` on Spark.
@@ -75,7 +84,8 @@ class LocalParquetDataHandler(DataHandler):
         self.spark = spark or get_spark()
         self.processed_path = (root / processed_dir).resolve()
         self.meta_path = (root / meta_dir).resolve()
-        self._assets_cache: Optional[pd.DataFrame] = None
+        # (kind, table) -> (path stamp, resolved value); see _resolved
+        self._resolutions: dict[tuple[str, str], tuple[tuple[int, int], object]] = {}
         self._field_map = self._load_field_mapping(field_map_path)
 
     @staticmethod
@@ -102,20 +112,37 @@ class LocalParquetDataHandler(DataHandler):
 
     def _dataset_path(self, table: str) -> Path:
         base = self.meta_path if table in _META_TABLES else self.processed_path
-        path = base / f"{table}.parquet"
-        if not path.exists():
-            raise FileNotFoundError(f"Missing dataset at {path}")
-        return path
+        return base / f"{table}.parquet"
+
+    def _resolved(self, kind: str, table: str, build: Callable[[Path], _T]) -> _T:
+        """``build(path)`` for ``table``, reused while the dataset path
+        keeps its stamp. An overwrite deletes and recreates the path (a
+        dynamic partition overwrite renames entries inside it), so the
+        stamp changes and the next call resolves again."""
+        path = self._dataset_path(table)
+        try:
+            st = path.stat()
+        except FileNotFoundError:
+            raise FileNotFoundError(f"Missing dataset at {path}") from None
+        stamp = (st.st_ino, st.st_mtime_ns)
+        hit = self._resolutions.get((kind, table))
+        if hit is None or hit[0] != stamp:
+            hit = (stamp, build(path))
+            self._resolutions[(kind, table)] = hit
+        return hit[1]
 
     def _scan(self, table: str) -> DataFrame:
-        """Schema'd lazy scan with date-column normalization to timestamp.
+        """Schema'd lazy scan with date-column normalization to timestamp,
+        resolved once per path stamp (:meth:`_resolved`).
 
         Timestamps (not DateType) are used so ``toPandas()`` yields
         datetime64[ns] columns exactly like the reference's
         ``pd.to_datetime`` post-parse.
         """
-        df = self.spark.read.parquet(str(self._dataset_path(table)))
-        return self._normalize_dates(df, table)
+        return self._resolved(
+            "scan", table,
+            lambda path: self._normalize_dates(self.spark.read.parquet(str(path)), table),
+        )
 
     @staticmethod
     def _normalize_dates(df: DataFrame, table: str) -> DataFrame:
@@ -131,26 +158,29 @@ class LocalParquetDataHandler(DataHandler):
 
     # ------------------------------------------------------- dim-table cache
 
-    def _assets_master(self) -> pd.DataFrame:
-        """Driver-side cache of the small assets dimension.
+    def _ticker_map(self) -> dict[str, int]:
+        """Driver-side ticker -> asset_id map of the small assets dimension.
 
         Collected to the driver (it is a ~10k-row dim even at full scale)
         to keep the reference's eager ``ValueError`` contract for unknown
-        tickers — a lazy join cannot raise at call time.
+        tickers — a lazy join cannot raise at call time. Re-collected when
+        the table is rewritten (:meth:`_resolved`).
         """
-        if self._assets_cache is None:
-            self._assets_cache = self._scan("assets_master").toPandas()
-        return self._assets_cache
+
+        def collect(_path: Path) -> dict[str, int]:
+            assets = self._scan("assets_master").select("ticker", "asset_id").toPandas()
+            return {t: int(a) for t, a in zip(assets["ticker"], assets["asset_id"])}
+
+        return self._resolved("tickers", "assets_master", collect)
 
     def _tickers_to_asset_ids(self, tickers: AssetLike | None) -> list[int]:
         if tickers is None:
             return []
-        assets = self._assets_master()
-        mapping = dict(zip(assets["ticker"], assets["asset_id"]))
+        mapping = self._ticker_map()
         missing = [t for t in tickers if t not in mapping]
         if missing:
             raise ValueError(f"Tickers not found in assets_master: {missing}")
-        return [int(mapping[t]) for t in tickers]
+        return [mapping[t] for t in tickers]
 
     # ----------------------------------------------------------- pure pieces
 

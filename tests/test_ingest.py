@@ -65,6 +65,112 @@ def test_manifests_written(data_root):
     assert (data_root / "reference" / "field_manifest.csv").exists()
 
 
+def _manifest_matching_disk(root, spark) -> pd.DataFrame:
+    """The root's field manifest, after checking that each dataset's
+    columns are what a read of its path reports."""
+    manifest = pd.read_csv(root / "data_meta" / "field_manifest.csv")
+    assert len(manifest)
+    for (dataset, path), rows in manifest.groupby(["dataset", "path"], sort=False):
+        on_disk = spark.read.parquet(path).schema.names
+        assert list(rows["column"]) == on_disk, dataset
+    return manifest
+
+
+def test_manifest_columns_are_the_written_schemas(data_root, spark):
+    """The manifest comes from the written frames' columns, not from
+    reading footers back: it must still list exactly what a read of
+    every dataset, raw snapshots included, reports."""
+    manifest = _manifest_matching_disk(data_root, spark)
+    assert manifest["dataset"].nunique() == 15 + 14  # processed + raw
+
+
+def test_manifest_columns_partitioned_layout(part_root, spark):
+    """Spark reports a partition column after the data columns."""
+    manifest = _manifest_matching_disk(part_root, spark)
+    prices = manifest[manifest["dataset"] == "prices_daily"]["column"]
+    assert list(prices) == SCHEMAS["prices_daily"].names + ["year"]
+
+
+def test_open_handler_reads_a_reingest_into_the_same_root(spark, tmp_path_factory):
+    """A handler resolves each table once; an ingest that rewrites the
+    root must still be seen by the next read: new rows, no missing-file
+    error from the replaced files, and a refreshed ticker map."""
+    root = tmp_path_factory.mktemp("reingest_root")
+
+    def run(n_assets, start, end):
+        return ingest(
+            root, start, end, save_raw=False,
+            source=SyntheticWrdsSource(spark, n_assets=n_assets),
+            fred_fetcher=synthetic_fred_fetcher(), spark=spark,
+        )
+
+    h = LocalParquetDataHandler(run(2, "2020-01-01", "2020-03-31"), spark=spark)
+    before = h.get_prices(["ALPH"], fields=["close"])
+    assert pd.Timestamp(before["date"].max()) <= pd.Timestamp("2020-03-31")
+    with pytest.raises(ValueError):
+        h.get_prices(["CHRL"])  # the third asset is not ingested yet
+
+    run(3, "2020-04-01", "2020-06-30")
+    after = h.get_prices(["ALPH"], fields=["close"])
+    assert len(after) > 0
+    assert pd.Timestamp(after["date"].min()) >= pd.Timestamp("2020-04-01")
+    assert len(h.get_prices(["CHRL"])) > 0
+    assert len(h.get_prices_with_returns_df(["CHRL"]).toPandas()) > 0
+
+
+def _count_jobs(spark, fn) -> tuple[int, set]:
+    """Run ``fn`` under a fresh job group. Returns the number of jobs in
+    that group and the ids of jobs that ran outside any group meanwhile
+    (a thread that lost the caller's group)."""
+    import uuid
+
+    sc = spark.sparkContext
+    bus = sc._jsc.sc().listenerBus()
+    tracker = sc.statusTracker()
+    bus.waitUntilEmpty()
+    ungrouped = set(tracker.getJobIdsForGroup(None))
+    group = f"gate-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    bus.waitUntilEmpty()
+    return (
+        len(tracker.getJobIdsForGroup(group)),
+        set(tracker.getJobIdsForGroup(None)) - ungrouped,
+    )
+
+
+def test_repeated_read_runs_no_schema_inference_job(data_root, spark):
+    h = LocalParquetDataHandler(data_root, spark=spark)
+    args = (["ALPH"], START, END, ["close"])
+    first, _ = _count_jobs(spark, lambda: h.get_prices_df(*args))
+    again, _ = _count_jobs(spark, lambda: h.get_prices_df(*args))
+    assert first > 0  # file listing + schema inference + ticker map
+    assert again == 0
+
+
+# Jobs of the 16-asset ingest below, measured on this suite's session
+# (local[8], 8 shuffle partitions), plus a little headroom. A read-back
+# or a re-run dimension that creeps back in breaks this gate.
+INGEST_JOBS = 45
+INGEST_JOB_HEADROOM = 3
+
+
+def test_ingest_job_budget(spark, tmp_path_factory):
+    root = tmp_path_factory.mktemp("job_budget_root")
+    jobs, outside = _count_jobs(spark, lambda: ingest(
+        root, START, END, save_raw=False,
+        source=SyntheticWrdsSource(spark, n_assets=16),
+        fred_fetcher=synthetic_fred_fetcher(), spark=spark,
+    ))
+    total = jobs + len(outside)
+    assert total <= INGEST_JOBS + INGEST_JOB_HEADROOM, total
+    assert not outside, "ingest ran jobs outside the caller's job group"
+
+
 def test_adj_close_derivation(handler):
     px = handler.get_prices(["BRVO"], start_date=START, end_date=END)
     assert len(px) > 0
@@ -214,9 +320,8 @@ def test_monthly_returns_shape(handler, data_root, spark):
     assert len(rm) > 0
 
 
-def test_partitioned_layout_prunes_and_matches(spark, tmp_path_factory, data_root):
-    """partition_by_year=True: same handler answers, year-partitioned
-    files on disk, and date filters prune partitions at the scan."""
+@pytest.fixture(scope="module")
+def part_root(spark, tmp_path_factory):
     root = tmp_path_factory.mktemp("ingest_part")
     ingest(
         root, START, END, save_raw=False,
@@ -224,7 +329,12 @@ def test_partitioned_layout_prunes_and_matches(spark, tmp_path_factory, data_roo
         fred_fetcher=synthetic_fred_fetcher(), spark=spark,
         partition_by_year=True,
     )
-    part_root = root / "quantlab_data_pipeline"
+    return root / "quantlab_data_pipeline"
+
+
+def test_partitioned_layout_prunes_and_matches(spark, part_root, data_root):
+    """partition_by_year=True: same handler answers, year-partitioned
+    files on disk, and date filters prune partitions at the scan."""
     prices_dir = part_root / "data_processed" / "prices_daily.parquet"
     assert (prices_dir / "year=2020").exists()
 
