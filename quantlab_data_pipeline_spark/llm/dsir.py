@@ -58,6 +58,7 @@ __all__ = [
     "compact_dsir_counts",
     "load_dsir_counts",
     "read_dsir_meta",
+    "write_dsir_meta",
     "dsir_select_stored",
 ]
 
@@ -338,6 +339,13 @@ def build_dsir_counts(
     )
     counts = per_doc.groupBy("bucket").agg(F.sum("cnt").alias("cnt"))
     counts.write.mode("overwrite").parquet(f"{path}/counts")
+    write_dsir_meta(spark, path, buckets, ns)
+
+
+def write_dsir_meta(
+    spark: SparkSession, path: str, buckets: int, ns: tuple[int, ...]
+) -> None:
+    """Pin the store at ``path`` to the (buckets, ns) feature space."""
     local_df(
         spark,
         [(int(buckets), ",".join(str(n) for n in ns))],
@@ -436,8 +444,8 @@ def dsir_select_stored(
 
     ``known_meta``: the (buckets, ns) BOTH stores are pinned to, for a
     caller that already read it and owns the agreement (the intake
-    sink reads the target meta per batch anyway and creates the raw
-    store's meta as a copy of it) — skips this function's two
+    sink reads the target meta once, and either creates the raw
+    store's meta as a copy of it or checks it once) — skips this function's two
     meta-read jobs and the redundant cross-store equality check.
     Default None keeps the reads + check for independent callers."""
     spark = batch.sparkSession

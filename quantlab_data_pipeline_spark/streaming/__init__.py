@@ -21,8 +21,9 @@ from .events import (
 )
 from .drift import baseline_histogram, psi_from_cells, windowed_bin_counts
 from .locf import streaming_forward_fill
+from .ledger import last_applied_batch
 from .pipeline import curation_intake_sink, streaming_curation_pipeline
-from .rollup_sink import last_applied_batch, rollup_sink
+from .rollup_sink import rollup_sink
 from .sketches import windowed_distinct_estimate, windowed_distinct_sketch
 
 __all__ = [

@@ -11,16 +11,15 @@ appends only the accepted novel vectors under the FROZEN centroids
 (the FAISS add-after-train convention — query semantics stay identical
 to a from-scratch build with the same quantizers).
 
-Order of operations per batch is the media sink's, and load-bearing
-for the same reasons (verdicts to stable storage BEFORE the index
-mutates — appending re-caches dependent plans against the new file
-list; ledger fast-path; anti-join append so crash-replays converge):
+Per batch, under :mod:`.ledger`, in the media sink's order and for
+its reasons (verdicts reach stable storage BEFORE the index mutates,
+because appending re-caches dependent plans against the new file
+list):
 
 1. flag the batch against the index (partition-pruned nprobe scan);
-2. write verdicts hive-partitioned by batch_id with dynamic partition
-   overwrite (a replay rewrites, never duplicates);
-3. append accepted vectors, anti-joined on already-stored ids;
-4. record the batch id in the ledger.
+2. write the localCheckpointed verdicts as the batch's ``batch_id``
+   partition; the kept ids come from the same checkpoint;
+3. append accepted vectors, anti-joined on already-stored ids.
 
 Intra-batch policy matches media intake: two same-batch vectors within
 the threshold are both admitted (the index arbitrates across batches);
@@ -34,13 +33,12 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..fsutil import path_exists
-from ..localframe import local_df
 from ..llm.ann_index import (
     append_to_ann_index,
     build_ivf_index,
     query_ivf_index,
 )
-from .rollup_sink import last_applied_batch
+from .ledger import ledgered, overwrite_batch_partition
 
 __all__ = ["ann_intake_sink", "read_ann_verdicts"]
 
@@ -75,12 +73,10 @@ def ann_intake_sink(
     vectors enter the index.
     """
 
-    def _apply(batch_df: DataFrame, batch_id: int) -> None:
+    def _body(batch_df: DataFrame, batch_id: int) -> bool | None:
         spark = batch_df.sparkSession
-        if batch_id <= last_applied_batch(spark, index_path):
-            return  # replayed after commit: already folded in, skip
         if batch_df.isEmpty():
-            return
+            return None
         first = not _index_exists(spark, index_path)
         if first:
             flagged = batch_df.select(
@@ -124,23 +120,16 @@ def ann_intake_sink(
             .agg(F.min(id_col).alias(id_col))
             .select(id_col, F.lit(True).alias("kept"))
         )
-        verdicts = flagged.join(winners, id_col, "left").withColumn(
-            "kept", F.coalesce("kept", F.lit(False))
+        # Step 2: verdicts to stable storage BEFORE the index mutates,
+        # checkpointed so the kept ids below cannot re-evaluate the flag
+        # plan against the appended index (see media_intake).
+        verdicts = (
+            flagged.join(winners, id_col, "left")
+            .withColumn("kept", F.coalesce("kept", F.lit(False)))
+            .localCheckpoint()
         )
-        # Step 2: verdicts to stable storage BEFORE the index mutates.
-        (
-            verdicts.withColumn("batch_id", F.lit(int(batch_id)))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch_id")
-            .parquet(out_path)
-        )
-        kept_ids = (
-            spark.read.parquet(out_path)
-            .filter(F.col("batch_id") == int(batch_id))
-            .filter("kept")
-            .select(id_col)
-        )
+        overwrite_batch_partition(verdicts, batch_id, out_path)
+        kept_ids = verdicts.filter("kept").select(id_col)
         accepted = batch_df.join(kept_ids, id_col)
         if first:
             build_ivf_index(
@@ -162,13 +151,9 @@ def ann_intake_sink(
                 append_to_ann_index(
                     novel, index_path, id_col=id_col, vec_col=vec_col
                 )
-        local_df(
-            spark, [(int(batch_id),)], "batch_id long"
-        ).coalesce(1).write.mode("append").parquet(
-            f"{index_path}/_applied_batch"
-        )
+        return True
 
-    return _apply
+    return ledgered(index_path, _body)
 
 
 def read_ann_verdicts(spark: SparkSession, out_path: str) -> DataFrame:

@@ -7,29 +7,23 @@ batch by batch); this wires a crawl STREAM into it, so every
 micro-batch is importance-scored at decision time and the raw model
 follows the crawl without ever re-tokenizing accepted batches.
 
-Per micro-batch, in this order:
+Per micro-batch, under :mod:`.ledger` and in this order:
 
-1. FOLD the batch's bucket-count delta into the raw store, written to
-   ``{raw_path}/counts/batch_id=N`` with dynamic partition overwrite —
-   a crash-replay rewrites its own partition, so folding is exactly
-   idempotent even though counts (unlike fingerprints) cannot be
-   anti-joined. The first non-empty batch also writes the store meta,
-   COPIED from the target store so the two feature spaces can never
-   diverge.
+1. FOLD the batch's bucket-count delta into the raw store as its
+   ``{raw_path}/counts/batch_id=N`` partition — counts (unlike
+   fingerprints) cannot be anti-joined, so the partition overwrite is
+   what makes the fold exactly idempotent. The first non-empty batch
+   also writes the store meta, COPIED from the target store so the two
+   feature spaces can never diverge; a raw store found already present
+   is checked once against the target's meta instead.
 2. score the batch with :func:`..llm.dsir.dsir_select_stored` against
    the target store and the just-folded raw store — each batch scores
    under the raw model including everything seen up to and including
    itself (the uniform rule that makes batch 0, whose only model is
    itself, consistent with every later batch), with selection ranks
    and the frac/k cut applied WITHIN the batch;
-3. verdicts land at ``out_path`` hive-partitioned by ``batch_id``
-   (dynamic overwrite: replays rewrite, never duplicate);
-4. the ledger records the batch id (fast-path skip on the ordinary
-   replay-after-commit).
-
-Re-running any prefix of the four steps converges: 1 and 3 are
-partition overwrites keyed on the batch id, 2 is a pure function of
-stores that step 1 makes deterministic, 4 is the commit mark.
+3. verdicts land at ``out_path`` as the batch's ``batch_id``
+   partition.
 """
 
 from __future__ import annotations
@@ -37,10 +31,14 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..llm.dsir import dsir_select_stored, hashed_ngram_counts, read_dsir_meta
+from ..llm.dsir import (
+    dsir_select_stored,
+    hashed_ngram_counts,
+    read_dsir_meta,
+    write_dsir_meta,
+)
 from ..fsutil import path_exists
-from ..localframe import local_df
-from .rollup_sink import last_applied_batch
+from .ledger import ledgered, overwrite_batch_partition
 
 __all__ = ["dsir_intake_sink", "read_dsir_verdicts"]
 
@@ -73,24 +71,32 @@ def dsir_intake_sink(
     — the :func:`..llm.dsir.dsir_select` contract, cut within the
     batch. The target store must exist (built offline with
     ``build_dsir_counts``); the raw store is created and owned by this
-    sink, its feature space copied from the target's.
+    sink, its feature space copied from the target's. A raw store left
+    under a different feature space raises ``ValueError``.
     """
     if (frac is None) == (k is None):
         raise ValueError("pass exactly one of frac= or k=")
+    meta = None  # the target's (buckets, ns), read once per instance
+    raw_checked = False
 
-    def _apply(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        if batch_id <= last_applied_batch(spark, raw_path):
-            return  # replayed after commit: already folded in, skip
+    def _body(batch_df: DataFrame, batch_id: int) -> bool | None:
+        nonlocal meta, raw_checked
         if batch_df.isEmpty():
-            return
-        buckets, ns = read_dsir_meta(spark, target_path)
+            return None
+        spark = batch_df.sparkSession
+        if meta is None:
+            meta = read_dsir_meta(spark, target_path)
         if not _store_exists(spark, raw_path):
-            local_df(
-                spark,
-                [(int(buckets), ",".join(str(n) for n in ns))],
-                "buckets int, ns string",
-            ).coalesce(1).write.mode("overwrite").parquet(f"{raw_path}/meta")
+            write_dsir_meta(spark, raw_path, *meta)
+        elif not raw_checked:
+            raw_meta = read_dsir_meta(spark, raw_path)
+            if raw_meta != meta:
+                raise ValueError(
+                    f"raw store {raw_path} has (buckets, ns) = {raw_meta}, "
+                    f"target {target_path} has {meta}"
+                )
+        raw_checked = True
+        buckets, ns = meta
         # ONE tokenize pass per batch (guide §1.2): the md5-per-gram
         # explode is the dominant per-batch cost, and both the fold
         # (step 1) and the scoring join (step 2) consume exactly the
@@ -103,43 +109,31 @@ def dsir_intake_sink(
         counts = hashed_ngram_counts(
             batch_df, buckets=buckets, ns=ns
         ).localCheckpoint()
-        # Step 1: fold — partition overwrite keyed on batch_id makes a
-        # crash-replay rewrite its own delta, never double-count it.
-        (
-            counts.groupBy("bucket")
-            .agg(F.sum("cnt").alias("cnt"))
-            .withColumn("batch_id", F.lit(int(batch_id)))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch_id")
-            .parquet(f"{raw_path}/counts")
+        # Step 1: fold — a crash-replay rewrites its own delta, never
+        # double-counts it.
+        overwrite_batch_partition(
+            counts.groupBy("bucket").agg(F.sum("cnt").alias("cnt")),
+            batch_id,
+            f"{raw_path}/counts",
         )
         # Step 2+3: score under the just-folded model, verdicts out.
-        (
-            dsir_select_stored(
-                batch_df,
-                target_path,
-                raw_path,
-                frac=frac,
-                k=k,
-                salt=salt,
-                batch_counts=counts,
-                # this sink read the target meta above and created the
-                # raw store's meta as a copy of it — the scorer's two
-                # meta reads + equality check are redundant per batch
-                known_meta=(buckets, ns),
-            )
-            .withColumn("batch_id", F.lit(int(batch_id)))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch_id")
-            .parquet(out_path)
+        verdicts = dsir_select_stored(
+            batch_df,
+            target_path,
+            raw_path,
+            frac=frac,
+            k=k,
+            salt=salt,
+            batch_counts=counts,
+            # the raw store's meta is the target's (created as a copy
+            # above, or checked once): the scorer's two meta reads +
+            # equality check would repeat that per batch
+            known_meta=meta,
         )
-        local_df(
-            spark, [(int(batch_id),)], "batch_id long"
-        ).coalesce(1).write.mode("append").parquet(f"{raw_path}/_applied_batch")
+        overwrite_batch_partition(verdicts, batch_id, out_path)
+        return True
 
-    return _apply
+    return ledgered(raw_path, _body)
 
 
 def read_dsir_verdicts(spark: SparkSession, out_path: str) -> DataFrame:

@@ -8,7 +8,8 @@ becomes the continuously-maintained dedup state of a crawl. The sink
 is ``foreachBatch`` — appending to an external bucketed index is a
 batch-only operation.
 
-Per micro-batch, IN THIS ORDER (the order is load-bearing):
+Per micro-batch, under :mod:`.ledger` and IN THIS ORDER (the order is
+load-bearing):
 
 1. flag the batch against the index (banded candidate join + exact
    Hamming; the corpus side reads in place, only the batch shuffles)
@@ -22,20 +23,9 @@ Per micro-batch, IN THIS ORDER (the order is load-bearing):
    verdict frame is therefore localCheckpointed — materialized,
    lineage-free blocks that CANNOT re-evaluate against the mutated
    index — written to stable storage, and reused in memory for every
-   downstream step (the old flow re-read the verdict files per batch
-   to get the same guarantee; the checkpoint gives it without the
-   read-back scan);
+   downstream step;
 3. append the keepers to the index, anti-joined against the
-   fingerprints already stored so a crash-replay of the same batch
-   appends nothing twice;
-4. record the batch id in the ledger (fast-path skip for the ordinary
-   Structured Streaming replay-after-commit).
-
-Idempotency, stated plainly: verdicts are written with dynamic
-partition overwrite on ``batch_id`` (a replayed batch replaces its own
-partition, never duplicates rows) and the index append is
-anti-joined, so re-running ANY prefix of the four steps converges to
-the same state.
+   fingerprints already stored.
 
 Granularity caveat: two assets in the SAME micro-batch whose
 fingerprints differ by 1..max_hamming bits are both admitted — the
@@ -57,8 +47,7 @@ from ..llm.media_index import (
     flag_new_media,
 )
 from ..fsutil import path_exists
-from ..localframe import local_df
-from .rollup_sink import last_applied_batch
+from .ledger import ledgered, overwrite_batch_partition
 
 __all__ = ["media_intake_sink", "read_intake_verdicts"]
 
@@ -110,13 +99,14 @@ def media_intake_sink(
     partitioned by ``batch_id``: (asset_id, is_dup, best_match_id,
     best_hamming, n_matches, kept) — ``is_dup`` is the cross-batch
     index verdict, ``kept`` additionally requires winning the
-    intra-batch exact dedup; only kept assets enter the index.
+    intra-batch exact dedup; only kept assets enter the index. Called
+    directly, the sink returns ``(applied, kept)`` as
+    :func:`.ledger.ledgered` does, ``kept`` being the kept
+    ``asset_id`` frame.
     """
 
-    def _apply(batch_df: DataFrame, batch_id: int) -> DataFrame | None:
+    def _body(batch_df: DataFrame, batch_id: int) -> DataFrame | None:
         spark = batch_df.sparkSession
-        if batch_id <= last_applied_batch(spark, index_path):
-            return None  # replayed after commit: already folded in, skip
         # ONE decode+fingerprint pass per batch (guide §1.2/§4): every
         # decision below — flag, intra-batch winner, accepted set,
         # index append — needs only the 16-byte (asset_id, fp) rows,
@@ -145,26 +135,14 @@ def media_intake_sink(
         else:
             flagged = flag_new_media(batch_df, index_path, precomputed_fp=fp)
         # Step 2: verdicts to stable storage BEFORE the index mutates
-        # (see module docstring); dynamic overwrite of this batch's
-        # partition makes a crash-replay rewrite, not duplicate. The
-        # verdict frame is localCheckpointed ONCE: the write, the kept
-        # set, and the index append all read the same materialized
-        # lineage-free blocks, so nothing downstream can re-evaluate
-        # the flag plan against the post-append index (the hazard the
-        # old flow paid a storage read-back per batch to avoid — a
-        # checkpoint has no lineage to re-cache, so the read-back job
-        # and its out_path listing are gone; guide §1.2/§5).
-        verdicts = (
-            _with_kept(flagged, fp)
-            .withColumn("batch_id", F.lit(int(batch_id)))
-            .localCheckpoint()
-        )
-        (
-            verdicts.write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch_id")
-            .parquet(out_path)
-        )
+        # (see module docstring). The verdict frame is localCheckpointed
+        # ONCE: the write, the kept set, and the index append all read
+        # the same materialized lineage-free blocks, so nothing
+        # downstream can re-evaluate the flag plan against the
+        # post-append index (a checkpoint has no lineage to re-cache,
+        # so no storage read-back is needed; guide §1.2/§5).
+        verdicts = _with_kept(flagged, fp).localCheckpoint()
+        overwrite_batch_partition(verdicts, batch_id, out_path)
         kept_ids = verdicts.filter("kept").select("asset_id")
         accepted_fp = fp.join(kept_ids, "asset_id")
         if first:
@@ -179,7 +157,7 @@ def media_intake_sink(
             )
         else:
             # Anti-join against stored fingerprints: a replay of this
-            # batch after a crash between steps 3 and 4 appends nothing.
+            # batch after a crash before the mark appends nothing.
             # Checkpointed so the emptiness probe and the append read
             # one materialization (the probe used to run the anti-join
             # once for limit-1 and the append a second time in full).
@@ -194,9 +172,6 @@ def media_intake_sink(
                 append_to_media_index(
                     None, index_path, precomputed_fp=novel
                 )
-        local_df(
-            spark, [(int(batch_id),)], "batch_id long"
-        ).coalesce(1).write.mode("append").parquet(f"{index_path}/_applied_batch")
         # The kept set, handed back so a composing sink (the curation
         # pipeline) can feed its next stage without re-reading the
         # verdict log it just wrote. Derived from the checkpointed
@@ -204,7 +179,7 @@ def media_intake_sink(
         # back. foreachBatch itself ignores the return value.
         return kept_ids
 
-    return _apply
+    return ledgered(index_path, _body)
 
 
 def read_intake_verdicts(spark: SparkSession, out_path: str) -> DataFrame:

@@ -14,17 +14,12 @@ perceptual index and the DSIR raw-count model) run inside ONE
 ``foreachBatch`` sink that composes the existing replay-idempotent
 intake sinks (:func:`..streaming.media_intake.media_intake_sink`,
 :func:`..streaming.dsir_intake.dsir_intake_sink`) under the SAME
-batch_id. Composing the sinks rather than re-implementing them means
-every crash/replay guarantee is inherited stage by stage:
-
-* a replayed batch id is skipped by each store's ledger;
-* a crash BETWEEN the media stage and the DSIR stage replays into a
-  media ledger-skip (its verdicts are already persisted, and the kept
-  set is re-read from them — identical input to the DSIR stage) and a
-  normal DSIR run;
-* a crash before either ledger write re-runs that stage onto
-  partition-overwritten verdicts and anti-joined appends — convergent,
-  as pinned by the per-sink replay tests.
+batch_id, each under its own :mod:`.ledger`. Composing the sinks rather
+than re-implementing them means every crash/replay guarantee is
+inherited stage by stage. A crash BETWEEN the media stage and the DSIR
+stage replays into a media ledger skip, which the media stage reports;
+the kept set is then read back from its persisted verdicts (identical
+input to the DSIR stage) and the DSIR stage runs normally.
 
 Scale shape: everything upstream is per-row projection work; the sink
 stages shuffle only 8-byte fingerprints / bucket counts per batch
@@ -102,25 +97,20 @@ def curation_intake_sink(
         ).localCheckpoint()
         if docs.isEmpty():
             return
-        kept_ids = media_apply(media_from_text(docs, dims=dims), batch_id)
-        if kept_ids is not None:
-            # Normal path: the media sink hands back its kept set,
-            # derived from the localCheckpointed verdict frame it just
-            # persisted — byte-equal to re-reading the verdict log,
-            # without the per-batch listing+scan of ``media_out``
-            # (guide §1.2).
-            kept = kept_ids.select(F.col("asset_id").alias("doc_id"))
-        else:
-            # Replay where the media ledger skips (verdicts already
-            # persisted by a previous attempt): read the keeper set
-            # back from the PERSISTED verdicts — identical input to
-            # the DSIR stage as the original attempt saw.
+        # Normal path: the media stage hands back its kept set, taken
+        # from the verdicts it just checkpointed, so ``media_out`` is
+        # not re-read.
+        applied, kept = media_apply(media_from_text(docs, dims=dims), batch_id)
+        if not applied:
+            # The media ledger skipped (a previous attempt committed the
+            # stage): read the keeper set back from the PERSISTED
+            # verdicts — the input the DSIR stage saw then.
             kept = (
                 read_intake_verdicts(spark, media_out)
                 .filter(F.col("batch_id") == int(batch_id))
                 .filter("kept")
-                .select(F.col("asset_id").alias("doc_id"))
             )
+        kept = kept.select(F.col("asset_id").alias("doc_id"))
         dsir_apply(docs.join(kept, "doc_id"), batch_id)
 
     return _apply

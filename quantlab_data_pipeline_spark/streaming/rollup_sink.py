@@ -9,33 +9,21 @@ overwrite of the touched grain partitions), with exactly-once refresh
 per micro-batch under the checkpoint's batch-id tracking as long as
 the refresh itself is idempotent per batch id.
 
-Idempotency caveat, stated plainly: ``refresh_rollup`` is additive, so
-a micro-batch REPLAYED after a crash-between-commit would double-count.
-The sink therefore records the last applied batch id inside the store
-(``_applied_batch`` subdirectory, one row) and skips batches it has
-already folded in — the same ledger trick a warehouse MERGE would use.
+Replay: the sink runs under :mod:`.ledger`. ``refresh_rollup`` is
+additive, so the ledger skip is what keeps a replay-after-commit from
+double-counting; a crash after the refresh but before the mark still
+re-folds that batch on replay.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
+from pyspark.sql import DataFrame
 
 from ..fsutil import is_dir
-from ..localframe import local_df
-from ..storage.rollup import refresh_rollup
+from ..storage.rollup import build_rollup, refresh_rollup
+from .ledger import last_applied_batch, ledgered
 
 __all__ = ["rollup_sink", "last_applied_batch"]
-
-
-def last_applied_batch(spark: SparkSession, path: str) -> int:
-    """Highest micro-batch id already folded into the store (-1 if
-    none)."""
-    try:
-        rows = spark.read.parquet(f"{path}/_applied_batch").collect()
-    except Exception:  # noqa: BLE001 — first batch: ledger doesn't exist yet
-        return -1
-    return max((int(r["batch_id"]) for r in rows), default=-1)
 
 
 def rollup_sink(
@@ -55,22 +43,13 @@ def rollup_sink(
              .start())
     """
 
-    def _apply(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        if batch_id <= last_applied_batch(spark, path):
-            return  # replayed batch: already folded in, skip (idempotent)
+    def _body(batch_df: DataFrame, batch_id: int) -> bool | None:
         if batch_df.isEmpty():
-            return
-        if not is_dir(spark, path):
-            # First data: build via an empty-store refresh (refresh with
-            # no existing partitions is exactly a build).
-            from ..storage.rollup import build_rollup
+            return None
+        # the first data builds the store; later batches refresh it
+        exists = is_dir(batch_df.sparkSession, path)
+        fold = refresh_rollup if exists else build_rollup
+        fold(batch_df, path, time_col, dims, value_col, grain)
+        return True
 
-            build_rollup(batch_df, path, time_col, dims, value_col, grain)
-        else:
-            refresh_rollup(batch_df, path, time_col, dims, value_col, grain)
-        local_df(
-            spark, [(int(batch_id),)], "batch_id long"
-        ).coalesce(1).write.mode("append").parquet(f"{path}/_applied_batch")
-
-    return _apply
+    return ledgered(path, _body)

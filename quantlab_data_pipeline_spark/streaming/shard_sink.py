@@ -16,20 +16,10 @@ trivially cacheable downloads) at the cost of at most one underfull
 shard per batch (bounded waste: < target_bytes per batch, amortized
 away at production batch sizes).
 
-Crash-safety, same discipline as ``media_intake.py``:
-
-* the ledger (``_applied_batch``) is written LAST; a replayed batch id
-  at or below the ledger high-water mark is skipped outright;
-* a replay of a batch that crashed before its ledger write recomputes
-  the SAME base (the base derivation excludes the current batch's own
-  manifest rows, so a crash after the manifest write cannot shift it)
-  and the same shard ids (pure function of batch content), and both
-  writes are dynamic-partition overwrites of exactly the partitions
-  the crashed attempt touched — replay converges to the identical
-  store, byte for byte;
-* store-existence probes go through the Hadoop FileSystem
-  (:mod:`..fsutil`), never ``os.path`` — a restart on ``hdfs://`` /
-  ``s3a://`` must see the existing store.
+Replay follows :mod:`.ledger`. What this sink adds: the shard base
+excludes the current batch's own manifest rows and shard ids are a
+pure function of batch content, so a replay after a crash overwrites
+the same partitions with the same bytes.
 
 Scale shape per batch: ONE range exchange for the prefix sum (frozen
 with ``localCheckpoint`` inside ``grouped_global_cumsum`` so the
@@ -45,8 +35,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..fsutil import is_dir
-from ..localframe import local_df
 from ..llm.sharding import content_fingerprint, shard_assign, shard_manifest
+from .ledger import last_applied_batch, ledgered, overwrite_batch_partition
 
 __all__ = [
     "shard_sink",
@@ -54,16 +44,6 @@ __all__ = [
     "read_shard_payload",
     "last_applied_batch",
 ]
-
-
-def last_applied_batch(spark: SparkSession, path: str) -> int:
-    """Highest micro-batch id already committed to the store (-1 if
-    none)."""
-    try:
-        rows = spark.read.parquet(f"{path}/_applied_batch").collect()
-    except Exception:  # noqa: BLE001 — first batch: ledger doesn't exist yet
-        return -1
-    return max((int(r["batch_id"]) for r in rows), default=-1)
 
 
 def read_shard_manifest(spark: SparkSession, path: str) -> DataFrame:
@@ -118,13 +98,10 @@ def shard_sink(
              .start())
     """
 
-    def _apply(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        if batch_id <= last_applied_batch(spark, path):
-            return  # replayed batch at/below the ledger mark: no-op
+    def _body(batch_df: DataFrame, batch_id: int) -> bool | None:
         if batch_df.isEmpty():
-            return
-        base = _next_base(spark, path, batch_id)
+            return None
+        base = _next_base(batch_df.sparkSession, path, batch_id)
         d = batch_df.withColumn(
             "__bytes",
             (
@@ -144,9 +121,9 @@ def shard_sink(
         ).withColumn(
             "shard_id", (F.col("__local_shard") + F.lit(base)).cast("long")
         )
-        # Payload first, manifest second, ledger LAST — each a dynamic
-        # overwrite of exactly this batch's partitions, so any crash
-        # point replays to the identical store.
+        # Payload first, manifest second (the ledger marks after both)
+        # — each a dynamic overwrite of exactly this batch's partitions,
+        # so any crash point replays to the identical store.
         # Rebalance on shard_id before the partitioned write (guide
         # §6): the assignment frame arrives in ~shuffle-partition-many
         # pieces, and without the hint each task writes one file per
@@ -169,15 +146,8 @@ def shard_sink(
             "__bytes",
             id_col=id_col,
             shard_col="shard_id",
-        ).withColumn("batch_id", F.lit(int(batch_id)).cast("long"))
-        (
-            manifest.write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch_id")
-            .parquet(f"{path}/manifest")
         )
-        local_df(
-            spark, [(int(batch_id),)], "batch_id long"
-        ).coalesce(1).write.mode("append").parquet(f"{path}/_applied_batch")
+        overwrite_batch_partition(manifest, batch_id, f"{path}/manifest")
+        return True
 
-    return _apply
+    return ledgered(path, _body)

@@ -268,3 +268,122 @@ def test_streaming_curation_pipeline_twin_restart_replay(spark, tmp_path):
     assert spark.read.parquet(f"{media_idx}/fingerprints").count() == n_fp
     assert read_intake_verdicts(spark, media_out).count() == n_mv
     assert read_dsir_verdicts(spark, dsir_out).count() == n_dv
+
+
+# ----------------------------------------------------------------------
+# The composed sink called directly, one batch at a time (the batch
+# twin of a foreachBatch delivery): docs are (doc_id, text).
+
+DOCS_B1 = [(1, PROSE_A), (4, PROSE_B), (5, PROSE_A)]
+DOCS_B2 = [(6, PROSE_A), (7, PROSE_C), (8, PROSE_D)]
+
+
+@pytest.fixture
+def sink_stores(spark, tmp_path):
+    from quantlab_data_pipeline_spark.llm.dsir import build_dsir_counts
+
+    tpath = str(tmp_path / "dsir_t")
+    build_dsir_counts(
+        spark.createDataFrame(
+            [(100, PROSE_A), (101, PROSE_C)], "doc_id long, text string"
+        ),
+        tpath,
+        buckets=128,
+    )
+    return tuple(
+        tpath if name == "dsir_t" else str(tmp_path / name)
+        for name in ("media_idx", "media_out", "dsir_t", "dsir_r", "dsir_out")
+    )
+
+
+def _docs(spark, rows):
+    return spark.createDataFrame(rows, "doc_id long, text string")
+
+
+# Jobs of one composed-sink micro-batch on this suite's session
+# (local[8], 8 shuffle partitions): the first batch builds both stores,
+# the second runs against them. Measured before the sinks shared one
+# ledger module; the shared protocol must add no Spark work.
+FIRST_BATCH_JOBS = 55
+SECOND_BATCH_JOBS = 70
+
+
+def test_composed_sink_job_budget(spark, sink_stores):
+    from test_ingest import _count_jobs
+
+    from quantlab_data_pipeline_spark.streaming.pipeline import (
+        curation_intake_sink,
+    )
+
+    sink = curation_intake_sink(*sink_stores, k=1)
+    counts = []
+    for batch_id, rows in enumerate((DOCS_B1, DOCS_B2)):
+        docs = _docs(spark, rows)
+        jobs, outside = _count_jobs(spark, lambda: sink(docs, batch_id))
+        assert not outside, "the sink ran jobs outside the caller's group"
+        counts.append(jobs)
+    assert counts[0] <= FIRST_BATCH_JOBS, counts
+    assert counts[1] <= SECOND_BATCH_JOBS, counts
+
+
+def _tree(root):
+    """{relative file: mtime_ns} of every file under ``root``."""
+    out = {}
+    for dirpath, _, files in os.walk(root):
+        for f in files:
+            p = os.path.join(dirpath, f)
+            out[os.path.relpath(p, root)] = os.stat(p).st_mtime_ns
+    return out
+
+
+def test_composed_sink_crash_between_stages(spark, sink_stores):
+    """A crash after the media stage committed but before the DSIR mark:
+    the redelivered batch skips the media stage, reads its kept set back
+    from the persisted media verdicts, and re-runs DSIR to the same
+    verdicts and raw counts."""
+    import shutil
+
+    from quantlab_data_pipeline_spark.llm.dsir import load_dsir_counts
+    from quantlab_data_pipeline_spark.streaming.dsir_intake import (
+        read_dsir_verdicts,
+    )
+    from quantlab_data_pipeline_spark.streaming.media_intake import (
+        read_intake_verdicts,
+    )
+    from quantlab_data_pipeline_spark.streaming.pipeline import (
+        curation_intake_sink,
+    )
+
+    media_idx, media_out, _, rpath, dsir_out = sink_stores
+    sink = curation_intake_sink(*sink_stores, k=1)
+    sink(_docs(spark, DOCS_B1), 0)
+    sink(_docs(spark, DOCS_B2), 1)
+
+    def dsir_state():
+        verdicts = sorted(
+            tuple(r) for r in read_dsir_verdicts(spark, dsir_out).collect()
+        )
+        totals = {
+            r["bucket"]: r["cnt"]
+            for r in load_dsir_counts(spark, rpath).collect()
+        }
+        return verdicts, totals
+
+    before = dsir_state()
+    media_files = {**_tree(media_idx), **_tree(media_out)}
+    kept = {
+        r["asset_id"]
+        for r in read_intake_verdicts(spark, media_out)
+        .filter("batch_id = 1 AND kept")
+        .collect()
+    }
+    assert kept == {7, 8}  # 6 is a recrawl of batch 0's doc 1
+
+    shutil.rmtree(f"{rpath}/_applied_batch")
+    sink(_docs(spark, DOCS_B2), 1)
+
+    # media stage skipped: not one of its files was rewritten
+    assert {**_tree(media_idx), **_tree(media_out)} == media_files
+    after = dsir_state()
+    assert after == before
+    assert {v[0] for v in after[0] if v[-1] == 1} == kept
