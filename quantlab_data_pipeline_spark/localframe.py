@@ -9,7 +9,7 @@ pay it up to ten times per micro-batch (ledger marks, store meta,
 probe-id frames). The pandas/Arrow path
 (``createDataFrame(pandas.DataFrame, schema)``) converts driver-side
 into Arrow batches and plans a JVM-only scan: the same write measures
-~0.1-0.4 s (scripts/job_breakdown.py, round 10).
+~0.1-0.4 s (per-job walls from :mod:`.observe`, round 10).
 
 :func:`local_df` is the drop-in: same rows, same DDL schema string,
 Arrow conversion instead of the Python RDD; array, map and struct

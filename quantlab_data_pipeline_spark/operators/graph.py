@@ -154,6 +154,8 @@ def connected_components_two_phase(
             sym.unpersist()
             e0.unpersist()
             return labels
+    for df in (cur, nodes, sym, e0):
+        df.unpersist()
     raise RuntimeError(
         f"connected_components_two_phase did not converge in {max_rounds} rounds"
     )
@@ -250,6 +252,8 @@ def connected_components(
             e.unpersist()
             labels.unpersist()
             return connected_components_two_phase(edges, src_col, dst_col)
+    for df in (labels, sym, e):
+        df.unpersist()
     raise RuntimeError(
         f"connected_components did not converge in {max_iters} iterations"
     )

@@ -32,7 +32,8 @@ fingerprints differ by 1..max_hamming bits are both admitted — the
 index only arbitrates across batches, and intra-batch NEAR-dup
 clustering (non-transitive at hamming > 0) is a policy the caller
 owns. Intra-batch EXACT duplicates are deduped by the keeper rule.
-The first non-empty batch builds the index.
+The first batch with a row of the sink's modality builds the index; a
+batch without one writes nothing and is still marked.
 """
 
 from __future__ import annotations
@@ -118,11 +119,13 @@ def media_intake_sink(
         # the batch, which is convergent by construction (module
         # docstring), so no durability is given up. Emptiness is read
         # off the checkpointed 16-byte rows (the fingerprinter emits
-        # one row per asset) instead of paying a separate limit-1
-        # decode job against the raw batch plan first.
+        # one row per asset of the modality) instead of paying a
+        # separate limit-1 decode job against the raw batch plan first.
         fp = _fingerprint(batch_df, modality).localCheckpoint()
         if fp.isEmpty():
-            return None
+            # No row of this modality: nothing to write, but a batch
+            # that has rows is still committed, so a redelivery skips.
+            return None if batch_df.isEmpty() else fp.select("asset_id")
         first = not _index_exists(spark, index_path)
         if first:
             flagged = fp.select(

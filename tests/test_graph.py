@@ -6,6 +6,7 @@ import pytest
 
 from quantlab_data_pipeline_spark.operators.graph import (
     connected_components,
+    connected_components_two_phase,
     dedup_cluster_assignments,
 )
 
@@ -54,6 +55,31 @@ def test_non_convergence_raises(spark):
     with pytest.raises(RuntimeError, match="did not converge"):
         connected_components(_edges(spark, [(i, i + 1) for i in range(1, 9)]),
                              max_iters=2)
+
+
+@pytest.mark.parametrize(
+    "run",
+    [
+        lambda e: connected_components(e, max_iters=2, algorithm="label"),
+        # no lineage cut in the one round: a localCheckpoint RDD stays
+        # registered until the context cleaner collects it, on every
+        # path, and is not a persisted frame this function can release
+        lambda e: connected_components_two_phase(
+            e, max_rounds=1, checkpoint_every=2
+        ),
+    ],
+    ids=["label", "two_phase"],
+)
+def test_non_convergence_releases_persisted_frames(spark, run):
+    """The raise path must not leave the edge list, its symmetrized
+    copy, the node set or the current round's frame persisted: a
+    caller that catches the error and retries would pile up cached
+    frames per attempt."""
+    jsc = spark.sparkContext._jsc.sc()
+    before = jsc.getPersistentRDDs().size()
+    with pytest.raises(RuntimeError, match="did not converge"):
+        run(_edges(spark, [(i, i + 1) for i in range(1, 9)]))
+    assert jsc.getPersistentRDDs().size() == before
 
 
 def test_cluster_assignments_keeper_policy(spark):

@@ -51,6 +51,65 @@ FROZEN_FIRST_50 = [
     "dsir_select_docs", "curate_corpus_r8",
 ]
 
+
+# Positions 51-191 as registered today. With FROZEN_FIRST_50 this pins
+# the whole registry order, so replacing the rotation code at the end
+# of queries.py with a declared order cannot move a row unnoticed.
+FROZEN_AFTER_50 = [
+    "window_range_frame", "doc_fingerprint", "embedding_near_dup",
+    "pivot_event_counts", "dense_rank_balances", "json_struct_parse",
+    "cube_counts", "distinct_users_exact", "revenue_percentiles",
+    "distinct_users_sketch", "minhash_lsh_dedup", "simhash_dedup",
+    "embedding_lsh_topk", "embedding_ivf_topk", "q6_forecast_revenue",
+    "q8_market_share", "q9_product_profit", "q10_returned_items",
+    "q13_customer_distribution", "q14_promo_revenue", "q15_top_supplier",
+    "q16_supplier_part_counts", "q18_large_volume", "q19_discounted_revenue",
+    "q22_global_sales", "q21_lone_returner", "q11_important_nations",
+    "rolling_volatility", "max_drawdown", "autocorr_lag1", "ohlc_bars",
+    "rolling_beta", "bollinger_bands", "vwap_events", "rsi_events",
+    "ewma_events", "chunk_plan_docs", "deterministic_split_docs",
+    "mix_corpus_docs", "top_ngrams_docs", "repeated_spans_docs",
+    "scrub_repeated_spans", "ml_quality_docs", "image_dhash_dedup",
+    "audio_dhash_dedup", "chunk_sentences_docs", "gopher_repetition",
+    "line_dedup_docs", "decontaminate_docs", "dedup_clusters",
+    "dedup_keep_best_docs", "leakage_safe_split_docs", "pack_documents_docs",
+    "semantic_dedup_docs", "zscore_winsorize", "decile_portfolio",
+    "rolling_median", "funnel_conversion", "retention_cohorts",
+    "source_quota_docs", "grouping_sets_revenue", "forward_fill",
+    "incremental_dedup_docs", "incremental_dedup_bucketed_docs",
+    "incremental_dedup_exact_docs", "wet_roundtrip_docs", "trend_theil_sen",
+    "set_ops_customers", "rank_family_events", "bigram_lm_docs",
+    "fuzzy_name_pairs", "rollup_incremental_events", "bpe_tokenize_docs",
+    "full_outer_reconcile", "seasonal_decompose_events",
+    "robust_anomalies_events", "scd2_incremental_events",
+    "hierarchy_rollup_customers", "hll_distinct_rollup_events",
+    "snapshot_diff_customers", "psi_drift_events", "join_profile_tpch",
+    "profile_drift_events", "fuzzy_decontaminate_docs",
+    "json_schema_profile_events", "skew_profile_lineitem", "twap_events",
+    "resample_grid_events", "sequence_gaps_orders", "mom_revenue_growth",
+    "weighted_sample_docs", "fama_macbeth_events", "rank_ic_events",
+    "decile_turnover_events", "kaplan_meier_users", "event_transition_matrix",
+    "source_divergence_docs", "approx_quantiles_events",
+    "range_join_value_bands", "triangle_count_suppliers",
+    "pagerank_suppliers", "profile_lineitem", "zorder_layout_lineitem",
+    "q2_min_cost_supplier", "q12_returnflag_priority",
+    "q20_surplus_suppliers", "stratified_split_docs", "impute_events",
+    "kll_quantile_rollup_events", "cumulative_unique_users",
+    "covariance_event_types", "curate_corpus_full", "perplexity_bucket_docs",
+    "media_intake_loop_docs", "tfidf_keywords_docs", "hybrid_search_docs",
+    "media_index_takedown_docs", "corpus_export_manifest_docs",
+    "quality_percentile_by_source_docs", "token_budget_mix_docs",
+    "url_blocklist_docs", "embedding_pca_docs", "boilerplate_lines_docs",
+    "hard_negatives_docs", "dsir_incremental_docs",
+    "curation_pipeline_loop_docs", "bloom_prefilter_docs",
+    "frontier_schedule_docs", "sft_assembly_events", "filter_funnel_docs",
+    "link_graph_docs", "ngram_novelty_docs", "shard_manifest_docs",
+    "shard_compaction_plan_docs", "dup_attribution_docs",
+    "tokenizer_fertility_docs", "text_normalize_docs", "dpo_pairs_events",
+    "quality_calibration_docs", "shard_intake_loop_docs",
+    "embedding_drift_docs",
+]
+
 # Extension queries deliberately promoted into the driver window
 # (registered inside queries.py before the bulk ext merge, or rotated
 # in by the round-7 reorder block at the end of queries.py).
@@ -67,6 +126,12 @@ def test_first_50_entries_frozen():
     from quantlab_data_pipeline_spark.queries import SPARK_QUERIES
 
     assert list(SPARK_QUERIES)[:50] == FROZEN_FIRST_50
+
+
+def test_full_registry_order_frozen():
+    from quantlab_data_pipeline_spark.queries import SPARK_QUERIES
+
+    assert list(SPARK_QUERIES) == FROZEN_FIRST_50 + FROZEN_AFTER_50
 
 
 def test_every_oracle_has_a_query():

@@ -1032,6 +1032,37 @@ def test_streaming_media_intake_empty_and_audio(spark, tmp_path):
     } == {1, 3}
 
 
+def test_streaming_media_intake_other_modality_batch_is_marked(spark, tmp_path):
+    """A non-empty batch with no row of the sink's modality yields no
+    fingerprints: it writes nothing, but it is committed, so a
+    redelivery of the same batch id is skipped instead of re-run."""
+    import os
+
+    import numpy as np
+
+    from quantlab_data_pipeline_spark.llm.codecs import wav_encode
+    from quantlab_data_pipeline_spark.llm.multimodal import MEDIA_SCHEMA
+    from quantlab_data_pipeline_spark.streaming.ledger import last_applied_batch
+    from quantlab_data_pipeline_spark.streaming.media_intake import (
+        media_intake_sink,
+    )
+
+    idx = str(tmp_path / "image_idx")
+    out = str(tmp_path / "image_out")
+    sink = media_intake_sink(idx, out, modality="image")
+    meta = {"width": None, "height": None, "n_frames": None,
+            "sample_rate": 16000, "format": "wav"}
+    tone = wav_encode(np.zeros(800, dtype=np.int16), 16000)
+    audio = spark.createDataFrame([(1, "audio", tone, meta)], MEDIA_SCHEMA)
+
+    applied, kept = sink(audio, 0)
+    assert applied and kept.count() == 0
+    assert last_applied_batch(spark, idx) == 0
+    assert not os.path.isdir(f"{idx}/meta")  # no index built
+    assert not os.path.isdir(out)  # no verdicts written
+    assert sink(audio, 0) == (False, None)
+
+
 def test_streaming_crawl_intake_blocklist_stateless(spark, tmp_path):
     """Round-8: the blocklist gate runs FIRST and stateless — listed
     domains (and subdomains) never reach extraction; both the literal
