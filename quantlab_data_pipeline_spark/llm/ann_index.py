@@ -14,6 +14,8 @@ of ``n_lists`` lists compiles to a partition-pruned scan — Spark reads
 only the probed lists' directories (visible as ``PartitionFilters`` in
 the plan), so query cost scales with nprobe/n_lists of the corpus
 bytes, exactly the IVF contract, with zero custom index format.
+Tombstones and compaction follow the one protocol in
+:mod:`..storage.index_store`.
 """
 
 from __future__ import annotations
@@ -24,28 +26,17 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .similarity import ivf_assign, rank_topk, train_centroids
-from ..fsutil import delete_path as _delete_path
 from ..fsutil import path_exists as _path_exists
-from ..localframe import local_df
+from ..storage.index_store import IndexStore
 
 
-
-def _live_assignments(
-    spark: SparkSession, path: str | Path, id_col: str
-) -> DataFrame:
-    """The assignments store minus tombstoned vectors (partition
-    pruning on centroid_id still applies — the anti-join composes with
-    the probe filter)."""
-    df = spark.read.parquet(str(Path(path) / "assignments"))
-    ts_path = str(Path(path) / "tombstones")
-    if _path_exists(spark, ts_path):
-        ts = (
-            spark.read.parquet(ts_path)
-            .select(F.col("id").alias(id_col))
-            .distinct()
-        )
-        df = df.join(ts, id_col, "left_anti")
-    return df
+def _store(
+    spark: SparkSession, path: str | Path, id_col: str = "vec_id"
+) -> IndexStore:
+    """The assignments store, one hive partition per IVF list."""
+    return IndexStore(
+        spark, path, "id", id_col, ("assignments",), partition_col="centroid_id"
+    )
 
 
 def remove_from_ann_index(spark: SparkSession, path: str | Path, vec_ids) -> None:
@@ -56,12 +47,8 @@ def remove_from_ann_index(spark: SparkSession, path: str | Path, vec_ids) -> Non
     :func:`compact_ann_index` reclaims on a cadence. Ids are permanent
     identities — a tombstoned id stays masked until compaction; re-add
     under a fresh id. ``vec_ids`` is a one-column DataFrame or an
-    iterable of ints."""
-    if isinstance(vec_ids, DataFrame):
-        ids = vec_ids.select(F.col(vec_ids.columns[0]).cast("long").alias("id"))
-    else:
-        ids = local_df(spark, [(int(i),) for i in vec_ids], "id long")
-    ids.write.mode("append").parquet(str(Path(path) / "tombstones"))
+    iterable of ints; an empty iterable writes nothing."""
+    _store(spark, path).remove(vec_ids)
 
 
 def compact_ann_index(
@@ -73,17 +60,7 @@ def compact_ann_index(
     codebooks are corpus statistics, not per-vector state — they
     survive compaction unchanged, the same way FAISS keeps its
     quantizers through deletions. No-op when nothing was removed."""
-    ts_path = str(Path(path) / "tombstones")
-    if not _path_exists(spark, ts_path):
-        return
-    live = _live_assignments(spark, path, id_col).localCheckpoint()
-    (
-        live.repartition("centroid_id")
-        .write.mode("overwrite")
-        .partitionBy("centroid_id")
-        .parquet(str(Path(path) / "assignments"))
-    )
-    _delete_path(spark, ts_path)
+    _store(spark, path, id_col).compact()
 
 
 def build_ivf_index(
@@ -102,24 +79,23 @@ def build_ivf_index(
     once on centroid_id so each list lands contiguous in its own
     partition directory.
     """
-    path = Path(path)
     centroids = train_centroids(corpus, k=n_lists, vec_col=vec_col)
-    spark = corpus.sparkSession
-    # A rebuild is a fresh corpus: clear any previous life's tombstones.
-    _delete_path(spark, str(path / "tombstones"))
-    cent_df = local_df(
-        spark,
+    store = _store(corpus.sparkSession, path, id_col)
+    store.clear_tombstones()
+    _write_centroids(store, centroids)
+    assigned = ivf_assign(corpus, centroids, id_col, vec_col, n_assign=1)
+    # one shuffle on the list id -> each partition dir holds one list
+    store.write(assigned, "assignments", "overwrite")
+    n = assigned.count()
+    return {"n_lists": len(centroids), "n_vectors": n, "path": str(Path(path))}
+
+
+def _write_centroids(store: IndexStore, centroids) -> None:
+    store.write_rows(
+        "centroids",
         [(i, [float(x) for x in c]) for i, c in enumerate(centroids)],
         "centroid_id int, centroid array<double>",
     )
-    cent_df.coalesce(1).write.mode("overwrite").parquet(str(path / "centroids"))
-    assigned = ivf_assign(corpus, centroids, id_col, vec_col, n_assign=1)
-    # one shuffle on the list id -> each partition dir holds one list
-    assigned.repartition("centroid_id").write.mode("overwrite").partitionBy(
-        "centroid_id"
-    ).parquet(str(path / "assignments"))
-    n = assigned.count()
-    return {"n_lists": len(centroids), "n_vectors": n, "path": str(path)}
 
 
 def load_centroids(spark: SparkSession, path: str | Path) -> list[list[float]]:
@@ -159,8 +135,11 @@ def query_ivf_index(
     probe_ids = [
         r["centroid_id"] for r in probes.select("centroid_id").distinct().collect()
     ]
+    # Partition pruning survives the tombstone mask: the anti-join
+    # composes with the probe filter.
     idx = (
-        _live_assignments(spark, path, id_col)
+        _store(spark, path, id_col)
+        .live("assignments")
         .filter(F.col("centroid_id").isin(probe_ids))
         .select(
             F.col(id_col).alias("neighbor_id"),
@@ -202,38 +181,30 @@ def build_ivf_pq_index(
     """
     from .pq import pq_encode, train_pq_codebooks
 
-    path = Path(path)
-    spark = corpus.sparkSession
-    # A rebuild is a fresh corpus: clear any previous life's tombstones.
-    _delete_path(spark, str(path / "tombstones"))
+    store = _store(corpus.sparkSession, path, id_col)
+    store.clear_tombstones()
     centroids = train_centroids(corpus, k=n_lists, vec_col=vec_col)
     books = train_pq_codebooks(corpus, m=m, n_codes=n_codes, vec_col=vec_col)
-    local_df(
-        spark,
-        [(i, [float(x) for x in c]) for i, c in enumerate(centroids)],
-        "centroid_id int, centroid array<double>",
-    ).coalesce(1).write.mode("overwrite").parquet(str(path / "centroids"))
-    local_df(
-        spark,
+    _write_centroids(store, centroids)
+    store.write_rows(
+        "codebooks",
         [
             (s, c, [float(x) for x in vec])
             for s, book in enumerate(books)
             for c, vec in enumerate(book)
         ],
         "subspace int, code int, centroid array<double>",
-    ).coalesce(1).write.mode("overwrite").parquet(str(path / "codebooks"))
+    )
     assigned = ivf_assign(corpus, centroids, id_col, vec_col, n_assign=1)
     codes = pq_encode(corpus, books, id_col, vec_col)
     full = assigned.join(codes, id_col)
-    full.repartition("centroid_id").write.mode("overwrite").partitionBy(
-        "centroid_id"
-    ).parquet(str(path / "assignments"))
+    store.write(full, "assignments", "overwrite")
     return {
         "n_lists": len(centroids),
         "m": m,
         "n_codes": max(len(b) for b in books),
         "n_vectors": full.count(),
-        "path": str(path),
+        "path": str(Path(path)),
     }
 
 
@@ -277,8 +248,10 @@ def query_ivf_pq_index(
     probe_ids = [
         r["centroid_id"] for r in probes.select("centroid_id").distinct().collect()
     ]
-    assignments = _live_assignments(spark, path, id_col).filter(
-        F.col("centroid_id").isin(probe_ids)
+    assignments = (
+        _store(spark, path, id_col)
+        .live("assignments")
+        .filter(F.col("centroid_id").isin(probe_ids))
     )
     lut_df = query_luts(queries, books, id_col, vec_col)
     # stage 1: codes column only — probes restrict lists per query
@@ -344,20 +317,14 @@ def append_to_ann_index(
     anti-join intake shape) would otherwise have its lineage
     re-executed against the post-append file list. Returns the number
     of vectors appended."""
-    path = Path(path)
     spark = new_vectors.sparkSession
     centroids = load_centroids(spark, path)
     assigned = ivf_assign(new_vectors, centroids, id_col, vec_col, n_assign=1)
-    if _path_exists(spark, str(path / "codebooks")):
+    if _path_exists(spark, str(Path(path) / "codebooks")):
         from .pq import pq_encode
 
         books = load_codebooks(spark, path)
         assigned = assigned.join(pq_encode(new_vectors, books, id_col, vec_col), id_col)
     batch = assigned.localCheckpoint()
-    (
-        batch.repartition("centroid_id")
-        .write.mode("append")
-        .partitionBy("centroid_id")
-        .parquet(str(path / "assignments"))
-    )
+    _store(spark, path, id_col).write(batch, "assignments", "append")
     return batch.count()

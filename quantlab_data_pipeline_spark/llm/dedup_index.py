@@ -22,7 +22,9 @@ so the index is the only state that grows. Band structure is recorded in
 a one-row ``meta`` table and enforced on every query/append — mixing
 band parameters silently breaks LSH recall, so a mismatch raises.
 
-Index layout (all parquet, engine-agnostic):
+Index layout (all parquet, engine-agnostic; tombstones, compaction,
+the bucketed band table and ``meta`` follow the one protocol in
+:mod:`..storage.index_store`):
 
 - ``{path}/meta``        — (num_hashes, bands, shingle_k, bucket_n), 1 row
 - ``{path}/signatures``  — (doc_id, signature array<long>)
@@ -44,9 +46,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .dedup import band_buckets, ensure_parallelism, minhash_signatures
-from ..fsutil import delete_path as _delete_path
-from ..fsutil import path_exists as _path_exists
-from ..localframe import local_df
+from ..storage.index_store import BANDS, IndexStore
 
 __all__ = [
     "build_dedup_index",
@@ -85,37 +85,13 @@ def _sig_and_buckets(
     return sigs, buckets
 
 
-def _bucket_table_name(path: str) -> str:
-    """Catalog name for the bucketed ``buckets`` table at ``path`` —
-    derived from the path so two indexes never collide."""
-    import hashlib
-
-    return "dedup_idx_buckets_" + hashlib.md5(path.encode()).hexdigest()[:10]
-
-
-def _register_bucketed(
-    spark: SparkSession, path: str, bucket_n: int
-) -> DataFrame:
-    """Catalog entry for the bucketed buckets table (idempotent).
-
-    Bucket metadata lives in the catalog, not the parquet files, so a
-    fresh session must re-issue the DDL before Spark will trust the
-    layout. The schema is read from the files themselves — the DDL
-    merely re-asserts the (band_idx, band_hash) bucketing recorded in
-    ``meta`` at build time. On a cluster with a real metastore this is
-    a no-op after the first session.
-    """
-    table = _bucket_table_name(path)
-    if not spark.catalog.tableExists(table):
-        schema = spark.read.parquet(f"{path}/buckets").schema
-        cols = ", ".join(f"{f.name} {f.dataType.simpleString()}" for f in schema)
-        spark.sql(
-            f"CREATE TABLE {table} ({cols}) USING parquet "
-            f"CLUSTERED BY (band_idx, band_hash) "
-            f"SORTED BY (band_idx, band_hash) INTO {bucket_n} BUCKETS "
-            f"LOCATION '{path}/buckets'"
-        )
-    return spark.table(table)
+def _store(
+    spark: SparkSession, path: str, id_col: str = "doc_id", bucket_n=None
+) -> IndexStore:
+    return IndexStore(
+        spark, path, "doc_id", id_col, ("signatures", BANDS, "exact"),
+        band_key="band_hash", bucket_n=bucket_n,
+    )
 
 
 def build_dedup_index(
@@ -143,52 +119,25 @@ def build_dedup_index(
     """
     if num_hashes % bands:
         raise ValueError(f"bands={bands} must divide num_hashes={num_hashes}")
-    spark = docs.sparkSession
-    # A rebuild is a fresh corpus: tombstones from the path's previous
-    # life must not mask the new documents.
-    _delete_path(spark, f"{path}/tombstones")
+    store = _store(docs.sparkSession, path, id_col, bucket_n or 0)
+    store.clear_tombstones()
     sigs, buckets = _sig_and_buckets(
         docs, id_col, text_col, num_hashes, bands, shingle_k
     )
     # One lineage feeds both tables; persist so shingling runs once.
     sigs = sigs.persist()
     try:
-        # AQE-rebalanced writes (guide §6): without the hint every
-        # upstream partition writes one signature file and one file per
-        # bucket it touches (partitions x bucket_n tiny band files per
-        # write) — every later candidate join re-lists and re-opens all
-        # of them. Rebalance sizes the files to the data and stays
-        # scale-adaptive (a big build splits at AQE's advisory size).
-        sigs.hint("rebalance").write.mode("overwrite").parquet(
-            f"{path}/signatures"
-        )
-        if bucket_n:
-            table = _bucket_table_name(path)
-            spark.sql(f"DROP TABLE IF EXISTS {table}")
-            (
-                buckets.hint("rebalance", "band_idx", "band_hash")
-                .write.mode("overwrite")
-                .format("parquet")
-                .option("path", f"{path}/buckets")
-                .bucketBy(bucket_n, "band_idx", "band_hash")
-                .sortBy("band_idx", "band_hash")
-                .saveAsTable(table)
-            )
-        else:
-            buckets.hint("rebalance").write.mode("overwrite").parquet(
-                f"{path}/buckets"
-            )
+        store.write(sigs, "signatures", "overwrite")
+        store.write(buckets, BANDS, "overwrite")
     finally:
         sigs.unpersist()
-    _exact_hashes(docs, id_col, text_col).hint(
-        "rebalance"
-    ).write.mode("overwrite").parquet(f"{path}/exact")
-    local_df(
-        spark,
+    store.write(_exact_hashes(docs, id_col, text_col), "exact", "overwrite")
+    store.write_rows(
+        "meta",
         [(num_hashes, bands, shingle_k, bucket_n or 0, HASH_FAMILY)],
         "num_hashes int, bands int, shingle_k int, bucket_n int, "
         "hash_family string",
-    ).coalesce(1).write.mode("overwrite").parquet(f"{path}/meta")
+    )
 
 
 #: Signature hash family this code computes. Recorded in ``meta`` and
@@ -206,39 +155,20 @@ def read_index_meta(spark: SparkSession, path: str) -> tuple[int, int, int]:
     pre-round-3 xxhash64 indexes) does not match what this code
     computes — mixed families never error organically, they just
     return no duplicates."""
-    row = spark.read.parquet(f"{path}/meta").collect()[0]
+    return _checked_meta(_store(spark, path))
+
+
+def _checked_meta(store: IndexStore) -> tuple[int, int, int]:
+    row = store.meta
     family = row.asDict().get("hash_family")
     if family != HASH_FAMILY:
         raise ValueError(
-            f"dedup index at {path!r} was built with hash family "
+            f"dedup index at {store.path!r} was built with hash family "
             f"{family!r}, but this code computes {HASH_FAMILY!r}; "
             "querying across families silently matches nothing — "
             "rebuild the index with build_dedup_index"
         )
     return int(row["num_hashes"]), int(row["bands"]), int(row["shingle_k"])
-
-
-def _read_bucket_n(spark: SparkSession, path: str) -> int:
-    """Bucket count recorded at build time (0 = unbucketed; pre-round-3
-    indexes have no ``bucket_n`` column and read as 0)."""
-    row = spark.read.parquet(f"{path}/meta").collect()[0]
-    return int(row.asDict().get("bucket_n") or 0)
-
-
-def _index_buckets(spark: SparkSession, path: str) -> DataFrame:
-    """The stored buckets table, honoring the build-time layout."""
-    bucket_n = _read_bucket_n(spark, path)
-    if bucket_n:
-        return _register_bucketed(spark, path, bucket_n)
-    return spark.read.parquet(f"{path}/buckets")
-
-
-
-def _tombstones(spark: SparkSession, path: str) -> DataFrame | None:
-    """Logically-removed doc ids, or None when nothing was removed."""
-    if _path_exists(spark, f"{path}/tombstones"):
-        return spark.read.parquet(f"{path}/tombstones")
-    return None
 
 
 def remove_from_dedup_index(spark: SparkSession, path: str, doc_ids) -> None:
@@ -253,15 +183,10 @@ def remove_from_dedup_index(spark: SparkSession, path: str, doc_ids) -> None:
     until a compaction clears the tombstone set (re-ingest a removed
     document under a fresh id).
 
-    ``doc_ids`` is a one-column DataFrame or an iterable of ints.
+    ``doc_ids`` is a one-column DataFrame or an iterable of ints; an
+    empty iterable writes nothing.
     """
-    if isinstance(doc_ids, DataFrame):
-        ids = doc_ids.select(
-            F.col(doc_ids.columns[0]).cast("long").alias("doc_id")
-        )
-    else:
-        ids = local_df(spark, [(int(i),) for i in doc_ids], "doc_id long")
-    ids.write.mode("append").parquet(f"{path}/tombstones")
+    _store(spark, path).remove(doc_ids)
 
 
 def compact_dedup_index(
@@ -274,50 +199,7 @@ def compact_dedup_index(
     delete. localCheckpoint pins each filtered frame before its source
     path is overwritten (lineage re-execution would otherwise read the
     half-rewritten store)."""
-    ts = _tombstones(spark, path)
-    if ts is None:
-        return
-    ts_ids = (
-        ts.select(F.col("doc_id").alias(id_col)).distinct().localCheckpoint()
-    )
-    bucket_n = _read_bucket_n(spark, path)
-    sigs = (
-        spark.read.parquet(f"{path}/signatures")
-        .join(ts_ids, id_col, "left_anti")
-        .localCheckpoint()
-    )
-    buckets = (
-        _index_buckets(spark, path)
-        .join(ts_ids, id_col, "left_anti")
-        .localCheckpoint()
-    )
-    exact = (
-        spark.read.parquet(f"{path}/exact")
-        .join(ts_ids, id_col, "left_anti")
-        .localCheckpoint()
-    )
-    sigs.hint("rebalance").write.mode("overwrite").parquet(
-        f"{path}/signatures"
-    )
-    if bucket_n:
-        table = _bucket_table_name(path)
-        spark.sql(f"DROP TABLE IF EXISTS {table}")
-        _delete_path(spark, f"{path}/buckets")
-        (
-            buckets.hint("rebalance", "band_idx", "band_hash")
-            .write.mode("overwrite")
-            .format("parquet")
-            .option("path", f"{path}/buckets")
-            .bucketBy(bucket_n, "band_idx", "band_hash")
-            .sortBy("band_idx", "band_hash")
-            .saveAsTable(table)
-        )
-    else:
-        buckets.hint("rebalance").write.mode("overwrite").parquet(
-            f"{path}/buckets"
-        )
-    exact.hint("rebalance").write.mode("overwrite").parquet(f"{path}/exact")
-    _delete_path(spark, f"{path}/tombstones")
+    _store(spark, path, id_col).compact()
 
 
 def append_to_index(
@@ -328,9 +210,8 @@ def append_to_index(
 ) -> None:
     """Add an accepted batch to the index, with the build-time band
     structure (read from ``meta`` — callers cannot drift the params)."""
-    spark = docs.sparkSession
-    num_hashes, bands, shingle_k = read_index_meta(spark, path)
-    bucket_n = _read_bucket_n(spark, path)
+    store = _store(docs.sparkSession, path, id_col)
+    num_hashes, bands, shingle_k = _checked_meta(store)
     # An intake caller naturally derives ``docs`` from a read of this
     # index (anti-join against {path}/exact or the flag output), and
     # Spark RE-EXECUTES cached plans whose input paths are appended to
@@ -348,24 +229,9 @@ def append_to_index(
     ).select(id_col, "signature").localCheckpoint()
     buckets = band_buckets(sigs, id_col=id_col, bands=bands)
     exact = _exact_hashes(docs, id_col, text_col).localCheckpoint()
-    sigs.hint("rebalance").write.mode("append").parquet(
-        f"{path}/signatures"
-    )
-    if bucket_n:
-        _register_bucketed(spark, path, bucket_n)  # fresh-session safe
-        (
-            buckets.hint("rebalance", "band_idx", "band_hash")
-            .write.mode("append")
-            .format("parquet")
-            .bucketBy(bucket_n, "band_idx", "band_hash")
-            .sortBy("band_idx", "band_hash")
-            .saveAsTable(_bucket_table_name(path))
-        )
-    else:
-        buckets.hint("rebalance").write.mode("append").parquet(
-            f"{path}/buckets"
-        )
-    exact.hint("rebalance").write.mode("append").parquet(f"{path}/exact")
+    store.write(sigs, "signatures", "append")
+    store.write(buckets, BANDS, "append")
+    store.write(exact, "exact", "append")
 
 
 def query_dedup_index(
@@ -383,8 +249,8 @@ def query_dedup_index(
     as :func:`..dedup.lsh_candidate_pairs`); identical documents always
     collide in every band, so exact re-ingests are never missed.
     """
-    spark = new_docs.sparkSession
-    num_hashes, bands, shingle_k = read_index_meta(spark, path)
+    store = _store(new_docs.sparkSession, path, id_col)
+    num_hashes, bands, shingle_k = _checked_meta(store)
     new_sigs, new_buckets = _sig_and_buckets(
         new_docs, id_col, text_col, num_hashes, bands, shingle_k
     )
@@ -395,18 +261,11 @@ def query_dedup_index(
     # Carrying the 64-slot signature through 16 band rows (the media
     # index's keep_fp fix) would 16x the candidate-join shuffle, so
     # recomputation is the cheaper leak-free shape for text.
-    idx_buckets = _index_buckets(spark, path)
-    idx_sigs = spark.read.parquet(f"{path}/signatures")
-    ts = _tombstones(spark, path)
-    if ts is not None:
-        # Anti-joining the signature frame alone suffices: a tombstoned
-        # id's surviving bucket rows drop out of the candidate set at
-        # the signature inner join below.
-        idx_sigs = idx_sigs.join(
-            ts.select(F.col("doc_id").alias(id_col)).distinct(),
-            id_col,
-            "left_anti",
-        )
+    idx_buckets = store.bands()
+    # Masking the signature frame alone suffices: a tombstoned id's
+    # surviving bucket rows drop out of the candidate set at the
+    # signature inner join below.
+    idx_sigs = store.live("signatures")
 
     candidates = (
         new_buckets.select(
@@ -504,15 +363,7 @@ def flag_new_batch_exact(
     path). At 100 TB the index side aggregates to one row per distinct
     digest before the join, so the join key set is bounded by corpus
     cardinality, not corpus size."""
-    spark = new_docs.sparkSession
-    stored = spark.read.parquet(f"{path}/exact")
-    ts = _tombstones(spark, path)
-    if ts is not None:
-        stored = stored.join(
-            ts.select(F.col("doc_id").alias(id_col)).distinct(),
-            id_col,
-            "left_anti",
-        )
+    stored = _store(new_docs.sparkSession, path, id_col).live("exact")
     idx = stored.groupBy("text_md5").agg(
         F.count(F.lit(1)).alias("n_matches"),
         F.min(id_col).alias("best_match_id"),

@@ -15,6 +15,9 @@ this index removes. Stored layout at ``path``:
 * ``meta`` — (modality, max_hamming, bands, bucket_n) pinned at build
   time so callers cannot drift the band structure between batches.
 
+Tombstones, compaction, the bucketed band table and ``meta`` follow the
+one protocol in :mod:`..storage.index_store`.
+
 Banding follows ``dedup.simhash_near_dup_pairs``: ``bands`` defaults
 to the pigeonhole minimum ``max_hamming + 1`` (recall exact, widest —
 most selective — band values; see the round-7 probe numbers in
@@ -24,13 +27,10 @@ BASELINE.md). The typical intake loop is
 
 from __future__ import annotations
 
-import hashlib
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from ..fsutil import delete_path as _delete_path
-from ..localframe import local_df
-from ..fsutil import path_exists as _path_exists
+
+from ..storage.index_store import BANDS, IndexStore
 
 __all__ = [
     "build_media_index",
@@ -87,31 +87,11 @@ def _bands(fp_df: DataFrame, bands: int, keep_fp: bool = False) -> DataFrame:
     )
 
 
-
-def _tombstones(spark: SparkSession, path: str) -> DataFrame | None:
-    """Logically-removed asset ids, or None when nothing was removed."""
-    if _path_exists(spark, f"{path}/tombstones"):
-        return spark.read.parquet(f"{path}/tombstones")
-    return None
-
-
-def _bucket_table_name(path: str) -> str:
-    return "media_idx_" + hashlib.md5(path.encode()).hexdigest()[:12]
-
-
-def _register_bucketed(spark: SparkSession, path: str, bucket_n: int) -> DataFrame:
-    name = _bucket_table_name(path)
-    if not spark.catalog.tableExists(name):
-        # SORTED BY must match the writer's sortBy or Spark rejects
-        # appended buckets as a different layout
-        spark.sql(
-            f"CREATE TABLE {name} (asset_id BIGINT, band_idx INT, "
-            f"band_val BIGINT) USING parquet "
-            f"CLUSTERED BY (band_idx, band_val) "
-            f"SORTED BY (band_idx, band_val) INTO {bucket_n} BUCKETS "
-            f"LOCATION '{path}/buckets'"
-        )
-    return spark.table(name)
+def _store(spark: SparkSession, path: str, bucket_n=None) -> IndexStore:
+    return IndexStore(
+        spark, path, "asset_id", stores=("fingerprints", BANDS),
+        band_key="band_val", bucket_n=bucket_n,
+    )
 
 
 def build_media_index(
@@ -133,7 +113,6 @@ def build_media_index(
     winner, and append). The caller owns materialization; an
     un-materialized frame would be evaluated once per write below.
     """
-    spark = media.sparkSession
     if bands is None:
         bands = max_hamming + 1
     if bands < max_hamming + 1:
@@ -141,57 +120,26 @@ def build_media_index(
             f"bands={bands} breaks pigeonhole recall for "
             f"max_hamming={max_hamming}"
         )
+    store = _store(media.sparkSession, path, bucket_n)
+    store.clear_tombstones()
     fp = (
         precomputed_fp
         if precomputed_fp is not None
         else _fingerprint(media, modality).persist()
     )
     try:
-        # AQE-rebalanced writes (guide §6 — small files hurt twice):
-        # without the hint every upstream partition writes its own
-        # fingerprint file and one file PER BUCKET it touches in the
-        # band table (32 partitions x 8 buckets = 256 files per
-        # batch-sized append; every subsequent flag re-lists and
-        # re-opens all of them). Rebalance sizes the write to the
-        # data: a small batch collapses to one task (1 fingerprint
-        # file, bucket_n band files), a huge build splits at AQE's
-        # advisory size — scale-adaptive, not a local[32] constant.
-        fp.hint("rebalance").write.mode("overwrite").parquet(
-            f"{path}/fingerprints"
-        )
-        name = _bucket_table_name(path)
-        spark.sql(f"DROP TABLE IF EXISTS {name}")
-        # The bucket table is EXTERNAL (CREATE ... LOCATION), so DROP
-        # TABLE leaves the files: clear the directory or a rebuild at
-        # an existing path appends fresh band rows on top of stale
-        # ones and the candidate set grows across rebuilds (ADVICE r7).
-        _delete_path(spark, f"{path}/buckets")
-        # A rebuild is a fresh corpus: tombstones from the path's
-        # previous life must not mask the new assets.
-        _delete_path(spark, f"{path}/tombstones")
-        _register_bucketed(spark, path, bucket_n)
-        (
-            _bands(fp, bands)
-            .hint("rebalance", "band_idx", "band_val")
-            .write.mode("append")
-            .format("parquet")
-            .bucketBy(bucket_n, "band_idx", "band_val")
-            .sortBy("band_idx", "band_val")
-            .saveAsTable(name)
-        )
+        store.write(fp, "fingerprints", "overwrite")
+        # An overwrite, so a rebuild at an existing path never stacks
+        # fresh band rows on stale ones (ADVICE r7).
+        store.write(_bands(fp, bands), BANDS, "overwrite")
     finally:
         if precomputed_fp is None:
             fp.unpersist()
-    local_df(
-        spark,
+    store.write_rows(
+        "meta",
         [(modality, max_hamming, bands, bucket_n)],
         "modality string, max_hamming int, bands int, bucket_n int",
-    ).coalesce(1).write.mode("overwrite").parquet(f"{path}/meta")
-
-
-def _read_meta(spark: SparkSession, path: str) -> tuple[str, int, int, int]:
-    r = spark.read.parquet(f"{path}/meta").collect()[0]
-    return r["modality"], int(r["max_hamming"]), int(r["bands"]), int(r["bucket_n"])
+    )
 
 
 def append_to_media_index(
@@ -216,7 +164,8 @@ def append_to_media_index(
     not the caller's. With ``precomputed_fp``, ``media`` may be None
     (nothing else is read from it)."""
     spark = (media if precomputed_fp is None else precomputed_fp).sparkSession
-    modality, _mh, bands, bucket_n = _read_meta(spark, path)
+    store = _store(spark, path)
+    modality, bands = store.meta["modality"], store.meta["bands"]
     # localCheckpoint, not persist: persist is NOT a freeze — Spark
     # re-caches (re-executes) cached plans whose input paths are
     # written to, so a persisted frame whose lineage reads this index
@@ -229,20 +178,8 @@ def append_to_media_index(
         if precomputed_fp is not None
         else _fingerprint(media, modality)
     ).localCheckpoint()
-    _register_bucketed(spark, path, bucket_n)  # fresh-session safe
-    # Rebalance both appends (see build_media_index): an un-hinted
-    # batch append writes partitions x buckets tiny band files that
-    # every later flag pays to list and open.
-    (
-        _bands(fp, bands)
-        .hint("rebalance", "band_idx", "band_val")
-        .write.mode("append")
-        .format("parquet")
-        .bucketBy(bucket_n, "band_idx", "band_val")
-        .sortBy("band_idx", "band_val")
-        .saveAsTable(_bucket_table_name(path))
-    )
-    fp.hint("rebalance").write.mode("append").parquet(f"{path}/fingerprints")
+    store.write(_bands(fp, bands), BANDS, "append")
+    store.write(fp, "fingerprints", "append")
 
 
 def query_media_index(
@@ -262,23 +199,20 @@ def query_media_index(
     probe batch, for callers that already fingerprinted it (the intake
     sink) — skips the decode+hash entirely."""
     spark = (new_media if precomputed_fp is None else precomputed_fp).sparkSession
-    modality, max_hamming, bands, bucket_n = _read_meta(spark, path)
+    store = _store(spark, path)
+    modality, max_hamming, bands = (
+        store.meta[c] for c in ("modality", "max_hamming", "bands")
+    )
     new_fp = (
         precomputed_fp
         if precomputed_fp is not None
         else _fingerprint(new_media, modality)
     )
-    idx_buckets = _register_bucketed(spark, path, bucket_n)
-    idx_fp = spark.read.parquet(f"{path}/fingerprints")
-    ts = _tombstones(spark, path)
-    if ts is not None:
-        # Anti-joining the fingerprint frame alone suffices: a
-        # tombstoned id's surviving BUCKET rows drop out of the
-        # candidate set at the fingerprint inner join below — the same
-        # mechanism that makes stale band rows harmless on rebuild.
-        idx_fp = idx_fp.join(
-            ts.select("asset_id").distinct(), "asset_id", "left_anti"
-        )
+    idx_buckets = store.bands()
+    # Masking the fingerprint frame alone suffices: a tombstoned id's
+    # surviving BUCKET rows drop out of the candidate set at the
+    # fingerprint inner join below.
+    idx_fp = store.live("fingerprints")
     candidates = (
         _bands(new_fp, bands, keep_fp=True)
         .select(
@@ -363,17 +297,10 @@ def remove_from_media_index(spark: SparkSession, path: str, asset_ids) -> None:
     a removed asset under a fresh id, the same rule every
     tombstone-based store imposes).
 
-    ``asset_ids`` is a one-column DataFrame or an iterable of ints.
+    ``asset_ids`` is a one-column DataFrame or an iterable of ints; an
+    empty iterable writes nothing.
     """
-    if isinstance(asset_ids, DataFrame):
-        ids = asset_ids.select(
-            F.col(asset_ids.columns[0]).cast("long").alias("asset_id")
-        )
-    else:
-        ids = local_df(
-            spark, [(int(i),) for i in asset_ids], "asset_id long"
-        )
-    ids.write.mode("append").parquet(f"{path}/tombstones")
+    _store(spark, path).remove(asset_ids)
 
 
 def compact_media_index(spark: SparkSession, path: str) -> None:
@@ -384,34 +311,4 @@ def compact_media_index(spark: SparkSession, path: str) -> None:
     compaction on a cadence, not per delete. localCheckpoint pins the
     filtered frames before their source paths are overwritten (lineage
     re-execution would otherwise read the half-rewritten store)."""
-    ts = _tombstones(spark, path)
-    if ts is None:
-        return
-    _mod, _mh, _bands, bucket_n = _read_meta(spark, path)
-    ts_ids = ts.select("asset_id").distinct().localCheckpoint()
-    fp = (
-        spark.read.parquet(f"{path}/fingerprints")
-        .join(ts_ids, "asset_id", "left_anti")
-        .localCheckpoint()
-    )
-    name = _bucket_table_name(path)
-    kept = (
-        _register_bucketed(spark, path, bucket_n)
-        .join(ts_ids, "asset_id", "left_anti")
-        .localCheckpoint()
-    )
-    fp.hint("rebalance").write.mode("overwrite").parquet(
-        f"{path}/fingerprints"
-    )
-    spark.sql(f"DROP TABLE IF EXISTS {name}")
-    _delete_path(spark, f"{path}/buckets")
-    _register_bucketed(spark, path, bucket_n)
-    (
-        kept.hint("rebalance", "band_idx", "band_val")
-        .write.mode("append")
-        .format("parquet")
-        .bucketBy(bucket_n, "band_idx", "band_val")
-        .sortBy("band_idx", "band_val")
-        .saveAsTable(name)
-    )
-    _delete_path(spark, f"{path}/tombstones")
+    _store(spark, path).compact()

@@ -40,14 +40,18 @@ def write_bucketed(
     n_buckets: int = 32,
     sort_cols: list[str] | None = None,
     path: Path | str | None = None,
+    mode: str = "overwrite",
 ) -> None:
     """Persist ``df`` as a bucketed (and optionally sorted) parquet
     table. Sorting within buckets lets the join skip its Sort too.
     ``path`` makes it an external table so the files live under the
-    caller's data root instead of the session warehouse dir."""
-    df.sparkSession.sql(f"DROP TABLE IF EXISTS {table}")
+    caller's data root instead of the session warehouse dir.
+    ``mode="append"`` adds files to an existing table of the same
+    bucketing instead of replacing it."""
+    if mode == "overwrite":
+        df.sparkSession.sql(f"DROP TABLE IF EXISTS {table}")
     writer = (
-        df.write.mode("overwrite")
+        df.write.mode(mode)
         .format("parquet")
         .bucketBy(n_buckets, *bucket_cols)
     )

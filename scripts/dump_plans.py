@@ -363,7 +363,7 @@ NOTES = {
     ),
     "incremental_dedup_bucketed_docs": (
         "The index-side scan is the catalog table "
-        "(spark_catalog.default.dedup_idx_buckets_*) with Bucketed: "
+        "(spark_catalog.default.idx_buckets_*) with Bucketed: "
         "true — pre-partitioned on the (band_idx, band_hash) join key "
         "at build time, so the corpus-sized index never re-exchanges "
         "for a batch check; at this sf the tiny batch side broadcasts, "

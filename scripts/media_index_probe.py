@@ -35,6 +35,7 @@ from pyspark.sql import functions as F  # noqa: E402
 import quantlab_data_pipeline_spark.llm.media_index as mi  # noqa: E402
 from quantlab_data_pipeline_spark.llm.multimodal import media_from_text  # noqa: E402
 from quantlab_data_pipeline_spark.session import get_spark  # noqa: E402
+from quantlab_data_pipeline_spark.storage.index_store import IndexStore  # noqa: E402
 from quantlab_data_pipeline_spark.sources.testdata import load_table  # noqa: E402
 
 N_COPIES = int(sys.argv[1]) if len(sys.argv) > 1 else 100
@@ -102,14 +103,14 @@ def main() -> None:
     print(f"build: {n_assets:,} assets in {build_s:.1f}s", flush=True)
 
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    orig_register = mi._register_bucketed
+    orig_bands = IndexStore.bands
     results = {}
     pair_sets = {}
     for label in ("bucketed", "plain"):
         if label == "plain":
             # Same files, no bucket metadata: the layout's whole effect.
-            mi._register_bucketed = (
-                lambda spark, p, n: spark.read.parquet(f"{p}/buckets")
+            IndexStore.bands = (
+                lambda store: store.spark.read.parquet(f"{store.path}/buckets")
             )
         try:
             walls = []
@@ -123,7 +124,7 @@ def main() -> None:
             pair_sets[label] = set(map(tuple, q.collect()))
             plan = q._jdf.queryExecution().executedPlan().toString()
         finally:
-            mi._register_bucketed = orig_register
+            IndexStore.bands = orig_bands
         results[label] = {
             "query_cold_s": round(walls[0], 2),
             "query_steady_s": round(walls[1], 2),

@@ -187,9 +187,11 @@ def test_bucketed_index_survives_fresh_catalog(spark, index_path):
     re-register from meta and keep both the results and the bucketed
     scan."""
     from quantlab_data_pipeline_spark.llm.dedup_index import (
-        _bucket_table_name,
         build_dedup_index,
         flag_new_batch,
+    )
+    from quantlab_data_pipeline_spark.storage.index_store import (
+        bucket_table as _bucket_table_name,
     )
 
     corpus = _corpus(spark)
@@ -378,3 +380,47 @@ def test_takedown_masks_reappends_until_compaction(spark, index_path):
     )
     r = flag_new_batch_exact(probe, index_path).collect()[0]
     assert r["is_dup"] is True and r["best_match_id"] == 203
+
+
+def test_empty_bucketed_band_table_reopens_in_fresh_catalog(spark, index_path):
+    """A bucketed write of zero rows leaves no parquet file, so the band
+    table of an emptied (or empty-built) bucketed index must be
+    re-registered from its declared schema, not from the files: after
+    the catalog entry is dropped (= a fresh session), flagging and
+    appending still work, and the appended doc is found."""
+    from quantlab_data_pipeline_spark.llm.dedup_index import (
+        append_to_index,
+        build_dedup_index,
+        compact_dedup_index,
+        flag_new_batch,
+        query_dedup_index,
+        remove_from_dedup_index,
+    )
+    from quantlab_data_pipeline_spark.storage.index_store import (
+        bucket_table as _bucket_table_name,
+    )
+
+    text = "a document about empty bucketed band tables " * 3
+    emptied = index_path + "-emptied"
+    build_dedup_index(
+        _docs(spark, [(i, f"{PROSE} doc {i} " * 2) for i in range(3)]),
+        emptied, num_hashes=32, bands=8, bucket_n=4,
+    )
+    remove_from_dedup_index(spark, emptied, [0, 1, 2])
+    compact_dedup_index(spark, emptied)
+    never_filled = index_path + "-empty"
+    build_dedup_index(
+        _docs(spark, []), never_filled, num_hashes=32, bands=8, bucket_n=4
+    )
+    for path in (emptied, never_filled):
+        spark.sql(f"DROP TABLE IF EXISTS {_bucket_table_name(path)}")
+        flagged = flag_new_batch(_docs(spark, [(10, text)]), path, 0.9)
+        assert [(r["doc_id"], r["is_dup"]) for r in flagged.collect()] == [
+            (10, False)
+        ]
+        spark.sql(f"DROP TABLE IF EXISTS {_bucket_table_name(path)}")
+        append_to_index(_docs(spark, [(10, text)]), path)
+        hits = query_dedup_index(_docs(spark, [(11, text)]), path, 0.9)
+        assert [(r["new_id"], r["indexed_id"]) for r in hits.collect()] == [
+            (11, 10)
+        ]

@@ -119,9 +119,9 @@ def test_flag_append_then_findable(spark, index_path):
 
 
 def test_band_structure_pinned_in_meta(spark, index_path):
-    from quantlab_data_pipeline_spark.llm.media_index import (
-        _read_meta,
-        build_media_index,
+    from quantlab_data_pipeline_spark.llm.media_index import build_media_index
+    from quantlab_data_pipeline_spark.storage.index_store import (
+        read_meta as _read_meta,
     )
 
     with pytest.raises(ValueError, match="pigeonhole"):
@@ -186,9 +186,11 @@ def test_fresh_session_reregisters_bucketed_scan(spark, index_path):
     (= a fresh session, files intact) must re-register from meta and
     keep both the answers and the bucketed index-side scan."""
     from quantlab_data_pipeline_spark.llm.media_index import (
-        _bucket_table_name,
         build_media_index,
         flag_new_media,
+    )
+    from quantlab_data_pipeline_spark.storage.index_store import (
+        bucket_table as _bucket_table_name,
     )
 
     build_media_index(
@@ -308,7 +310,9 @@ def test_takedown_masks_then_compaction_reclaims(spark, index_path):
 
     assert not os.path.exists(f"{index_path}/tombstones")
     # Bucket store rewritten without the tombstoned asset's band rows.
-    from quantlab_data_pipeline_spark.llm.media_index import _bucket_table_name
+    from quantlab_data_pipeline_spark.storage.index_store import (
+        bucket_table as _bucket_table_name,
+    )
 
     bk = {
         r["asset_id"]
