@@ -24,6 +24,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ..localframe import local_df
+
 # Canonical multimodal asset schema: opaque payload + typed metadata.
 MEDIA_SCHEMA = T.StructType(
     [
@@ -590,4 +592,4 @@ def synthetic_media(spark, n: int = 64) -> DataFrame:
                  16000 if kind == "audio" else None, fmt),
             )
         )
-    return spark.createDataFrame(rows, MEDIA_SCHEMA)
+    return local_df(spark, rows, MEDIA_SCHEMA)

@@ -58,9 +58,15 @@ def local_df(
     action.
     """
     import pandas as pd
+    import pyarrow as pa
 
     names = schema.names if isinstance(schema, StructType) else _ddl_names(schema)
-    pdf = pd.DataFrame.from_records(list(rows), columns=names)
+    rows = list(rows)
+    if not rows:
+        # pandas' Arrow path skips an empty frame and plans a Python RDD;
+        # an empty Arrow table converts like any other.
+        return spark.createDataFrame(pa.table({n: pa.nulls(0) for n in names}), schema=schema)
+    pdf = pd.DataFrame.from_records(rows, columns=names)
     return spark.createDataFrame(pdf, schema=schema)
 
 

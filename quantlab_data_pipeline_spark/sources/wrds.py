@@ -40,6 +40,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ..localframe import local_df
+
 _log = logging.getLogger(__name__)
 
 
@@ -170,8 +172,8 @@ def _semi_filter(df: DataFrame, col: str, values: Sequence) -> DataFrame:
     vals = list(values)
     if len(vals) <= 1000:
         return df.filter(F.col(col).isin(vals))
-    spark = df.sparkSession
-    ids = spark.createDataFrame([(v,) for v in vals], [col])
+    key = T.StructType([T.StructField(col, df.schema[col].dataType)])
+    ids = local_df(df.sparkSession, [(v,) for v in vals], key)
     return df.join(F.broadcast(ids), col, "left_semi")
 
 
@@ -278,7 +280,7 @@ class JdbcWrdsSource(WrdsSource):
         if fallback_schema is None:
             raise RuntimeError(f"{label}: all candidates failed: {attempted}") from last_exc
         _log.warning("%s unavailable (%s); branch degrades to empty.", label, attempted)
-        return self.spark.createDataFrame([], fallback_schema)
+        return local_df(self.spark, [], fallback_schema)
 
     def sp500_universe(self, start: str, end: str) -> DataFrame:
         start, end = _sql_date(start), _sql_date(end)

@@ -21,6 +21,17 @@ that scan. A resolution is keyed on the dataset path's modification
 stamp (inode + mtime), so a re-ingest into the same root — which
 replaces the path — is picked up by the next read. The driver-side
 assets dimension (the ticker map) follows the same rule.
+
+The resolution also records whether the table is small: on-disk size
+at or below ``spark.sql.files.openCostInBytes`` (taken from the scan's
+plan statistics, no job). A getter whose tables are all small returns
+its frame ``coalesce(1)``'d as its last step, so a global ``orderBy``
+on it (``_finish``, or a caller's) is a local sort over one partition:
+one Spark job, where a range exchange costs a sampling job, a
+shuffle-map stage and a result stage. Large tables keep their parallel
+scan and range sort. The coalesce is never put on the shared scan (a
+one-partition join side would drop the sort-merge join's Exchange) nor
+on the bucketed prices-returns join.
 """
 
 from __future__ import annotations
@@ -131,18 +142,49 @@ class LocalParquetDataHandler(DataHandler):
             self._resolutions[(kind, table)] = hit
         return hit[1]
 
-    def _scan(self, table: str) -> DataFrame:
-        """Schema'd lazy scan with date-column normalization to timestamp,
+    def _resolved_scan(self, table: str) -> tuple[DataFrame, bool]:
+        """The table's scan and whether the table is small, both
         resolved once per path stamp (:meth:`_resolved`).
+
+        Small means an on-disk size at or below
+        ``spark.sql.files.openCostInBytes``, the size below which Spark
+        itself does not give a file its own split. The size is the
+        scan's plan statistic, read from the file listing the scan
+        already made: no job.
+        """
+
+        def build(path: Path) -> tuple[DataFrame, bool]:
+            raw = self.spark.read.parquet(str(path))
+            size = raw._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
+            limit = self.spark._jsparkSession.sessionState().conf().filesOpenCostInBytes()
+            return self._normalize_dates(raw, table), size <= limit
+
+        return self._resolved("scan", table, build)
+
+    def _scan(self, table: str) -> DataFrame:
+        """Schema'd lazy scan with date-column normalization to timestamp.
 
         Timestamps (not DateType) are used so ``toPandas()`` yields
         datetime64[ns] columns exactly like the reference's
         ``pd.to_datetime`` post-parse.
+
+        Never coalesced here: a one-partition scan would satisfy the
+        sort-merge join's distribution and drop its Exchange.
         """
-        return self._resolved(
-            "scan", table,
-            lambda path: self._normalize_dates(self.spark.read.parquet(str(path)), table),
-        )
+        return self._resolved_scan(table)[0]
+
+    def _sized(self, df: DataFrame, *tables: str) -> DataFrame:
+        """``df`` as one partition when it reads tables and every one of
+        them is small.
+
+        Applied last, after every filter, projection, rename and join,
+        so the frame reports ``SinglePartition``: a global ``orderBy``
+        on it then plans a local sort, with no range exchange and no
+        sampling job.
+        """
+        if tables and all(self._resolved_scan(t)[1] for t in tables):
+            return df.coalesce(1)
+        return df
 
     @staticmethod
     def _normalize_dates(df: DataFrame, table: str) -> DataFrame:
@@ -235,6 +277,7 @@ class LocalParquetDataHandler(DataHandler):
         fields: Optional[list[str]] = None,
         mandatory: Optional[list[str]] = None,
         date_col: str = "date",
+        renames: Optional[dict[str, str]] = None,
     ) -> DataFrame:
         df = self._scan(table)
         ids = self._tickers_to_asset_ids(tickers) if tickers else None
@@ -244,7 +287,9 @@ class LocalParquetDataHandler(DataHandler):
             df = df.drop("year")  # layout detail, not part of the dataset
         if fields is not None and mandatory is not None:
             df = self._filter_fields(df, fields, mandatory)
-        return df
+        if renames:
+            df = df.withColumnsRenamed({k: v for k, v in renames.items() if k in df.columns})
+        return self._sized(df, table)
 
     @staticmethod
     def _finish(df: DataFrame, sort_keys: list[str]) -> pd.DataFrame:
@@ -265,18 +310,13 @@ class LocalParquetDataHandler(DataHandler):
         df = self._scan("universe_sp500")
         if date:
             df = df.filter(F.col("date") == F.to_timestamp(F.lit(str(date))))
-        return df
+        return self._sized(df, "universe_sp500")
 
     def get_fundamentals_df(self, tickers=None, start_date=None, end_date=None) -> DataFrame:
-        df = self._panel_query(
+        return self._panel_query(
             "fundamentals_quarterly", tickers, start_date, end_date,
-            date_col="report_date",
+            date_col="report_date", renames=self._field_map.get("fundamentals"),
         )
-        mapping = {
-            k: v for k, v in self._field_map.get("fundamentals", {}).items()
-            if k in df.columns
-        }
-        return df.withColumnsRenamed(mapping) if mapping else df
 
     def get_analyst_consensus_df(self, tickers=None, start_date=None, end_date=None, fields=None) -> DataFrame:
         return self._panel_query(
@@ -316,9 +356,13 @@ class LocalParquetDataHandler(DataHandler):
             # co-partitioning (an Exchange would reappear).
             prices = read_table(self.spark, p_table)
             returns = read_table(self.spark, r_table)
+            # Bucketed facts are written for panels big enough to want
+            # the co-partitioned join run in parallel: never coalesced.
+            tables: tuple[str, ...] = ()
         else:
             prices = self._scan("prices_daily")
             returns = self._scan("returns_daily")
+            tables = ("prices_daily", "returns_daily")
         joined = prices.join(
             returns.select("asset_id", "date", "ret_1d"),
             ["asset_id", "date"],
@@ -330,13 +374,17 @@ class LocalParquetDataHandler(DataHandler):
         ids = self._tickers_to_asset_ids(tickers) if tickers else None
         joined = self._filter_assets(joined, ids)
         joined = self._filter_dates(joined, start_date, end_date)
-        return joined.drop("year") if "year" in joined.columns else joined
+        if "year" in joined.columns:
+            joined = joined.drop("year")
+        return self._sized(joined, *tables)
 
     def get_macro_df(self, start_date=None, end_date=None) -> DataFrame:
-        return self._filter_dates(self._scan("macro_timeseries"), start_date, end_date)
+        df = self._filter_dates(self._scan("macro_timeseries"), start_date, end_date)
+        return self._sized(df, "macro_timeseries")
 
     def get_style_factor_returns_df(self, start_date=None, end_date=None) -> DataFrame:
-        return self._filter_dates(self._scan("style_factor_returns"), start_date, end_date)
+        df = self._filter_dates(self._scan("style_factor_returns"), start_date, end_date)
+        return self._sized(df, "style_factor_returns")
 
     def get_benchmark_returns_df(self, benchmark: str, start_date=None, end_date=None) -> DataFrame:
         df = self._scan("benchmarks")
@@ -347,7 +395,7 @@ class LocalParquetDataHandler(DataHandler):
             else:
                 df = df.withColumn("benchmark_name", F.lit(benchmark))
         df = df.filter(F.col("benchmark_name") == benchmark)
-        return self._filter_dates(df, start_date, end_date)
+        return self._sized(self._filter_dates(df, start_date, end_date), "benchmarks")
 
     # -------------------------------------------------- pandas (API parity)
 

@@ -5,7 +5,13 @@ For every ``__spark_entry__.queries()`` entry, build the DataFrame at
 the given scale factor and inspect its physical plan:
 
 * count Exchange / BroadcastExchange operators,
+* count Python evaluation operators (the Python-boundary census: each
+  one ships rows to a Python worker and back),
 * flag CartesianProduct and BroadcastNestedLoopJoin operators.
+
+A Python-RDD scan (``Scan ExistingRDD``) is not counted: a
+localCheckpointed frame prints the same way. tests/test_localframe.py
+keeps ``createDataFrame`` over Python rows out of the package instead.
 
 Writes PLAN_AUDIT.md — a one-line-per-query table that makes shuffle
 regressions reviewable — and exits non-zero if a CartesianProduct
@@ -82,11 +88,20 @@ BNLJ_WHITELIST = {
 }
 
 
+# Physical operators that evaluate Python code on executor rows.
+PYTHON_EVALS = re.compile(
+    r"\b(BatchEvalPython|ArrowEvalPython|MapInPandas|MapInArrow"
+    r"|FlatMapGroupsInPandas|FlatMapCoGroupsInPandas|AggregateInPandas"
+    r"|WindowInPandas|FlatMapGroupsInPandasWithState)\b"
+)
+
+
 def audit_one(name: str, plan: str) -> dict:
     return {
         "name": name,
         "exchanges": len(re.findall(r"\bExchange (hash|range|Single)", plan)),
         "broadcasts": plan.count("BroadcastExchange"),
+        "python": len(PYTHON_EVALS.findall(plan)),
         "cartesian": plan.count("CartesianProduct"),
         "bnlj": plan.count("BroadcastNestedLoopJoin"),
     }
@@ -131,17 +146,20 @@ def main() -> None:
         "upstream shuffles still happen, once, inside the operator;",
         "PLANS.md keeps the full pre-freeze shapes in its notes.",
         "",
-        "| query | exchanges | broadcasts | BNLJ | note |",
-        "|---|---|---|---|---|",
+        "`python` counts the operators that evaluate Python on executor",
+        "rows (BatchEvalPython, ArrowEvalPython, MapInPandas, ...).",
+        "",
+        "| query | exchanges | broadcasts | BNLJ | python | note |",
+        "|---|---|---|---|---|---|",
     ]
     for r in rows:
         if "error" in r:
-            lines.append(f"| {r['name']} | — | — | — | ERROR {r['error']} |")
+            lines.append(f"| {r['name']} | — | — | — | — | ERROR {r['error']} |")
             continue
         note = BNLJ_WHITELIST.get(r["name"], "") if r["bnlj"] else ""
         lines.append(
             f"| {r['name']} | {r['exchanges']} | {r['broadcasts']} | "
-            f"{r['bnlj']} | {note} |"
+            f"{r['bnlj']} | {r['python']} | {note} |"
         )
     if bad:
         lines += ["", "## VIOLATIONS", ""] + [f"- {b}" for b in bad]

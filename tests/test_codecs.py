@@ -130,6 +130,30 @@ def test_wav_payloads_in_synthetic_media_decode(spark):
         assert int(np.abs(samples).max()) <= 3000
 
 
+def test_synthetic_media_rows_are_pinned(spark):
+    """synthetic_media is an Arrow-built local scan whose rows hash to
+    the digest the Python-RDD build gave (the ten tests on it see the
+    same bytes)."""
+    import hashlib
+    import json
+
+    from quantlab_data_pipeline_spark.llm.multimodal import synthetic_media
+
+    df = synthetic_media(spark, 64)
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert "LocalTableScan" in plan and "ExistingRDD" not in plan
+    rows = sorted(
+        (r.asDict(recursive=True) for r in df.collect()), key=lambda r: r["asset_id"]
+    )
+    canon = json.dumps(
+        [[r["asset_id"], r["media_type"], r["content"].hex(), r["meta"]] for r in rows],
+        sort_keys=True,
+    )
+    assert hashlib.sha256(canon.encode()).hexdigest() == (
+        "3df22745055704784742ba8b6077d6c8efd98dade89dbec42c5f5ea5dec994e8"
+    )
+
+
 def test_rgb_png_reduces_to_luma_in_kernel(spark):
     """An RGB payload decodes to its channel-mean luma plane inside the
     feature kernel (truncating uint8 cast, like the kernel does)."""

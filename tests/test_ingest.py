@@ -353,6 +353,113 @@ def test_partitioned_layout_prunes_and_matches(spark, part_root, data_root):
     assert "year" in plan.split("PartitionFilters")[1][:200]
 
 
+# -------------------------------------------- small tables read as one partition
+
+OPEN_COST = "spark.sql.files.openCostInBytes"
+
+
+def _plan(df) -> str:
+    return df._jdf.queryExecution().executedPlan().toString()
+
+
+def _handler_gate_off(root, spark) -> LocalParquetDataHandler:
+    """A handler that resolved every table with the size setting below
+    any table's size: no table counts as small, so no read is
+    coalesced."""
+    old = spark.conf.get(OPEN_COST)
+    spark.conf.set(OPEN_COST, "1")
+    try:
+        h = LocalParquetDataHandler(root, spark=spark)
+        for table in (
+            "prices_daily", "returns_daily", "universe_sp500",
+            "fundamentals_quarterly", "analyst_consensus",
+            "analyst_ratings_history", "macro_timeseries",
+            "style_factor_returns", "benchmarks",
+        ):
+            h._resolved_scan(table)
+        return h
+    finally:
+        spark.conf.set(OPEN_COST, old)
+
+
+def _every_getter(h, tickers, start, end) -> dict[str, tuple[pd.DataFrame, list[str]]]:
+    """Each getter's result with the keys it sorts on."""
+    dk = ["date", "asset_id"]
+    return {
+        "prices": (h.get_prices(tickers, start, end), dk),
+        "prices_fields": (h.get_prices(tickers, start, end, ["close"]), dk),
+        "returns": (h.get_returns(tickers, start, end), dk),
+        "universe": (h.get_universe(), dk),
+        "fundamentals": (
+            h.get_fundamentals(tickers, start, end), ["report_date", "asset_id"]
+        ),
+        "consensus": (h.get_analyst_consensus(tickers, start, end), dk),
+        "ratings": (h.get_analyst_ratings_history(tickers, start, end), dk),
+        "macro": (h.get_macro(start, end), ["date", "series_name"]),
+        "factors": (h.get_style_factor_returns(start, end), ["date", "factor_name"]),
+        "benchmark": (h.get_benchmark_returns("^GSPC", start, end), ["date"]),
+        "prices_with_returns": (
+            h.get_prices_with_returns_df(tickers, start, end).toPandas(), []
+        ),
+    }
+
+
+def _assert_same_frames(on: dict, off: dict) -> None:
+    """Same rows and columns; the sort keys in the same order. Rows that
+    tie on the keys may come in either order."""
+    assert on.keys() == off.keys()
+    for name, (a, keys) in on.items():
+        b = off[name][0]
+        assert len(a) > 0, name
+        pd.testing.assert_frame_equal(a[keys], b[keys], obj=name)
+        order = keys + [c for c in a.columns if c not in keys]
+        pd.testing.assert_frame_equal(
+            a.sort_values(order, kind="mergesort").reset_index(drop=True),
+            b.sort_values(order, kind="mergesort").reset_index(drop=True),
+            obj=name,
+        )
+
+
+@pytest.mark.parametrize("layout", ["fixture", "ingest", "partitioned"])
+def test_small_table_gate_returns_the_same_frames(layout, request, spark):
+    """Every getter answers the same with its small tables read as one
+    partition (the default here) and with the gate forced off."""
+    root, tickers, start, end = {
+        "fixture": ("fixture_root", ["AAA", "BBB"], "2020-01-01", "2020-06-30"),
+        "ingest": ("data_root", ["ALPH", "BRVO"], START, END),
+        "partitioned": ("part_root", ["ALPH", "BRVO"], START, END),
+    }[layout]
+    root = request.getfixturevalue(root)
+    on = LocalParquetDataHandler(root, spark=spark)
+    off = _handler_gate_off(root, spark)
+    assert "Coalesce 1" in _plan(on.get_prices_df(tickers, start, end))
+    assert "Coalesce" not in _plan(off.get_prices_df(tickers, start, end))
+    _assert_same_frames(
+        _every_getter(on, tickers, start, end), _every_getter(off, tickers, start, end)
+    )
+
+
+def test_small_table_sorted_read_runs_one_job(data_root, spark):
+    """A sorted read of a resolved small table is one job with no
+    Exchange: a local sort over one partition, no range-partition
+    sampling. With the gate off the range exchange comes back."""
+    h = LocalParquetDataHandler(data_root, spark=spark)
+    args = (["ALPH", "BRVO"], START, END, ["close"])
+    h.get_prices(*args)  # resolve the table and the ticker map
+    reads = {
+        "get_prices": lambda: h.get_prices(*args),
+        "orderBy": lambda: h.get_prices_df(*args).orderBy("date", "asset_id").toPandas(),
+    }
+    for name, read in reads.items():
+        jobs, outside = _count_jobs(spark, read)
+        assert (jobs, outside) == (1, set()), name
+    plan = _plan(h.get_prices_df(*args).orderBy("date", "asset_id"))
+    assert "Exchange" not in plan, plan
+    off = _handler_gate_off(data_root, spark)
+    plan = _plan(off.get_prices_df(*args).orderBy("date", "asset_id"))
+    assert "Exchange rangepartitioning" in plan, plan
+
+
 def test_validation_clean_on_ingest_output(data_root, spark):
     from quantlab_data_pipeline_spark.validation import validate_outputs
 
@@ -495,6 +602,37 @@ def test_bucketed_facts_join_without_exchange(spark, tmp_path_factory):
         assert "Exchange" in fallback._jdf.queryExecution().executedPlan().toString()
     finally:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
+
+
+def test_bucketed_panel_join_stays_exchange_free(spark, tmp_path_factory):
+    """The small-table gate leaves the bucketed prices-returns join as
+    it is: a sort-merge join over co-partitioned buckets, no Exchange of
+    any kind (broadcast off, as in the test above, so the planner keeps
+    the bucketed join for these few rows)."""
+    from quantlab_data_pipeline_spark.storage.bucketing import root_scoped_table
+
+    root = tmp_path_factory.mktemp("bucketed_gate_root")
+    ingest(
+        root, START, END, save_raw=False, bucket_facts=True,
+        source=SyntheticWrdsSource(spark, n_assets=3),
+        fred_fetcher=synthetic_fred_fetcher(), spark=spark,
+    )
+    h = LocalParquetDataHandler(root / "quantlab_data_pipeline", spark=spark)
+    old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    try:
+        for joined in (
+            h.get_prices_with_returns_df(),
+            h.get_prices_with_returns_df(["ALPH"], START, END),
+        ):
+            plan = _plan(joined)
+            assert "Exchange" not in plan, plan[:1200]
+            assert "Bucketed: true" in plan
+            assert joined.count() > 0
+    finally:
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
+        for t in ("prices_daily_bucketed", "returns_daily_bucketed"):
+            spark.sql(f"DROP TABLE IF EXISTS {root_scoped_table(t, h.data_root)}")
 
 
 def test_ratings_history_handles_det_rec_shape(spark):

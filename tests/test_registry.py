@@ -204,3 +204,24 @@ def test_no_cartesian_and_only_whitelisted_nested_loops(spark):
         assert "CartesianProduct" not in plan, name
         if "BroadcastNestedLoopJoin" in plan:
             assert name in BNLJ_WHITELIST, name
+
+
+def test_plan_audit_counts_python_operators():
+    """The audit's Python-boundary census, on a hand-written plan: every
+    Python evaluation operator counts once, a Python-RDD scan does not."""
+    from scripts.plan_audit import audit_one
+
+    plan = """AdaptiveSparkPlan isFinalPlan=false
++- FlatMapGroupsInPandasWithState f(k#1), [k#1], state
+   +- FlatMapGroupsInPandas [k#1], f(k#1, v#2)#9, [k#1, v#2]
+      +- Exchange hashpartitioning(k#1, 8), ENSURE_REQUIREMENTS, [plan_id=7]
+         +- MapInPandas kernel(k#1, v#2)#8, [k#1, v#2], false
+            +- ArrowEvalPython [pudf(v#2)#5], [pythonUDF0#6], 200
+               +- BatchEvalPython [udf(v#2)#3], [pythonUDF0#4]
+                  +- Scan ExistingRDD[k#1,v#2]
+"""
+    row = audit_one("q", plan)
+    assert (row["python"], row["exchanges"]) == (5, 1)
+    assert audit_one("q", "Scan ExistingRDD[k#1]")["python"] == 0
+    census = "MapInArrow AggregateInPandas WindowInPandas FlatMapCoGroupsInPandas"
+    assert audit_one("q", census)["python"] == 4

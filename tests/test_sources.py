@@ -33,6 +33,20 @@ def test_semi_filter_large_list_is_semi_join(spark):
     assert "LeftSemi" in plan
 
 
+def _plan(df) -> str:
+    return df._jdf.queryExecution().executedPlan().toString()
+
+
+def test_semi_filter_large_list_is_a_local_scan(spark):
+    """The >1000-value key frame is an Arrow-built local scan typed like
+    the filtered column, not a Python RDD."""
+    df = spark.range(5000).select(F.col("id").cast("int").alias("k"))
+    out = _semi_filter(df, "k", list(range(0, 4000, 2)))
+    plan = _plan(out)
+    assert "LocalTableScan" in plan and "ExistingRDD" not in plan
+    assert out.count() == 2000
+
+
 def test_jdbc_queries_push_predicates_serverside(spark):
     """No live server needed: the reader's SQL must carry the date
     predicates (the reference pushes them in every query) and never
@@ -133,6 +147,16 @@ def test_delist_probe_degrades_to_empty_when_all_absent(spark):
     assert out.count() == 0
     assert out.columns == ["asset_id", "date", "dlret"]
     assert len(src.attempted) == 3
+
+
+def test_degraded_branch_is_a_local_scan(spark):
+    """The empty frame an unavailable optional table degrades to is an
+    Arrow-built local scan with the declared schema."""
+    src = FlakyJdbc(spark, missing=("StkDelists", "dsedelist", "msedelist"))
+    out = src.delist_events([1], "2020-01-01", "2020-12-31")
+    assert out.schema.simpleString() == "struct<asset_id:bigint,date:date,dlret:double>"
+    plan = _plan(out)
+    assert "LocalTableScan" in plan and "ExistingRDD" not in plan
 
 
 def test_optional_branches_degrade_to_declared_empty(spark):
