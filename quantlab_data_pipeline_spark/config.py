@@ -16,10 +16,12 @@ from typing import Any
 
 import yaml
 
+from .schemas import META_DIR, PROCESSED_DIR, RAW_DIR
+
 DATA_ROOT_ENV_VAR = "QUANTLAB_DATA_ROOT"
 DEFAULT_DATA_ROOT_NAME = "quantlab_data"
 PIPELINE_SUBDIR_NAME = "quantlab_data_pipeline"
-LEGACY_DATA_DIRS = ("data_processed", "data_meta", "data_raw", "reference")
+LEGACY_DATA_DIRS = (PROCESSED_DIR, META_DIR, RAW_DIR, "reference")
 
 DEFAULT_START = "2000-01-01"
 DEFAULT_END = "2025-01-01"

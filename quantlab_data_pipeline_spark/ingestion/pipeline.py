@@ -27,6 +27,11 @@ its task time:
 - no read-backs: the field manifest is built from the column names of
   the frames just written, not from their footers.
 
+What is written where comes from the dataset catalog
+(:data:`..schemas.CATALOG`). The manifests record each path relative
+to the data root, so a moved or copied root keeps manifests that
+describe it; the ingest log names the absolute path of each write.
+
 Overwrite semantics are intentionally preserved: every run recomputes
 and overwrites all outputs (SURVEY §7.3 trap 5 — do not silently make
 this incremental).
@@ -72,7 +77,9 @@ from ..operators import (
 from ..operators.dividends import attach_close_prices
 from ..operators.factors import join_momentum
 from ..operators.intervals import derive_ibes_coverage
-from ..schemas import FIELD_MAP, SCHEMAS
+from ..schemas import (
+    CATALOG, FIELD_MAP, META_DIR, PROCESSED_DIR, RAW_DIR, SCHEMAS, parquet_path,
+)
 from ..localframe import local_df, localize
 from ..session import get_spark
 from ..sources.fred import Fetcher, fetch_macro, http_fred_fetcher
@@ -95,6 +102,13 @@ _HISTORY_COLS = [
 _FUNDA_RAW_COLS = [
     "revt", "sale", "ni", "at", "ceq", "dltt", "pstk", "oancf", "capx", "xrd",
 ]
+
+# The two big facts: year-partitioned by ``partition_by_year``, saved
+# bucketed by ``bucket_facts`` and refreshed by ``update_facts``.
+_FACTS = ("prices_daily", "returns_daily")
+
+# Concurrent write actions in :func:`_write_many`.
+_WRITE_THREADS = 4
 
 
 def _configure_logging(root: Path) -> Path:
@@ -151,7 +165,7 @@ def _write(
     return [c for c in df.columns if c not in parts] + parts
 
 
-def _write_many(jobs: list[tuple], max_parallel: int = 4) -> dict[str, list[str]]:
+def _write_many(root: Path, jobs: dict[str, tuple[DataFrame, dict]]) -> dict[str, list[str]]:
     """Run independent write actions concurrently: Spark's scheduler
     interleaves jobs submitted from different threads, so N small
     writes overlap instead of paying N sequential job latencies (and on
@@ -159,24 +173,21 @@ def _write_many(jobs: list[tuple], max_parallel: int = 4) -> dict[str, list[str]
     them). Each pool task runs under the caller's job group and
     description. Exceptions propagate from the pool.
 
-    Returns ``{str(path): written column names}`` (see :func:`_write`)."""
+    ``jobs`` maps a path relative to ``root`` to its frame and
+    :func:`_write` options. Returns ``{relative path: written column
+    names}`` (see :func:`_write`)."""
+    items = list(jobs.items())
+    spark = items[0][1][0].sparkSession
 
-    def one(job: tuple) -> list[str]:
-        df, path, kw = job
-        return _write(df, path, **kw)
+    def one(item: tuple[str, tuple[DataFrame, dict]]) -> list[str]:
+        rel, (df, kw) = item
+        return _write(df, root / rel, **kw)
 
-    if max_parallel <= 1 or len(jobs) <= 1:
-        names = [one(j) for j in jobs]
-    else:
-        spark = jobs[0][0].sparkSession
-        with ThreadPoolExecutor(max_workers=max_parallel) as ex:
-            # One wrapper per job: each copies the caller's local
-            # properties, so no two threads share one properties object.
-            futures = [
-                ex.submit(inheritable_thread_target(spark)(one), j) for j in jobs
-            ]
-            names = [f.result() for f in futures]
-    return {str(path): cols for (_, path, _), cols in zip(jobs, names)}
+    with ThreadPoolExecutor(max_workers=_WRITE_THREADS) as ex:
+        # One wrapper per job: each copies the caller's local
+        # properties, so no two threads share one properties object.
+        futures = [ex.submit(inheritable_thread_target(spark)(one), i) for i in items]
+        return {rel: f.result() for (rel, _), f in zip(items, futures)}
 
 
 def _canon(df: DataFrame, table: str) -> DataFrame:
@@ -500,11 +511,8 @@ def ingest(
     resolved_root = resolve_data_root(root)
     log_path = _configure_logging(resolved_root)
     logger.info("Logging to %s", log_path)
-    processed = resolved_root / "data_processed"
-    meta = resolved_root / "data_meta"
-    raw_dir = resolved_root / "data_raw"
-    reference_dir = resolved_root / "reference"
-    for p in (processed, meta, raw_dir, reference_dir):
+    meta, reference_dir = resolved_root / META_DIR, resolved_root / "reference"
+    for p in (resolved_root / PROCESSED_DIR, meta, resolved_root / RAW_DIR, reference_dir):
         p.mkdir(parents=True, exist_ok=True)
 
     # Steps 1-2: source handle + universe. The permno list is collected
@@ -573,68 +581,70 @@ def ingest(
     dividends = build_dividends(source, prices_monthly, prices, permnos, start, end)
     end_step(step)
 
+    tables = {
+        "prices_daily": prices,
+        "returns_daily": returns,
+        "returns_monthly": returns_monthly,
+        "dividends_monthly": dividends,
+        "fundamentals_quarterly": fundamentals,
+        "analyst_consensus": consensus,
+        "analyst_ratings_history": ratings,
+        "macro_timeseries": macro,
+        "risk_free": rf,
+        "style_factor_returns": factors,
+        "benchmarks": benchmark,
+        "sp500_membership": membership,
+        "assets_master": assets_master,
+        "universe_sp500": membership.withColumnRenamed("in_sp500", "in_universe"),
+        "trading_calendar": calendar,
+    }
+    raw = {
+        "prices_raw": prices,
+        "sp500_membership_raw": universe,
+        "assets_master_raw": assets_master,
+        "fundamentals_raw": fundamentals,
+        "ibes_idxref_raw": idxref,
+        "analyst_consensus_raw": consensus,
+        "analyst_ratings_history_raw": ratings,
+        "style_factors_raw": ff_raw,
+        "macro_raw": macro,
+        "benchmark_raw": benchmark,
+        "prices_monthly_raw": prices_monthly,
+        "dlret_daily_raw": dlret_daily,
+        "dlret_monthly_raw": dlret_monthly,
+        "dividends_monthly_raw": dividends,
+    }
+    raw_paths = {name: parquet_path(RAW_DIR, name) if save_raw else None for name in raw}
+
     written: dict[str, list[str]] = {}
     step = start_step("Write raw snapshots" if save_raw else "Skip raw snapshots")
     if save_raw:
-        written.update(_write_many([
-            (prices, raw_dir / "prices_raw.parquet", {}),
-            (universe, raw_dir / "sp500_membership_raw.parquet", {}),
-            (assets_master, raw_dir / "assets_master_raw.parquet", {}),
-            (fundamentals, raw_dir / "fundamentals_raw.parquet", {}),
-            (idxref, raw_dir / "ibes_idxref_raw.parquet", {"single_file": True}),
-            (consensus, raw_dir / "analyst_consensus_raw.parquet", {}),
-            (ratings, raw_dir / "analyst_ratings_history_raw.parquet", {}),
-            (ff_raw, raw_dir / "style_factors_raw.parquet", {}),
-            (macro, raw_dir / "macro_raw.parquet", {}),
-            (benchmark, raw_dir / "benchmark_raw.parquet", {}),
-            (prices_monthly, raw_dir / "prices_monthly_raw.parquet", {}),
-            (dlret_daily, raw_dir / "dlret_daily_raw.parquet", {}),
-            (dlret_monthly, raw_dir / "dlret_monthly_raw.parquet", {}),
-            (dividends, raw_dir / "dividends_monthly_raw.parquet", {}),
-        ]))
+        # The localized IBES mapping would otherwise write one file per
+        # local partition.
+        written.update(_write_many(resolved_root, {
+            raw_paths[name]: (df, {"single_file": name == "ibes_idxref_raw"})
+            for name, df in raw.items()
+        }))
     end_step(step)
 
     step = start_step("Write processed datasets")
-    if partition_by_year:
-        year_cols = ["year"]
-        prices_out = _canon(prices, "prices_daily").withColumn("year", F.year("date"))
-        returns_out = _canon(returns, "returns_daily").withColumn("year", F.year("date"))
-    else:
-        year_cols = None
-        prices_out = _canon(prices, "prices_daily")
-        returns_out = _canon(returns, "returns_daily")
-    universe_out = _canon(
-        membership.withColumnRenamed("in_sp500", "in_universe"), "universe_sp500"
-    )
-    written.update(_write_many([
-        (prices_out, processed / "prices_daily.parquet", {"partition_cols": year_cols}),
-        (returns_out, processed / "returns_daily.parquet", {"partition_cols": year_cols}),
-        (_canon(membership, "sp500_membership"), processed / "sp500_membership.parquet", {}),
-        (_canon(fundamentals, "fundamentals_quarterly"), processed / "fundamentals_quarterly.parquet", {}),
-        (_canon(consensus, "analyst_consensus"), processed / "analyst_consensus.parquet", {}),
-        (_canon(ratings, "analyst_ratings_history"), processed / "analyst_ratings_history.parquet", {}),
-        (_canon(macro, "macro_timeseries"), processed / "macro_timeseries.parquet", {"single_file": True}),
-        (_canon(rf, "risk_free"), processed / "risk_free.parquet", {"single_file": True}),
-        (_canon(factors, "style_factor_returns"), processed / "style_factor_returns.parquet", {"single_file": True}),
-        (_canon(benchmark, "benchmarks"), processed / "benchmarks.parquet", {"single_file": True}),
-        (_canon(returns_monthly, "returns_monthly"), processed / "returns_monthly.parquet", {}),
-        (_canon(dividends, "dividends_monthly"), processed / "dividends_monthly.parquet", {}),
-        (_canon(assets_master, "assets_master"), meta / "assets_master.parquet", {"single_file": True}),
-        (universe_out, meta / "universe_sp500.parquet", {}),
-        (_canon(calendar, "trading_calendar"), meta / "trading_calendar.parquet", {"single_file": True}),
-    ]))
+    jobs = {}
+    for name, ds in CATALOG.items():
+        df, kw = _canon(tables[name], name), {"single_file": ds.single_file}
+        if partition_by_year and name in _FACTS:
+            df, kw = df.withColumn("year", F.year("date")), {"partition_cols": ["year"]}
+        jobs[ds.path] = (df, kw)
+    written.update(_write_many(resolved_root, jobs))
     from ..storage.bucketing import root_scoped_table, write_bucketed
 
-    for df_, base in (
-        (_canon(prices, "prices_daily"), "prices_daily_bucketed"),
-        (_canon(returns, "returns_daily"), "returns_daily_bucketed"),
-    ):
+    for name in _FACTS:
+        base = f"{name}_bucketed"
         table = root_scoped_table(base, resolved_root)
         if bucket_facts:
             write_bucketed(
-                df_, table, ["asset_id", "date"],
+                _canon(tables[name], name), table, ["asset_id", "date"],
                 sort_cols=["asset_id", "date"],
-                path=processed / base,
+                path=resolved_root / PROCESSED_DIR / base,
             )
         else:
             # A re-ingest without bucketing must not leave a previous
@@ -643,6 +653,8 @@ def ingest(
     end_step(step)
 
     step = start_step("Write metadata and manifests")
+    # Paths are relative to the data root, so a moved or copied root
+    # keeps manifests that describe it.
     provenance = {
         "ingested_at_utc": datetime.now(timezone.utc).isoformat(),
         "params": {
@@ -650,31 +662,8 @@ def ingest(
             "source": source.source_tag(), "save_raw": save_raw,
         },
         "datasets": {
-            "prices_daily": {"source": "wrds_crsp_dsf", "path": str(processed / "prices_daily.parquet")},
-            "returns_daily": {"source": "wrds_crsp_dsf_ret", "path": str(processed / "returns_daily.parquet")},
-            "returns_monthly": {"source": "wrds_crsp_msf_ret_dlret", "path": str(processed / "returns_monthly.parquet")},
-            "dividends_monthly": {"source": "wrds_crsp_msedist", "path": str(processed / "dividends_monthly.parquet")},
-            "fundamentals_quarterly": {"source": "wrds_comp_funda", "path": str(processed / "fundamentals_quarterly.parquet")},
-            "analyst_consensus": {"source": "wrds_tr_ibes_recdsum", "path": str(processed / "analyst_consensus.parquet")},
-            "analyst_ratings_history": {"source": "wrds_det_rec", "path": str(processed / "analyst_ratings_history.parquet")},
-            "macro_timeseries": {"source": "fred_api", "path": str(processed / "macro_timeseries.parquet")},
-            "risk_free": {"source": "wrds_ff_factors_daily_rf", "path": str(processed / "risk_free.parquet")},
-            "style_factor_returns": {"source": "wrds_ff_all_factors_daily", "path": str(processed / "style_factor_returns.parquet")},
-            "benchmarks": {"source": "wrds_crsp_dsp500", "path": str(processed / "benchmarks.parquet")},
-            "sp500_membership": {"source": "wrds_crsp_dsp500list", "path": str(processed / "sp500_membership.parquet")},
-            "assets_master": {"source": "wrds_crsp_dsenames", "path": str(meta / "assets_master.parquet")},
-            "universe_sp500": {"source": "wrds_crsp_dsp500list", "path": str(meta / "universe_sp500.parquet")},
-            "trading_calendar": {"source": "business_day_generated", "path": str(meta / "trading_calendar.parquet")},
-            "raw": {
-                name: str(raw_dir / f"{name}.parquet") if save_raw else None
-                for name in (
-                    "prices_raw", "sp500_membership_raw", "assets_master_raw",
-                    "fundamentals_raw", "ibes_idxref_raw", "analyst_consensus_raw",
-                    "analyst_ratings_history_raw", "style_factors_raw", "macro_raw",
-                    "benchmark_raw", "prices_monthly_raw", "dlret_daily_raw",
-                    "dlret_monthly_raw", "dividends_monthly_raw",
-                )
-            },
+            **{name: {"source": ds.source, "path": ds.path} for name, ds in CATALOG.items()},
+            "raw": raw_paths,
         },
     }
     with (meta / "data_sources.yml").open("w", encoding="utf-8") as fh:
@@ -682,20 +671,13 @@ def ingest(
 
     # Every dataset was written above: its columns are known without
     # reading a footer back.
-    manifest: list[dict] = []
-    for name, info in provenance["datasets"].items():
-        if name == "raw":
-            entries = [
-                (raw_name, "raw", "raw_snapshot", raw_path)
-                for raw_name, raw_path in info.items() if raw_path
-            ]
-        else:
-            entries = [(name, "processed", info["source"], info["path"])]
-        for dataset, kind, src, path in entries:
-            manifest.extend(
-                {"dataset": dataset, "type": kind, "source": src, "path": path, "column": col}
-                for col in written[path]
-            )
+    entries = [(name, "processed", ds.source, ds.path) for name, ds in CATALOG.items()]
+    entries += [(name, "raw", "raw_snapshot", path) for name, path in raw_paths.items() if path]
+    manifest = [
+        {"dataset": dataset, "type": kind, "source": src, "path": path, "column": col}
+        for dataset, kind, src, path in entries
+        for col in written[path]
+    ]
 
     with (meta / "field_manifest.yml").open("w", encoding="utf-8") as fh:
         yaml.safe_dump(manifest, fh)
@@ -741,7 +723,6 @@ def update_facts(
     spark = spark or get_spark()
     source = source or JdbcWrdsSource(spark)
     resolved_root = resolve_data_root(root)
-    processed = resolved_root / "data_processed"
     universe = source.sp500_universe(start, end)
     permnos = sorted(
         r["permno"] for r in universe.select("permno").distinct().collect()
@@ -750,10 +731,10 @@ def update_facts(
     prices, returns, _ = build_prices_and_returns(
         source, assets_master, permnos, start, end
     )
-    for df_, name in ((prices, "prices_daily"), (returns, "returns_daily")):
+    for name, df_ in zip(_FACTS, (prices, returns)):
         out = _canon(df_, name).withColumn("year", F.year("date"))
         _write(
-            out, processed / f"{name}.parquet",
+            out, resolved_root / CATALOG[name].path,
             partition_cols=["year"], dynamic=True,
         )
     logger.info("Incrementally updated facts for [%s, %s] at %s", start, end, resolved_root)

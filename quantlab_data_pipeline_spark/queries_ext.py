@@ -35,11 +35,26 @@ are rounded on both sides (driver hash-compare discipline, see
 
 from __future__ import annotations
 
+import hashlib
+import shutil
+import tempfile
+
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from .localframe import local_df
 from .sources.testdata import load_table
+
+
+def _scratch_store(name: str, sf: str) -> str:
+    """``<tempdir>/<name>-<md5(sf)[:10]>``, emptied: the one scratch
+    directory of a row that builds a store at call time. The path is
+    fixed per row and scale factor, so a repeated call rebuilds in place
+    instead of leaving a new directory (and, for a bucketed index, a
+    new catalog table) behind."""
+    path = f"{tempfile.gettempdir()}/{name}-{hashlib.md5(sf.encode()).hexdigest()[:10]}"
+    shutil.rmtree(path, ignore_errors=True)
+    return path
 
 # --------------------------------------------------------------------------
 # TPC-H completion (adapted to the driver's trimmed schema)
@@ -1398,13 +1413,11 @@ def rollup_incremental_events(spark: SparkSession, sf: str) -> DataFrame:
     are read back and rewritten), and the merged store must equal a
     one-shot aggregation of the whole fact — which is exactly what the
     DuckDB oracle computes."""
-    import tempfile
-
     from .storage.rollup import build_rollup, read_rollup, refresh_rollup
 
     ev = load_table(spark, sf, "events")
     split = F.to_timestamp(F.lit("2024-01-16 00:00:00"))
-    path = tempfile.mkdtemp(prefix="rollup-") + "/events_daily"
+    path = _scratch_store("rollup", sf) + "/events_daily"
     build_rollup(
         ev.filter(F.col("ts") < split), path, "ts", ["event_type"], "value"
     )
@@ -1532,14 +1545,12 @@ def incremental_dedup_docs(spark: SparkSession, sf: str) -> DataFrame:
     since round 3 (portable signatures replay the whole index walk —
     see ``_incremental_dedup_oracle_sql``); the estimator is also
     pytest-verified in tests/test_dedup_index.py."""
-    import tempfile
-
     from .llm.dedup_index import build_dedup_index, flag_new_batch
 
     docs = load_table(spark, sf, "documents")
     corpus = docs.filter(F.col("doc_id") % 2 == 0)
     batch = docs.filter(F.col("doc_id") % 2 == 1)
-    path = tempfile.mkdtemp(prefix="dedup-index-")
+    path = _scratch_store("dedup-index", sf)
     build_dedup_index(corpus, path, num_hashes=64, bands=16)
     return flag_new_batch(batch, path, threshold=0.5).select(
         "doc_id", "is_dup", "n_matches"
@@ -1555,14 +1566,12 @@ def incremental_dedup_bucketed_docs(spark: SparkSession, sf: str) -> DataFrame:
     ``Bucketed: true`` scan). The layout twin exists as a registry
     query so the driver hash-checks that bucketing never changes
     results, only plans."""
-    import tempfile
-
     from .llm.dedup_index import build_dedup_index, flag_new_batch
 
     docs = load_table(spark, sf, "documents")
     corpus = docs.filter(F.col("doc_id") % 2 == 0)
     batch = docs.filter(F.col("doc_id") % 2 == 1)
-    path = tempfile.mkdtemp(prefix="dedup-index-bucketed-")
+    path = _scratch_store("dedup-index-bucketed", sf)
     build_dedup_index(corpus, path, num_hashes=64, bands=16, bucket_n=8)
     return flag_new_batch(batch, path, threshold=0.5).select(
         "doc_id", "is_dup", "n_matches"
@@ -1595,14 +1604,12 @@ def incremental_dedup_exact_docs(spark: SparkSession, sf: str) -> DataFrame:
     but flagging byte-identical re-ingests via the index's md5 sidecar
     table — one digest equi-join, engine-portable, hash-checked against
     the DuckDB oracle (the MinHash estimator path stays rows-only)."""
-    import tempfile
-
     from .llm.dedup_index import build_dedup_index, flag_new_batch_exact
 
     docs = load_table(spark, sf, "documents")
     corpus = docs.filter(F.col("doc_id") % 2 == 0)
     batch = docs.filter(F.col("doc_id") % 2 == 1)
-    path = tempfile.mkdtemp(prefix="dedup-index-exact-")
+    path = _scratch_store("dedup-index-exact", sf)
     build_dedup_index(corpus, path, num_hashes=64, bands=16)
     return flag_new_batch_exact(batch, path)
 
@@ -2488,12 +2495,10 @@ def hll_distinct_rollup_events(spark: SparkSession, sf: str) -> DataFrame:
     the datasketches HLL stays in sparse mode and the estimate is
     EXACT (the bound pytest in tests/test_rollup.py covers the general
     case)."""
-    import tempfile
-
     from .storage.rollup import build_distinct_rollup, estimate_distinct
 
     ev = load_table(spark, sf, "events")
-    path = tempfile.mkdtemp(prefix="dsk-") + "/events_users"
+    path = _scratch_store("dsk", sf) + "/events_users"
     build_distinct_rollup(ev, path, "ts", ["event_type"], "user_id")
     return estimate_distinct(spark, path, ["event_type"]).select(
         "event_type", F.col("n_distinct").cast("long").alias("n_distinct")
@@ -2565,12 +2570,10 @@ def kll_quantile_rollup_events(spark: SparkSession, sf: str) -> DataFrame:
     are EXACT, equal to DuckDB's quantile_disc (the rank-error pytest
     in tests/test_rollup.py covers the compacting general case — same
     trick as the HLL sparse-mode row above)."""
-    import tempfile
-
     from .storage.rollup import build_quantile_rollup, estimate_quantiles
 
     ev = load_table(spark, sf, "events")
-    path = tempfile.mkdtemp(prefix="kllq-") + "/events_values"
+    path = _scratch_store("kllq", sf) + "/events_values"
     build_quantile_rollup(ev, path, "ts", ["event_type"], "value", k=8192)
     return estimate_quantiles(
         spark, path, ["event_type"], [0.5, 0.95, 0.99]
@@ -6276,9 +6279,6 @@ def media_index_dedup_docs(spark: SparkSession, sf: str) -> DataFrame:
     PNG round trip or pooling kernel flips replayed bits and
     mismatches loudly. Near-dup recall at hamming>0 is pytest-covered
     on planted fingerprints. Driver/mirror: full DuckDB oracle."""
-    import hashlib
-    import tempfile
-
     from .llm.media_index import build_media_index, flag_new_media
     from .llm.multimodal import media_from_text
 
@@ -6291,16 +6291,7 @@ def media_index_dedup_docs(spark: SparkSession, sf: str) -> DataFrame:
         .unionByName(docs.filter(F.col("doc_id") % 4 == 3))
         .repartition(par)
     )
-    # Deterministic per-sf path: repeat runs REBUILD in place (the
-    # build clears {path}/buckets and recreates the one md5-named
-    # catalog table) instead of accumulating a mkdtemp directory and
-    # a catalog entry per invocation (ADVICE r7).
-    path = (
-        tempfile.gettempdir()
-        + "/mediaidx-"
-        + hashlib.md5(sf.encode()).hexdigest()[:10]
-        + "/png32"
-    )
+    path = _scratch_store("mediaidx", sf) + "/png32"
     build_media_index(
         media_from_text(indexed, dims=(32, 32)), path,
         modality="image", max_hamming=0, bands=4,
@@ -6371,19 +6362,10 @@ def media_intake_loop_docs(spark: SparkSession, sf: str) -> DataFrame:
     time into a deterministic per-sf path, cleared at entry so repeat
     runs are identical); plan-audit note: the audited plan is the
     verdict-log scan."""
-    import hashlib
-    import shutil
-    import tempfile
-
     from .llm.multimodal import media_from_text
     from .streaming.media_intake import media_intake_sink, read_intake_verdicts
 
-    base = (
-        tempfile.gettempdir()
-        + "/mediaintake-"
-        + hashlib.md5(sf.encode()).hexdigest()[:10]
-    )
-    shutil.rmtree(base, ignore_errors=True)
+    base = _scratch_store("mediaintake", sf)
     idx, out = f"{base}/idx", f"{base}/out"
     docs = load_table(spark, sf, "documents").select("doc_id", "text")
     par = spark.sparkContext.defaultParallelism
@@ -6591,9 +6573,6 @@ def media_index_takedown_docs(spark: SparkSession, sf: str) -> DataFrame:
     join. A tombstone leak (mask not applied), a compaction that drops
     the wrong rows, or stale band rows surviving the bucket rewrite
     each break one phase loudly."""
-    import hashlib
-    import tempfile
-
     from .llm.media_index import (
         _fingerprint,
         build_media_index,
@@ -6612,12 +6591,7 @@ def media_index_takedown_docs(spark: SparkSession, sf: str) -> DataFrame:
         .unionByName(docs.filter(F.col("doc_id") % 4 == 3))
         .repartition(par)
     )
-    path = (
-        tempfile.gettempdir()
-        + "/mediatd-"
-        + hashlib.md5(sf.encode()).hexdigest()[:10]
-        + "/png32"
-    )
+    path = _scratch_store("mediatd", sf) + "/png32"
     build_media_index(
         media_from_text(indexed, dims=(32, 32)), path,
         modality="image", max_hamming=0, bands=4,
@@ -6702,17 +6676,10 @@ def corpus_export_manifest_docs(spark: SparkSession, sf: str) -> DataFrame:
     any dropped row or mangled text changes n_docs/text_chars against
     the source-side replay. Gzip/zstd variants and the corrupt-line
     quarantine are pytest-covered on the read side."""
-    import hashlib
-    import tempfile
-
     from .sources.corpus import export_manifest, write_jsonl_corpus
 
     docs = load_table(spark, sf, "documents")
-    path = (
-        tempfile.gettempdir()
-        + "/corpusexp-"
-        + hashlib.md5(sf.encode()).hexdigest()[:10]
-    )
+    path = _scratch_store("corpusexp", sf)
     write_jsonl_corpus(docs, path, shards=8)
     return export_manifest(spark, path)
 
@@ -7461,9 +7428,6 @@ def dsir_incremental_docs(spark: SparkSession, sf: str) -> DataFrame:
     sum-on-read fails the hash. Production shape: the crawl's model
     follows the crawl batch by batch; nothing already accepted is ever
     re-tokenized (the persisted-index contract, applied to a model)."""
-    import hashlib
-    import tempfile
-
     from .llm.dsir import (
         build_dsir_counts,
         dsir_select_stored,
@@ -7474,11 +7438,7 @@ def dsir_incremental_docs(spark: SparkSession, sf: str) -> DataFrame:
     docs = load_table(spark, sf, "documents")
     target = docs.filter(F.col("lang") == "en")
     raw = docs.filter(F.col("lang") != "en")
-    base = (
-        tempfile.gettempdir()
-        + "/dsir-"
-        + hashlib.md5(sf.encode()).hexdigest()[:10]
-    )
+    base = _scratch_store("dsir", sf)
     build_dsir_counts(target, base + "/target", buckets=4096)
     # Tokenize each raw doc ONCE (guide §1.2): the per-doc counts feed
     # the initial build, the fold-forward delta, AND the scoring join
@@ -7548,10 +7508,6 @@ def curation_pipeline_loop_docs(spark: SparkSession, sf: str) -> DataFrame:
     is the verdict-log scan. Scale shape: upstream is per-row codegen;
     per batch the sink shuffles 8-byte fingerprints and <=4096-row
     count tables only."""
-    import hashlib
-    import shutil
-    import tempfile
-
     from .llm.classifier import score_quality_frozen
     from .llm.dsir import build_dsir_counts
     from .llm.extract import escape_html_text, html_to_text
@@ -7563,12 +7519,7 @@ def curation_pipeline_loop_docs(spark: SparkSession, sf: str) -> DataFrame:
     from .streaming.dsir_intake import read_dsir_verdicts
     from .streaming.pipeline import curation_intake_sink
 
-    base = (
-        tempfile.gettempdir()
-        + "/curloop-"
-        + hashlib.md5(sf.encode()).hexdigest()[:10]
-    )
-    shutil.rmtree(base, ignore_errors=True)
+    base = _scratch_store("curloop", sf)
     docs = load_table(spark, sf, "documents")
     build_dsir_counts(
         docs.filter(F.col("lang") == "en").select("doc_id", "text"),
@@ -8724,18 +8675,9 @@ def shard_intake_loop_docs(spark: SparkSession, sf: str) -> DataFrame:
     store read (the loop runs eagerly at build into a per-sf temp
     path, cleared at entry); plan-audit note: the audited plan is the
     manifest scan."""
-    import hashlib
-    import shutil
-    import tempfile
-
     from .streaming.shard_sink import read_shard_manifest, shard_sink
 
-    base = (
-        tempfile.gettempdir()
-        + "/shardstore-"
-        + hashlib.md5(sf.encode()).hexdigest()[:10]
-    )
-    shutil.rmtree(base, ignore_errors=True)
+    base = _scratch_store("shardstore", sf)
     docs = load_table(spark, sf, "documents").select("doc_id", "text")
     sink = shard_sink(base, 16384)
     for k in range(3):

@@ -1,4 +1,4 @@
-"""Fixed schema registry for every canonical dataset.
+"""Fixed schema registry and catalog of every canonical dataset.
 
 The reference infers schemas on read (pandas); here every table gets an
 explicit ``StructType`` so Parquet scans are schema'd, pruned, and never
@@ -6,9 +6,18 @@ re-inferred. Column lists follow the reference's output catalog
 (``/root/reference/src/data_pipeline/ingestion/wrds_ingestion.py:1135-1153``
 and ``reference/field_manifest.csv``). All columns nullable, matching the
 reference's tolerance for missing fields.
+
+Each dataset is declared once, next to its schema (:data:`CATALOG`):
+the directory it lives under, the source its provenance names, and
+whether it is written as a single file. Ingest writes and records the
+tables from it, the handler reads from it and validation audits from
+it. The columns the handler reads as timestamps are not declared: they
+are the schema's ``DateType`` fields.
 """
 
 from __future__ import annotations
+
+from dataclasses import dataclass
 
 from pyspark.sql import types as T
 
@@ -27,67 +36,103 @@ _L = T.LongType()
 _F = T.DoubleType()
 _B = T.BooleanType()
 
-SCHEMAS: dict[str, T.StructType] = {
-    "prices_daily": _struct([
+#: Directories under a data root, as the reference lays them out.
+PROCESSED_DIR, META_DIR, RAW_DIR = "data_processed", "data_meta", "data_raw"
+
+
+def parquet_path(directory: str, name: str) -> str:
+    """Path of dataset ``name`` under ``directory``, relative to the data
+    root: what the manifests record."""
+    return f"{directory}/{name}.parquet"
+
+
+@dataclass(frozen=True)
+class Dataset:
+    """One canonical table. ``single_file`` is set for tables that stay
+    small at any scale (per-day or per-asset dims)."""
+
+    name: str
+    source: str
+    schema: T.StructType
+    dir: str = PROCESSED_DIR
+    single_file: bool = False
+
+    @property
+    def path(self) -> str:
+        return parquet_path(self.dir, self.name)
+
+    @property
+    def date_cols(self) -> list[str]:
+        return [f.name for f in self.schema.fields if isinstance(f.dataType, T.DateType)]
+
+
+# The dataset catalog, in the order ingest writes and records it. Each
+# entry is the only place that says where the table lives, which source
+# its provenance names and whether it is written as one file.
+CATALOG: dict[str, Dataset] = {d.name: d for d in (
+    Dataset("prices_daily", "wrds_crsp_dsf", _struct([
         ("date", _D), ("asset_id", _L), ("open", _F), ("high", _F),
         ("low", _F), ("close", _F), ("cfacpr", _F), ("ret", _F),
         ("shrout", _F), ("volume", _F), ("adj_close", _F), ("ticker", _S),
-    ]),
-    "returns_daily": _struct([
+    ])),
+    Dataset("returns_daily", "wrds_crsp_dsf_ret", _struct([
         ("date", _D), ("asset_id", _L), ("ticker", _S), ("ret_1d", _F),
-    ]),
-    "returns_monthly": _struct([
+    ])),
+    Dataset("returns_monthly", "wrds_crsp_msf_ret_dlret", _struct([
         ("date", _D), ("asset_id", _L), ("ret", _F), ("price", _F),
         ("volume", _F), ("shrout", _F), ("ret_1m", _F),
-    ]),
-    "fundamentals_quarterly": _struct([
+    ])),
+    Dataset("dividends_monthly", "wrds_crsp_msedist", _struct([
+        ("asset_id", _L), ("distcd", _S), ("divamt", _F), ("facpr", _F),
+        ("facshr", _F), ("date", _D), ("close", _F), ("dividend_yield", _F),
+    ])),
+    Dataset("fundamentals_quarterly", "wrds_comp_funda", _struct([
         ("report_date", _D), ("asset_id", _L), ("revenue", _F), ("sales", _F),
         ("net_income", _F), ("total_assets", _F), ("common_equity", _F),
         ("total_debt_long_term", _F), ("preferred_stock", _F),
         ("cash_flow_from_operations", _F), ("capital_expenditures", _F),
         ("research_and_development", _F),
-    ]),
-    "analyst_consensus": _struct([
+    ])),
+    Dataset("analyst_consensus", "wrds_tr_ibes_recdsum", _struct([
         ("date", _D), ("asset_id", _L), ("ticker", _S), ("mean_rating", _F),
         ("median_rating", _F), ("stdev_rating", _F), ("num_analysts", _L),
         ("buy_percent", _F), ("hold_percent", _F), ("sell_percent", _F),
         ("num_up", _L), ("num_down", _L), ("usfirm", _L),
         ("ibes_official_ticker", _S), ("ibes_cusip", _S), ("company_name", _S),
-    ]),
-    "analyst_ratings_history": _struct([
+    ])),
+    Dataset("analyst_ratings_history", "wrds_det_rec", _struct([
         ("date", _D), ("asset_id", _L), ("ticker", _S), ("analyst_id", _L),
         ("rating", _F), ("action_code", _S), ("rating_text", _S),
         ("statistic_date", _D),
-    ]),
-    "macro_timeseries": _struct([
+    ])),
+    Dataset("macro_timeseries", "fred_api", _struct([
         ("date", _D), ("series_name", _S), ("value", _F),
-    ]),
-    "style_factor_returns": _struct([
+    ]), single_file=True),
+    Dataset("risk_free", "wrds_ff_factors_daily_rf", _struct([
+        ("date", _D), ("rf", _F),
+    ]), single_file=True),
+    Dataset("style_factor_returns", "wrds_ff_all_factors_daily", _struct([
         ("date", _D), ("factor_name", _S), ("ret", _F),
-    ]),
-    "risk_free": _struct([("date", _D), ("rf", _F)]),
-    "benchmarks": _struct([
+    ]), single_file=True),
+    Dataset("benchmarks", "wrds_crsp_dsp500", _struct([
         ("date", _D), ("benchmark_name", _S), ("level", _F), ("ret", _F),
-    ]),
-    "sp500_membership": _struct([
+    ]), single_file=True),
+    Dataset("sp500_membership", "wrds_crsp_dsp500list", _struct([
         ("date", _D), ("asset_id", _L), ("in_sp500", _B),
-    ]),
-    "dividends_monthly": _struct([
-        ("asset_id", _L), ("distcd", _S), ("divamt", _F), ("facpr", _F),
-        ("facshr", _F), ("date", _D), ("close", _F), ("dividend_yield", _F),
-    ]),
-    "assets_master": _struct([
+    ])),
+    Dataset("assets_master", "wrds_crsp_dsenames", _struct([
         ("asset_id", _L), ("ticker", _S), ("first_date", _D),
         ("last_date", _D), ("ipodate", _D),
-    ]),
-    "universe_sp500": _struct([
+    ]), META_DIR, single_file=True),
+    Dataset("universe_sp500", "wrds_crsp_dsp500list", _struct([
         ("date", _D), ("asset_id", _L), ("in_universe", _B),
-    ]),
-    "trading_calendar": _struct([("date", _D), ("is_trading_day", _B)]),
-}
+    ]), META_DIR),
+    Dataset("trading_calendar", "business_day_generated", _struct([
+        ("date", _D), ("is_trading_day", _B),
+    ]), META_DIR, single_file=True),
+)}
 
-# Which directory each dataset lives under, mirroring the reference layout.
-META_TABLES = frozenset({"assets_master", "universe_sp500", "trading_calendar"})
+SCHEMAS: dict[str, T.StructType] = {name: d.schema for name, d in CATALOG.items()}
 
 # WRDS mnemonic -> friendly-name map (reference config/wrds_field_map.yml).
 FIELD_MAP: dict[str, dict[str, str]] = {

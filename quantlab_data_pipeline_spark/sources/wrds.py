@@ -216,26 +216,21 @@ class JdbcWrdsSource(WrdsSource):
         reader = (
             self.spark.read.format("jdbc")
             .option("url", self.url)
-            .option("query", query)
             .option("fetchsize", 10_000)
         )
         if self.user:
             reader = reader.option("user", self.user).option("password", self.password or "")
-        if partition_on_date:
-            lo, hi = partition_on_date
-            reader = (
-                self.spark.read.format("jdbc")
-                .option("url", self.url)
-                .option("dbtable", f"({query}) q")
-                .option("partitionColumn", "date")
-                .option("lowerBound", lo)
-                .option("upperBound", hi)
-                .option("numPartitions", self.fetch_partitions)
-                .option("fetchsize", 10_000)
-            )
-            if self.user:
-                reader = reader.option("user", self.user).option("password", self.password or "")
-        return reader.load()
+        if not partition_on_date:
+            return reader.option("query", query).load()
+        lo, hi = partition_on_date
+        return (
+            reader.option("dbtable", f"({query}) q")
+            .option("partitionColumn", "date")
+            .option("lowerBound", lo)
+            .option("upperBound", hi)
+            .option("numPartitions", self.fetch_partitions)
+            .load()
+        )
 
     def _probe_read(
         self,

@@ -46,29 +46,8 @@ from pyspark.sql import types as T
 
 from ..config import resolve_data_root
 from ..interfaces import AssetLike, DataHandler, DateLike
-from ..schemas import FIELD_MAP
+from ..schemas import CATALOG, FIELD_MAP, META_DIR, PROCESSED_DIR
 from ..session import get_spark
-
-# Columns parsed as datetimes per dataset (reference parse_dates= lists).
-_DATE_COLS: dict[str, list[str]] = {
-    "prices_daily": ["date"],
-    "returns_daily": ["date"],
-    "returns_monthly": ["date"],
-    "fundamentals_quarterly": ["report_date"],
-    "analyst_consensus": ["date"],
-    "analyst_ratings_history": ["date", "statistic_date"],
-    "macro_timeseries": ["date"],
-    "style_factor_returns": ["date"],
-    "benchmarks": ["date"],
-    "risk_free": ["date"],
-    "sp500_membership": ["date"],
-    "dividends_monthly": ["date"],
-    "assets_master": ["first_date", "last_date", "ipodate"],
-    "universe_sp500": ["date"],
-    "trading_calendar": ["date"],
-}
-
-_META_TABLES = {"assets_master", "universe_sp500", "trading_calendar"}
 
 _T = TypeVar("_T")
 
@@ -85,8 +64,8 @@ class LocalParquetDataHandler(DataHandler):
     def __init__(
         self,
         data_root: Path | str | None = None,
-        processed_dir: str = "data_processed",
-        meta_dir: str = "data_meta",
+        processed_dir: str = PROCESSED_DIR,
+        meta_dir: str = META_DIR,
         spark: SparkSession | None = None,
         field_map_path: Path | str | None = None,
     ):
@@ -95,6 +74,8 @@ class LocalParquetDataHandler(DataHandler):
         self.spark = spark or get_spark()
         self.processed_path = (root / processed_dir).resolve()
         self.meta_path = (root / meta_dir).resolve()
+        # catalog directory -> where this handler reads it
+        self._dirs = {PROCESSED_DIR: self.processed_path, META_DIR: self.meta_path}
         # (kind, table) -> (path stamp, resolved value); see _resolved
         self._resolutions: dict[tuple[str, str], tuple[tuple[int, int], object]] = {}
         self._field_map = self._load_field_mapping(field_map_path)
@@ -122,8 +103,8 @@ class LocalParquetDataHandler(DataHandler):
     # ------------------------------------------------------------------ scan
 
     def _dataset_path(self, table: str) -> Path:
-        base = self.meta_path if table in _META_TABLES else self.processed_path
-        return base / f"{table}.parquet"
+        ds = CATALOG[table]
+        return self._dirs[ds.dir] / Path(ds.path).name
 
     def _resolved(self, kind: str, table: str, build: Callable[[Path], _T]) -> _T:
         """``build(path)`` for ``table``, reused while the dataset path
@@ -188,10 +169,11 @@ class LocalParquetDataHandler(DataHandler):
 
     @staticmethod
     def _normalize_dates(df: DataFrame, table: str) -> DataFrame:
-        """Cast declared date columns to timestamp so every read path —
-        parquet scan or bucketed catalog table — yields the same schema
-        (and ``toPandas()`` the same datetime64[ns] as the reference)."""
-        for col in _DATE_COLS.get(table, []):
+        """Cast the dataset's ``DateType`` columns to timestamp so every
+        read path — parquet scan or bucketed catalog table — yields the
+        same schema (and ``toPandas()`` the same datetime64[ns] as the
+        reference)."""
+        for col in CATALOG[table].date_cols:
             if col in df.columns and not isinstance(
                 df.schema[col].dataType, T.TimestampType
             ):

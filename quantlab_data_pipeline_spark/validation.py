@@ -22,7 +22,7 @@ from pathlib import Path
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .schemas import META_TABLES, SCHEMAS
+from .schemas import CATALOG, SCHEMAS
 
 # Implied primary key per dataset (SURVEY §1.4 table).
 PRIMARY_KEYS: dict[str, list[str]] = {
@@ -136,9 +136,8 @@ def validate_outputs(
     """Validate every canonical dataset under an ingest root."""
     root = Path(root)
     failures: list[dict] = []
-    for table in SCHEMAS:
-        sub = "data_meta" if table in META_TABLES else "data_processed"
-        path = root / sub / f"{table}.parquet"
+    for table, ds in CATALOG.items():
+        path = root / ds.path
         if not path.exists():
             failures.append(
                 {"table": table, "check": "exists", "detail": f"missing {path}"}

@@ -7,13 +7,16 @@ independent recomputation.
 
 from __future__ import annotations
 
+import shutil
+from pathlib import Path
+
 import numpy as np
 import pandas as pd
 import pytest
 import yaml
 
 from quantlab_data_pipeline_spark.ingestion.pipeline import ingest
-from quantlab_data_pipeline_spark.schemas import SCHEMAS
+from quantlab_data_pipeline_spark.schemas import CATALOG, META_DIR, RAW_DIR, SCHEMAS, parquet_path
 from quantlab_data_pipeline_spark.sources.fred import synthetic_fred_fetcher
 from quantlab_data_pipeline_spark.sources.wrds import SyntheticWrdsSource
 from quantlab_data_pipeline_spark.storage.parquet import LocalParquetDataHandler
@@ -39,8 +42,7 @@ def handler(data_root, spark):
 
 def test_all_outputs_exist_with_registered_schemas(data_root, spark):
     for table, schema in SCHEMAS.items():
-        sub = "data_meta" if table in {"assets_master", "universe_sp500", "trading_calendar"} else "data_processed"
-        path = data_root / sub / f"{table}.parquet"
+        path = data_root / CATALOG[table].path
         assert path.exists(), f"missing {table}"
         df = spark.read.parquet(str(path))
         assert df.count() > 0, f"{table} is empty"
@@ -50,7 +52,7 @@ def test_all_outputs_exist_with_registered_schemas(data_root, spark):
 
 
 def test_manifests_written(data_root):
-    meta = data_root / "data_meta"
+    meta = data_root / META_DIR
     sources = yaml.safe_load((meta / "data_sources.yml").read_text())
     assert sources["params"]["source"] == "synthetic"
     assert "prices_daily" in sources["datasets"]
@@ -67,11 +69,12 @@ def test_manifests_written(data_root):
 
 def _manifest_matching_disk(root, spark) -> pd.DataFrame:
     """The root's field manifest, after checking that each dataset's
-    columns are what a read of its path reports."""
-    manifest = pd.read_csv(root / "data_meta" / "field_manifest.csv")
+    columns are what a read of its path, taken relative to the root,
+    reports."""
+    manifest = pd.read_csv(root / META_DIR / "field_manifest.csv")
     assert len(manifest)
     for (dataset, path), rows in manifest.groupby(["dataset", "path"], sort=False):
-        on_disk = spark.read.parquet(path).schema.names
+        on_disk = spark.read.parquet(str(root / path)).schema.names
         assert list(rows["column"]) == on_disk, dataset
     return manifest
 
@@ -82,6 +85,24 @@ def test_manifest_columns_are_the_written_schemas(data_root, spark):
     every dataset, raw snapshots included, reports."""
     manifest = _manifest_matching_disk(data_root, spark)
     assert manifest["dataset"].nunique() == 15 + 14  # processed + raw
+
+
+def test_manifests_are_relative_to_the_root(data_root, spark, tmp_path):
+    """No manifest names the root's absolute path, so a copied root's
+    own manifest describes the copy."""
+    manifests = [
+        data_root / META_DIR / "data_sources.yml",
+        data_root / META_DIR / "field_manifest.yml",
+        data_root / META_DIR / "field_manifest.csv",
+        data_root / "reference" / "field_manifest.csv",
+    ]
+    for path in manifests:
+        assert str(data_root) not in path.read_text(), path
+    copy = tmp_path / "moved_root"
+    shutil.copytree(data_root, copy)
+    assert not _manifest_matching_disk(copy, spark)["path"].map(
+        lambda p: Path(p).is_absolute()
+    ).any()
 
 
 def test_manifest_columns_partitioned_layout(part_root, spark):
@@ -183,16 +204,16 @@ def test_adj_close_derivation(handler):
 def test_delist_compounding(handler, data_root, spark):
     """The last asset delists with dlret=-0.15: on the delist date
     ret_1d must be (1+ret)*(1-0.15)-1, elsewhere ret_1d == ret."""
-    raw = spark.read.parquet(str(data_root / "data_raw" / "dlret_daily_raw.parquet")).toPandas()
+    raw = spark.read.parquet(str(data_root / parquet_path(RAW_DIR, "dlret_daily_raw"))).toPandas()
     assert len(raw) == 1
     delist_date, dlret = raw.loc[0, "date"], raw.loc[0, "dlret"]
     asset = int(raw.loc[0, "asset_id"])
 
     prices = spark.read.parquet(
-        str(data_root / "data_processed" / "prices_daily.parquet")
+        str(data_root / CATALOG["prices_daily"].path)
     ).toPandas()
     returns = spark.read.parquet(
-        str(data_root / "data_processed" / "returns_daily.parquet")
+        str(data_root / CATALOG["returns_daily"].path)
     ).toPandas()
     merged = returns[returns["asset_id"] == asset].merge(
         prices[prices["asset_id"] == asset][["date", "ret"]], on="date"
@@ -218,7 +239,7 @@ def test_membership_explode_clamped(handler):
 
 
 def test_delisted_asset_leaves_universe(handler, data_root, spark):
-    raw = spark.read.parquet(str(data_root / "data_raw" / "dlret_daily_raw.parquet")).toPandas()
+    raw = spark.read.parquet(str(data_root / parquet_path(RAW_DIR, "dlret_daily_raw"))).toPandas()
     asset, delist_date = int(raw.loc[0, "asset_id"]), raw.loc[0, "date"]
     full = handler.get_universe()
     mine = full[full["asset_id"] == asset]
@@ -254,7 +275,7 @@ def test_ratings_history_keys(handler):
 def test_factor_scaling_single_division(handler, data_root, spark):
     """Factors are percent/100 exactly once — including MOM, where the
     reference divides twice (documented deviation)."""
-    raw = spark.read.parquet(str(data_root / "data_raw" / "style_factors_raw.parquet")).toPandas()
+    raw = spark.read.parquet(str(data_root / parquet_path(RAW_DIR, "style_factors_raw"))).toPandas()
     factors = handler.get_style_factor_returns()
     mom = factors[factors["factor_name"] == "MOM"].set_index("date")["ret"]
     raw_mom = raw.set_index(pd.to_datetime(raw["date"]))["umd"]
@@ -283,7 +304,7 @@ def test_dividends_same_day_aggregation(handler, data_root, spark):
     """ALPH pays two distributions on the same day: divamt sums, distcd
     keeps the first non-null, yield = total/close."""
     div = spark.read.parquet(
-        str(data_root / "data_processed" / "dividends_monthly.parquet")
+        str(data_root / CATALOG["dividends_monthly"].path)
     ).toPandas()
     a = div[div["asset_id"] == 10001]
     assert len(a) > 0
@@ -300,7 +321,7 @@ def test_dividends_same_day_aggregation(handler, data_root, spark):
 def test_assets_master_ticker_change(handler, data_root, spark):
     """Asset 10001 had ticker OLD0 then ALPH; dedup must pick the
     latest by last_date."""
-    am = spark.read.parquet(str(data_root / "data_meta" / "assets_master.parquet")).toPandas()
+    am = spark.read.parquet(str(data_root / CATALOG["assets_master"].path)).toPandas()
     row = am[am["asset_id"] == 10001]
     assert len(row) == 1
     assert row["ticker"].iloc[0] == "ALPH"
@@ -312,7 +333,7 @@ def test_assets_master_ticker_change(handler, data_root, spark):
 
 def test_monthly_returns_shape(handler, data_root, spark):
     rm = spark.read.parquet(
-        str(data_root / "data_processed" / "returns_monthly.parquet")
+        str(data_root / CATALOG["returns_monthly"].path)
     ).toPandas()
     assert list(rm.columns) == [
         "date", "asset_id", "ret", "price", "volume", "shrout", "ret_1m"
@@ -335,7 +356,7 @@ def part_root(spark, tmp_path_factory):
 def test_partitioned_layout_prunes_and_matches(spark, part_root, data_root):
     """partition_by_year=True: same handler answers, year-partitioned
     files on disk, and date filters prune partitions at the scan."""
-    prices_dir = part_root / "data_processed" / "prices_daily.parquet"
+    prices_dir = part_root / CATALOG["prices_daily"].path
     assert (prices_dir / "year=2020").exists()
 
     flat = LocalParquetDataHandler(data_root, spark=spark)
@@ -560,15 +581,14 @@ def test_ingest_completes_with_degraded_optional_branches(spark, tmp_path_factor
         fred_fetcher=synthetic_fred_fetcher(), spark=spark,
     )
     out = root / "quantlab_data_pipeline"
-    processed = out / "data_processed"
     empty = ["analyst_consensus", "analyst_ratings_history", "dividends_monthly"]
     for name in empty:
-        df = spark.read.parquet(str(processed / f"{name}.parquet"))
+        df = spark.read.parquet(str(out / CATALOG[name].path))
         assert df.count() == 0, name
         assert df.columns == list(SCHEMAS[name].fieldNames()), name
     # core branches unaffected
-    assert spark.read.parquet(str(processed / "prices_daily.parquet")).count() > 0
-    assert spark.read.parquet(str(processed / "returns_daily.parquet")).count() > 0
+    assert spark.read.parquet(str(out / CATALOG["prices_daily"].path)).count() > 0
+    assert spark.read.parquet(str(out / CATALOG["returns_daily"].path)).count() > 0
 
 
 def test_bucketed_facts_join_without_exchange(spark, tmp_path_factory):
@@ -716,7 +736,7 @@ def test_incremental_update_touches_only_window_partitions(spark, tmp_path_facto
         source=SyntheticWrdsSource(spark, n_assets=2),
         fred_fetcher=synthetic_fred_fetcher(), spark=spark,
     )
-    prices_dir = root / "quantlab_data_pipeline" / "data_processed" / "prices_daily.parquet"
+    prices_dir = root / "quantlab_data_pipeline" / CATALOG["prices_daily"].path
 
     def snapshot(year):
         d = prices_dir / f"year={year}"

@@ -461,3 +461,20 @@ def test_perplexity_bucket_matches_naive_window(spark):
     assert sorted(map(tuple, got.collect())) == sorted(
         map(tuple, naive.collect())
     )
+
+
+def test_scratch_store_rows_rebuild_in_place(spark):
+    """A row that builds a store at call time keeps it in one scratch
+    directory per scale factor: a repeated call of the bucketed dedup
+    row rebuilds over the cleared directory, registers no second
+    catalog table, and answers the same."""
+    from pathlib import Path
+
+    import quantlab_data_pipeline_spark.queries_ext as qe
+
+    first = sorted(qe.incremental_dedup_bucketed_docs(spark, SF).collect())
+    tables = len(spark.catalog.listTables())
+    again = sorted(qe.incremental_dedup_bucketed_docs(spark, SF).collect())
+    assert len(spark.catalog.listTables()) == tables
+    assert again == first
+    assert "mkdtemp" not in Path(qe.__file__).read_text()

@@ -385,3 +385,45 @@ def test_jsonl_export_rejects_bad_shards(spark, tmp_path):
     src = spark.range(3).selectExpr("id AS doc_id", "'x' AS text")
     with pytest.raises(ValueError, match="shards"):
         write_jsonl_corpus(src, str(tmp_path / "bad"), shards=0)
+
+
+class _RecordingReader:
+    """Stand-in for ``spark.read``: records the format and options, and
+    ``load`` returns them."""
+
+    def __init__(self):
+        self.opts = {}
+
+    def format(self, fmt):
+        self.opts["format"] = fmt
+        return self
+
+    def option(self, key, value):
+        self.opts[key] = value
+        return self
+
+    def load(self):
+        return self.opts
+
+
+class _StubSpark:
+    @property
+    def read(self):
+        return _RecordingReader()
+
+
+def test_jdbc_reader_options_of_both_branches():
+    """Both reads share one reader (url, fetchsize, credentials); the
+    date-partitioned read adds only its subquery and partition options."""
+    src = JdbcWrdsSource(_StubSpark(), url="jdbc:x", user="u", password="p",
+                         fetch_partitions=7)
+    shared = {"format": "jdbc", "url": "jdbc:x", "fetchsize": 10_000,
+              "user": "u", "password": "p"}
+    assert src._read("select 1") == {**shared, "query": "select 1"}
+    assert src._read("select 1", partition_on_date=("2020-01-01", "2020-12-31")) == {
+        **shared, "dbtable": "(select 1) q", "partitionColumn": "date",
+        "lowerBound": "2020-01-01", "upperBound": "2020-12-31", "numPartitions": 7,
+    }
+    anon = JdbcWrdsSource(_StubSpark(), url="jdbc:x")._read("select 1")
+    assert anon == {"format": "jdbc", "url": "jdbc:x", "fetchsize": 10_000,
+                    "query": "select 1"}
