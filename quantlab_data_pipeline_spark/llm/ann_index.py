@@ -27,6 +27,7 @@ from pyspark.sql import functions as F
 
 from .similarity import ivf_assign, rank_topk, train_centroids
 from ..fsutil import path_exists as _path_exists
+from ..localframe import materialized, pin
 from ..storage.index_store import IndexStore
 
 
@@ -312,7 +313,7 @@ def append_to_ann_index(
     unchanged. Tombstone contract carries over: ids are permanent —
     appending a tombstoned id leaves it masked until compaction.
 
-    The batch frame is localCheckpointed before the write: a caller
+    The batch frame is pinned before the write: a caller
     deriving ``new_vectors`` from a read of the index itself (the
     anti-join intake shape) would otherwise have its lineage
     re-executed against the post-append file list. Returns the number
@@ -325,6 +326,7 @@ def append_to_ann_index(
 
         books = load_codebooks(spark, path)
         assigned = assigned.join(pq_encode(new_vectors, books, id_col, vec_col), id_col)
-    batch = assigned.localCheckpoint()
-    _store(spark, path, id_col).write(batch, "assignments", "append")
-    return batch.count()
+    with materialized():
+        batch = pin(assigned)
+        _store(spark, path, id_col).write(batch, "assignments", "append")
+        return batch.count()

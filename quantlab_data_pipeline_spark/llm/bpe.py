@@ -16,7 +16,7 @@ table (vocabulary-sized, millions of rows at 100 TB, not trillions):
 3. apply the merge to the word table as a NATIVE array fold
    (``aggregate``: left-to-right, merging non-overlapping occurrences
    greedily — the standard BPE apply) — no Python in the loop;
-4. ``localCheckpoint`` every few iterations so plan lineage doesn't
+4. a pin (``localframe.pin``) every 8 merges so plan lineage doesn't
    grow linearly with merge count.
 
 Encoding a corpus with the trained merge ranks is per-word sequential
@@ -32,6 +32,7 @@ from collections.abc import Iterator
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..localframe import materialized, pin
 from .text import _tokens
 
 __all__ = ["word_freqs", "train_bpe", "bpe_encode", "END_OF_WORD"]
@@ -78,22 +79,21 @@ def train_bpe(
     num_merges: int,
     text_col: str = "text",
     min_pair_freq: int = 2,
-    checkpoint_every: int = 8,
 ) -> list[tuple[str, str]]:
     """Learn ``num_merges`` BPE merges from the corpus.
 
     Returns the ordered merge list [(left, right), ...] (rank = index).
     Stops early when no pair reaches ``min_pair_freq``. Deterministic:
     best pair per round is (max weighted count, then lexicographically
-    smallest pair)."""
-    words = (
-        word_freqs(docs, text_col)
-        .select(_initial_symbols(F.col("word")).alias("toks"), "freq")
-        .persist()
-    )
+    smallest pair). Every 8th merge pins the word table, cutting the
+    per-merge expression lineage."""
     merges: list[tuple[str, str]] = []
-    try:
-        current = words
+    with materialized():
+        current = pin(
+            word_freqs(docs, text_col).select(
+                _initial_symbols(F.col("word")).alias("toks"), "freq"
+            )
+        )
         for i in range(num_merges):
             pairs = (
                 current.select(
@@ -124,12 +124,9 @@ def train_bpe(
                 ),
                 "freq",
             )
-            if (i + 1) % checkpoint_every == 0:
-                # Cut the per-iteration expression lineage.
-                current = current.localCheckpoint(eager=True)
-        return merges
-    finally:
-        words.unpersist()
+            if (i + 1) % 8 == 0:
+                current = pin(current)
+    return merges
 
 
 def _encode_word(word: str, ranks: dict[tuple[str, str], int]) -> list[str]:

@@ -24,7 +24,8 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-from pyspark.storagelevel import StorageLevel
+
+from ..localframe import pin
 
 
 def ensure_parallelism(df: DataFrame, min_ratio: float = 0.5) -> DataFrame:
@@ -247,18 +248,16 @@ def minhash_dedup_pairs(
     threshold (:func:`choose_bands`) so recall tracks the requested
     similarity instead of a fixed 16-band layout.
 
-    Signatures are persisted: three downstream branches (band buckets,
+    Signatures are pinned: three downstream branches (band buckets,
     pair side a, pair side b) would otherwise each recompute the
     shingle+64-hash stage — the most expensive part of the pipeline.
     """
     if bands is None:
         bands = choose_bands(num_hashes, threshold)
-    sigs = (
+    sigs = pin(
         minhash_signatures(
             ensure_parallelism(df), id_col, text_col, num_hashes, shingle_k
-        )
-        .select(id_col, "signature")  # shingles are dead weight here
-        .persist(StorageLevel.MEMORY_AND_DISK)
+        ).select(id_col, "signature")  # shingles are dead weight here
     )
     cands = lsh_candidate_pairs(sigs, id_col, bands, sig_len_hint=num_hashes)
     sa = sigs.select(
@@ -313,14 +312,16 @@ def ngram_jaccard_pairs(
     import math
 
     ratio = max(1.0 / threshold, 1.25)
-    base = ensure_parallelism(df).select(
-        F.col(id_col),
-        F.substring(F.col(text_col), 1, block_chars).alias("block"),
-        word_shingles(text_col, shingle_k).alias("sh"),
-    ).withColumn(
-        "bkt",
-        F.floor(F.log(F.size("sh").cast("double")) / math.log(ratio)).cast("int"),
-    ).persist(StorageLevel.MEMORY_AND_DISK)  # keys + two shingle gathers
+    base = pin(  # keys + two shingle gathers
+        ensure_parallelism(df).select(
+            F.col(id_col),
+            F.substring(F.col(text_col), 1, block_chars).alias("block"),
+            word_shingles(text_col, shingle_k).alias("sh"),
+        ).withColumn(
+            "bkt",
+            F.floor(F.log(F.size("sh").cast("double")) / math.log(ratio)).cast("int"),
+        )
+    )
     keys = base.select(
         F.col(id_col),
         "block",
@@ -447,6 +448,34 @@ def simhash_fingerprints(
     return sums.select(F.col(id_col), fp.alias("simhash"))
 
 
+def bit_bands(df: DataFrame, fp_col: str, bands: int, keep: list[str]) -> DataFrame:
+    """(*keep, band_idx, band_val): one row per bit-band of the 64-bit
+    fingerprint ``fp_col`` — ``bands`` bands of ``64 // bands`` bits,
+    band i holding bits [i*width, (i+1)*width). The banding of SimHash
+    pairs and of the persisted media index."""
+    width = 64 // bands
+    # Signed-64 view of the low-`width` ones-mask: at bands=1 (e.g.
+    # max_hamming=0 exact matching) the band is the whole fingerprint
+    # and (1 << 64) - 1 overflows a Java long, but its two's-complement
+    # value -1 is the same 64 set bits.
+    m = (1 << width) - 1
+    mask = F.lit(m - (1 << 64) if m >= 1 << 63 else m).cast("long")
+    band = F.explode(
+        F.array(
+            *[
+                F.struct(
+                    F.lit(i).alias("band_idx"),
+                    F.shiftrightunsigned(F.col(fp_col), i * width)
+                    .bitwiseAND(mask)
+                    .alias("band_val"),
+                )
+                for i in range(bands)
+            ]
+        )
+    )
+    return df.select(*keep, band.alias("b")).select(*keep, "b.band_idx", "b.band_val")
+
+
 def simhash_near_dup_pairs(
     fingerprints: DataFrame,
     id_col: str = "doc_id",
@@ -482,30 +511,9 @@ def simhash_near_dup_pairs(
             f"bands={bands} breaks pigeonhole recall for "
             f"max_hamming={max_hamming}; need bands >= max_hamming+1"
         )
-    width = 64 // bands
-    # Both self-join sides reuse the fingerprints; without persist the
+    # Both self-join sides reuse the fingerprints; without a pin the
     # explode+64-bit-sum aggregation upstream runs twice.
-    fingerprints = fingerprints.persist(StorageLevel.MEMORY_AND_DISK)
-    # Signed-64 view of the low-`width` ones-mask (bands=1, e.g.
-    # max_hamming=0 exact matching, needs all 64 bits = -1 as a long).
-    m = (1 << width) - 1
-    mask = F.lit(m - (1 << 64) if m >= 1 << 63 else m).cast("long")
-    band = F.explode(
-        F.array(
-            *[
-                F.struct(
-                    F.lit(i).alias("band_idx"),
-                    F.shiftrightunsigned(F.col("simhash"), i * width)
-                    .bitwiseAND(mask)
-                    .alias("band_val"),
-                )
-                for i in range(bands)
-            ]
-        )
-    )
-    buckets = fingerprints.select(
-        F.col(id_col), F.col("simhash"), band.alias("b")
-    ).select(id_col, "simhash", "b.band_idx", "b.band_val")
+    buckets = bit_bands(pin(fingerprints), "simhash", bands, [id_col, "simhash"])
     a = buckets.select(
         F.col(id_col).alias("id_a"), F.col("simhash").alias("h_a"),
         "band_idx", "band_val",
@@ -766,15 +774,15 @@ def fuzzy_decontaminate(
     """
     if bands is None:
         bands = choose_bands(num_hashes, threshold)
-    d_sigs = (
-        minhash_signatures(ensure_parallelism(docs), id_col, text_col, num_hashes)
-        .select(id_col, "signature")
-        .persist(StorageLevel.MEMORY_AND_DISK)
+    d_sigs = pin(
+        minhash_signatures(
+            ensure_parallelism(docs), id_col, text_col, num_hashes
+        ).select(id_col, "signature")
     )
-    b_sigs = (
-        minhash_signatures(benchmark, id_col, text_col, num_hashes)
-        .select(id_col, "signature")
-        .persist(StorageLevel.MEMORY_AND_DISK)
+    b_sigs = pin(
+        minhash_signatures(benchmark, id_col, text_col, num_hashes).select(
+            id_col, "signature"
+        )
     )
     d_keys = band_buckets(d_sigs, id_col, bands).select(
         F.col(id_col).alias("train_id"), "band_idx", "band_hash"

@@ -46,6 +46,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .dedup import band_buckets, ensure_parallelism, minhash_signatures
+from ..localframe import materialized, pin
 from ..storage.index_store import BANDS, IndexStore
 
 __all__ = [
@@ -66,23 +67,16 @@ def _exact_hashes(docs: DataFrame, id_col: str, text_col: str) -> DataFrame:
     )
 
 
-def _sig_and_buckets(
-    docs: DataFrame,
-    id_col: str,
-    text_col: str,
-    num_hashes: int,
-    bands: int,
-    shingle_k: int,
-) -> tuple[DataFrame, DataFrame]:
-    sigs = minhash_signatures(
+def _signatures(
+    docs: DataFrame, id_col: str, text_col: str, num_hashes: int, shingle_k: int
+) -> DataFrame:
+    return minhash_signatures(
         ensure_parallelism(docs),
         id_col=id_col,
         text_col=text_col,
         num_hashes=num_hashes,
         shingle_k=shingle_k,
     ).select(id_col, "signature")
-    buckets = band_buckets(sigs, id_col=id_col, bands=bands)
-    return sigs, buckets
 
 
 def _store(
@@ -121,16 +115,11 @@ def build_dedup_index(
         raise ValueError(f"bands={bands} must divide num_hashes={num_hashes}")
     store = _store(docs.sparkSession, path, id_col, bucket_n or 0)
     store.clear_tombstones()
-    sigs, buckets = _sig_and_buckets(
-        docs, id_col, text_col, num_hashes, bands, shingle_k
-    )
-    # One lineage feeds both tables; persist so shingling runs once.
-    sigs = sigs.persist()
-    try:
+    # One lineage feeds both tables; pinned so shingling runs once.
+    with materialized():
+        sigs = pin(_signatures(docs, id_col, text_col, num_hashes, shingle_k))
         store.write(sigs, "signatures", "overwrite")
-        store.write(buckets, BANDS, "overwrite")
-    finally:
-        sigs.unpersist()
+        store.write(band_buckets(sigs, id_col, bands), BANDS, "overwrite")
     store.write(_exact_hashes(docs, id_col, text_col), "exact", "overwrite")
     store.write_rows(
         "meta",
@@ -196,7 +185,7 @@ def compact_dedup_index(
     and exact stores, then clear the tombstone set. No-op when nothing
     was removed. One filtered pass per store — the reclaim cost every
     tombstone design amortizes by compacting on a cadence, not per
-    delete. localCheckpoint pins each filtered frame before its source
+    delete. The store pins each filtered frame before its source
     path is overwritten (lineage re-execution would otherwise read the
     half-rewritten store)."""
     _store(spark, path, id_col).compact()
@@ -217,21 +206,15 @@ def append_to_index(
     # Spark RE-EXECUTES cached plans whose input paths are appended to
     # — so a persist here is not a freeze, and without one each write
     # below would re-evaluate the batch against the partially-mutated
-    # index and silently drop the very docs being admitted.
-    # localCheckpoint materializes batch-sized blocks with no lineage
-    # to re-execute; every write then sees the pre-append decision.
-    sigs = minhash_signatures(
-        ensure_parallelism(docs),
-        id_col=id_col,
-        text_col=text_col,
-        num_hashes=num_hashes,
-        shingle_k=shingle_k,
-    ).select(id_col, "signature").localCheckpoint()
-    buckets = band_buckets(sigs, id_col=id_col, bands=bands)
-    exact = _exact_hashes(docs, id_col, text_col).localCheckpoint()
-    store.write(sigs, "signatures", "append")
-    store.write(buckets, BANDS, "append")
-    store.write(exact, "exact", "append")
+    # index and silently drop the very docs being admitted. A pin holds
+    # batch-sized blocks with no lineage to re-execute; every write
+    # then sees the pre-append decision.
+    with materialized():
+        sigs = pin(_signatures(docs, id_col, text_col, num_hashes, shingle_k))
+        exact = pin(_exact_hashes(docs, id_col, text_col))
+        store.write(sigs, "signatures", "append")
+        store.write(band_buckets(sigs, id_col=id_col, bands=bands), BANDS, "append")
+        store.write(exact, "exact", "append")
 
 
 def query_dedup_index(
@@ -251,9 +234,8 @@ def query_dedup_index(
     """
     store = _store(new_docs.sparkSession, path, id_col)
     num_hashes, bands, shingle_k = _checked_meta(store)
-    new_sigs, new_buckets = _sig_and_buckets(
-        new_docs, id_col, text_col, num_hashes, bands, shingle_k
-    )
+    new_sigs = _signatures(new_docs, id_col, text_col, num_hashes, shingle_k)
+    new_buckets = band_buckets(new_sigs, id_col=id_col, bands=bands)
     # No persist: the band branch and the estimator branch each
     # re-shingle the (batch-sized) probe — bounded CPU — while a
     # persist here would outlive the returned lazy DataFrame and leak

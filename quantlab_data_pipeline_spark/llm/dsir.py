@@ -46,7 +46,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..localframe import local_df
+from ..localframe import local_df, materialized, pin
 from .text import word_grams
 
 __all__ = [
@@ -323,12 +323,13 @@ def build_dsir_counts(
     cannot drift the feature space (the media index's band-pinning
     contract).
 
-    ``precomputed_counts``: an already-computed per-doc
+    ``precomputed_counts``: a pinned (:func:`..localframe.pin`) per-doc
     ``hashed_ngram_counts(docs, …)`` frame under the SAME
     (buckets, ns) — the guide §1.2 escape hatch for a caller that
     needs the per-doc counts anyway (building a store AND scoring with
     ``batch_counts=``): the md5-per-gram explode then runs once, not
-    once per consumer. The caller owns feature-space agreement."""
+    once per consumer. The caller owns the pin and feature-space
+    agreement."""
     spark = (
         docs if precomputed_counts is None else precomputed_counts
     ).sparkSession
@@ -371,10 +372,10 @@ def update_dsir_counts(
     (pytest-pinned). Run :func:`compact_dsir_counts` on a cadence to
     merge deltas back to one row per bucket.
 
-    ``precomputed_counts``: per-doc counts as in
+    ``precomputed_counts``: pinned per-doc counts as in
     :func:`build_dsir_counts` — must be computed under the store's
-    pinned (buckets, ns); the tokenize pass then runs once for a
-    caller that also scores the batch."""
+    (buckets, ns); the tokenize pass then runs once for a caller that
+    also scores the batch."""
     spark = (
         new_docs if precomputed_counts is None else precomputed_counts
     ).sparkSession
@@ -384,24 +385,17 @@ def update_dsir_counts(
         if precomputed_counts is not None
         else hashed_ngram_counts(new_docs, text_col, id_col, buckets, ns)
     )
-    delta = (
-        per_doc.groupBy("bucket")
-        .agg(F.sum("cnt").alias("cnt"))
-        .localCheckpoint()  # freeze before the self-referential append
-    )
-    delta.write.mode("append").parquet(f"{path}/counts")
+    with materialized():  # freeze before the self-referential append
+        delta = pin(per_doc.groupBy("bucket").agg(F.sum("cnt").alias("cnt")))
+        delta.write.mode("append").parquet(f"{path}/counts")
 
 
 def compact_dsir_counts(spark: SparkSession, path: str) -> None:
     """Merge appended delta rows to one row per bucket (sum-on-read
     stays correct either way; compaction bounds the file count)."""
-    merged = (
-        spark.read.parquet(f"{path}/counts")
-        .groupBy("bucket")
-        .agg(F.sum("cnt").alias("cnt"))
-        .localCheckpoint()
-    )
-    merged.write.mode("overwrite").parquet(f"{path}/counts")
+    with materialized():
+        merged = pin(load_dsir_counts(spark, path))
+        merged.write.mode("overwrite").parquet(f"{path}/counts")
 
 
 def load_dsir_counts(spark: SparkSession, path: str) -> DataFrame:

@@ -32,6 +32,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..localframe import pin
 from .text import _tokens, word_grams
 
 __all__ = ["bigram_logprob"]
@@ -66,7 +67,7 @@ def bigram_logprob(
     train_bg = doc_bigrams(train)
     if train_docs is None:
         # Self-scoring: one explode feeds counting AND scoring.
-        train_bg = train_bg.persist()
+        train_bg = pin(train_bg)
         score_bg = train_bg
     else:
         score_bg = doc_bigrams(docs)

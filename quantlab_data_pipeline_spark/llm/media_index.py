@@ -18,7 +18,8 @@ this index removes. Stored layout at ``path``:
 Tombstones, compaction, the bucketed band table and ``meta`` follow the
 one protocol in :mod:`..storage.index_store`.
 
-Banding follows ``dedup.simhash_near_dup_pairs``: ``bands`` defaults
+Banding is ``dedup.bit_bands``, as in ``simhash_near_dup_pairs``:
+``bands`` defaults
 to the pigeonhole minimum ``max_hamming + 1`` (recall exact, widest —
 most selective — band values; see the round-7 probe numbers in
 BASELINE.md). The typical intake loop is
@@ -30,7 +31,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..localframe import materialized, pin
 from ..storage.index_store import BANDS, IndexStore
+from .dedup import bit_bands
 
 __all__ = [
     "build_media_index",
@@ -54,39 +57,6 @@ def _fingerprint(media: DataFrame, modality: str) -> DataFrame:
     return fp.select("asset_id", F.col(fp.columns[1]).alias("fp"))
 
 
-def _bands(fp_df: DataFrame, bands: int, keep_fp: bool = False) -> DataFrame:
-    """(asset_id, band_idx, band_val) — bit-band explode of the 64-bit
-    fingerprint, identical construction to simhash_near_dup_pairs.
-    ``keep_fp`` carries the 8-byte fingerprint through the band rows
-    (query path: the probe batch is then scanned ONCE — the exact
-    Hamming check reads ``fp`` off the band row instead of joining the
-    fingerprint frame back, so no persist/cache lifecycle exists on
-    the probe side at all)."""
-    width = 64 // bands
-    # Signed-64 view of the low-`width` ones-mask: at bands=1 the band
-    # is the whole fingerprint and (1 << 64) - 1 overflows a Java long,
-    # but its two's-complement value -1 is the same 64 set bits.
-    m = (1 << width) - 1
-    mask = F.lit(m - (1 << 64) if m >= 1 << 63 else m).cast("long")
-    band = F.explode(
-        F.array(
-            *[
-                F.struct(
-                    F.lit(i).alias("band_idx"),
-                    F.shiftrightunsigned(F.col("fp"), i * width)
-                    .bitwiseAND(mask)
-                    .alias("band_val"),
-                )
-                for i in range(bands)
-            ]
-        )
-    )
-    head = ["asset_id", "fp"] if keep_fp else ["asset_id"]
-    return fp_df.select(*head, band.alias("b")).select(
-        *head, "b.band_idx", "b.band_val"
-    )
-
-
 def _store(spark: SparkSession, path: str, bucket_n=None) -> IndexStore:
     return IndexStore(
         spark, path, "asset_id", stores=("fingerprints", BANDS),
@@ -105,13 +75,13 @@ def build_media_index(
 ) -> None:
     """Create the index at ``path`` from the current corpus (overwrite).
 
-    ``precomputed_fp`` — an already-MATERIALIZED (persisted or
-    localCheckpointed) (asset_id, fp) frame for exactly ``media``'s
-    assets — skips the decode+fingerprint pass entirely (guide §1.2:
-    don't recompute what a caller already holds; the intake sink
-    fingerprints each batch once and reuses the 16-byte rows for flag,
-    winner, and append). The caller owns materialization; an
-    un-materialized frame would be evaluated once per write below.
+    ``precomputed_fp`` — an already-pinned (:func:`..localframe.pin`)
+    (asset_id, fp) frame for exactly ``media``'s assets — skips the
+    decode+fingerprint pass entirely (guide §1.2: don't recompute what
+    a caller already holds; the intake sink fingerprints each batch
+    once and reuses the 16-byte rows for flag, winner, and append). The
+    caller owns the pin; an unpinned frame would be evaluated once per
+    write below.
     """
     if bands is None:
         bands = max_hamming + 1
@@ -122,19 +92,16 @@ def build_media_index(
         )
     store = _store(media.sparkSession, path, bucket_n)
     store.clear_tombstones()
-    fp = (
-        precomputed_fp
-        if precomputed_fp is not None
-        else _fingerprint(media, modality).persist()
-    )
-    try:
+    with materialized():
+        fp = (
+            precomputed_fp
+            if precomputed_fp is not None
+            else pin(_fingerprint(media, modality))
+        )
         store.write(fp, "fingerprints", "overwrite")
         # An overwrite, so a rebuild at an existing path never stacks
         # fresh band rows on stale ones (ADVICE r7).
-        store.write(_bands(fp, bands), BANDS, "overwrite")
-    finally:
-        if precomputed_fp is None:
-            fp.unpersist()
+        store.write(bit_bands(fp, "fp", bands, ["asset_id"]), BANDS, "overwrite")
     store.write_rows(
         "meta",
         [(modality, max_hamming, bands, bucket_n)],
@@ -159,27 +126,26 @@ def append_to_media_index(
 
     ``precomputed_fp`` (optional): a (asset_id, fp) frame for exactly
     the batch's assets, computed by a caller that already paid the
-    decode+fingerprint pass (the intake sink). It is localCheckpointed
-    here regardless — the freeze below is this function's invariant,
+    decode+fingerprint pass (the intake sink). It is pinned here
+    regardless — the freeze below is this function's invariant,
     not the caller's. With ``precomputed_fp``, ``media`` may be None
     (nothing else is read from it)."""
     spark = (media if precomputed_fp is None else precomputed_fp).sparkSession
     store = _store(spark, path)
     modality, bands = store.meta["modality"], store.meta["bands"]
-    # localCheckpoint, not persist: persist is NOT a freeze — Spark
-    # re-caches (re-executes) cached plans whose input paths are
-    # written to, so a persisted frame whose lineage reads this index
-    # would silently flip under the second write. Checkpointed blocks
-    # have no lineage to re-execute. Batch-sized, so the
-    # materialization is cheap; blocks are freed when the frame is
-    # garbage-collected.
-    fp = (
-        precomputed_fp
-        if precomputed_fp is not None
-        else _fingerprint(media, modality)
-    ).localCheckpoint()
-    store.write(_bands(fp, bands), BANDS, "append")
-    store.write(fp, "fingerprints", "append")
+    # A pin, not a persist: persist is NOT a freeze — Spark re-caches
+    # (re-executes) cached plans whose input paths are written to, so a
+    # persisted frame whose lineage reads this index would silently
+    # flip under the second write. Pinned blocks have no lineage to
+    # re-execute. Batch-sized, so the materialization is cheap.
+    with materialized():
+        fp = pin(
+            precomputed_fp
+            if precomputed_fp is not None
+            else _fingerprint(media, modality)
+        )
+        store.write(bit_bands(fp, "fp", bands, ["asset_id"]), BANDS, "append")
+        store.write(fp, "fingerprints", "append")
 
 
 def query_media_index(
@@ -195,7 +161,7 @@ def query_media_index(
     state left behind (the r7 ``persist`` leak is gone by design: the
     second probe-side join it was caching no longer exists).
 
-    ``precomputed_fp``: a materialized (asset_id, fp) frame for the
+    ``precomputed_fp``: a pinned (asset_id, fp) frame for the
     probe batch, for callers that already fingerprinted it (the intake
     sink) — skips the decode+hash entirely."""
     spark = (new_media if precomputed_fp is None else precomputed_fp).sparkSession
@@ -213,8 +179,11 @@ def query_media_index(
     # surviving BUCKET rows drop out of the candidate set at the
     # fingerprint inner join below.
     idx_fp = store.live("fingerprints")
+    # The probe fingerprint rides the band rows, so the probe batch is
+    # scanned ONCE: the exact Hamming check reads ``fa`` off the band
+    # row instead of joining the fingerprint frame back.
     candidates = (
-        _bands(new_fp, bands, keep_fp=True)
+        bit_bands(new_fp, "fp", bands, ["asset_id", "fp"])
         .select(
             F.col("asset_id").alias("new_id"),
             F.col("fp").alias("fa"),
@@ -308,7 +277,7 @@ def compact_media_index(spark: SparkSession, path: str) -> None:
     bucket stores, then clear the tombstone set. A no-op when nothing
     was removed. The rewrite is one filtered pass over each store —
     the reclaim cost every tombstone design amortizes by running
-    compaction on a cadence, not per delete. localCheckpoint pins the
+    compaction on a cadence, not per delete. The store pins the
     filtered frames before their source paths are overwritten (lineage
     re-execution would otherwise read the half-rewritten store)."""
     _store(spark, path).compact()

@@ -14,7 +14,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from ..localframe import local_df
+from ..localframe import local_df, pin
 from .dedup import ensure_parallelism
 
 
@@ -513,13 +513,13 @@ def embedding_near_dup_pairs_lsh(
         bands, band_bits = plan_signature(threshold, recall)
     if dim is None:
         dim = _probe_dim(df, vec_col)
-    from pyspark.storagelevel import StorageLevel
-
-    base = ensure_parallelism(df).select(
-        F.col(id_col).alias("id"),
-        unit_vec(vec_col).alias("v"),
-        band_signature(vec_col, bands, band_bits, dim).alias("__bands"),
-    ).persist(StorageLevel.MEMORY_AND_DISK)  # keys + both vector gathers
+    base = pin(  # keys + both vector gathers
+        ensure_parallelism(df).select(
+            F.col(id_col).alias("id"),
+            unit_vec(vec_col).alias("v"),
+            band_signature(vec_col, bands, band_bits, dim).alias("__bands"),
+        )
+    )
     keys = base.select("id", F.explode("__bands").alias("b")).select(
         "id", "b.band_idx", "b.band_val"
     )
@@ -578,13 +578,9 @@ def semantic_dedup_pairs(
     """
     if centroids is None:
         centroids = train_centroids(corpus, k=n_clusters, vec_col=vec_col)
-    from pyspark.storagelevel import StorageLevel
-
-    # Both join sides read the assignment — persist it once instead of
+    # Both join sides read the assignment — pin it once instead of
     # re-running the centroid scoring + rank window per side.
-    assigned = ivf_assign(corpus, centroids, id_col, vec_col, n_assign=1).persist(
-        StorageLevel.MEMORY_AND_DISK
-    )
+    assigned = pin(ivf_assign(corpus, centroids, id_col, vec_col, n_assign=1))
     sizes = assigned.groupBy("centroid_id").count()
     big_ids = [r["centroid_id"] for r in sizes.filter(F.col("count") > max_cluster).collect()]
     small = assigned.filter(~F.col("centroid_id").isin(big_ids)) if big_ids else assigned

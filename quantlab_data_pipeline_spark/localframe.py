@@ -19,14 +19,52 @@ columns convert too.
 collects the frame's rows to the driver in one job and returns them as
 the same kind of local scan, so the frame's lineage (a join, say) is
 not re-run by each later action that reads it.
+
+:func:`pin` is the way to materialize any other frame once, and the
+only one in this package: an eager ``localCheckpoint``. The checkpoint
+is private to the frames that read it. Nothing enters the CacheManager,
+so a later execution of the same plan recomputes instead of being
+served from an earlier one. It also freezes the data: a checkpoint has
+no lineage, so a later write to a path the frame read cannot re-cache
+or re-execute it (a ``persist`` is re-cached when its input path is
+written to). :func:`unpin` releases a pinned frame's blocks; a frame
+that still reads them fails loudly ("Checkpoint block ... not found")
+instead of recomputing.
+
+:func:`materialized` is the scope. On exit, on success and on raise
+alike, it unpins every pin made on the calling thread while it was the
+innermost open scope. The rule for who opens it:
+
+* a function opens ``materialized()`` only when nothing it returns
+  reads one of its pins: the index build, append and compaction
+  functions, rollup refresh, DSIR fold and compaction, BPE training,
+  the composed curation sink (once per batch), and ``observe`` and the
+  correctness mirror (once per run of a row);
+* a function that returns a lazy frame over its pins (pair generators,
+  connected components, PageRank, triangle count, hierarchy, skew
+  ranks, the bigram LM, ``split_corrupt``, registry rows) unpins the
+  pins its result does not read before it returns. The pins its result
+  reads belong to the caller's scope; with no scope open, Spark's
+  ContextCleaner releases them once the frame is garbage-collected.
+
+Never drop a release to silence a "block not found" error: fix the
+scope instead. And never replace a pin with a ``persist``: a persisted
+frame recomputed after its sink appended to the store it read gives
+wrong verdicts, with no error.
 """
 
 from __future__ import annotations
 
+import threading
+from contextlib import contextmanager
+from typing import Iterator
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import StructType
 
-__all__ = ["local_df", "localize"]
+__all__ = ["local_df", "localize", "materialized", "pin", "unpin"]
+
+_scopes = threading.local()
 
 
 def _ddl_names(schema: str) -> list[str]:
@@ -75,3 +113,34 @@ def localize(df: DataFrame) -> DataFrame:
     local scan with the same schema. Selecting from and collecting the
     result runs no job; broadcasting it reads the collected rows."""
     return local_df(df.sparkSession, df.collect(), df.schema)
+
+
+def pin(df: DataFrame) -> DataFrame:
+    """``df`` computed once (an eager ``localCheckpoint``), registered
+    with the innermost open :func:`materialized` scope of this thread."""
+    pinned = df.localCheckpoint(eager=True)
+    open_scopes = getattr(_scopes, "stack", None)
+    if open_scopes:
+        open_scopes[-1].append(pinned)
+    return pinned
+
+
+def unpin(df: DataFrame) -> None:
+    """Release the blocks of a frame returned by :func:`pin`. Through
+    ``SparkContext.unpersistRDD``: ``RDD.unpersist`` does the same but
+    logs a WARN for every locally checkpointed RDD."""
+    rdd_id = df._jdf.queryExecution().analyzed().rdd().id()
+    df.sparkSession.sparkContext._jsc.sc().unpersistRDD(rdd_id, False)
+
+
+@contextmanager
+def materialized() -> Iterator[None]:
+    """Unpin, on exit, every pin made on this thread while this was the
+    innermost open scope."""
+    stack = _scopes.__dict__.setdefault("stack", [])
+    stack.append([])
+    try:
+        yield
+    finally:
+        for df in stack.pop():
+            unpin(df)

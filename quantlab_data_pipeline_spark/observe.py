@@ -34,6 +34,8 @@ import tempfile
 import time
 from pathlib import Path
 
+from .localframe import materialized
+
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
 # Task-level work, charged to the window totals and to the task's job.
@@ -184,7 +186,8 @@ def _run(spark, fn, log: Path, label: str) -> tuple[dict, list[dict]]:
     offset = log.stat().st_size
     spark.sparkContext.setJobDescription(label)
     t0 = time.perf_counter()
-    _noop(fn(spark, SF_DIR))
+    with materialized():  # a run leaves no pin behind for the next one
+        _noop(fn(spark, SF_DIR))
     wall = time.perf_counter() - t0
     _drain(spark)
     jobs, totals = parse(log, offset)

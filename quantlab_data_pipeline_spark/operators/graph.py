@@ -11,10 +11,10 @@ converges in O(graph diameter) iterations — near-dup graphs are
 overwhelmingly small star-shaped clusters, so the practical iteration
 count is 2-4. Every iteration is ONE keyed shuffle join (edges are
 re-used, labels are the only moving frame); the convergence probe is a
-``limit(1)`` existence check, not a count over the full frame. Lineage
-is cut with ``localCheckpoint`` every few rounds so the plan does not
-grow unboundedly with iterations (the classic iterative-algorithm
-failure on Spark).
+``limit(1)`` existence check, not a count over the full frame. Every
+round is pinned (:func:`..localframe.pin`), so the plan does not grow
+with iterations (the classic iterative-algorithm failure on Spark),
+and the previous round is unpinned once the next one is computed.
 
 At 100 TB scale the same loop holds: the edge list shuffles on the
 node id each round, AQE handles the skew of celebrity nodes, and the
@@ -28,7 +28,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.storagelevel import StorageLevel
+
+from ..localframe import pin, unpin
 
 
 def connected_components_two_phase(
@@ -36,7 +37,6 @@ def connected_components_two_phase(
     src_col: str = "id_a",
     dst_col: str = "id_b",
     max_rounds: int = 60,
-    checkpoint_every: int = 1,
 ) -> DataFrame:
     """(node, component) via alternating large-star / small-star
     rounds (Kiveris et al., "Connected Components in MapReduce and
@@ -63,19 +63,16 @@ def connected_components_two_phase(
     count job per round (previous count is remembered, not re-run) with
     the anti-join equality check only when the counts match (count
     equality is necessary for set equality, so unstable rounds skip the
-    join entirely). Lineage is cut EVERY round by default: each round's
-    plan otherwise stacks two join+agg phases on the last, and the
-    optimizer/scheduler constant on that growing plan — not the data —
-    dominated the 100k-chain probe.
+    join entirely). Every round is pinned: each round's plan otherwise
+    stacks two join+agg phases on the last, and the optimizer/scheduler
+    constant on that growing plan — not the data — dominated the
+    100k-chain probe.
     """
     # One materialization of the caller's pair subtree (guide §1.2):
     # sym's two union branches and nodes' two would otherwise evaluate
     # it four times.
-    e0 = (
-        edges.select(F.col(src_col).alias("u"), F.col(dst_col).alias("v"))
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    )
-    sym = (
+    e0 = pin(edges.select(F.col(src_col).alias("u"), F.col(dst_col).alias("v")))
+    sym = pin(
         e0.filter(F.col("u") != F.col("v"))
         .unionByName(
             e0.select(F.col("v").alias("u"), F.col("u").alias("v")).filter(
@@ -83,17 +80,15 @@ def connected_components_two_phase(
             )
         )
         .distinct()
-        .persist(StorageLevel.MEMORY_AND_DISK)
     )
-    nodes = (
+    nodes = pin(
         e0.select(F.col("u").alias("node"))
         .unionByName(e0.select(F.col("v").alias("node")))
         .distinct()
-        .persist(StorageLevel.MEMORY_AND_DISK)
     )
-    cur = sym
-    n_cur: int | None = None
-    for rnd in range(max_rounds):
+    unpin(e0)
+    cur, n_cur = sym, sym.count()
+    for _ in range(max_rounds):
         # ---- large-star: (v, m) for v > u, m = min(N(u) ∪ {u}).
         # Round 0 reads `sym`, which is already symmetric — unioning its
         # own reverse would only double the dedup work.
@@ -117,7 +112,7 @@ def connected_components_two_phase(
         # (v, m) with m <= u < v, i.e. already oriented first>second —
         # no re-orientation pass needed.
         mins_b = large.groupBy("u").agg(F.min("v").alias("m"))
-        nxt = (
+        nxt = pin(
             large.join(mins_b, "u")
             .filter(F.col("v") != F.col("m"))
             .select(F.col("v").alias("u"), F.col("m").alias("v"))
@@ -125,37 +120,21 @@ def connected_components_two_phase(
             .filter(F.col("u") != F.col("v"))
             .distinct()
         )
-        if (rnd + 1) % checkpoint_every == 0:
-            nxt = nxt.localCheckpoint(eager=False)
-        nxt = nxt.persist(StorageLevel.MEMORY_AND_DISK)
         n_new = nxt.count()
-        if n_cur is None:
-            n_cur = cur.count()  # paid once, round 0 only
         stable = (
             n_new == n_cur
             and nxt.join(cur, ["u", "v"], "left_anti").limit(1).count() == 0
         )
-        if cur is not sym:
-            cur.unpersist()
+        unpin(cur)  # round 0's cur is sym, read by round 0 only
         cur, n_cur = nxt, n_new
         if stable:
-            labels = (
-                nodes.join(
-                    cur.select(
-                        F.col("u").alias("node"), F.col("v").alias("component")
-                    ),
-                    "node",
-                    "left",
-                )
-                .select(
-                    "node", F.coalesce("component", F.col("node")).alias("component")
-                )
-            )
-            sym.unpersist()
-            e0.unpersist()
-            return labels
-    for df in (cur, nodes, sym, e0):
-        df.unpersist()
+            return nodes.join(
+                cur.select(F.col("u").alias("node"), F.col("v").alias("component")),
+                "node",
+                "left",
+            ).select("node", F.coalesce("component", F.col("node")).alias("component"))
+    unpin(cur)
+    unpin(nodes)
     raise RuntimeError(
         f"connected_components_two_phase did not converge in {max_rounds} rounds"
     )
@@ -166,7 +145,6 @@ def connected_components(
     src_col: str = "id_a",
     dst_col: str = "id_b",
     max_iters: int = 50,
-    checkpoint_every: int = 5,
     algorithm: str = "auto",
     switch_after: int = 12,
 ) -> DataFrame:
@@ -194,30 +172,26 @@ def connected_components(
     # this the caller's whole pair-generation subtree (for the dedup
     # rows: the n-gram explode + Jaccard join over the corpus) was
     # evaluated once per branch. Narrow (src, dst) rows.
-    e = (
-        edges.select(F.col(src_col).alias("src"), F.col(dst_col).alias("dst"))
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    )
-    sym = (
+    e = pin(edges.select(F.col(src_col).alias("src"), F.col(dst_col).alias("dst")))
+    sym = pin(
         e.unionByName(
             e.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-        )
-        .distinct()
-        .persist(StorageLevel.MEMORY_AND_DISK)
+        ).distinct()
     )
-    labels = (
+    unpin(e)
+    labels = pin(
         sym.select(F.col("src").alias("node"))
         .distinct()
         .withColumn("component", F.col("node"))
-        .persist(StorageLevel.MEMORY_AND_DISK)
     )
+    changed = switch = None
     for it in range(max_iters):
         neigh = (
             sym.join(labels, sym.dst == labels.node)
             .groupBy("src")
             .agg(F.min("component").alias("__nmin"))
         )
-        new_labels = (
+        new_labels = pin(
             labels.join(neigh, labels.node == neigh.src, "left")
             .select(
                 "node",
@@ -227,9 +201,6 @@ def connected_components(
                 ).alias("component"),
             )
         )
-        if (it + 1) % checkpoint_every == 0:
-            new_labels = new_labels.localCheckpoint(eager=False)
-        new_labels = new_labels.persist(StorageLevel.MEMORY_AND_DISK)
         changed = (
             new_labels.alias("n")
             .join(labels.alias("o"), "node")
@@ -237,23 +208,21 @@ def connected_components(
             .limit(1)
             .count()
         )
-        labels.unpersist()
+        unpin(labels)
         labels = new_labels
-        if changed == 0:
-            sym.unpersist()
-            e.unpersist()
-            return labels
-        if algorithm == "auto" and it + 1 >= switch_after:
-            # Still moving after `switch_after` rounds: the diameter is
-            # large enough that star-halving beats one-hop propagation
-            # from here on. Restart on the raw edges — the two-phase
-            # pass is O(log d) rounds total, cheaper than resuming.
-            sym.unpersist()
-            e.unpersist()
-            labels.unpersist()
-            return connected_components_two_phase(edges, src_col, dst_col)
-    for df in (labels, sym, e):
-        df.unpersist()
+        # Still moving after `switch_after` rounds: the diameter is
+        # large enough that star-halving beats one-hop propagation from
+        # here on. Restart on the raw edges — the two-phase pass is
+        # O(log d) rounds total, cheaper than resuming.
+        switch = algorithm == "auto" and it + 1 >= switch_after
+        if changed == 0 or switch:
+            break
+    unpin(sym)
+    if changed == 0:
+        return labels
+    unpin(labels)
+    if switch:
+        return connected_components_two_phase(edges, src_col, dst_col)
     raise RuntimeError(
         f"connected_components did not converge in {max_iters} iterations"
     )
@@ -288,7 +257,6 @@ def pagerank(
     dst_col: str = "dst",
     damping: float = 0.85,
     iters: int = 10,
-    checkpoint_every: int = 1,
     broadcast_max_nodes: int = 5_000_000,
 ) -> DataFrame:
     """(node, rank) after ``iters`` power iterations of PageRank over a
@@ -299,14 +267,14 @@ def pagerank(
     it shuffles on src, which AQE re-uses), then a groupBy(dst) sum.
     Dangling-node mass (nodes with no outgoing edges) is redistributed
     uniformly each iteration via a one-row aggregate attached with a
-    broadcast cross join — the loop stays fully lazy, no per-iteration
-    driver collect. Lineage is cut with a lazy localCheckpoint every
-    iteration BY DEFAULT: each round references ``ranks`` twice
-    (contribs + dangling), so an uncut plan doubles per round —
-    2^iters logical-plan blowup that turns 10 iterations on a 500k-edge
-    graph from seconds into minutes (measured 117s → 17s at sf0.1).
-    The only driver-side scalar is the node count, computed once up
-    front.
+    broadcast cross join — no per-iteration driver collect. Every
+    iteration's ranks are pinned: each round references ``ranks`` twice
+    (contribs + dangling), so an uncut plan doubles per round — 2^iters
+    logical-plan blowup that turns 10 iterations on a 500k-edge graph
+    from seconds into minutes (measured 117s → 17s at sf0.1). The only
+    driver-side scalar is the node count, computed once up front. The
+    result reads only the last iteration's pin; every other pin is
+    released before returning.
 
     Rank mass is conserved to float precision: sum(rank) == 1 at every
     iteration, which the tests assert alongside a numpy power-iteration
@@ -314,7 +282,7 @@ def pagerank(
 
     Round-3 exchange diet (VERDICT r2 items 4/7): the out-degree is
     pre-joined into the edge list ONCE (removing one join per
-    iteration), the combined (src, dst, deg) frame is persisted
+    iteration), the combined (src, dst, deg) frame is pinned
     pre-partitioned on ``src`` so every iteration's contribs join
     exchanges only the node-sized ranks frame — the edge list, the big
     side at scale, never moves again — and the dangling-node SET
@@ -328,32 +296,24 @@ def pagerank(
     e = edges.select(
         F.col(src_col).alias("src"), F.col(dst_col).alias("dst")
     ).distinct()
-    outdeg = (
-        e.groupBy("src")
-        .agg(F.count(F.lit(1)).alias("deg"))
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    )
-    n_part = int(spark.conf.get("spark.sql.shuffle.partitions", "200"))
-    ewd = (
-        e.join(outdeg, "src")
-        .repartition(n_part, "src")
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    )
-    nodes = (
+    nodes = pin(
         e.select(F.col("src").alias("node"))
         .unionByName(e.select(F.col("dst").alias("node")))
         .distinct()
-        .persist(StorageLevel.MEMORY_AND_DISK)
     )
     n = nodes.count()
     if n == 0:
         return nodes.withColumn("rank", F.lit(0.0))
     small = n <= broadcast_max_nodes
-    dangling_nodes = nodes.join(
-        outdeg.withColumnRenamed("src", "node"), "node", "left_anti"
-    ).persist(StorageLevel.MEMORY_AND_DISK)
-    ranks = nodes.withColumn("rank", F.lit(1.0 / n))
-    for i in range(iters):
+    outdeg = pin(e.groupBy("src").agg(F.count(F.lit(1)).alias("deg")))
+    n_part = int(spark.conf.get("spark.sql.shuffle.partitions", "200"))
+    ewd = pin(e.join(outdeg, "src").repartition(n_part, "src"))
+    dangling_nodes = pin(
+        nodes.join(outdeg.withColumnRenamed("src", "node"), "node", "left_anti")
+    )
+    unpin(outdeg)
+    ranks = pin(nodes.withColumn("rank", F.lit(1.0 / n)))
+    for _ in range(iters):
         r_side = ranks.withColumnRenamed("node", "src")
         if small:
             r_side = F.broadcast(r_side)
@@ -375,7 +335,7 @@ def pagerank(
             ranks.join(d_side, "node", "left_semi")
             .agg(F.coalesce(F.sum("rank"), F.lit(0.0)).alias("dm"))
         )
-        ranks = (
+        prev, ranks = ranks, pin(
             nodes.join(contribs, "node", "left")
             .crossJoin(F.broadcast(dangling))
             .select(
@@ -387,10 +347,9 @@ def pagerank(
                 ).alias("rank"),
             )
         )
-        if (i + 1) % checkpoint_every == 0 and i + 1 < iters:
-            # lazy: materializes on first use, then both next-round
-            # references (contribs + dangling) read the cached RDD
-            ranks = ranks.localCheckpoint(eager=False)
+        unpin(prev)
+    for df in (nodes, ewd, dangling_nodes):
+        unpin(df)
     return ranks
 
 
@@ -480,7 +439,7 @@ def triangle_count(
 
     When the oriented edge list is small enough to hash
     (< TRIANGLE_BROADCAST_MAX_EDGES rows — known exactly, since it is
-    persisted and counted for the degree aggregate anyway), BOTH wedge
+    pinned and counted for the degree aggregate anyway), BOTH wedge
     sides and the closing semi-join broadcast it, so the O(m^1.5) wedge
     stream stays inside one whole-stage-codegen pipeline and is never
     exchanged; only the final per-node partial aggregate shuffles.
@@ -494,9 +453,7 @@ def triangle_count(
     probe K1000 close at sf0.1; a two-long UnsafeRow key is ~10×
     slower per probe.
     """
-    oriented = _degree_oriented_edges(edges, src_col, dst_col).persist(
-        StorageLevel.MEMORY_AND_DISK
-    )
+    oriented = pin(_degree_oriented_edges(edges, src_col, dst_col))
     m, mn, mx = oriented.agg(
         F.count(F.lit(1)),
         F.least(F.min("src"), F.min("dst")),

@@ -12,8 +12,8 @@ furthest known ancestor. The known distance doubles every round, so a
 depth-d forest resolves in ceil(log2 d) + 1 keyed self-joins — not d
 chained joins — which is the difference between 5 shuffles and 40 on
 a deep tree. Each round is one equi-join of the (node, anc, depth)
-frame with itself plus an eager localCheckpoint (lineage cut +
-re-use; the same iterative discipline as connected_components and
+frame with itself plus a pin (``localframe.pin``: lineage cut +
+re-use; the previous round is unpinned; the same iterative discipline as connected_components and
 pagerank in operators/graph.py).
 """
 
@@ -21,6 +21,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from ..localframe import pin, unpin
 
 
 def resolve_hierarchy(
@@ -42,11 +44,13 @@ def resolve_hierarchy(
     to 2^max_rounds) a ValueError is raised rather than looping
     forever.
     """
-    g = edges.select(
-        F.col(child_col).alias("node"),
-        F.col(parent_col).alias("anc"),
-        F.lit(1).alias("depth"),
-    ).localCheckpoint(eager=True)
+    g = pin(
+        edges.select(
+            F.col(child_col).alias("node"),
+            F.col(parent_col).alias("anc"),
+            F.lit(1).alias("depth"),
+        )
+    )
     for _ in range(max_rounds):
         g2 = g.select(
             F.col("node").alias("g_node"),
@@ -56,11 +60,14 @@ def resolve_hierarchy(
         stepped = g.join(g2, g["anc"] == g2["g_node"], "left")
         if stepped.filter(F.col("g_anc").isNotNull()).limit(1).count() == 0:
             break
-        g = stepped.select(
-            "node",
-            F.coalesce("g_anc", "anc").alias("anc"),
-            (F.col("depth") + F.coalesce("g_depth", F.lit(0))).alias("depth"),
-        ).localCheckpoint(eager=True)
+        prev, g = g, pin(
+            stepped.select(
+                "node",
+                F.coalesce("g_anc", "anc").alias("anc"),
+                (F.col("depth") + F.coalesce("g_depth", F.lit(0))).alias("depth"),
+            )
+        )
+        unpin(prev)
     else:
         raise ValueError(
             f"hierarchy did not resolve in {max_rounds} doublings — "

@@ -24,6 +24,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..localframe import pin
+
 
 def salted_join(
     skewed: DataFrame,
@@ -116,12 +118,12 @@ def grouped_global_rank(
     # scan split layout, so the reservoir samples differ) — rows then
     # land in cells the offsets side never saw and silently drop out
     # of the join. Found live: conversation assembly over the events
-    # table lost whole groups nondeterministically. localCheckpoint
+    # table lost whole groups nondeterministically. The pin
     # materializes the exchange once; both subtrees read the SAME
     # partitions, which is the premise the whole two-phase composition
     # rests on. (Small-table callers never tripped this — one scan
     # split either way — so rounds 6-8 mirrors stayed green.)
-    ranged = ranged.localCheckpoint()
+    ranged = pin(ranged)
     local = Window.partitionBy(*group_cols, "__pid").orderBy(*order_exprs)
     ranked = ranged.withColumn("__local_rn", F.row_number().over(local))
 
@@ -251,7 +253,7 @@ def grouped_global_cumsum(
     # Same partition-id freeze as grouped_global_rank (see the comment
     # there): the summed and cell_sums subtrees must read ONE physical
     # evaluation of the range exchange.
-    ranged = ranged.localCheckpoint()
+    ranged = pin(ranged)
     local = Window.partitionBy(*group_cols, "__pid").orderBy(*order_exprs)
     summed = ranged.withColumn("__local_cum", F.sum(value_col).over(local))
 

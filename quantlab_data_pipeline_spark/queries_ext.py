@@ -42,7 +42,7 @@ import tempfile
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from .localframe import local_df
+from .localframe import local_df, pin, unpin
 from .sources.testdata import load_table
 
 
@@ -927,15 +927,17 @@ def curate_corpus_docs(spark: SparkSession, sf: str) -> DataFrame:
     # Materialize the extraction+quality chain ONCE (guide §1.2, the
     # curate_corpus_full pattern): `staged` feeds three consumers (the
     # dedup winner aggregate, the dedup flag join, and the final
-    # verdict join), and without a checkpoint the html_to_text regex
-    # chain + frozen-classifier fold re-ran per consumer. Narrow rows:
-    # id, extracted text, two booleans.
-    staged = scored.select(
-        "doc_id",
-        "extracted",
-        (F.length("extracted") > 0).alias("__long_enough"),
-        F.col("ml_keep").alias("__quality_ok"),
-    ).localCheckpoint()
+    # verdict join), and without a pin the html_to_text regex chain +
+    # frozen-classifier fold re-ran per consumer. Narrow rows: id,
+    # extracted text, two booleans.
+    staged = pin(
+        scored.select(
+            "doc_id",
+            "extracted",
+            (F.length("extracted") > 0).alias("__long_enough"),
+            F.col("ml_keep").alias("__quality_ok"),
+        )
+    )
     eligible = staged.filter("__long_enough AND __quality_ok")
     winners = eligible.groupBy(F.md5("extracted").alias("__h")).agg(
         F.min("doc_id").alias("__keep")
@@ -1173,8 +1175,6 @@ def dedup_keep_best_docs(spark: SparkSession, sf: str) -> DataFrame:
     from .llm.text import with_quality_score
     from .operators.graph import dedup_cluster_assignments
 
-    from pyspark.storagelevel import StorageLevel
-
     docs = load_table(spark, sf, "documents")
     pairs = ngram_jaccard_pairs(docs, block_chars=40, threshold=0.5)
     clustered = dedup_cluster_assignments(docs, pairs).select(
@@ -1182,11 +1182,9 @@ def dedup_keep_best_docs(spark: SparkSession, sf: str) -> DataFrame:
     )
     quality = with_quality_score(docs).select("doc_id", "quality_score")
     # Both the per-cluster argmax and the final join consume this frame;
-    # without persist the whole pairs+CC iteration lineage runs twice
+    # without a pin the whole pairs+CC iteration lineage runs twice
     # (measured at sf0.1: 10.3s -> 4.2s steady).
-    joined = clustered.join(quality, "doc_id").persist(
-        StorageLevel.MEMORY_AND_DISK
-    )
+    joined = pin(clustered.join(quality, "doc_id"))
     best = (
         joined.groupBy("cluster_id")
         .agg(
@@ -5908,50 +5906,50 @@ def curate_corpus_full(spark: SparkSession, sf: str) -> DataFrame:
         staged0.select("doc_id", "url_ok", page.alias("html")),
         "html", "extracted",
     )
-    from pyspark.storagelevel import StorageLevel
-
     # scored fans out to five consumers (text winners, text flags,
-    # survivors, the audio branch, the final join) — without persist
-    # the extraction regex chain and quality fold recompute per branch
+    # survivors, the audio branch, the final join) — without a pin the
+    # extraction regex chain and quality fold recompute per branch
     # (measured 15.6s -> ~6s steady at sf0.1). Narrow frame: id,
     # extracted text, three booleans.
-    scored = score_quality_frozen(
-        extracted, FROZEN_QUALITY_V1_BIAS, FROZEN_QUALITY_V1_WEIGHTS,
-        text_col="extracted",
-    ).select(
-        "doc_id", "extracted", "url_ok",
-        (F.length("extracted") > 0).alias("long_ok"),
-        F.col("ml_keep").alias("qual_ok"),
-    ).persist(StorageLevel.MEMORY_AND_DISK)
+    scored = pin(
+        score_quality_frozen(
+            extracted, FROZEN_QUALITY_V1_BIAS, FROZEN_QUALITY_V1_WEIGHTS,
+            text_col="extracted",
+        ).select(
+            "doc_id", "extracted", "url_ok",
+            (F.length("extracted") > 0).alias("long_ok"),
+            F.col("ml_keep").alias("qual_ok"),
+        )
+    )
     eligible = scored.filter("url_ok AND long_ok AND qual_ok")
 
     # stage 4: exact text dedup among eligible. t_flag feeds two
     # consumers (the image-stage survivors and the final verdict join);
-    # localCheckpoint materializes the narrow (doc_id, bool) rows once
-    # instead of re-running the md5 window join per consumer (§1.2).
+    # a pin materializes the narrow (doc_id, bool) rows once instead of
+    # re-running the md5 window join per consumer (§1.2).
     t_win = eligible.groupBy(F.md5("extracted").alias("__h")).agg(
         F.min("doc_id").alias("__tkeep")
     )
-    t_flag = eligible.join(
-        t_win, F.md5(eligible["extracted"]) == t_win["__h"]
-    ).select(
-        "doc_id", (F.col("doc_id") == F.col("__tkeep")).alias("text_win")
-    ).localCheckpoint()
+    t_flag = pin(
+        eligible.join(t_win, F.md5(eligible["extracted"]) == t_win["__h"]).select(
+            "doc_id", (F.col("doc_id") == F.col("__tkeep")).alias("text_win")
+        )
+    )
 
     # stage 5: perceptual image dedup over text-dedup survivors.
     # Fingerprint ONCE (guide §1.2/§4 — the wave-1 intake-sink
     # pattern): fp feeds both the winner aggregate and the flag join,
     # and Catalyst evaluated the PNG-render + decode+dHash MapInPandas
     # chain once PER CONSUMER (the r10 before-plan shows two distinct
-    # render+hash chains per modality). localCheckpoint pins the
-    # 16-byte (asset_id, dhash) rows; the pixels are decoded exactly
-    # once per execution.
+    # render+hash chains per modality). A pin holds the 16-byte
+    # (asset_id, dhash) rows; the pixels are decoded exactly once per
+    # execution.
     survivors = eligible.join(t_flag.filter("text_win"), "doc_id").select(
         "doc_id", "extracted"
     )
-    fp = image_dhash(
-        media_from_text(survivors, text_col="extracted", dims=(32, 32))
-    ).localCheckpoint()
+    fp = pin(
+        image_dhash(media_from_text(survivors, text_col="extracted", dims=(32, 32)))
+    )
     i_win = fp.groupBy("dhash").agg(F.min("asset_id").alias("__ikeep"))
     i_flag = fp.join(i_win, "dhash").select(
         F.col("asset_id").alias("doc_id"),
@@ -5960,10 +5958,12 @@ def curate_corpus_full(spark: SparkSession, sf: str) -> DataFrame:
 
     # stage 6: audio twin flag over eligible (twins still present) —
     # fingerprint once, as stage 5.
-    afp = audio_fingerprint(
-        audio_from_text(eligible.select("doc_id", "extracted"),
-                        text_col="extracted")
-    ).localCheckpoint()
+    afp = pin(
+        audio_fingerprint(
+            audio_from_text(eligible.select("doc_id", "extracted"),
+                            text_col="extracted")
+        )
+    )
     a_win = afp.groupBy("afp").agg(F.count("*").alias("__an"))
     a_flag = afp.join(a_win, "afp").select(
         F.col("asset_id").alias("doc_id"),
@@ -6603,15 +6603,13 @@ def media_index_takedown_docs(spark: SparkSession, sf: str) -> DataFrame:
     # r9 optimization (guide §1.2/§4): the probe is flagged in BOTH
     # phases, and the only probe-side input either flag needs is the
     # 16-byte (asset_id, fp) rows — render + dHash the probe ONCE and
-    # hand the checkpointed fingerprints to both calls instead of
-    # paying the PNG pipeline twice. Values unchanged (equivalence
-    # pinned by tests/test_media_index.py).
-    probe_fp = _fingerprint(probe_media, "image").localCheckpoint()
-    # Checkpoint pins the tombstone-masked answers before the
-    # compaction below mutates the stores the lazy plan would re-read.
-    masked = flag_new_media(
-        probe_media, path, precomputed_fp=probe_fp
-    ).localCheckpoint()
+    # hand the pinned fingerprints to both calls instead of paying the
+    # PNG pipeline twice. Values unchanged (equivalence checked by
+    # tests/test_media_index.py).
+    probe_fp = pin(_fingerprint(probe_media, "image"))
+    # Pin the tombstone-masked answers before the compaction below
+    # mutates the stores the lazy plan would re-read.
+    masked = pin(flag_new_media(probe_media, path, precomputed_fp=probe_fp))
     compact_media_index(spark, path)
     compacted = flag_new_media(probe_media, path, precomputed_fp=probe_fp)
     return (
@@ -7446,12 +7444,8 @@ def dsir_incremental_docs(spark: SparkSession, sf: str) -> DataFrame:
     # result are bit-identical to the recompute path — pytest-pinned).
     # Before, the raw pool paid the md5-per-gram explode twice: once
     # split across build+update, once again inside the scorer.
-    even = hashed_ngram_counts(
-        raw.filter(F.col("doc_id") % 2 == 0), buckets=4096
-    ).localCheckpoint()
-    odd = hashed_ngram_counts(
-        raw.filter(F.col("doc_id") % 2 == 1), buckets=4096
-    ).localCheckpoint()
+    even = pin(hashed_ngram_counts(raw.filter(F.col("doc_id") % 2 == 0), buckets=4096))
+    odd = pin(hashed_ngram_counts(raw.filter(F.col("doc_id") % 2 == 1), buckets=4096))
     build_dsir_counts(
         None, base + "/raw", buckets=4096, precomputed_counts=even
     )
@@ -7560,15 +7554,14 @@ def curation_pipeline_loop_docs(spark: SparkSession, sf: str) -> DataFrame:
     # blocklist -> extract -> quality -> URL-dedup chain over the full
     # corpus, so the chain ran three times per execution (~75-105 s of
     # executor CPU each at sf0.1, measured via the event log). A real
-    # stream computes each arriving row's upstream exactly once;
-    # checkpointing the survivor rows restores that property in the
-    # batch-twin, and the narrow (doc_id, text) rows are what a
-    # foreachBatch source would hand the sink anyway.
-    surv = (
+    # stream computes each arriving row's upstream exactly once; pinning
+    # the survivor rows restores that property in the batch-twin, and
+    # the narrow (doc_id, text) rows are what a foreachBatch source
+    # would hand the sink anyway.
+    surv = pin(
         passed.join(uwin, "norm_url")
         .filter(F.col("doc_id") == F.col("__ukeep"))
         .select("doc_id", "text")
-        .localCheckpoint()
     )
 
     sink = curation_intake_sink(
@@ -7582,6 +7575,7 @@ def curation_pipeline_loop_docs(spark: SparkSession, sf: str) -> DataFrame:
     par = spark.sparkContext.defaultParallelism
     for b in range(3):
         sink(surv.filter(F.col("doc_id") % 3 == b).repartition(par), b)
+    unpin(surv)
     return read_dsir_verdicts(spark, f"{base}/dsir_out").select(
         "doc_id",
         F.col("batch_id").cast("int").alias("batch_id"),

@@ -27,6 +27,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..localframe import pin
+
 DOCUMENTS_SCHEMA = (
     "doc_id long, text string, lang string, source string, n_chars int"
 )
@@ -70,11 +72,11 @@ def read_csv_corpus(
 
 def split_corrupt(raw: DataFrame) -> tuple[DataFrame, DataFrame]:
     """(clean, quarantine): clean rows with the corrupt column dropped,
-    and the raw text of every malformed line. The cache() is required
+    and the raw text of every malformed line. The pin is required
     correctness, not an optimization — Spark documents that filtering
     on the corrupt column directly against the lazy file reader may
     see it unpopulated."""
-    raw = raw.cache()
+    raw = pin(raw)
     clean = raw.filter(F.col(CORRUPT_COL).isNull()).drop(CORRUPT_COL)
     quarantine = raw.filter(F.col(CORRUPT_COL).isNotNull()).select(
         F.col(CORRUPT_COL).alias("raw_line")

@@ -13,7 +13,7 @@ their algorithms and their meta checks.
   permanent identities: a tombstoned id stays masked even if
   re-appended, until compaction.
 * **Compaction.** A no-op without tombstones. Otherwise every store's
-  live rows are localCheckpointed first (lineage re-execution would
+  live rows are pinned first (lineage re-execution would
   otherwise read a half-rewritten store), then each store is rewritten
   in its own layout, and the tombstones are deleted last.
 * **Band table.** The LSH band rows ``(id, band_idx, <band key>)`` as a
@@ -43,7 +43,7 @@ from pyspark.sql import DataFrame, Row, SparkSession
 from pyspark.sql import functions as F
 
 from ..fsutil import delete_path, path_exists
-from ..localframe import local_df
+from ..localframe import local_df, materialized, pin
 from .bucketing import write_bucketed
 
 #: Store name of the band table.
@@ -183,14 +183,13 @@ class IndexStore:
         ts = self._tombstoned()
         if ts is None:
             return
-        if len(self.stores) > 1:
-            ts = ts.localCheckpoint()  # one read feeds every store
-        live = {
-            name: self._read(name)
-            .join(ts, self.id_col, "left_anti")
-            .localCheckpoint()
-            for name in self.stores
-        }
-        for name, df in live.items():
-            self.write(df, name, "overwrite")
+        with materialized():
+            if len(self.stores) > 1:
+                ts = pin(ts)  # one read feeds every store
+            live = {
+                name: pin(self._read(name).join(ts, self.id_col, "left_anti"))
+                for name in self.stores
+            }
+            for name, df in live.items():
+                self.write(df, name, "overwrite")
         self.clear_tombstones()

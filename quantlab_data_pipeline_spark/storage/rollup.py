@@ -33,6 +33,8 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.utils import AnalysisException
 
+from ..localframe import materialized, pin
+
 __all__ = ["build_rollup", "refresh_rollup", "read_rollup"]
 
 _GRAIN_FMT = {"day": "yyyy-MM-dd", "hour": "yyyy-MM-dd HH:00:00"}
@@ -89,8 +91,8 @@ def refresh_rollup(
     additive store (dedupe upstream, e.g. streaming_exact_dedup).
     """
     spark = new_data.sparkSession
-    batch = _partial(new_data, time_col, grain, dims, value_col).persist()
-    try:
+    with materialized():
+        batch = pin(_partial(new_data, time_col, grain, dims, value_col))
         keys = [r["grain_key"] for r in batch.select("grain_key").distinct().collect()]
         # Filter BEFORE the string cast: grain_key is date/timestamp-typed
         # by partition inference, and comparing it with string literals
@@ -124,8 +126,6 @@ def refresh_rollup(
         finally:
             spark.conf.set(mode_key, previous)
         return sorted(keys)
-    finally:
-        batch.unpersist()
 
 
 def _read_raw(

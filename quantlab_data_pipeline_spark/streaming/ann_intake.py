@@ -33,6 +33,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..fsutil import path_exists
+from ..localframe import pin
 from ..llm.ann_index import (
     append_to_ann_index,
     build_ivf_index,
@@ -123,10 +124,10 @@ def ann_intake_sink(
         # Step 2: verdicts to stable storage BEFORE the index mutates,
         # checkpointed so the kept ids below cannot re-evaluate the flag
         # plan against the appended index (see media_intake).
-        verdicts = (
-            flagged.join(winners, id_col, "left")
-            .withColumn("kept", F.coalesce("kept", F.lit(False)))
-            .localCheckpoint()
+        verdicts = pin(
+            flagged.join(winners, id_col, "left").withColumn(
+                "kept", F.coalesce("kept", F.lit(False))
+            )
         )
         overwrite_batch_partition(verdicts, batch_id, out_path)
         kept_ids = verdicts.filter("kept").select(id_col)

@@ -38,6 +38,7 @@ from ..llm.dsir import (
     write_dsir_meta,
 )
 from ..fsutil import path_exists
+from ..localframe import pin
 from .ledger import ledgered, overwrite_batch_partition
 
 __all__ = ["dsir_intake_sink", "read_dsir_verdicts"]
@@ -100,15 +101,13 @@ def dsir_intake_sink(
         # ONE tokenize pass per batch (guide §1.2): the md5-per-gram
         # explode is the dominant per-batch cost, and both the fold
         # (step 1) and the scoring join (step 2) consume exactly the
-        # per-doc bucket counts. localCheckpoint materializes them
+        # per-doc bucket counts. A pin materializes them
         # once — counts rows are (id, bucket, cnt), far smaller than
         # the text — and cuts lineage, so the scoring subtree cannot
         # re-evaluate against the just-appended raw store either.
         # Losing the blocks mid-batch replays the batch (idempotent by
         # the partition-overwrite design), so durability is unchanged.
-        counts = hashed_ngram_counts(
-            batch_df, buckets=buckets, ns=ns
-        ).localCheckpoint()
+        counts = pin(hashed_ngram_counts(batch_df, buckets=buckets, ns=ns))
         # Step 1: fold — a crash-replay rewrites its own delta, never
         # double-counts it.
         overwrite_batch_partition(

@@ -27,6 +27,7 @@ from typing import Any, Callable
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..fsutil import path_exists
 from ..localframe import local_df
 
 __all__ = ["last_applied_batch", "ledgered", "overwrite_batch_partition"]
@@ -38,11 +39,11 @@ def _ledger(path: str) -> str:
 
 def last_applied_batch(spark: SparkSession, path: str) -> int:
     """Highest micro-batch id already committed to the store at
-    ``path`` (-1 if none)."""
-    try:
-        rows = spark.read.parquet(_ledger(path)).collect()
-    except Exception:  # noqa: BLE001 — first batch: ledger doesn't exist yet
+    ``path`` (-1 if it has no ledger yet). An unreadable ledger raises:
+    reading it as empty would silently re-run every batch."""
+    if not path_exists(spark, _ledger(path)):
         return -1
+    rows = spark.read.parquet(_ledger(path)).collect()
     return max((int(r["batch_id"]) for r in rows), default=-1)
 
 

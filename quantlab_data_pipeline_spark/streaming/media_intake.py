@@ -48,6 +48,7 @@ from ..llm.media_index import (
     flag_new_media,
 )
 from ..fsutil import path_exists
+from ..localframe import pin
 from .ledger import ledgered, overwrite_batch_partition
 
 __all__ = ["media_intake_sink", "read_intake_verdicts"]
@@ -113,7 +114,7 @@ def media_intake_sink(
         # index append — needs only the 16-byte (asset_id, fp) rows,
         # never the pixels again. The old flow re-rendered and
         # re-hashed the batch for the winner join and a third time for
-        # the append. localCheckpoint materializes it once and cuts
+        # the append. A pin materializes it once and cuts
         # lineage, so the self-referential index append below stays
         # frozen for free. Losing the blocks mid-batch just replays
         # the batch, which is convergent by construction (module
@@ -121,7 +122,7 @@ def media_intake_sink(
         # off the checkpointed 16-byte rows (the fingerprinter emits
         # one row per asset of the modality) instead of paying a
         # separate limit-1 decode job against the raw batch plan first.
-        fp = _fingerprint(batch_df, modality).localCheckpoint()
+        fp = pin(_fingerprint(batch_df, modality))
         if fp.isEmpty():
             # No row of this modality: nothing to write, but a batch
             # that has rows is still committed, so a redelivery skips.
@@ -138,13 +139,13 @@ def media_intake_sink(
         else:
             flagged = flag_new_media(batch_df, index_path, precomputed_fp=fp)
         # Step 2: verdicts to stable storage BEFORE the index mutates
-        # (see module docstring). The verdict frame is localCheckpointed
+        # (see module docstring). The verdict frame is pinned
         # ONCE: the write, the kept set, and the index append all read
         # the same materialized lineage-free blocks, so nothing
         # downstream can re-evaluate the flag plan against the
         # post-append index (a checkpoint has no lineage to re-cache,
         # so no storage read-back is needed; guide §1.2/§5).
-        verdicts = _with_kept(flagged, fp).localCheckpoint()
+        verdicts = pin(_with_kept(flagged, fp))
         overwrite_batch_partition(verdicts, batch_id, out_path)
         kept_ids = verdicts.filter("kept").select("asset_id")
         accepted_fp = fp.join(kept_ids, "asset_id")
@@ -161,16 +162,18 @@ def media_intake_sink(
         else:
             # Anti-join against stored fingerprints: a replay of this
             # batch after a crash before the mark appends nothing.
-            # Checkpointed so the emptiness probe and the append read
-            # one materialization (the probe used to run the anti-join
-            # once for limit-1 and the append a second time in full).
-            novel = accepted_fp.join(
-                spark.read.parquet(f"{index_path}/fingerprints").select(
-                    "asset_id"
-                ),
-                "asset_id",
-                "left_anti",
-            ).localCheckpoint()
+            # Pinned so the emptiness probe and the append read one
+            # materialization (the probe used to run the anti-join once
+            # for limit-1 and the append a second time in full).
+            novel = pin(
+                accepted_fp.join(
+                    spark.read.parquet(f"{index_path}/fingerprints").select(
+                        "asset_id"
+                    ),
+                    "asset_id",
+                    "left_anti",
+                )
+            )
             if not novel.isEmpty():
                 append_to_media_index(
                     None, index_path, precomputed_fp=novel

@@ -32,6 +32,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..localframe import materialized, pin
 from .dsir_intake import dsir_intake_sink
 from .intake import streaming_crawl_intake
 from .media_intake import media_intake_sink, read_intake_verdicts
@@ -65,6 +66,7 @@ def curation_intake_sink(
     offline-built target at ``dsir_target_path``, verdicts to
     ``dsir_out``). Both sub-sinks keep their own ledgers keyed by the
     same outer batch_id, so partial-failure replays converge per stage.
+    Every pin a batch makes is released when the batch returns.
     """
     from ..llm.multimodal import media_from_text
 
@@ -81,37 +83,40 @@ def curation_intake_sink(
 
     def _apply(batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
-        # Materialize the batch ONCE (guide §1.2): the two sub-sinks
-        # run ~8 actions per micro-batch between them (existence
-        # probes, fingerprint pass, verdict write, index append, DSIR
-        # fold + score), and each action would otherwise re-evaluate
-        # the ENTIRE upstream plan feeding this sink — for the batch
-        # registry row that is the blocklist→extract→quality→URL-dedup
-        # chain over the full corpus, re-run per action. A real
-        # foreachBatch source hands the sink materialized batch data;
-        # localCheckpoint restores exactly that property in the batch-
-        # twin path, and block loss mid-batch just replays the batch
-        # (both sub-sinks are replay-convergent by construction).
-        docs = batch_df.select(
-            F.col(id_col).alias("doc_id"), F.col(text_col).alias("text")
-        ).localCheckpoint()
-        if docs.isEmpty():
-            return
-        # Normal path: the media stage hands back its kept set, taken
-        # from the verdicts it just checkpointed, so ``media_out`` is
-        # not re-read.
-        applied, kept = media_apply(media_from_text(docs, dims=dims), batch_id)
-        if not applied:
-            # The media ledger skipped (a previous attempt committed the
-            # stage): read the keeper set back from the PERSISTED
-            # verdicts — the input the DSIR stage saw then.
-            kept = (
-                read_intake_verdicts(spark, media_out)
-                .filter(F.col("batch_id") == int(batch_id))
-                .filter("kept")
+        with materialized():
+            # Materialize the batch ONCE (guide §1.2): the two sub-sinks
+            # run ~8 actions per micro-batch between them (existence
+            # probes, fingerprint pass, verdict write, index append, DSIR
+            # fold + score), and each action would otherwise re-evaluate
+            # the ENTIRE upstream plan feeding this sink — for the batch
+            # registry row that is the blocklist→extract→quality→URL-dedup
+            # chain over the full corpus, re-run per action. A real
+            # foreachBatch source hands the sink materialized batch data;
+            # a pin restores exactly that property in the batch-twin
+            # path, and block loss mid-batch just replays the batch (both
+            # sub-sinks are replay-convergent by construction).
+            docs = pin(
+                batch_df.select(
+                    F.col(id_col).alias("doc_id"), F.col(text_col).alias("text")
+                )
             )
-        kept = kept.select(F.col("asset_id").alias("doc_id"))
-        dsir_apply(docs.join(kept, "doc_id"), batch_id)
+            if docs.isEmpty():
+                return
+            # Normal path: the media stage hands back its kept set, taken
+            # from the verdicts it just pinned, so ``media_out`` is
+            # not re-read.
+            applied, kept = media_apply(media_from_text(docs, dims=dims), batch_id)
+            if not applied:
+                # The media ledger skipped (a previous attempt committed the
+                # stage): read the keeper set back from the PERSISTED
+                # verdicts — the input the DSIR stage saw then.
+                kept = (
+                    read_intake_verdicts(spark, media_out)
+                    .filter(F.col("batch_id") == int(batch_id))
+                    .filter("kept")
+                )
+            kept = kept.select(F.col("asset_id").alias("doc_id"))
+            dsir_apply(docs.join(kept, "doc_id"), batch_id)
 
     return _apply
 

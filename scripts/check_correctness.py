@@ -626,6 +626,14 @@ def compare(name: str, spark_df: pd.DataFrame, oracle_df: pd.DataFrame) -> list[
     for c in a.columns:
         if pd.api.types.is_float_dtype(a[c]) and pd.api.types.is_float_dtype(b[c]):
             av, bv = a[c].to_numpy(), b[c].to_numpy()
+            one_nan = np.isnan(av) != np.isnan(bv)
+            if one_nan.any():
+                i = int(np.argmax(one_nan))
+                problems.append(
+                    f"col {c}: NaN/null on one side at row {i}: "
+                    f"spark={av[i]!r} oracle={bv[i]!r}"
+                )
+                continue
             both_nan = np.isnan(av) & np.isnan(bv)
             diff = np.abs(av - bv)
             diff[both_nan] = 0.0
@@ -650,6 +658,7 @@ def main() -> int:
     only = set(sys.argv[2:])
 
     import __spark_entry__ as entry
+    from quantlab_data_pipeline_spark.localframe import materialized
     from quantlab_data_pipeline_spark.session import get_spark
 
     spark = get_spark(app_name="correctness-check")
@@ -671,7 +680,8 @@ def main() -> int:
             continue
         n_checked += 1
         try:
-            sdf = fn(spark, sf_dir).toPandas()
+            with materialized():
+                sdf = fn(spark, sf_dir).toPandas()
         except Exception as exc:  # noqa: BLE001
             failed.append(name)
             print(f"[FAIL] {name}: spark error: {exc}")

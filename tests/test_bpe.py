@@ -81,7 +81,7 @@ def docs(spark):
 def test_train_matches_reference(spark, docs):
     from quantlab_data_pipeline_spark.llm.bpe import train_bpe
 
-    got = train_bpe(docs, num_merges=12, checkpoint_every=4)
+    got = train_bpe(docs, num_merges=12)
     exp = _ref_train(CORPUS, 12)
     assert got == exp
     assert len(got) >= 6  # the corpus genuinely supports many merges

@@ -61,12 +61,7 @@ def test_non_convergence_raises(spark):
     "run",
     [
         lambda e: connected_components(e, max_iters=2, algorithm="label"),
-        # no lineage cut in the one round: a localCheckpoint RDD stays
-        # registered until the context cleaner collects it, on every
-        # path, and is not a persisted frame this function can release
-        lambda e: connected_components_two_phase(
-            e, max_rounds=1, checkpoint_every=2
-        ),
+        lambda e: connected_components_two_phase(e, max_rounds=1),
     ],
     ids=["label", "two_phase"],
 )

@@ -75,6 +75,16 @@ def test_empty_batch_leaves_no_mark(spark, store):
     assert not path_exists(spark, f"{store}/_applied_batch")
 
 
+def test_unreadable_ledger_raises(spark, store):
+    """A ledger that exists but cannot be read is an error, not an
+    empty ledger: reading it as -1 would re-run every batch."""
+    ledger_dir = Path(store) / "_applied_batch"
+    ledger_dir.mkdir(parents=True)
+    (ledger_dir / "part-00000.parquet").write_text("not parquet\n")
+    with pytest.raises(Exception):
+        last_applied_batch(spark, store)
+
+
 def test_overwrite_batch_partition_replaces_only_its_batch(spark, store):
     def ids(batch_id):
         return sorted(

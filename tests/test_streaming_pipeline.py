@@ -326,6 +326,22 @@ def test_composed_sink_job_budget(spark, sink_stores):
     assert counts[1] <= SECOND_BATCH_JOBS, counts
 
 
+def test_composed_sink_releases_every_batch_pin(spark, sink_stores):
+    """Each micro-batch releases what it materialized: a long-running
+    stream does not pile up one set of checkpoint blocks per batch."""
+    from quantlab_data_pipeline_spark.streaming.pipeline import (
+        curation_intake_sink,
+    )
+
+    sink = curation_intake_sink(*sink_stores, k=1)
+    rdds = spark.sparkContext._jsc.getPersistentRDDs
+    before = set(rdds().keySet())
+    batches = (DOCS_B1, DOCS_B2, [(9, PROSE_B), (10, PROSE_D)])
+    for batch_id, rows in enumerate(batches):
+        sink(_docs(spark, rows), batch_id)
+    assert set(rdds().keySet()) <= before
+
+
 def _tree(root):
     """{relative file: mtime_ns} of every file under ``root``."""
     out = {}
