@@ -41,7 +41,14 @@ SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 # Task-level work, charged to the window totals and to the task's job.
 TASK_WORK = ("tasks", "input_bytes", "shuffle_read_bytes", "shuffle_write_bytes",
              "executor_run_ms", "executor_cpu_ms")
-TOTALS = ("jobs", "stages", *TASK_WORK)
+# Python worker time (ms, summed over tasks), from the SQL plan metrics
+# of the Python operators (mapInPandas, applyInPandas, pandas UDFs).
+PYTHON_TIME = {
+    "time to start Python workers": "python_start_ms",
+    "time to initialize Python workers": "python_init_ms",
+    "time to run Python workers": "python_run_ms",
+}
+TOTALS = ("jobs", "stages", *TASK_WORK, *PYTHON_TIME.values())
 
 
 def initial_partitions(sf_dir: str, cpus: int) -> int:
@@ -90,10 +97,15 @@ def parse(path: Path, offset: int) -> tuple[list[dict], dict[str, int]]:
     job in the window lists still counts there. A stage listed by
     several jobs (a reused shuffle is listed again, skipped, by each
     later job) is charged to the first. A line that does not parse is
-    the writer's unflushed tail and is skipped."""
+    the writer's unflushed tail and is skipped.
+
+    The Python worker times are SQL metrics: the plan of each SQL
+    execution (and of each adaptive re-plan) names their accumulator
+    ids, and each task's end event carries its update to them."""
     totals = dict.fromkeys(TOTALS, 0)
     jobs: dict[int, dict] = {}
     stage_job: dict[int, int] = {}
+    python_acc: dict[int, str] = {}
     with open(path) as fh:
         fh.seek(offset)
         for line in fh:
@@ -102,7 +114,9 @@ def parse(path: Path, offset: int) -> tuple[list[dict], dict[str, int]]:
             except json.JSONDecodeError:
                 continue
             kind = ev.get("Event")
-            if kind == "SparkListenerJobStart":
+            if "sparkPlanInfo" in ev:  # SQL execution start, adaptive update
+                _python_metrics(ev["sparkPlanInfo"], python_acc)
+            elif kind == "SparkListenerJobStart":
                 totals["jobs"] += 1
                 jid = ev["Job ID"]
                 props = ev.get("Properties") or {}
@@ -142,9 +156,26 @@ def parse(path: Path, offset: int) -> tuple[list[dict], dict[str, int]]:
                     totals[key] += value
                     if job is not None:
                         job[key] += value
+                for acc in (ev.get("Task Info") or {}).get("Accumulables", []):
+                    key = python_acc.get(acc.get("ID"))
+                    if key is not None:
+                        totals[key] += int(acc.get("Update") or 0)
     for job in jobs.values():
         job["wall_ms"] = max(0, job["wall_ms"])  # a job still running at the cut
     return sorted(jobs.values(), key=lambda j: j["job"]), totals
+
+
+def _python_metrics(plan: dict, acc: dict[int, str]) -> None:
+    """Map the accumulator ids of the Python worker timings in ``plan``
+    (a ``sparkPlanInfo`` tree) to their totals keys, into ``acc``."""
+    stack = [plan]
+    while stack:
+        node = stack.pop()
+        for metric in node.get("metrics", []):
+            key = PYTHON_TIME.get(metric.get("name"))
+            if key is not None:
+                acc[metric["accumulatorId"]] = key
+        stack.extend(node.get("children", []))
 
 
 def _noop(df) -> None:

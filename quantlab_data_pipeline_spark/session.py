@@ -9,10 +9,23 @@ shuffle-partition sizing), not cluster topology.
 from __future__ import annotations
 
 import os
+from pathlib import Path
 
 from pyspark.sql import SparkSession
 
 DEFAULT_SHUFFLE_PARTITIONS = os.environ.get("SPARK_GRAFT_CPUS", "32")
+# The directory holding this package: the Python workers import the
+# daemon module and the kernels from it, wherever the driver runs.
+PACKAGE_ROOT = str(Path(__file__).resolve().parent.parent)
+
+
+def default_driver_memory(total_bytes: int | None = None) -> str:
+    """A quarter of physical memory, at least 1 GiB and at most 32 GiB,
+    in MiB (``"3840m"``). In local mode the driver JVM is the whole
+    engine, so its heap must fit beside the Python workers."""
+    if total_bytes is None:
+        total_bytes = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    return f"{max(1024, min(32 * 1024, total_bytes // 4 // (1 << 20)))}m"
 
 
 def get_spark(
@@ -33,6 +46,15 @@ def get_spark(
     - UTC session timezone so timestamps compare bit-for-bit with
       external oracles (DuckDB is UTC-naive).
     - Arrow enabled for every pandas interchange (toPandas, pandas UDFs).
+    - Python workers fork warm from :mod:`.pyworker`
+      (``spark.python.daemon.module``), a daemon that imports the Arrow
+      stack and the kernels once and drops the zip importers whose
+      directories each task would otherwise re-read. The package root
+      goes on the workers' ``PYTHONPATH``, so the daemon and the
+      kernels import from any working directory.
+    - ``spark.driver.memory`` defaults to a quarter of physical memory
+      (1-32 GiB, :func:`default_driver_memory`);
+      ``SPARK_GRAFT_DRIVER_MEM`` overrides it.
     - ``SPARK_GRAFT_INITIAL_PARTITIONS`` overrides the AQE
       pre-coalesce reducer count (default 8x cores). The default is
       cluster-sized — the 64x scaling probe showed big fact-fact
@@ -77,7 +99,12 @@ def get_spark(
         # convert with sources.read_table's ns->ts normalization.
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
         .config("spark.ui.enabled", os.environ.get("SPARK_GRAFT_UI", "false"))
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "32g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_GRAFT_DRIVER_MEM") or default_driver_memory(),
+        )
+        .config("spark.python.daemon.module", "quantlab_data_pipeline_spark.pyworker")
+        .config("spark.executorEnv.PYTHONPATH", PACKAGE_ROOT)
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)

@@ -33,6 +33,9 @@ from ..localframe import local_df
 __all__ = ["last_applied_batch", "ledgered", "overwrite_batch_partition"]
 
 
+LEDGER_SCHEMA = "batch_id long"
+
+
 def _ledger(path: str) -> str:
     return f"{path}/_applied_batch"
 
@@ -40,15 +43,16 @@ def _ledger(path: str) -> str:
 def last_applied_batch(spark: SparkSession, path: str) -> int:
     """Highest micro-batch id already committed to the store at
     ``path`` (-1 if it has no ledger yet). An unreadable ledger raises:
-    reading it as empty would silently re-run every batch."""
+    reading it as empty would silently re-run every batch. The schema
+    is given, so the read is one job: no footer-inference job first."""
     if not path_exists(spark, _ledger(path)):
         return -1
-    rows = spark.read.parquet(_ledger(path)).collect()
+    rows = spark.read.schema(LEDGER_SCHEMA).parquet(_ledger(path)).collect()
     return max((int(r["batch_id"]) for r in rows), default=-1)
 
 
 def _mark(spark: SparkSession, path: str, batch_id: int) -> None:
-    local_df(spark, [(int(batch_id),)], "batch_id long").coalesce(
+    local_df(spark, [(int(batch_id),)], LEDGER_SCHEMA).coalesce(
         1
     ).write.mode("append").parquet(_ledger(path))
 

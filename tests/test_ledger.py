@@ -85,6 +85,19 @@ def test_unreadable_ledger_raises(spark, store):
         last_applied_batch(spark, store)
 
 
+def test_ledger_read_is_one_job(spark, store):
+    """The ledger is read with its declared schema: one collect job,
+    no schema-inference job over the mark files before it."""
+    from test_ingest import _count_jobs
+
+    apply = ledgered(store, _recording_body([]))
+    for batch_id in range(3):
+        apply(spark.range(1), batch_id)
+    marks = []
+    jobs, _ = _count_jobs(spark, lambda: marks.append(last_applied_batch(spark, store)))
+    assert (marks, jobs) == ([2], 1)
+
+
 def test_overwrite_batch_partition_replaces_only_its_batch(spark, store):
     def ids(batch_id):
         return sorted(

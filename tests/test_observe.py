@@ -92,6 +92,9 @@ def test_parse_charges_shared_stage_to_first_job_and_counts_unmapped_tasks(
         "shuffle_write_bytes": 52,
         "executor_run_ms": 20,
         "executor_cpu_ms": 3 + 1 + 2 + 9,
+        "python_start_ms": 0,
+        "python_init_ms": 0,
+        "python_run_ms": 0,
     }
     # the stage-8 task counts in the totals only
     unmapped_work = {
@@ -100,6 +103,74 @@ def test_parse_charges_shared_stage_to_first_job_and_counts_unmapped_tasks(
     }
     for key in TASK_WORK:
         assert sum(j[key] for j in jobs) + unmapped_work[key] == totals[key]
+
+
+def _plan(name, metrics, children=()):
+    return {
+        "nodeName": name,
+        "metrics": [
+            {"name": m, "accumulatorId": i, "metricType": "timing"}
+            for m, i in metrics
+        ],
+        "children": list(children),
+    }
+
+
+def _python_task(stage, updates):
+    task = _task(stage)
+    task["Task Info"] = {
+        "Accumulables": [
+            {"ID": i, "Name": "n", "Update": str(u), "Value": "0"}
+            for i, u in updates
+        ]
+    }
+    return task
+
+
+def test_parse_sums_python_worker_times_from_plan_accumulators(tmp_path):
+    start, init, run = (
+        "time to start Python workers",
+        "time to initialize Python workers",
+        "time to run Python workers",
+    )
+    before = [
+        {"Event": "org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart",
+         "sparkPlanInfo": _plan("MapInPandas", [(start, 1), (init, 2), (run, 3)])},
+        _python_task(0, [(1, 500), (2, 500), (3, 500)]),
+    ]
+    window = [
+        # the mapInPandas node sits below the root, beside a scan
+        {"Event": "org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart",
+         "sparkPlanInfo": _plan("WriteFiles", [("number of output rows", 9)], [
+             _plan("MapInPandas", [(start, 11), (init, 12), (run, 13)], [
+                 _plan("Scan", [("scan time", 14)]),
+             ]),
+         ])},
+        _python_task(1, [(11, 40), (12, 7), (13, 100), (9, 1000), (14, 1000)]),
+        _python_task(1, [(11, 0), (12, 6), (13, 90)]),
+        # an adaptive re-plan brings a second Python operator
+        {"Event": "org.apache.spark.sql.execution.ui."
+                  "SparkListenerSQLAdaptiveExecutionUpdate",
+         "sparkPlanInfo": _plan("AdaptiveSparkPlan", [], [
+             _plan("ArrowEvalPython", [(start, 21), (init, 22), (run, 23)]),
+         ])},
+        _python_task(2, [(21, 3), (22, 2), (23, 5)]),
+        # the plan of an execution before the window is not read
+        _python_task(3, [(1, 1), (2, 1), (3, 1)]),
+        _task(4),  # a JVM-only task: no Task Info
+    ]
+    head = "".join(json.dumps(e) + "\n" for e in before)
+    log = tmp_path / "app"
+    log.write_text(head + "".join(json.dumps(e) + "\n" for e in window))
+
+    _, totals = parse(log, len(head.encode()))
+
+    assert totals["tasks"] == 5
+    assert (
+        totals["python_start_ms"],
+        totals["python_init_ms"],
+        totals["python_run_ms"],
+    ) == (40 + 0 + 3, 7 + 6 + 2, 100 + 90 + 5)
 
 
 def test_observe_command_reports_equal_work_cold_and_steady():
