@@ -7,7 +7,10 @@ swing with CPU steal on a shared host; the work totals (jobs, stages,
 tasks, input and shuffle bytes, executor CPU) do not, so they are the
 before/after evidence. Identical totals across the runs of one row
 mean no state accumulates between executions; a slower steady run
-with identical work is JVM, GC or host time.
+with identical work is JIT compilation (``jit_ms``), garbage
+collection (``gc_ms``) or host time. Those two come from the driver
+JVM's management beans, read before and after each run: the event log
+does not hold them.
 
 Usage::
 
@@ -212,16 +215,32 @@ def _drain(spark) -> None:
     spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
 
 
+def _jvm_ms(spark) -> dict[str, int]:
+    """The driver JVM's cumulative JIT compilation and GC times (ms)."""
+    mf = spark._jvm.java.lang.management.ManagementFactory
+    return {
+        "jit_ms": mf.getCompilationMXBean().getTotalCompilationTime(),
+        # -1 where a collector does not report its time
+        "gc_ms": sum(
+            max(0, gc.getCollectionTime())
+            for gc in mf.getGarbageCollectorMXBeans()
+        ),
+    }
+
+
 def _run(spark, fn, log: Path, label: str) -> tuple[dict, list[dict]]:
     _drain(spark)
     offset = log.stat().st_size
     spark.sparkContext.setJobDescription(label)
+    jvm0 = _jvm_ms(spark)
     t0 = time.perf_counter()
     with materialized():  # a run leaves no pin behind for the next one
         _noop(fn(spark, SF_DIR))
     wall = time.perf_counter() - t0
     _drain(spark)
+    jvm1 = _jvm_ms(spark)
     jobs, totals = parse(log, offset)
+    totals.update({k: jvm1[k] - jvm0[k] for k in jvm0})
     print(f"{label}: wall {wall:.2f}s {json.dumps(totals)}", file=sys.stderr)
     return {"wall_s": round(wall, 3), **totals}, jobs
 

@@ -17,6 +17,16 @@ DEFAULT_SHUFFLE_PARTITIONS = os.environ.get("SPARK_GRAFT_CPUS", "32")
 # The directory holding this package: the Python workers import the
 # daemon module and the kernels from it, wherever the driver runs.
 PACKAGE_ROOT = str(Path(__file__).resolve().parent.parent)
+# The driver JVM's JIT policy: the four C2 (tier 4) thresholds at 10x
+# the JDK 17 defaults. The driver's hot code in a short session is
+# lukewarm (the planner, Janino, task serialization, class loading),
+# and at the default thresholds C2 compiles thousands of such methods
+# and spends about half the session's CPU doing it. A real data loop
+# still crosses these thresholds within its first seconds.
+DRIVER_JIT_POLICY = (
+    "-XX:Tier4InvocationThreshold=50000 -XX:Tier4MinInvocationThreshold=6000 "
+    "-XX:Tier4CompileThreshold=150000 -XX:Tier4BackEdgeThreshold=400000"
+)
 
 
 def default_driver_memory(total_bytes: int | None = None) -> str:
@@ -52,6 +62,12 @@ def get_spark(
       directories each task would otherwise re-read. The package root
       goes on the workers' ``PYTHONPATH``, so the daemon and the
       kernels import from any working directory.
+    - The driver JVM compiles with C2 only code that is hot, not
+      lukewarm (:data:`DRIVER_JIT_POLICY`, C2 thresholds at 10x the
+      JDK defaults). It goes in ``spark.driver.defaultJavaOptions``,
+      which Spark puts in front of ``spark.driver.extraJavaOptions``,
+      so a caller's own JVM flags still apply. Executors on a cluster
+      keep the JDK defaults.
     - ``spark.driver.memory`` defaults to a quarter of physical memory
       (1-32 GiB, :func:`default_driver_memory`);
       ``SPARK_GRAFT_DRIVER_MEM`` overrides it.
@@ -103,6 +119,7 @@ def get_spark(
             "spark.driver.memory",
             os.environ.get("SPARK_GRAFT_DRIVER_MEM") or default_driver_memory(),
         )
+        .config("spark.driver.defaultJavaOptions", DRIVER_JIT_POLICY)
         .config("spark.python.daemon.module", "quantlab_data_pipeline_spark.pyworker")
         .config("spark.executorEnv.PYTHONPATH", PACKAGE_ROOT)
     )

@@ -1,7 +1,8 @@
 """The measurement module (quantlab_data_pipeline_spark/observe.py).
 
 The parser is checked without a JVM on a hand-written event log; one
-subprocess run checks the command end to end on the smallest testdata.
+run in the test session checks the JVM times; one subprocess run checks
+the command end to end on the smallest testdata.
 """
 
 from __future__ import annotations
@@ -12,7 +13,7 @@ import subprocess
 import sys
 from pathlib import Path
 
-from quantlab_data_pipeline_spark.observe import TASK_WORK, parse
+from quantlab_data_pipeline_spark.observe import TASK_WORK, _run, parse
 
 REPO = Path(__file__).resolve().parents[1]
 
@@ -171,6 +172,15 @@ def test_parse_sums_python_worker_times_from_plan_accumulators(tmp_path):
         totals["python_init_ms"],
         totals["python_run_ms"],
     ) == (40 + 0 + 3, 7 + 6 + 2, 100 + 90 + 5)
+
+
+def test_run_reports_jit_and_gc_ms_of_the_driver_jvm(spark, tmp_path):
+    log = tmp_path / "events"
+    log.write_text("")  # no event log in the test session: zero work totals
+    totals, jobs = _run(spark, lambda s, _: s.range(10).selectExpr("id * 2"), log, "t")
+    for key in ("jit_ms", "gc_ms"):
+        assert isinstance(totals[key], int) and totals[key] >= 0, (key, totals[key])
+    assert jobs == [] and totals["jobs"] == 0
 
 
 def test_observe_command_reports_equal_work_cold_and_steady():
