@@ -48,7 +48,9 @@ from __future__ import annotations
 import argparse
 import logging
 import time
+from collections.abc import Iterator
 from concurrent.futures import ThreadPoolExecutor
+from contextlib import contextmanager
 from datetime import datetime, timezone
 from pathlib import Path
 
@@ -111,7 +113,10 @@ _FACTS = ("prices_daily", "returns_daily")
 _WRITE_THREADS = 4
 
 
-def _configure_logging(root: Path) -> Path:
+@contextmanager
+def _ingest_log(root: Path) -> Iterator[Path]:
+    """Copy the package's log lines into a new ``logs/ingestion_*.log``
+    under ``root`` until the block exits."""
     log_dir = root / "logs"
     log_dir.mkdir(parents=True, exist_ok=True)
     log_path = log_dir / f"ingestion_{datetime.now().strftime('%Y%m%d_%H%M%S')}.log"
@@ -120,7 +125,11 @@ def _configure_logging(root: Path) -> Path:
     pkg_logger = logging.getLogger("quantlab_data_pipeline_spark")
     pkg_logger.addHandler(handler)
     pkg_logger.setLevel(logging.INFO)
-    return log_path
+    try:
+        yield log_path
+    finally:
+        pkg_logger.removeHandler(handler)
+        handler.close()
 
 
 def _write(
@@ -509,195 +518,195 @@ def ingest(
         logger.info("  done: %s (%.1fs)", name, elapsed)
 
     resolved_root = resolve_data_root(root)
-    log_path = _configure_logging(resolved_root)
-    logger.info("Logging to %s", log_path)
-    meta, reference_dir = resolved_root / META_DIR, resolved_root / "reference"
-    for p in (resolved_root / PROCESSED_DIR, meta, resolved_root / RAW_DIR, reference_dir):
-        p.mkdir(parents=True, exist_ok=True)
+    with _ingest_log(resolved_root) as log_path:
+        logger.info("Logging to %s", log_path)
+        meta, reference_dir = resolved_root / META_DIR, resolved_root / "reference"
+        for p in (resolved_root / PROCESSED_DIR, meta, resolved_root / RAW_DIR, reference_dir):
+            p.mkdir(parents=True, exist_ok=True)
 
-    # Steps 1-2: source handle + universe. The permno list is collected
-    # driver-side (S&P 500 membership is ~2k ids over all history — a
-    # dim, not a fact).
-    step = start_step("Connect to source")
-    end_step(step)
+        # Steps 1-2: source handle + universe. The permno list is collected
+        # driver-side (S&P 500 membership is ~2k ids over all history — a
+        # dim, not a fact).
+        step = start_step("Connect to source")
+        end_step(step)
 
-    step = start_step("Build SP500 universe")
-    universe = source.sp500_universe(start, end)
-    permnos = sorted(r["permno"] for r in universe.select("permno").distinct().collect())
-    end_step(step)
+        step = start_step("Build SP500 universe")
+        universe = source.sp500_universe(start, end)
+        permnos = sorted(r["permno"] for r in universe.select("permno").distinct().collect())
+        end_step(step)
 
-    step = start_step("Build assets master")
-    assets_master = build_assets_master(source, permnos)
-    end_step(step)
+        step = start_step("Build assets master")
+        assets_master = build_assets_master(source, permnos)
+        end_step(step)
 
-    step = start_step("Build trading calendar and membership")
-    calendar = trading_calendar(spark, start, end)
-    membership = build_membership(universe, calendar, start, end)
-    end_step(step)
+        step = start_step("Build trading calendar and membership")
+        calendar = trading_calendar(spark, start, end)
+        membership = build_membership(universe, calendar, start, end)
+        end_step(step)
 
-    # The mapping is a per-asset dimension read by four actions (two
-    # ticker lists, two broadcast joins): run its interval join once.
-    step = start_step("Build IBES-CRSP mapping (CUSIP)")
-    idxref = localize(build_idxref(source, permnos, start, end))
-    end_step(step)
+        # The mapping is a per-asset dimension read by four actions (two
+        # ticker lists, two broadcast joins): run its interval join once.
+        step = start_step("Build IBES-CRSP mapping (CUSIP)")
+        idxref = localize(build_idxref(source, permnos, start, end))
+        end_step(step)
 
-    step = start_step("Download daily prices/returns")
-    prices, returns, dlret_daily = build_prices_and_returns(
-        source, assets_master, permnos, start, end
-    )
-    end_step(step)
+        step = start_step("Download daily prices/returns")
+        prices, returns, dlret_daily = build_prices_and_returns(
+            source, assets_master, permnos, start, end
+        )
+        end_step(step)
 
-    step = start_step("Download fundamentals")
-    fundamentals = build_fundamentals(source, permnos, start, end)
-    end_step(step)
+        step = start_step("Download fundamentals")
+        fundamentals = build_fundamentals(source, permnos, start, end)
+        end_step(step)
 
-    step = start_step("Download analyst consensus")
-    consensus = build_consensus(source, idxref, start, end)
-    end_step(step)
+        step = start_step("Download analyst consensus")
+        consensus = build_consensus(source, idxref, start, end)
+        end_step(step)
 
-    step = start_step("Download analyst rating history")
-    ratings = build_ratings_history(source, idxref, start, end)
-    end_step(step)
+        step = start_step("Download analyst rating history")
+        ratings = build_ratings_history(source, idxref, start, end)
+        end_step(step)
 
-    step = start_step("Download style factors and risk-free")
-    factors, rf, ff_raw = build_factors(source, start, end)
-    end_step(step)
+        step = start_step("Download style factors and risk-free")
+        factors, rf, ff_raw = build_factors(source, start, end)
+        end_step(step)
 
-    step = start_step("Download macro series")
-    macro = fetch_macro(spark, start, end, fetcher=fred)
-    end_step(step)
+        step = start_step("Download macro series")
+        macro = fetch_macro(spark, start, end, fetcher=fred)
+        end_step(step)
 
-    step = start_step("Download benchmark")
-    benchmark = build_benchmark(source, start, end)
-    end_step(step)
+        step = start_step("Download benchmark")
+        benchmark = build_benchmark(source, start, end)
+        end_step(step)
 
-    step = start_step("Download monthly prices/returns")
-    returns_monthly, prices_monthly, dlret_monthly = build_monthly_returns(
-        source, permnos, start, end
-    )
-    end_step(step)
+        step = start_step("Download monthly prices/returns")
+        returns_monthly, prices_monthly, dlret_monthly = build_monthly_returns(
+            source, permnos, start, end
+        )
+        end_step(step)
 
-    step = start_step("Download dividends")
-    dividends = build_dividends(source, prices_monthly, prices, permnos, start, end)
-    end_step(step)
+        step = start_step("Download dividends")
+        dividends = build_dividends(source, prices_monthly, prices, permnos, start, end)
+        end_step(step)
 
-    tables = {
-        "prices_daily": prices,
-        "returns_daily": returns,
-        "returns_monthly": returns_monthly,
-        "dividends_monthly": dividends,
-        "fundamentals_quarterly": fundamentals,
-        "analyst_consensus": consensus,
-        "analyst_ratings_history": ratings,
-        "macro_timeseries": macro,
-        "risk_free": rf,
-        "style_factor_returns": factors,
-        "benchmarks": benchmark,
-        "sp500_membership": membership,
-        "assets_master": assets_master,
-        "universe_sp500": membership.withColumnRenamed("in_sp500", "in_universe"),
-        "trading_calendar": calendar,
-    }
-    raw = {
-        "prices_raw": prices,
-        "sp500_membership_raw": universe,
-        "assets_master_raw": assets_master,
-        "fundamentals_raw": fundamentals,
-        "ibes_idxref_raw": idxref,
-        "analyst_consensus_raw": consensus,
-        "analyst_ratings_history_raw": ratings,
-        "style_factors_raw": ff_raw,
-        "macro_raw": macro,
-        "benchmark_raw": benchmark,
-        "prices_monthly_raw": prices_monthly,
-        "dlret_daily_raw": dlret_daily,
-        "dlret_monthly_raw": dlret_monthly,
-        "dividends_monthly_raw": dividends,
-    }
-    raw_paths = {name: parquet_path(RAW_DIR, name) if save_raw else None for name in raw}
+        tables = {
+            "prices_daily": prices,
+            "returns_daily": returns,
+            "returns_monthly": returns_monthly,
+            "dividends_monthly": dividends,
+            "fundamentals_quarterly": fundamentals,
+            "analyst_consensus": consensus,
+            "analyst_ratings_history": ratings,
+            "macro_timeseries": macro,
+            "risk_free": rf,
+            "style_factor_returns": factors,
+            "benchmarks": benchmark,
+            "sp500_membership": membership,
+            "assets_master": assets_master,
+            "universe_sp500": membership.withColumnRenamed("in_sp500", "in_universe"),
+            "trading_calendar": calendar,
+        }
+        raw = {
+            "prices_raw": prices,
+            "sp500_membership_raw": universe,
+            "assets_master_raw": assets_master,
+            "fundamentals_raw": fundamentals,
+            "ibes_idxref_raw": idxref,
+            "analyst_consensus_raw": consensus,
+            "analyst_ratings_history_raw": ratings,
+            "style_factors_raw": ff_raw,
+            "macro_raw": macro,
+            "benchmark_raw": benchmark,
+            "prices_monthly_raw": prices_monthly,
+            "dlret_daily_raw": dlret_daily,
+            "dlret_monthly_raw": dlret_monthly,
+            "dividends_monthly_raw": dividends,
+        }
+        raw_paths = {name: parquet_path(RAW_DIR, name) if save_raw else None for name in raw}
 
-    written: dict[str, list[str]] = {}
-    step = start_step("Write raw snapshots" if save_raw else "Skip raw snapshots")
-    if save_raw:
-        # The localized IBES mapping would otherwise write one file per
-        # local partition.
-        written.update(_write_many(resolved_root, {
-            raw_paths[name]: (df, {"single_file": name == "ibes_idxref_raw"})
-            for name, df in raw.items()
-        }))
-    end_step(step)
+        written: dict[str, list[str]] = {}
+        step = start_step("Write raw snapshots" if save_raw else "Skip raw snapshots")
+        if save_raw:
+            # The localized IBES mapping would otherwise write one file per
+            # local partition.
+            written.update(_write_many(resolved_root, {
+                raw_paths[name]: (df, {"single_file": name == "ibes_idxref_raw"})
+                for name, df in raw.items()
+            }))
+        end_step(step)
 
-    step = start_step("Write processed datasets")
-    jobs = {}
-    for name, ds in CATALOG.items():
-        df, kw = _canon(tables[name], name), {"single_file": ds.single_file}
-        if partition_by_year and name in _FACTS:
-            df, kw = df.withColumn("year", F.year("date")), {"partition_cols": ["year"]}
-        jobs[ds.path] = (df, kw)
-    written.update(_write_many(resolved_root, jobs))
-    from ..storage.bucketing import root_scoped_table, write_bucketed
+        step = start_step("Write processed datasets")
+        jobs = {}
+        for name, ds in CATALOG.items():
+            df, kw = _canon(tables[name], name), {"single_file": ds.single_file}
+            if partition_by_year and name in _FACTS:
+                df, kw = df.withColumn("year", F.year("date")), {"partition_cols": ["year"]}
+            jobs[ds.path] = (df, kw)
+        written.update(_write_many(resolved_root, jobs))
+        from ..storage.bucketing import root_scoped_table, write_bucketed
 
-    for name in _FACTS:
-        base = f"{name}_bucketed"
-        table = root_scoped_table(base, resolved_root)
-        if bucket_facts:
-            write_bucketed(
-                _canon(tables[name], name), table, ["asset_id", "date"],
-                sort_cols=["asset_id", "date"],
-                path=resolved_root / PROCESSED_DIR / base,
-            )
-        else:
-            # A re-ingest without bucketing must not leave a previous
-            # run's bucketed tables serving stale data for this root.
-            spark.sql(f"DROP TABLE IF EXISTS {table}")
-    end_step(step)
+        for name in _FACTS:
+            base = f"{name}_bucketed"
+            table = root_scoped_table(base, resolved_root)
+            if bucket_facts:
+                write_bucketed(
+                    _canon(tables[name], name), table, ["asset_id", "date"],
+                    sort_cols=["asset_id", "date"],
+                    path=resolved_root / PROCESSED_DIR / base,
+                )
+            else:
+                # A re-ingest without bucketing must not leave a previous
+                # run's bucketed tables serving stale data for this root.
+                spark.sql(f"DROP TABLE IF EXISTS {table}")
+        end_step(step)
 
-    step = start_step("Write metadata and manifests")
-    # Paths are relative to the data root, so a moved or copied root
-    # keeps manifests that describe it.
-    provenance = {
-        "ingested_at_utc": datetime.now(timezone.utc).isoformat(),
-        "params": {
-            "start": start, "end": end,
-            "source": source.source_tag(), "save_raw": save_raw,
-        },
-        "datasets": {
-            **{name: {"source": ds.source, "path": ds.path} for name, ds in CATALOG.items()},
-            "raw": raw_paths,
-        },
-    }
-    with (meta / "data_sources.yml").open("w", encoding="utf-8") as fh:
-        yaml.safe_dump(provenance, fh)
+        step = start_step("Write metadata and manifests")
+        # Paths are relative to the data root, so a moved or copied root
+        # keeps manifests that describe it.
+        provenance = {
+            "ingested_at_utc": datetime.now(timezone.utc).isoformat(),
+            "params": {
+                "start": start, "end": end,
+                "source": source.source_tag(), "save_raw": save_raw,
+            },
+            "datasets": {
+                **{name: {"source": ds.source, "path": ds.path} for name, ds in CATALOG.items()},
+                "raw": raw_paths,
+            },
+        }
+        with (meta / "data_sources.yml").open("w", encoding="utf-8") as fh:
+            yaml.safe_dump(provenance, fh)
 
-    # Every dataset was written above: its columns are known without
-    # reading a footer back.
-    entries = [(name, "processed", ds.source, ds.path) for name, ds in CATALOG.items()]
-    entries += [(name, "raw", "raw_snapshot", path) for name, path in raw_paths.items() if path]
-    manifest = [
-        {"dataset": dataset, "type": kind, "source": src, "path": path, "column": col}
-        for dataset, kind, src, path in entries
-        for col in written[path]
-    ]
+        # Every dataset was written above: its columns are known without
+        # reading a footer back.
+        entries = [(name, "processed", ds.source, ds.path) for name, ds in CATALOG.items()]
+        entries += [(name, "raw", "raw_snapshot", path) for name, path in raw_paths.items() if path]
+        manifest = [
+            {"dataset": dataset, "type": kind, "source": src, "path": path, "column": col}
+            for dataset, kind, src, path in entries
+            for col in written[path]
+        ]
 
-    with (meta / "field_manifest.yml").open("w", encoding="utf-8") as fh:
-        yaml.safe_dump(manifest, fh)
-    import csv
+        with (meta / "field_manifest.yml").open("w", encoding="utf-8") as fh:
+            yaml.safe_dump(manifest, fh)
+        import csv
 
-    fieldnames = ["dataset", "type", "source", "path", "column"]
-    for csv_path in (meta / "field_manifest.csv", reference_dir / "field_manifest.csv"):
-        with csv_path.open("w", encoding="utf-8", newline="") as fh:
-            writer = csv.DictWriter(fh, fieldnames=fieldnames)
-            writer.writeheader()
-            writer.writerows(manifest)
-    end_step(step)
+        fieldnames = ["dataset", "type", "source", "path", "column"]
+        for csv_path in (meta / "field_manifest.csv", reference_dir / "field_manifest.csv"):
+            with csv_path.open("w", encoding="utf-8", newline="") as fh:
+                writer = csv.DictWriter(fh, fieldnames=fieldnames)
+                writer.writeheader()
+                writer.writerows(manifest)
+        end_step(step)
 
-    total = sum(t for _, t in steps_done)
-    logger.info(
-        "Done in %.1fs. Steps: %s",
-        total,
-        ", ".join(f"{n} {t:.1f}s" for n, t in steps_done),
-    )
-    return resolved_root
+        total = sum(t for _, t in steps_done)
+        logger.info(
+            "Done in %.1fs. Steps: %s",
+            total,
+            ", ".join(f"{n} {t:.1f}s" for n, t in steps_done),
+        )
+        return resolved_root
 
 
 def update_facts(

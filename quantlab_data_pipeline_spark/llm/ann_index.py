@@ -234,9 +234,7 @@ def query_ivf_pq_index(
     scan of the probed lists' (id, codes) columns, ADC top
     ``k * rerank_factor`` per query, then exact cosine re-rank reading
     the stored unit vectors for the surviving candidates only."""
-    from .pq import adc_score, query_luts
-    from .similarity import dot
-    from .similarity import unit_vec as _unit
+    from .pq import adc_score, exact_rerank, query_luts
 
     spark = queries.sparkSession
     centroids = load_centroids(spark, path)
@@ -269,25 +267,13 @@ def query_ivf_pq_index(
     )
     cands = rank_topk(scored, k * rerank_factor).select("query_id", "neighbor_id")
     # stage 2: exact re-rank — vectors read for candidates only
-    exact = (
-        cands.join(
-            assignments.select(
-                F.col(id_col).alias("neighbor_id"),
-                F.col("unit_vec").alias("cv"),
-            ),
-            "neighbor_id",
-        )
-        .join(
-            F.broadcast(
-                queries.select(
-                    F.col(id_col).alias("query_id"), _unit(vec_col).alias("qv")
-                )
-            ),
-            "query_id",
-        )
-        .withColumn("score", F.round(dot("qv", "cv"), 6))
+    return exact_rerank(
+        cands,
+        assignments.select(
+            F.col(id_col).alias("neighbor_id"), F.col("unit_vec").alias("cv")
+        ),
+        queries, k, id_col, vec_col,
     )
-    return rank_topk(exact, k)
 
 
 def append_to_ann_index(

@@ -26,6 +26,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..localframe import pin
+from .text import with_fingerprint
 
 
 def ensure_parallelism(df: DataFrame, min_ratio: float = 0.5) -> DataFrame:
@@ -48,9 +49,8 @@ def exact_dedup(
     df: DataFrame, id_col: str = "doc_id", text_col: str = "text"
 ) -> DataFrame:
     """Exact dedup: normalize -> md5 -> keep the smallest id per hash."""
-    norm = F.trim(F.regexp_replace(F.lower(F.col(text_col)), "\\s+", " "))
     return (
-        df.withColumn("fingerprint", F.md5(norm))
+        with_fingerprint(df, text_col)
         .groupBy("fingerprint")
         .agg(
             F.min(id_col).alias("keeper_id"),

@@ -213,14 +213,29 @@ def pq_topk(
     top = rank_topk(scored, n_stage1)
     if rerank_from is None:
         return top
+    return exact_rerank(
+        top.select("query_id", "neighbor_id"),
+        rerank_from.select(
+            F.col(id_col).alias("neighbor_id"), unit_vec(vec_col).alias("cv")
+        ),
+        queries, k, id_col, vec_col,
+    )
+
+
+def exact_rerank(
+    cands: DataFrame,
+    cand_vecs: DataFrame,
+    queries: DataFrame,
+    k: int,
+    id_col: str = "vec_id",
+    vec_col: str = "embedding",
+) -> DataFrame:
+    """Second stage of a two-stage ANN query: re-score the
+    ``(query_id, neighbor_id)`` candidates by exact cosine against
+    ``cand_vecs`` (``neighbor_id``, unit vector ``cv``) and the
+    broadcast unit query vectors, and keep the top ``k`` per query."""
     exact = (
-        top.select("query_id", "neighbor_id")
-        .join(
-            rerank_from.select(
-                F.col(id_col).alias("neighbor_id"), unit_vec(vec_col).alias("cv")
-            ),
-            "neighbor_id",
-        )
+        cands.join(cand_vecs, "neighbor_id")
         .join(
             F.broadcast(
                 queries.select(

@@ -349,44 +349,6 @@ def train_centroids(
     return centers.tolist()
 
 
-def train_centroids_distributed(
-    corpus: DataFrame,
-    k: int = 16,
-    vec_col: str = "embedding",
-    max_iter: int = 10,
-    seed: int = 7,
-) -> list[list[float]]:
-    """Scale path of :func:`train_centroids`: MLlib ``KMeans`` over the
-    *full* unit-normalized corpus — distributed Lloyd iterations with
-    k-means|| init, no driver sample cap. Use when the corpus is too
-    skewed for a 2k-row sample to see every mode (the driver-sample
-    variant stays the cheap default; both return the same
-    ``list[list[float]]`` contract, unit-normalized for cosine
-    assignment via :func:`ivf_assign`).
-
-    Zero-vectors are dropped before the fit (they have no direction and
-    ``unit_vec`` maps them to null).
-    """
-    import math
-
-    from pyspark.ml.clustering import KMeans
-    from pyspark.ml.functions import array_to_vector
-
-    vecs = (
-        ensure_parallelism(corpus)
-        .select(unit_vec(vec_col).alias("__uv"))
-        .filter(F.col("__uv").isNotNull())
-        .select(array_to_vector("__uv").alias("features"))
-    )
-    model = KMeans(k=k, maxIter=max_iter, seed=seed).fit(vecs)
-    out = []
-    for c in model.clusterCenters():
-        vals = [float(x) for x in c]
-        n = math.sqrt(sum(x * x for x in vals))
-        out.append([x / n for x in vals] if n > 0 else vals)
-    return out
-
-
 def ivf_assign(
     vectors: DataFrame,
     centroids: list[list[float]],

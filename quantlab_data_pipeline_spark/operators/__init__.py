@@ -20,7 +20,7 @@ from .intervals import (
     point_in_time_join,
     trading_calendar,
 )
-from .asof import as_of_join, as_of_join_cogrouped
+from .asof import as_of_join
 from .returns import attach_tickers, delist_adjust, pct_change, with_adj_close
 from .diff import snapshot_diff
 from .hierarchy import resolve_hierarchy
@@ -33,7 +33,6 @@ from .skew import grouped_global_cumsum, grouped_global_rank, salted_join
 __all__ = [
     "FACTOR_NAME_MAP",
     "as_of_join",
-    "as_of_join_cogrouped",
     "grouped_global_cumsum",
     "grouped_global_rank",
     "salted_join",

@@ -24,7 +24,6 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 
 def as_of_join(
@@ -104,106 +103,3 @@ def as_of_join(
         *out_cols, *[F.col("__asof")[f].alias(f) for f in asof_fields]
     )
 
-
-def as_of_join_cogrouped(
-    left: DataFrame,
-    right: DataFrame,
-    on: list[str],
-    left_ts: str = "ts",
-    right_ts: str = "ts",
-    right_cols: list[str] | None = None,
-    prefix: str = "asof_",
-    direction: str = "backward",
-    tolerance_seconds: float | None = None,
-) -> DataFrame:
-    """Cogroup variant of :func:`as_of_join`: both frames are grouped
-    on the keys and each key's (left, right) pair lands in ONE Arrow
-    batch where ``pandas.merge_asof`` runs locally.
-
-    Same contract and results as the union+window plan (the equality
-    is pytest-enforced on randomized data); different physical shape —
-    TWO keyed shuffles (one per side) instead of one over the union,
-    but the per-key merge is pandas' O(n+m) galloping merge instead of
-    a sort + running window. Useful when the right side carries many
-    payload columns (the window plan builds a struct per row;
-    merge_asof moves column batches), and as the repo's demonstration
-    of the cogrouped applyInPandas API. Keys are limited to the
-    grouping columns both frames share; per-key data must fit an Arrow
-    batch (the same per-group bound every applyInPandas op has).
-    """
-    import pandas as pd
-
-    if direction not in {"backward", "forward"}:
-        raise ValueError(f"direction must be backward|forward, got {direction!r}")
-    if right_cols is None:
-        right_cols = [c for c in right.columns if c not in {*on, right_ts}]
-
-    out_fields = [f"{prefix}{right_ts}", *[f"{prefix}{c}" for c in right_cols]]
-    left_schema = left.schema
-    right_schema = right.schema
-    out_schema = T.StructType(
-        [
-            *left_schema.fields,
-            T.StructField(
-                f"{prefix}{right_ts}",
-                right_schema[right_ts].dataType,
-            ),
-            *[
-                T.StructField(f"{prefix}{c}", right_schema[c].dataType)
-                for c in right_cols
-            ],
-        ]
-    )
-    tol = (
-        pd.Timedelta(seconds=float(tolerance_seconds))
-        if tolerance_seconds is not None
-        else None
-    )
-
-    def merge(l: pd.DataFrame, r: pd.DataFrame) -> pd.DataFrame:
-        if l.empty:
-            return pd.DataFrame(columns=[f.name for f in out_schema.fields])
-        l = l.sort_values(left_ts, kind="mergesort")
-        if r.empty:
-            for f in out_fields:
-                l[f] = None
-            return l
-        r = r.sort_values(right_ts, kind="mergesort")
-        # pin the tie rule of the window plan: at equal (keys, ts) the
-        # lexicographically largest payload tuple wins
-        r = (
-            r.sort_values([right_ts, *right_cols], kind="mergesort")
-            .groupby(right_ts, as_index=False)
-            .last()
-        )
-        rr = r[[right_ts, *right_cols]].rename(
-            columns={right_ts: f"__r_{right_ts}", **{c: f"{prefix}{c}" for c in right_cols}}
-        )
-        dtype = str(l[left_ts].dtype)
-        if tolerance_seconds is None:
-            tol_val = None
-        elif dtype.startswith("datetime"):
-            tol_val = tol
-        elif "int" in dtype:
-            tol_val = int(tolerance_seconds)
-        else:
-            tol_val = float(tolerance_seconds)
-        merged = pd.merge_asof(
-            l,
-            rr,
-            left_on=left_ts,
-            right_on=f"__r_{right_ts}",
-            direction=direction,
-            tolerance=tol_val,
-        )
-        merged[f"{prefix}{right_ts}"] = merged.pop(f"__r_{right_ts}")
-        return merged[[f.name for f in out_schema.fields]]
-
-    def fn(l: pd.DataFrame, r: pd.DataFrame) -> pd.DataFrame:
-        return merge(l, r)
-
-    return (
-        left.groupby(*on)
-        .cogroup(right.groupby(*on))
-        .applyInPandas(fn, schema=out_schema)
-    )

@@ -10,12 +10,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-
-def _first_non_null_by(col: str, order: str) -> F.Column:
-    pair = F.when(
-        F.col(col).isNotNull(), F.struct(F.col(order).alias("o"), F.col(col).alias("v"))
-    )
-    return F.min(pair)["v"]
+from .dedup import _first_non_null_ordered
 
 
 def attach_close_prices(
@@ -44,7 +39,7 @@ def clean_dividends(dividends: DataFrame) -> DataFrame:
     agg = [
         F.sum("divamt").alias("divamt"),
         *[
-            _first_non_null_by(c, order).alias(c)
+            _first_non_null_ordered(c, order).alias(c)
             for c in ("distcd", "facpr", "facshr", "close")
             if c in dividends.columns
         ],

@@ -18,10 +18,10 @@ and the previous round is unpinned once the next one is computed.
 
 At 100 TB scale the same loop holds: the edge list shuffles on the
 node id each round, AQE handles the skew of celebrity nodes, and the
-iteration count is bounded by cluster diameter, not corpus size. (For
-adversarial long-chain graphs the published large-star/small-star
-variant halves diameters per round; near-dup workloads do not need it
-and it costs two shuffles per iteration instead of one.)
+iteration count is bounded by cluster diameter, not corpus size. A
+graph still moving after ``LABEL_ROUNDS`` rounds (an adversarial long
+chain) is handed to the published large-star/small-star variant, which
+halves diameters per round at two shuffles per round instead of one.
 """
 
 from __future__ import annotations
@@ -44,10 +44,10 @@ def connected_components_two_phase(
     its neighborhood, which provably halves the effective diameter —
     O(log d) rounds total — where plain min-label propagation needs
     O(d) rounds. This is the adversarial-graph fallback for long
-    chains/lattices; for the star-shaped clusters near-dup graphs
-    produce, :func:`connected_components` converges in 2-4 rounds with
-    one shuffle per round and stays the default (this variant costs
-    two keyed shuffles per round).
+    chains/lattices that :func:`connected_components` switches to after
+    :data:`LABEL_ROUNDS` label rounds; the star-shaped clusters near-dup
+    graphs produce converge in 2-4 label rounds with one shuffle per
+    round (this variant costs two keyed shuffles per round).
 
     large-star: every node u emits (v, min(N(u) ∪ u)) for each
     strictly-larger neighbor v. small-star: on the ≤-oriented edges,
@@ -140,33 +140,27 @@ def connected_components_two_phase(
     )
 
 
+#: Label rounds before :func:`connected_components` switches to
+#: :func:`connected_components_two_phase` (near-dup clusters settle in 2-4).
+LABEL_ROUNDS = 12
+
+
 def connected_components(
     edges: DataFrame,
     src_col: str = "id_a",
     dst_col: str = "id_b",
-    max_iters: int = 50,
-    algorithm: str = "auto",
-    switch_after: int = 12,
 ) -> DataFrame:
     """(node, component) for every node in ``edges``; component is the
     smallest node id reachable from the node. Deterministic and
     engine-independent (pure min semantics, no ordering sensitivity).
 
-    ``algorithm``: ``"label"`` = min-label propagation only (O(diameter)
-    rounds, one shuffle each — right for near-dup star clusters);
-    ``"star"`` = :func:`connected_components_two_phase` (O(log d)
-    rounds, two shuffles each — right for adversarial long chains);
-    ``"auto"`` (default) = label propagation, falling back to the
-    two-phase algorithm if ``switch_after`` rounds have not converged
-    (a diameter that large means star-halving wins from here on).
-
-    Raises if the loop has not converged after ``max_iters`` (diameter
-    larger than max_iters — raise the cap for pathological chains).
+    Runs min-label propagation (O(diameter) rounds, one shuffle each —
+    right for near-dup star clusters) for at most :data:`LABEL_ROUNDS`
+    rounds. A graph whose labels are still moving then is recomputed
+    by :func:`connected_components_two_phase` (O(log d) rounds, two
+    shuffles each — right for adversarial long chains), which raises
+    if it does not converge.
     """
-    if algorithm not in ("auto", "label", "star"):
-        raise ValueError(f"unknown algorithm {algorithm!r}")
-    if algorithm == "star":
-        return connected_components_two_phase(edges, src_col, dst_col)
     # Materialize the edge list ONCE before symmetrizing (guide §1.2):
     # the union's two branches are different projections, so without
     # this the caller's whole pair-generation subtree (for the dedup
@@ -184,8 +178,7 @@ def connected_components(
         .distinct()
         .withColumn("component", F.col("node"))
     )
-    changed = switch = None
-    for it in range(max_iters):
+    for _ in range(LABEL_ROUNDS):
         neigh = (
             sym.join(labels, sym.dst == labels.node)
             .groupBy("src")
@@ -210,22 +203,14 @@ def connected_components(
         )
         unpin(labels)
         labels = new_labels
-        # Still moving after `switch_after` rounds: the diameter is
-        # large enough that star-halving beats one-hop propagation from
-        # here on. Restart on the raw edges — the two-phase pass is
-        # O(log d) rounds total, cheaper than resuming.
-        switch = algorithm == "auto" and it + 1 >= switch_after
-        if changed == 0 or switch:
-            break
+        if changed == 0:
+            unpin(sym)
+            return labels
     unpin(sym)
-    if changed == 0:
-        return labels
     unpin(labels)
-    if switch:
-        return connected_components_two_phase(edges, src_col, dst_col)
-    raise RuntimeError(
-        f"connected_components did not converge in {max_iters} iterations"
-    )
+    # Restart on the raw edges — the two-phase pass is O(log d) rounds
+    # total, cheaper than resuming.
+    return connected_components_two_phase(edges, src_col, dst_col)
 
 
 def dedup_cluster_assignments(

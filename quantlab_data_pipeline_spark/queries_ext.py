@@ -7478,10 +7478,11 @@ def curation_pipeline_loop_docs(spark: SparkSession, sf: str) -> DataFrame:
     curation_intake_sink` — the composed foreachBatch sink the
     restart/replay pytest drives as a real stream): documents become
     boilerplate-wrapped pages with derived URLs, the upstream stages
-    run as their deterministic batch twins (domain blocklist on the
-    suffix chain, `html_to_text` extraction, frozen-weight quality,
-    min-id URL dedup — the `url_dedup_docs` winner rule, standing in
-    for the stream's nondeterministic first-arrival dropDuplicates),
+    run as the stream's own stateless stages (`streaming/intake.py
+    crawl_stages`: domain blocklist on the suffix chain, `html_to_text`
+    extraction, frozen-weight quality) followed by a min-id URL dedup
+    (the `url_dedup_docs` winner rule, standing in for the stream's
+    nondeterministic first-arrival dropDuplicates),
     and the survivors arrive in three "crawl batches" (doc_id % 3) at
     the composed sink: perceptual media dedup against the persisted
     index (batch 0 builds, 1-2 flag + append keepers), then DSIR
@@ -7502,15 +7503,10 @@ def curation_pipeline_loop_docs(spark: SparkSession, sf: str) -> DataFrame:
     is the verdict-log scan. Scale shape: upstream is per-row codegen;
     per batch the sink shuffles 8-byte fingerprints and <=4096-row
     count tables only."""
-    from .llm.classifier import score_quality_frozen
     from .llm.dsir import build_dsir_counts
-    from .llm.extract import escape_html_text, html_to_text
-    from .llm.frozen_quality import (
-        FROZEN_QUALITY_V1_BIAS,
-        FROZEN_QUALITY_V1_WEIGHTS,
-    )
-    from .llm.urls import host_suffix_chain, normalize_url
+    from .llm.extract import escape_html_text
     from .streaming.dsir_intake import read_dsir_verdicts
+    from .streaming.intake import crawl_stages
     from .streaming.pipeline import curation_intake_sink
 
     base = _scratch_store("curloop", sf)
@@ -7535,19 +7531,7 @@ def curation_pipeline_loop_docs(spark: SparkSession, sf: str) -> DataFrame:
     )
     pages = docs.select("doc_id", url.alias("url"), page.alias("html"))
 
-    chain = host_suffix_chain("url")
-    unblocked = pages.filter(
-        ~F.coalesce(
-            F.arrays_overlap(chain, F.array(F.lit("bad.net"))), F.lit(False)
-        )
-    )
-    extracted = html_to_text(unblocked, "html", "text").drop("html")
-    scored = score_quality_frozen(
-        extracted, FROZEN_QUALITY_V1_BIAS, FROZEN_QUALITY_V1_WEIGHTS
-    )
-    passed = scored.filter(
-        F.col("ml_keep") & (F.length("text") >= 1)
-    ).withColumn("norm_url", normalize_url("url"))
+    passed = crawl_stages(pages, blocklist=["bad.net"])
     uwin = passed.groupBy("norm_url").agg(F.min("doc_id").alias("__ukeep"))
     # Materialize the upstream chain ONCE (guide §1.2): the three
     # batch slices below each fed the sink a plan containing the whole

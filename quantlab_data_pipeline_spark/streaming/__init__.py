@@ -8,7 +8,6 @@ from .dedup import (
     streaming_exact_dedup,
     streaming_exact_dedup_bounded,
     streaming_minhash_candidates,
-    with_fingerprint_stream,
 )
 from .events import (
     clicks_with_recent_purchase,
@@ -50,5 +49,4 @@ __all__ = [
     "windowed_aggregate",
     "windowed_distinct_estimate",
     "windowed_distinct_sketch",
-    "with_fingerprint_stream",
 ]

@@ -24,6 +24,8 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
+from ..llm.text import with_fingerprint
+
 # Output: the surviving (first-seen) docs + running copy count per hash.
 DEDUP_OUTPUT_SCHEMA = T.StructType(
     [
@@ -41,12 +43,6 @@ DEDUP_STATE_SCHEMA = T.StructType(
         T.StructField("n_seen", T.LongType()),
     ]
 )
-
-
-def with_fingerprint_stream(docs: DataFrame, text_col: str = "text") -> DataFrame:
-    """Same normalization + md5 as the batch exact dedup, on a stream."""
-    norm = F.trim(F.regexp_replace(F.lower(F.col(text_col)), "\\s+", " "))
-    return docs.withColumn("fingerprint", F.md5(norm))
 
 
 def _dedup_fn(
@@ -85,7 +81,7 @@ def streaming_exact_dedup(docs: DataFrame, text_col: str = "text") -> DataFrame:
     unique documents.
     """
     return (
-        with_fingerprint_stream(docs, text_col)
+        with_fingerprint(docs, text_col)
         .groupBy("fingerprint")
         .applyInPandasWithState(
             _dedup_fn,
@@ -204,7 +200,7 @@ def streaming_exact_dedup_bounded(
     re-emitted — choose this variant per the source's delivery bound.
     """
     return (
-        with_fingerprint_stream(docs, text_col)
+        with_fingerprint(docs, text_col)
         .withWatermark(ts_col, watermark_delay)
         .dropDuplicatesWithinWatermark(["fingerprint"])
     )

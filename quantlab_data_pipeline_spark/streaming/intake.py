@@ -7,7 +7,10 @@ gate drops junk, and the first page per normalized URL wins. Three of
 those four stages (extraction, quality, URL normalization) are pure
 codegen projections — stream-safe by construction, identical plans to
 the batch rows ``html_extract_docs`` / ``ml_quality_frozen_docs`` /
-``url_dedup_docs``. The only stateful stage is the URL dedup:
+``url_dedup_docs``. The stateless stages are one function,
+:func:`crawl_stages`, which the batch-loop row
+``curation_pipeline_loop_docs`` runs too. The only stateful stage is
+the URL dedup:
 
 * with ``watermark`` (the production setting) —
   ``dropDuplicatesWithinWatermark`` keyed on the normalized URL, so the
@@ -28,24 +31,23 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def streaming_crawl_intake(
+def crawl_stages(
     pages: DataFrame,
     html_col: str = "html",
     url_col: str = "url",
-    ts_col: str = "fetch_ts",
-    watermark: str | None = "1 hour",
     min_chars: int = 1,
     blocklist: DataFrame | list | None = None,
 ) -> DataFrame:
-    """pages(url, html[, fetch_ts]) -> kept docs with extracted text.
+    """The stateless crawl-intake stages, on a stream or a batch frame:
+    what :func:`streaming_crawl_intake` runs before its URL dedup.
 
     Output columns: every input column except ``html``, plus ``text``
     (extracted main content), ``ml_logit``/``ml_keep`` (frozen quality)
     and ``norm_url``. Rows dropped: blocklisted domains (when
     ``blocklist`` is given — FIRST, before any extraction work: the
     cheapest gate runs earliest, same order as the batch composition
-    ``curate_corpus_r8``), failed extraction (< ``min_chars`` chars),
-    quality rejects, and all but the first arrival per normalized URL.
+    ``curate_corpus_r8``), failed extraction (< ``min_chars`` chars)
+    and quality rejects.
 
     The blocklist stage is STATELESS by construction (the batch
     operator's explode -> count -> join-back collapse is a streaming
@@ -92,9 +94,23 @@ def streaming_crawl_intake(
         FROZEN_QUALITY_V1_WEIGHTS,
         text_col="text",
     )
-    kept = scored.filter(
+    return scored.filter(
         F.col("ml_keep") & (F.length("text") >= min_chars)
     ).withColumn("norm_url", normalize_url(url_col))
+
+
+def streaming_crawl_intake(
+    pages: DataFrame,
+    html_col: str = "html",
+    url_col: str = "url",
+    ts_col: str = "fetch_ts",
+    watermark: str | None = "1 hour",
+    min_chars: int = 1,
+    blocklist: DataFrame | list | None = None,
+) -> DataFrame:
+    """pages(url, html[, fetch_ts]) -> :func:`crawl_stages`, keeping
+    only the first arrival per normalized URL."""
+    kept = crawl_stages(pages, html_col, url_col, min_chars, blocklist)
     if watermark is None:
         return kept.dropDuplicates(["norm_url"])
     return kept.withWatermark(ts_col, watermark).dropDuplicatesWithinWatermark(

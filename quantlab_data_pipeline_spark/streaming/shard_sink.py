@@ -46,9 +46,20 @@ __all__ = [
 ]
 
 
+#: The manifest's columns as :func:`..llm.sharding.shard_manifest`
+#: writes them, with the ``batch_id`` partition column last (typed as
+#: Spark's partition discovery types it).
+MANIFEST_SCHEMA = (
+    "shard_id long, n_docs long, total_bytes long, min_id long, "
+    "max_id long, content_fp long, batch_id int"
+)
+
+
 def read_shard_manifest(spark: SparkSession, path: str) -> DataFrame:
-    """The accumulated manifest: one row per (batch_id, shard_id)."""
-    return spark.read.parquet(f"{path}/manifest")
+    """The accumulated manifest: one row per (batch_id, shard_id).
+    Read with its declared schema, so no footer-inference job runs and
+    a manifest directory holding no committed file reads as empty."""
+    return spark.read.schema(MANIFEST_SCHEMA).parquet(f"{path}/manifest")
 
 
 def read_shard_payload(spark: SparkSession, path: str) -> DataFrame:
@@ -61,17 +72,15 @@ def _next_base(spark: SparkSession, path: str, batch_id: int) -> int:
     shard any OTHER batch created. Excluding the current batch's own
     manifest rows makes the computation replay-stable — a crashed
     attempt that already wrote its manifest partition does not shift
-    the base of its own replay."""
+    the base of its own replay. A crashed FIRST attempt can leave a
+    manifest directory with no committed file; it reads as empty, so
+    the base is 0. Any other read error raises: taking it for "no
+    shards" would let this batch overwrite sealed payload partitions."""
     if not is_dir(spark, f"{path}/manifest"):
         return 0
-    try:
-        manifest = read_shard_manifest(spark, path)
-    except Exception:  # noqa: BLE001 — a crashed FIRST attempt can leave
-        # a file-less manifest directory (partition dir created, no
-        # committed parquet); that store has no sealed shards yet.
-        return 0
     row = (
-        manifest.filter(F.col("batch_id") != int(batch_id))
+        read_shard_manifest(spark, path)
+        .filter(F.col("batch_id") != int(batch_id))
         .agg(F.max("shard_id").alias("m"))
         .first()
     )

@@ -51,19 +51,10 @@ def test_components_long_chain_converges(spark):
     assert set(got.values()) == {1}
 
 
-def test_non_convergence_raises(spark):
-    with pytest.raises(RuntimeError, match="did not converge"):
-        connected_components(_edges(spark, [(i, i + 1) for i in range(1, 9)]),
-                             max_iters=2)
-
-
 @pytest.mark.parametrize(
     "run",
-    [
-        lambda e: connected_components(e, max_iters=2, algorithm="label"),
-        lambda e: connected_components_two_phase(e, max_rounds=1),
-    ],
-    ids=["label", "two_phase"],
+    [lambda e: connected_components_two_phase(e, max_rounds=1)],
+    ids=["two_phase"],
 )
 def test_non_convergence_releases_persisted_frames(spark, run):
     """The raise path must not leave the edge list, its symmetrized
@@ -150,20 +141,14 @@ def test_two_phase_cc_converges_on_long_chain(spark):
 
 
 def test_cc_auto_switches_to_two_phase(spark):
-    """algorithm='auto' with a tiny switch_after must still return the
-    exact min-label components on a chain far deeper than the label
-    budget (i.e. the fallback really runs and is correct)."""
-    from quantlab_data_pipeline_spark.operators.graph import (
-        connected_components,
-    )
-
+    """A chain far deeper than LABEL_ROUNDS must still get the exact
+    min-label components (i.e. the two-phase fallback really runs and
+    is correct)."""
     n = 300
     edges = spark.createDataFrame(
         [(i, i + 1) for i in range(n - 1)], "id_a long, id_b long"
     )
-    labels = connected_components(
-        edges, max_iters=5, algorithm="auto", switch_after=3
-    )
+    labels = connected_components(edges)
     got = {r["node"]: r["component"] for r in labels.collect()}
     assert got == {v: 0 for v in range(n)}
 

@@ -67,6 +67,26 @@ def test_manifests_written(data_root):
     assert (data_root / "reference" / "field_manifest.csv").exists()
 
 
+def test_each_ingest_logs_only_into_its_own_root(data_root, request):
+    """Two ingests in one process: each root's log names only that root,
+    and the ingest leaves the package logger's handlers as it found
+    them. ``part_root`` is requested here, before any test uses it, so
+    its ingest runs between the two handler counts."""
+    import logging
+
+    pkg_logger = logging.getLogger("quantlab_data_pipeline_spark")
+    n_handlers = len(pkg_logger.handlers)
+    part_root = request.getfixturevalue("part_root")
+    assert len(pkg_logger.handlers) == n_handlers
+    for own, other in ((data_root, part_root), (part_root, data_root)):
+        logs = list((own / "logs").glob("ingestion_*.log"))
+        assert logs, own
+        for log in logs:
+            text = log.read_text()
+            assert str(own) in text, log
+            assert str(other) not in text, log
+
+
 def _manifest_matching_disk(root, spark) -> pd.DataFrame:
     """The root's field manifest, after checking that each dataset's
     columns are what a read of its path, taken relative to the root,

@@ -878,11 +878,10 @@ def test_frozen_quality_train_freeze_score_roundtrip(spark):
     assert acc >= 0.9, acc
 
 
-def test_distributed_centroids_drive_ivf(spark):
-    """MLlib-KMeans centroids plug into the same IVF contract as the
-    driver-sample trainer: k unit-length centers, and full-probe IVF
-    over them still equals the exact top-k (exhaustiveness doesn't
-    depend on which trainer made the lists)."""
+def test_trained_centroids_drive_ivf(spark):
+    """Trained centroids plug into the IVF contract: k unit-length
+    centers, and full-probe IVF over them equals the exact top-k
+    (exhaustiveness doesn't depend on where the lists fall)."""
     import math
 
     from pyspark.sql import functions as F
@@ -890,12 +889,12 @@ def test_distributed_centroids_drive_ivf(spark):
     from quantlab_data_pipeline_spark.llm.similarity import (
         brute_force_topk,
         ivf_topk,
-        train_centroids_distributed,
+        train_centroids,
     )
     from quantlab_data_pipeline_spark.sources.testdata import load_table
 
     emb = load_table(spark, "/root/testdata/sf0.001", "embeddings")
-    cents = train_centroids_distributed(emb, k=8, max_iter=5)
+    cents = train_centroids(emb, k=8)
     assert len(cents) == 8
     for c in cents:
         assert abs(math.sqrt(sum(x * x for x in c)) - 1.0) < 1e-6

@@ -953,18 +953,15 @@ def test_snapshot_diff_classification(spark):
     assert unchanged == {5}
 
 
-def test_as_of_join_cogrouped_equals_window_plan(spark):
-    """The cogrouped merge_asof implementation must produce exactly
-    the window-plan results on randomized data, in all four
-    (direction, tolerance) combinations, including keys present on
+def test_as_of_join_equals_pandas_merge_asof(spark):
+    """The union+window plan must produce exactly what
+    ``pandas.merge_asof`` gives per key on randomized data, in all four
+    (direction, tolerance) combinations, including a key present on
     only one side."""
     import numpy as np
     import pandas as pd
 
-    from quantlab_data_pipeline_spark.operators.asof import (
-        as_of_join,
-        as_of_join_cogrouped,
-    )
+    from quantlab_data_pipeline_spark.operators.asof import as_of_join
 
     rng = np.random.default_rng(23)
     left = pd.DataFrame(
@@ -985,21 +982,30 @@ def test_as_of_join_cogrouped_equals_window_plan(spark):
     rdf = spark.createDataFrame(right)
     for direction in ("backward", "forward"):
         for tol in (None, 40):
-            a = {
+            got = {
                 (r["k"], int(r["t"])): (r["asof_t"], r["asof_px"])
                 for r in as_of_join(
                     ldf, rdf, on=["k"], left_ts="t", right_ts="t",
                     direction=direction, tolerance_seconds=tol,
                 ).collect()
             }
-            b = {
-                (r["k"], int(r["t"])): (r["asof_t"], r["asof_px"])
-                for r in as_of_join_cogrouped(
-                    ldf, rdf, on=["k"], left_ts="t", right_ts="t",
-                    direction=direction, tolerance_seconds=tol,
-                ).collect()
-            }
-            assert a == b, (direction, tol)
+            want = {}
+            for k, lk in left.groupby("k"):
+                rk = right[right["k"] == k].sort_values("t")
+                merged = pd.merge_asof(
+                    lk.sort_values("t"),
+                    rk[["t", "px"]].assign(asof_t=rk["t"]),
+                    on="t",
+                    direction=direction,
+                    tolerance=tol,
+                )
+                for t, at, px in merged[["t", "asof_t", "px"]].itertuples(
+                    index=False
+                ):
+                    want[(k, int(t))] = (
+                        (None, None) if pd.isna(at) else (int(at), float(px))
+                    )
+            assert got == want, (direction, tol)
 
 
 def test_bucketed_filter_prunes_buckets(spark, tmp_path):

@@ -163,3 +163,31 @@ def test_empty_batch_is_noop(spark, store):
     sink(_docs(spark, 30, 60), 2)
     m = read_shard_manifest(spark, store)
     assert m.filter(F.col("batch_id") == 2).count() > 0
+
+
+def test_corrupt_manifest_raises_and_leaves_sealed_shards(spark, store):
+    """An unreadable manifest must stop the sink: read as "no shards",
+    the next batch's base would be 0 and its dynamic overwrite would
+    replace sealed payload partitions."""
+    from pathlib import Path
+
+    sink = shard_sink(store, TARGET)
+    sink(_docs(spark, 0, 50), 0)
+    shard0 = Path(store, "payload", "shard_id=0")
+    before = {p.name: p.read_bytes() for p in shard0.iterdir()}
+    for part in Path(store, "manifest", "batch_id=0").glob("part-*"):
+        part.write_bytes(b"not a parquet file")
+    with pytest.raises(Exception):
+        sink(_docs(spark, 50, 90), 1)
+    assert {p.name: p.read_bytes() for p in shard0.iterdir()} == before
+
+
+def test_manifest_without_committed_files_has_base_zero(spark, store):
+    """A crashed first attempt leaves only a staging directory under
+    ``manifest/``: that store has no sealed shards, so the base is 0."""
+    from pathlib import Path
+
+    from quantlab_data_pipeline_spark.streaming.shard_sink import _next_base
+
+    Path(store, "manifest", ".spark-staging-0").mkdir(parents=True)
+    assert _next_base(spark, store, 0) == 0
