@@ -27,7 +27,8 @@ its task time:
 - no read-backs: the field manifest is built from the column names of
   the frames just written, not from their footers.
 
-What is written where comes from the dataset catalog
+What is written where, with which columns and types, and the key each
+analyst table is deduplicated on come from the dataset catalog
 (:data:`..schemas.CATALOG`). The manifests record each path relative
 to the data root, so a moved or copied root keeps manifests that
 describe it; the ingest log names the absolute path of each write.
@@ -64,8 +65,7 @@ from ..operators import (
     clean_dividends,
     cumulative_index,
     dedupe_assets_master,
-    dedupe_consensus,
-    dedupe_ratings_history,
+    dedupe_first_non_null,
     delist_adjust,
     drop_duplicates_ordered,
     explode_membership,
@@ -88,22 +88,6 @@ from ..sources.fred import Fetcher, fetch_macro, http_fred_fetcher
 from ..sources.wrds import JdbcWrdsSource, WrdsSource
 
 logger = logging.getLogger(__name__)
-
-_CONSENSUS_COLS = [
-    "date", "asset_id", "ticker", "mean_rating", "median_rating",
-    "stdev_rating", "num_analysts", "buy_percent", "hold_percent",
-    "sell_percent", "num_up", "num_down", "usfirm",
-    "ibes_official_ticker", "ibes_cusip", "company_name",
-]
-
-_HISTORY_COLS = [
-    "date", "asset_id", "ticker", "analyst_id", "rating", "action_code",
-    "rating_text", "statistic_date",
-]
-
-_FUNDA_RAW_COLS = [
-    "revt", "sale", "ni", "at", "ceq", "dltt", "pstk", "oancf", "capx", "xrd",
-]
 
 # The two big facts: year-partitioned by ``partition_by_year``, saved
 # bucketed by ``bucket_facts`` and refreshed by ``update_facts``.
@@ -200,10 +184,16 @@ def _write_many(root: Path, jobs: dict[str, tuple[DataFrame, dict]]) -> dict[str
 
 
 def _canon(df: DataFrame, table: str) -> DataFrame:
-    """Reorder to the registered column order (joins move their keys to
-    the front; the on-disk contract follows the schema registry)."""
-    names = SCHEMAS[table].names
-    return df.select(*names) if set(names) <= set(df.columns) else df
+    """The table as the catalog declares it: its columns in the
+    catalog's order (joins move their keys to the front), each cast to
+    its declared type (a degraded source's empty frames carry their
+    own). A cast to the type a column already has is removed by the
+    optimizer. Raises ``ValueError`` on a missing column."""
+    schema = SCHEMAS[table]
+    missing = [c for c in schema.names if c not in df.columns]
+    if missing:
+        raise ValueError(f"{table} lacks catalog columns {missing}")
+    return df.select(*[F.col(f.name).cast(f.dataType).alias(f.name) for f in schema.fields])
 
 
 def _ibes_tickers(idxref: DataFrame) -> list[str]:
@@ -240,7 +230,7 @@ def build_membership(
     return explode_membership(
         clamped, calendar, id_col="asset_id", start_col="start_date",
         end_col="end_date", flag_col="in_sp500", clamp_end=end,
-    ).select("date", "asset_id", "in_sp500")
+    ).select(*SCHEMAS["sp500_membership"].names)
 
 
 def build_idxref(
@@ -284,11 +274,15 @@ def build_idxref(
 
 
 def build_prices_and_returns(
-    source: WrdsSource, assets_master: DataFrame, permnos: list[int], start: str, end: str
-) -> tuple[DataFrame, DataFrame, DataFrame]:
-    """Step 6: daily price panel + delist-adjusted daily returns.
-    Returns (prices, returns_daily, dlret) so raw snapshots can reuse
-    the delist frame without re-reading the source."""
+    source: WrdsSource,
+    assets_master: DataFrame,
+    dlret: DataFrame,
+    permnos: list[int],
+    start: str,
+    end: str,
+) -> tuple[DataFrame, DataFrame]:
+    """Step 6: daily price panel + returns delist-adjusted by ``dlret``
+    (the source's ``delist_events``). Returns (prices, returns_daily)."""
     raw = source.daily_prices(permnos, start, end).withColumnRenamed("permno", "asset_id")
     prices = with_adj_close(raw)  # P8
     prices = prices.join(  # J2: broadcast dim join
@@ -297,9 +291,8 @@ def build_prices_and_returns(
     returns = prices.select(
         "date", "asset_id", "ticker", F.col("ret").alias("ret_1d")
     )
-    dlret = source.delist_events(permnos, start, end)
     returns = delist_adjust(returns, dlret, ret_col="ret_1d")  # P9+J3
-    return prices, returns, dlret
+    return prices, returns
 
 
 def build_fundamentals(
@@ -316,20 +309,19 @@ def build_fundamentals(
     renamed = joined.withColumnsRenamed(
         {"datadate": "report_date", "permno": "asset_id", **FIELD_MAP["fundamentals"]}
     )
-    friendly = [FIELD_MAP["fundamentals"].get(c, c) for c in _FUNDA_RAW_COLS]
-    return renamed.select("report_date", "asset_id", *friendly)
+    return renamed.select(*SCHEMAS["fundamentals_quarterly"].names)
 
 
 def build_consensus(
     source: WrdsSource, idxref: DataFrame, start: str, end: str
 ) -> DataFrame:
     """Step 8 (J7 + A2): IBES summary -> permno with validity window,
-    then first-non-null dedup per (date, asset_id). Pass ``idxref``
+    then first-non-null dedup per catalog key. Pass ``idxref``
     localized: its tickers and broadcast side then read driver rows."""
+    ds = CATALOG["analyst_consensus"]
     tickers = _ibes_tickers(idxref)
     if not tickers:
-        spark = idxref.sparkSession
-        return local_df(spark, [], ", ".join(f"{c} string" for c in _CONSENSUS_COLS))
+        return local_df(idxref.sparkSession, [], ds.schema)
     recs = source.consensus(tickers, start, end)
     # Only the mapping keys from idxref — its cname would collide with
     # the summary table's own cname (the company_name source).
@@ -356,7 +348,7 @@ def build_consensus(
         F.col("cusip").alias("ibes_cusip"),
         F.col("cname").alias("company_name"),
     ).na.drop(subset=["date", "asset_id"])
-    return dedupe_consensus(shaped).select(*_CONSENSUS_COLS)
+    return dedupe_first_non_null(shaped, ds.key, "date").select(*ds.schema.names)
 
 
 def build_ratings_history(
@@ -366,10 +358,10 @@ def build_ratings_history(
     candidate-column probing (anndats/statpers, analys/amaskcd, ...)
     becomes explicit coalesces over whichever candidates exist. Pass
     ``idxref`` localized, as for :func:`build_consensus`."""
+    ds = CATALOG["analyst_ratings_history"]
     tickers = _ibes_tickers(idxref)
     if not tickers:
-        spark = idxref.sparkSession
-        return local_df(spark, [], ", ".join(f"{c} string" for c in _HISTORY_COLS))
+        return local_df(idxref.sparkSession, [], ds.schema)
     detail = source.ratings_detail(tickers, start, end)
 
     def first_present(*names: str) -> F.Column:
@@ -392,7 +384,7 @@ def build_ratings_history(
         first_present("itext", "recdef").alias("rating_text"),
         first_present("statpers", "anndats").alias("statistic_date"),
     ).na.drop(subset=["date", "asset_id"])
-    return dedupe_ratings_history(shaped).select(*_HISTORY_COLS)
+    return dedupe_first_non_null(shaped, ds.key, "date").select(*ds.schema.names)
 
 
 def build_factors(
@@ -419,27 +411,25 @@ def build_benchmark(source: WrdsSource, start: str, end: str) -> DataFrame:
     The window is a single global order over one small per-day series
     (one row per trading day), so the unpartitioned sort is benign."""
     bench = source.benchmark(start, end).withColumn("benchmark_name", F.lit("^GSPC"))
-    return cumulative_index(bench, ret_col="ret", partition_cols=None).select(
-        "date", "benchmark_name", "level", "ret"
-    )
+    level = cumulative_index(bench, ret_col="ret", partition_cols=None)
+    return level.select(*SCHEMAS["benchmarks"].names)
 
 
 def build_monthly_returns(
-    source: WrdsSource, permnos: list[int], start: str, end: str
-) -> tuple[DataFrame, DataFrame, DataFrame]:
-    """Step 13: monthly panel with delist-adjusted ret_1m. Returns
-    (returns_monthly, prices_monthly_raw, dlret_monthly)."""
+    source: WrdsSource, dlret: DataFrame, permnos: list[int], start: str, end: str
+) -> tuple[DataFrame, DataFrame]:
+    """Step 13: monthly panel with ret_1m delist-adjusted by ``dlret``.
+    Returns (returns_monthly, prices_monthly_raw)."""
     monthly = source.monthly_prices(permnos, start, end).withColumnRenamed(
         "permno", "asset_id"
     )
-    dlret = source.delist_events(permnos, start, end)
     shaped = monthly.select(
         "date", "asset_id", "ret",
         F.col("close").alias("price"), "volume", "shrout",
         F.col("ret").alias("ret_1m"),
     )
     adjusted = delist_adjust(shaped, dlret, ret_col="ret_1m")
-    return adjusted, monthly, dlret
+    return adjusted, monthly
 
 
 def build_dividends(
@@ -458,11 +448,7 @@ def build_dividends(
         monthly=monthly_prices.select("asset_id", "date", "close"),
         daily=daily_prices.select("asset_id", "date", "close"),
     )
-    cleaned = clean_dividends(priced)
-    return cleaned.select(
-        "asset_id", "distcd", "divamt", "facpr", "facshr", "date", "close",
-        "dividend_yield",
-    )
+    return clean_dividends(priced).select(*SCHEMAS["dividends_monthly"].names)
 
 
 # -------------------------------------------------------------- orchestrator
@@ -551,8 +537,10 @@ def ingest(
         end_step(step)
 
         step = start_step("Download daily prices/returns")
-        prices, returns, dlret_daily = build_prices_and_returns(
-            source, assets_master, permnos, start, end
+        # One read of the delist events adjusts both return panels.
+        dlret = source.delist_events(permnos, start, end)
+        prices, returns = build_prices_and_returns(
+            source, assets_master, dlret, permnos, start, end
         )
         end_step(step)
 
@@ -581,8 +569,8 @@ def ingest(
         end_step(step)
 
         step = start_step("Download monthly prices/returns")
-        returns_monthly, prices_monthly, dlret_monthly = build_monthly_returns(
-            source, permnos, start, end
+        returns_monthly, prices_monthly = build_monthly_returns(
+            source, dlret, permnos, start, end
         )
         end_step(step)
 
@@ -619,8 +607,8 @@ def ingest(
             "macro_raw": macro,
             "benchmark_raw": benchmark,
             "prices_monthly_raw": prices_monthly,
-            "dlret_daily_raw": dlret_daily,
-            "dlret_monthly_raw": dlret_monthly,
+            "dlret_daily_raw": dlret,
+            "dlret_monthly_raw": dlret,
             "dividends_monthly_raw": dividends,
         }
         raw_paths = {name: parquet_path(RAW_DIR, name) if save_raw else None for name in raw}
@@ -737,8 +725,9 @@ def update_facts(
         r["permno"] for r in universe.select("permno").distinct().collect()
     )
     assets_master = build_assets_master(source, permnos)
-    prices, returns, _ = build_prices_and_returns(
-        source, assets_master, permnos, start, end
+    prices, returns = build_prices_and_returns(
+        source, assets_master, source.delist_events(permnos, start, end),
+        permnos, start, end,
     )
     for name, df_ in zip(_FACTS, (prices, returns)):
         out = _canon(df_, name).withColumn("year", F.year("date"))

@@ -1,8 +1,6 @@
 from .dedup import (
     dedupe_assets_master,
-    dedupe_consensus,
     dedupe_first_non_null,
-    dedupe_ratings_history,
     drop_duplicates_ordered,
 )
 from .dividends import attach_close_prices, clean_dividends
@@ -21,7 +19,7 @@ from .intervals import (
     trading_calendar,
 )
 from .asof import as_of_join
-from .returns import attach_tickers, delist_adjust, pct_change, with_adj_close
+from .returns import delist_adjust, pct_change, with_adj_close
 from .diff import snapshot_diff
 from .hierarchy import resolve_hierarchy
 from .impute import impute_by_group
@@ -37,13 +35,10 @@ __all__ = [
     "grouped_global_rank",
     "salted_join",
     "attach_close_prices",
-    "attach_tickers",
     "clean_dividends",
     "cumulative_index",
     "dedupe_assets_master",
-    "dedupe_consensus",
     "dedupe_first_non_null",
-    "dedupe_ratings_history",
     "delist_adjust",
     "drop_duplicates_ordered",
     "explode_membership",

@@ -8,6 +8,8 @@ order column and uses ``min_by``/``max_by``-style ordered selection.
 
 from __future__ import annotations
 
+from collections.abc import Sequence
+
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -45,26 +47,18 @@ def dedupe_assets_master(assets: DataFrame) -> DataFrame:
     return assets.groupBy("asset_id").agg(*agg)
 
 
-def dedupe_first_non_null(
-    df: DataFrame, keys: list[str], order: str, cols: list[str] | None = None
-) -> DataFrame:
+def dedupe_first_non_null(df: DataFrame, keys: Sequence[str], order: str) -> DataFrame:
     """A2/A3 (wrds_ingestion.py:256-290): group by ``keys``; every other
     column keeps its first non-null value in ``order``-sorted arrival
     order (the reference relies on input order; we make it explicit).
+    Ingest passes each analyst table's catalog key.
     """
-    value_cols = cols or [c for c in df.columns if c not in {*keys, order}]
-    aggs = [_first_non_null_ordered(c, order).alias(c) for c in value_cols]
+    aggs = [
+        _first_non_null_ordered(c, order).alias(c)
+        for c in df.columns
+        if c not in {*keys, order}
+    ]
     return df.groupBy(*keys).agg(*aggs)
-
-
-def dedupe_consensus(consensus: DataFrame, order: str = "date") -> DataFrame:
-    """A2: consensus dedup on (date, asset_id)."""
-    return dedupe_first_non_null(consensus, ["date", "asset_id"], order)
-
-
-def dedupe_ratings_history(history: DataFrame, order: str = "date") -> DataFrame:
-    """A3: ratings-history dedup on (date, asset_id, analyst_id)."""
-    return dedupe_first_non_null(history, ["date", "asset_id", "analyst_id"], order)
 
 
 def drop_duplicates_ordered(

@@ -21,19 +21,17 @@ def join_momentum(ff: DataFrame, momentum: DataFrame) -> DataFrame:
     return ff.join(momentum, "date", "left")
 
 
-def melt_factors(
-    wide: DataFrame, name_map: dict[str, str] | None = None, scale: float = 100.0
-) -> DataFrame:
+def melt_factors(wide: DataFrame, scale: float = 100.0) -> DataFrame:
     """W4+P11 (wrds_ingestion.py:925-941): wide factor frame ->
     long (date, factor_name, ret), percent -> decimal, nulls dropped.
+    Factors are named by :data:`FACTOR_NAME_MAP`.
 
     One unpivot instead of the reference's per-factor select+concat loop.
     """
-    name_map = name_map or FACTOR_NAME_MAP
-    present = [c for c in name_map if c in wide.columns]
+    present = [c for c in FACTOR_NAME_MAP if c in wide.columns]
     long = wide.unpivot(["date"], present, "factor_name", "ret")
     mapping = F.create_map(
-        *[x for k, v in name_map.items() for x in (F.lit(k), F.lit(v))]
+        *[x for k, v in FACTOR_NAME_MAP.items() for x in (F.lit(k), F.lit(v))]
     )
     return (
         long.withColumn("factor_name", mapping[F.col("factor_name")])
@@ -56,11 +54,9 @@ def cumulative_index(
     returns: DataFrame,
     ret_col: str = "ret",
     partition_cols: list[str] | None = _UNSET,
-    order_col: str = "date",
-    base: float = 100.0,
-    out_col: str = "level",
 ) -> DataFrame:
-    """W1 (wrds_ingestion.py:996): level = cumprod(1+ret) * base.
+    """W1 (wrds_ingestion.py:996): ``level`` = cumprod(1+ret) * 100 in
+    ``date`` order.
 
     Uses the native ``product`` window aggregate (Spark >=3.2) — exact
     for any ret, including ret <= -1 (unlike exp-sum-log1p).
@@ -85,13 +81,7 @@ def cumulative_index(
             stacklevel=2,
         )
         partition_cols = None
-    w = Window.orderBy(order_col).rowsBetween(
+    w = Window.partitionBy(*(partition_cols or [])).orderBy("date").rowsBetween(
         Window.unboundedPreceding, Window.currentRow
     )
-    if partition_cols:
-        w = (
-            Window.partitionBy(*partition_cols)
-            .orderBy(order_col)
-            .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-        )
-    return returns.withColumn(out_col, F.product(1 + F.col(ret_col)).over(w) * base)
+    return returns.withColumn("level", F.product(1 + F.col(ret_col)).over(w) * 100.0)

@@ -76,15 +76,10 @@ def interval_overlap_join(
     )
 
 
-def derive_ibes_coverage(
-    ids: DataFrame,
-    ticker_col: str = "ticker",
-    cusip_col: str = "cusip",
-    cname_col: str = "cname",
-    start_col: str = "start_date",
-    end_col: str = "end_date",
-) -> DataFrame:
-    """Derive per-id validity windows from raw ``tr_ibes.id`` snapshots.
+def derive_ibes_coverage(ids: DataFrame) -> DataFrame:
+    """Derive per-id validity windows from raw ``tr_ibes.id`` snapshots
+    (``ticker``, ``cusip``, ``cname``, snapshot date ``start_date``),
+    adding each window's ``end_date``.
 
     The id file carries one row per (ticker, sdates) snapshot; a
     ticker->CUSIP mapping holds from its snapshot date until the
@@ -103,30 +98,25 @@ def derive_ibes_coverage(
     # cusip in the ordering: a deterministic tiebreak for dirty id files
     # with two same-day snapshots (the zero-length loser island is then
     # dropped deterministically by the downstream overlap filter).
-    w = Window.partitionBy(ticker_col).orderBy(start_col, cusip_col)
-    changed = (
-        ~F.col(cusip_col).eqNullSafe(F.lag(cusip_col).over(w))
-    ).cast("int")
+    w = Window.partitionBy("ticker").orderBy("start_date", "cusip")
+    changed = (~F.col("cusip").eqNullSafe(F.lag("cusip").over(w))).cast("int")
     islands = (
         ids.withColumn("__chg", changed)
         .withColumn(
             "__island",
             F.sum("__chg").over(w.rowsBetween(Window.unboundedPreceding, 0)),
         )
-        .groupBy(ticker_col, "__island")
+        .groupBy("ticker", "__island")
         .agg(
-            F.min(start_col).alias(start_col),
-            F.min(cusip_col).alias(cusip_col),  # constant within an island
-            F.max_by(cname_col, start_col).alias(cname_col),  # latest name
+            F.min("start_date").alias("start_date"),
+            F.min("cusip").alias("cusip"),  # constant within an island
+            F.max_by("cname", "start_date").alias("cname"),  # latest name
         )
     )
-    w2 = Window.partitionBy(ticker_col).orderBy(start_col)
+    w2 = Window.partitionBy("ticker").orderBy("start_date")
     return islands.select(
-        ticker_col,
-        cusip_col,
-        cname_col,
-        start_col,
-        F.date_sub(F.lead(start_col).over(w2), 1).alias(end_col),
+        "ticker", "cusip", "cname", "start_date",
+        F.date_sub(F.lead("start_date").over(w2), 1).alias("end_date"),
     )
 
 

@@ -1,4 +1,4 @@
-"""Price/return transforms (SURVEY §2 P8, P9, J2, J3, W2).
+"""Price/return transforms (SURVEY §2 P8, P9, J3, W2).
 
 Pure DataFrame -> DataFrame functions mirroring the reference's
 ingestion math (citations inline), expressed as Catalyst expressions so
@@ -14,13 +14,6 @@ from pyspark.sql import functions as F
 def with_adj_close(prices: DataFrame) -> DataFrame:
     """P8: adj_close = close * cfacpr (wrds_ingestion.py:188)."""
     return prices.withColumn("adj_close", F.col("close") * F.col("cfacpr"))
-
-
-def attach_tickers(df: DataFrame, assets: DataFrame) -> DataFrame:
-    """J2: left-join tickers from the assets dimension
-    (wrds_ingestion.py:440-443). Broadcast — the dim is small."""
-    dim = assets.select("asset_id", "ticker")
-    return df.join(F.broadcast(dim), "asset_id", "left")
 
 
 def delist_adjust(

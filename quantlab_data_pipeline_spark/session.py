@@ -13,7 +13,6 @@ from pathlib import Path
 
 from pyspark.sql import SparkSession
 
-DEFAULT_SHUFFLE_PARTITIONS = os.environ.get("SPARK_GRAFT_CPUS", "32")
 # The directory holding this package: the Python workers import the
 # daemon module and the kernels from it, wherever the driver runs.
 PACKAGE_ROOT = str(Path(__file__).resolve().parent.parent)

@@ -18,7 +18,9 @@ from collections.abc import Callable, Sequence
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..functions import safe_double
 from ..localframe import local_df
+from ..schemas import SCHEMAS
 
 DEFAULT_SERIES = ("CPIAUCSL", "UNRATE", "INDPRO")
 FRED_URL = "https://api.stlouisfed.org/fred/series/observations"
@@ -79,8 +81,8 @@ def fetch_macro(
 ) -> DataFrame:
     """(date, series_name, value) long frame across all requested series.
 
-    Non-numeric observation values become null via ``try_cast`` (ANSI
-    mode makes a plain cast throw) and are dropped — exactly the
+    Non-numeric observation values become null via
+    :func:`..functions.safe_double` and are dropped — exactly the
     reference's try/float/skip loop, as a Catalyst expression."""
     fetcher = fetcher or http_fred_fetcher()
     rows = []
@@ -88,13 +90,11 @@ def fetch_macro(
         for obs in fetcher(series_id, start, end):
             rows.append((obs.get("date"), series_id, obs.get("value")))
     if not rows:
-        return local_df(spark, [], "date date, series_name string, value double")
+        return local_df(spark, [], SCHEMAS["macro_timeseries"])
     raw = local_df(spark, rows, "date string, series_name string, value string")
     return (
         raw.select(
-            F.to_date("date").alias("date"),
-            "series_name",
-            F.expr("try_cast(value as double)").alias("value"),
+            F.to_date("date").alias("date"), "series_name", safe_double("value").alias("value")
         )
         .filter(F.col("value").isNotNull())
     )

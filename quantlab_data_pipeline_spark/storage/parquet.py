@@ -213,7 +213,7 @@ class LocalParquetDataHandler(DataHandler):
         df: DataFrame,
         start_date: DateLike | None,
         end_date: DateLike | None,
-        col: str = "date",
+        col: str,
     ) -> DataFrame:
         if col not in df.columns:
             return df
@@ -250,6 +250,24 @@ class LocalParquetDataHandler(DataHandler):
             df = df.filter(F.col("asset_id").isin(asset_ids))
         return df
 
+    def _narrow(
+        self,
+        df: DataFrame,
+        table: str,
+        tickers: AssetLike | None,
+        start_date: DateLike | None,
+        end_date: DateLike | None,
+    ) -> DataFrame:
+        """``df`` (read from ``table``) kept to the tickers' assets and
+        to the window on the table's time column, with the layout's
+        ``year`` column dropped."""
+        ids = self._tickers_to_asset_ids(tickers) if tickers else None
+        df = self._filter_assets(df, ids)
+        df = self._filter_dates(df, start_date, end_date, CATALOG[table].time_col)
+        if "year" in df.columns:
+            df = df.drop("year")  # layout detail, not part of the dataset
+        return df
+
     def _panel_query(
         self,
         table: str,
@@ -258,15 +276,9 @@ class LocalParquetDataHandler(DataHandler):
         end_date: DateLike | None,
         fields: Optional[list[str]] = None,
         mandatory: Optional[list[str]] = None,
-        date_col: str = "date",
         renames: Optional[dict[str, str]] = None,
     ) -> DataFrame:
-        df = self._scan(table)
-        ids = self._tickers_to_asset_ids(tickers) if tickers else None
-        df = self._filter_assets(df, ids)
-        df = self._filter_dates(df, start_date, end_date, col=date_col)
-        if "year" in df.columns:
-            df = df.drop("year")  # layout detail, not part of the dataset
+        df = self._narrow(self._scan(table), table, tickers, start_date, end_date)
         if fields is not None and mandatory is not None:
             df = self._filter_fields(df, fields, mandatory)
         if renames:
@@ -274,8 +286,9 @@ class LocalParquetDataHandler(DataHandler):
         return self._sized(df, table)
 
     @staticmethod
-    def _finish(df: DataFrame, sort_keys: list[str]) -> pd.DataFrame:
-        return df.orderBy(*sort_keys).toPandas()
+    def _finish(df: DataFrame, table: str) -> pd.DataFrame:
+        """``df`` as pandas, sorted by ``table``'s catalog key."""
+        return df.orderBy(*CATALOG[table].key).toPandas()
 
     # ---------------------------------------------------------- lazy getters
 
@@ -297,7 +310,7 @@ class LocalParquetDataHandler(DataHandler):
     def get_fundamentals_df(self, tickers=None, start_date=None, end_date=None) -> DataFrame:
         return self._panel_query(
             "fundamentals_quarterly", tickers, start_date, end_date,
-            date_col="report_date", renames=self._field_map.get("fundamentals"),
+            renames=self._field_map.get("fundamentals"),
         )
 
     def get_analyst_consensus_df(self, tickers=None, start_date=None, end_date=None, fields=None) -> DataFrame:
@@ -353,20 +366,14 @@ class LocalParquetDataHandler(DataHandler):
         # Normalize after the join so both physical paths return the
         # same schema (timestamp dates, like every other getter).
         joined = self._normalize_dates(joined, "prices_daily")
-        ids = self._tickers_to_asset_ids(tickers) if tickers else None
-        joined = self._filter_assets(joined, ids)
-        joined = self._filter_dates(joined, start_date, end_date)
-        if "year" in joined.columns:
-            joined = joined.drop("year")
+        joined = self._narrow(joined, "prices_daily", tickers, start_date, end_date)
         return self._sized(joined, *tables)
 
     def get_macro_df(self, start_date=None, end_date=None) -> DataFrame:
-        df = self._filter_dates(self._scan("macro_timeseries"), start_date, end_date)
-        return self._sized(df, "macro_timeseries")
+        return self._panel_query("macro_timeseries", None, start_date, end_date)
 
     def get_style_factor_returns_df(self, start_date=None, end_date=None) -> DataFrame:
-        df = self._filter_dates(self._scan("style_factor_returns"), start_date, end_date)
-        return self._sized(df, "style_factor_returns")
+        return self._panel_query("style_factor_returns", None, start_date, end_date)
 
     def get_benchmark_returns_df(self, benchmark: str, start_date=None, end_date=None) -> DataFrame:
         df = self._scan("benchmarks")
@@ -377,52 +384,49 @@ class LocalParquetDataHandler(DataHandler):
             else:
                 df = df.withColumn("benchmark_name", F.lit(benchmark))
         df = df.filter(F.col("benchmark_name") == benchmark)
-        return self._sized(self._filter_dates(df, start_date, end_date), "benchmarks")
+        df = self._narrow(df, "benchmarks", None, start_date, end_date)
+        return self._sized(df, "benchmarks")
 
     # -------------------------------------------------- pandas (API parity)
+    # Each sorted by its table's catalog key.
 
     def get_prices(self, tickers, start_date=None, end_date=None, fields=None) -> pd.DataFrame:
         return self._finish(
-            self.get_prices_df(tickers, start_date, end_date, fields),
-            ["date", "asset_id"],
+            self.get_prices_df(tickers, start_date, end_date, fields), "prices_daily"
         )
 
     def get_returns(self, tickers, start_date=None, end_date=None) -> pd.DataFrame:
-        return self._finish(
-            self.get_returns_df(tickers, start_date, end_date), ["date", "asset_id"]
-        )
+        return self._finish(self.get_returns_df(tickers, start_date, end_date), "returns_daily")
 
     def get_universe(self, date=None) -> pd.DataFrame:
-        return self._finish(self.get_universe_df(date), ["date", "asset_id"])
+        return self._finish(self.get_universe_df(date), "universe_sp500")
 
     def get_fundamentals(self, tickers, start_date=None, end_date=None) -> pd.DataFrame:
         return self._finish(
-            self.get_fundamentals_df(tickers, start_date, end_date),
-            ["report_date", "asset_id"],
+            self.get_fundamentals_df(tickers, start_date, end_date), "fundamentals_quarterly"
         )
 
     def get_analyst_consensus(self, tickers, start_date=None, end_date=None, fields=None) -> pd.DataFrame:
         return self._finish(
             self.get_analyst_consensus_df(tickers, start_date, end_date, fields),
-            ["date", "asset_id"],
+            "analyst_consensus",
         )
 
     def get_analyst_ratings_history(self, tickers, start_date=None, end_date=None, fields=None) -> pd.DataFrame:
         return self._finish(
             self.get_analyst_ratings_history_df(tickers, start_date, end_date, fields),
-            ["date", "asset_id"],
+            "analyst_ratings_history",
         )
 
     def get_macro(self, start_date=None, end_date=None) -> pd.DataFrame:
-        return self._finish(self.get_macro_df(start_date, end_date), ["date", "series_name"])
+        return self._finish(self.get_macro_df(start_date, end_date), "macro_timeseries")
 
     def get_style_factor_returns(self, start_date=None, end_date=None) -> pd.DataFrame:
         return self._finish(
-            self.get_style_factor_returns_df(start_date, end_date),
-            ["date", "factor_name"],
+            self.get_style_factor_returns_df(start_date, end_date), "style_factor_returns"
         )
 
     def get_benchmark_returns(self, benchmark: str, start_date=None, end_date=None) -> pd.DataFrame:
         return self._finish(
-            self.get_benchmark_returns_df(benchmark, start_date, end_date), ["date"]
+            self.get_benchmark_returns_df(benchmark, start_date, end_date), "benchmarks"
         )

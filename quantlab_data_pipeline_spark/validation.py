@@ -6,9 +6,9 @@ every canonical dataset in ONE Spark job per table — each check is an
 aggregate expression, so the table is scanned once no matter how many
 checks run:
 
-- primary-key uniqueness (keys from the implied-key catalog, SURVEY §1.4)
+- primary-key uniqueness (each table's catalog key, SURVEY §1.4)
 - non-null key columns
-- date bounds inside the ingest window
+- the key's date column inside the ingest window
 - domain checks (returns > -1, non-negative volume/shrout, bool flags)
 
 Returns a list of failure dicts (empty = clean); ``raise_on_failure``
@@ -22,26 +22,7 @@ from pathlib import Path
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .schemas import CATALOG, SCHEMAS
-
-# Implied primary key per dataset (SURVEY §1.4 table).
-PRIMARY_KEYS: dict[str, list[str]] = {
-    "prices_daily": ["date", "asset_id"],
-    "returns_daily": ["date", "asset_id"],
-    "returns_monthly": ["date", "asset_id"],
-    "fundamentals_quarterly": ["report_date", "asset_id"],
-    "analyst_consensus": ["date", "asset_id"],
-    "analyst_ratings_history": ["date", "asset_id", "analyst_id"],
-    "macro_timeseries": ["date", "series_name"],
-    "style_factor_returns": ["date", "factor_name"],
-    "risk_free": ["date"],
-    "benchmarks": ["date", "benchmark_name"],
-    "sp500_membership": ["date", "asset_id"],
-    "dividends_monthly": ["asset_id", "date"],
-    "assets_master": ["asset_id"],
-    "universe_sp500": ["date", "asset_id"],
-    "trading_calendar": ["date"],
-}
+from .schemas import CATALOG
 
 # (table, column) -> lower bound is exclusive -1 (a return of -100% is
 # a data error in CRSP-shaped data; delist-adjusted can touch -1 only
@@ -62,13 +43,6 @@ class ValidationError(RuntimeError):
     pass
 
 
-def _date_col(table: str) -> str | None:
-    names = SCHEMAS[table].names
-    return "report_date" if "report_date" in names else (
-        "date" if "date" in names else None
-    )
-
-
 def validate_table(
     df: DataFrame,
     table: str,
@@ -76,13 +50,12 @@ def validate_table(
     end: str | None = None,
 ) -> list[dict]:
     """All checks for one table in a single aggregate pass."""
-    keys = PRIMARY_KEYS.get(table, [])
-    aggs = [F.count(F.lit(1)).alias("__rows")]
-    if keys:
-        aggs.append(F.count_distinct(*[F.col(k) for k in keys]).alias("__distinct_keys"))
-        for k in keys:
-            aggs.append(F.sum(F.col(k).isNull().cast("long")).alias(f"__null_{k}"))
-    dcol = _date_col(table)
+    keys, dcol = CATALOG[table].key, CATALOG[table].time_col
+    aggs = [
+        F.count(F.lit(1)).alias("__rows"),
+        F.count_distinct(*[F.col(k) for k in keys]).alias("__distinct_keys"),
+        *[F.sum(F.col(k).isNull().cast("long")).alias(f"__null_{k}") for k in keys],
+    ]
     if dcol and start:
         aggs.append(
             F.sum((F.col(dcol) < F.lit(start).cast("date")).cast("long")).alias("__before")
@@ -105,13 +78,13 @@ def validate_table(
     if row["__rows"] == 0:
         fail("non_empty", "table has 0 rows")
         return failures
-    if keys and row["__distinct_keys"] != row["__rows"]:
+    if row["__distinct_keys"] != row["__rows"]:
         fail(
             "unique_key",
-            f"{row['__rows'] - row['__distinct_keys']} duplicate rows on {keys}",
+            f"{row['__rows'] - row['__distinct_keys']} duplicate rows on {list(keys)}",
         )
     for k in keys:
-        if row.get(f"__null_{k}", 0):
+        if row[f"__null_{k}"]:
             fail("non_null_key", f"{row[f'__null_{k}']} null values in key column {k}")
     if row.get("__before"):
         fail("date_window", f"{row['__before']} rows before {start}")

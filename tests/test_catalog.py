@@ -1,20 +1,22 @@
 """The dataset catalog (``schemas.CATALOG``) is the one declaration of
-each canonical dataset's directory, provenance source and single-file
-shape. Ingest, the handler and validation read it; no other module
-spells a dataset's ``.parquet`` path, keeps its own set of meta tables
-or its own table of date columns."""
+each canonical dataset's directory, provenance source, key, written
+columns and single-file shape. Ingest, the handler and validation read
+it; no other module spells a dataset's ``.parquet`` path, keeps its own
+set of meta tables, its own table of date columns or keys, or its own
+copy of a dataset's column list."""
 
 from __future__ import annotations
 
 import ast
 from pathlib import Path
 
-from quantlab_data_pipeline_spark.schemas import CATALOG, META_DIR
+from quantlab_data_pipeline_spark.schemas import CATALOG, META_DIR, SCHEMAS
 
 PACKAGE = Path(__file__).resolve().parents[1] / "quantlab_data_pipeline_spark"
 TESTS = Path(__file__).resolve().parent
 
 _META = {name for name, ds in CATALOG.items() if ds.dir == META_DIR}
+_COLUMN_LISTS = [schema.names for schema in SCHEMAS.values()]
 
 
 def _strings(tree: ast.AST) -> list[tuple[int, str]]:
@@ -48,6 +50,19 @@ def _literal_strings(node: ast.AST) -> list[str] | None:
     return None
 
 
+def _per_dataset_lists(node: ast.AST) -> list[tuple]:
+    """(dataset, string list) pairs of a dict literal from two or more
+    dataset names to string-list literals, else []."""
+    if not (
+        isinstance(node, ast.Dict)
+        and len(node.keys) >= 2
+        and all(isinstance(k, ast.Constant) and k.value in CATALOG for k in node.keys)
+    ):
+        return []
+    pairs = [(CATALOG[k.value], _literal_strings(v)) for k, v in zip(node.keys, node.values)]
+    return pairs if all(cols is not None for _, cols in pairs) else []
+
+
 def _catalog_uses(source: str, path_rules: bool = True) -> list[str]:
     """Where ``source`` repeats what the catalog declares:
 
@@ -56,7 +71,9 @@ def _catalog_uses(source: str, path_rules: bool = True) -> list[str]:
       or a module reading ``schemas`` that builds one (its dataset
       paths come from the catalog) — with ``path_rules``;
     * a collection literal holding two or more meta-table names;
-    * a dict literal from datasets to their date columns.
+    * a dict literal from datasets to their date columns;
+    * a dict literal from two or more datasets to their keys;
+    * a list or tuple literal equal to a dataset's full column list.
     """
     tree = ast.parse(source)
     found = [
@@ -85,17 +102,13 @@ def _catalog_uses(source: str, path_rules: bool = True) -> list[str]:
         elems = _literal_strings(node)
         if elems is not None and len(_META & set(elems)) >= 2:
             found.append(f"line {node.lineno}: meta-table set {sorted(elems)}")
-        if (
-            isinstance(node, ast.Dict)
-            and len(node.keys) >= 2
-            and all(isinstance(k, ast.Constant) and k.value in CATALOG for k in node.keys)
-            and all(
-                (cols := _literal_strings(v)) is not None
-                and set(cols) <= set(CATALOG[k.value].date_cols)
-                for k, v in zip(node.keys, node.values)
-            )
-        ):
+        if isinstance(node, (ast.List, ast.Tuple)) and elems in _COLUMN_LISTS:
+            found.append(f"line {node.lineno}: column list of a dataset")
+        per_dataset = _per_dataset_lists(node)
+        if per_dataset and all(set(cols) <= set(ds.date_cols) for ds, cols in per_dataset):
             found.append(f"line {node.lineno}: date-column table")
+        if per_dataset and all(cols == list(ds.key) for ds, cols in per_dataset):
+            found.append(f"line {node.lineno}: key table")
     return found
 
 
@@ -124,9 +137,11 @@ def test_catalog_guard_sees_the_repeated_shapes():
         '    return root / "data_processed" / "returns_daily.parquet"\n'
         'def g(root, table):\n'
         '    return root / f"{table}.parquet"\n'
+        'COLS = ("date", "asset_id", "ticker", "ret_1d")\n'
+        'SOME = ["date", "asset_id", "ticker"]\n'
     )
-    found = sorted(u.split(":")[0] for u in _catalog_uses(src))
-    assert found == ["line 3", "line 4", "line 7", "line 7", "line 9"], found
+    found = sorted(int(u.split(":")[0].removeprefix("line ")) for u in _catalog_uses(src))
+    assert found == [3, 4, 5, 7, 7, 9, 10], found
 
 
 def test_catalog_guard_path_rule_is_scoped_to_functions():
@@ -144,3 +159,15 @@ def test_catalog_guard_path_rule_is_scoped_to_functions():
 def test_timestamp_columns_are_the_schema_date_fields():
     assert CATALOG["assets_master"].date_cols == ["first_date", "last_date", "ipodate"]
     assert CATALOG["analyst_ratings_history"].date_cols == ["date", "statistic_date"]
+
+
+def test_every_key_column_is_in_its_schema():
+    for name, ds in CATALOG.items():
+        assert ds.key and set(ds.key) <= set(ds.schema.names), name
+
+
+def test_time_col_is_the_key_date_column():
+    times = {name: ds.time_col for name, ds in CATALOG.items()}
+    assert times.pop("fundamentals_quarterly") == "report_date"
+    assert times.pop("assets_master") is None
+    assert set(times.values()) == {"date"} and len(times) == 13

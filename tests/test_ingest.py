@@ -24,12 +24,26 @@ from quantlab_data_pipeline_spark.storage.parquet import LocalParquetDataHandler
 START, END = "2020-01-01", "2020-06-30"
 
 
+class RecordingSource(SyntheticWrdsSource):
+    """The synthetic source, counting its ``delist_events`` reads."""
+
+    delist_reads = 0
+
+    def delist_events(self, permnos, start, end):
+        self.delist_reads += 1
+        return super().delist_events(permnos, start, end)
+
+
 @pytest.fixture(scope="module")
-def data_root(spark, tmp_path_factory):
+def data_source(spark):
+    return RecordingSource(spark, n_assets=6)
+
+
+@pytest.fixture(scope="module")
+def data_root(spark, data_source, tmp_path_factory):
     root = tmp_path_factory.mktemp("ingest_root")
     ingest(
-        root, START, END, save_raw=True,
-        source=SyntheticWrdsSource(spark, n_assets=6),
+        root, START, END, save_raw=True, source=data_source,
         fred_fetcher=synthetic_fred_fetcher(), spark=spark,
     )
     return root / "quantlab_data_pipeline"
@@ -40,15 +54,31 @@ def handler(data_root, spark):
     return LocalParquetDataHandler(data_root, spark=spark)
 
 
+def _typed(schema) -> list[tuple[str, str]]:
+    return [(f.name, f.dataType.simpleString()) for f in schema.fields]
+
+
 def test_all_outputs_exist_with_registered_schemas(data_root, spark):
     for table, schema in SCHEMAS.items():
         path = data_root / CATALOG[table].path
         assert path.exists(), f"missing {table}"
         df = spark.read.parquet(str(path))
         assert df.count() > 0, f"{table} is empty"
-        assert df.columns == schema.names, (
-            f"{table} columns {df.columns} != registered {schema.names}"
-        )
+        assert _typed(df.schema) == _typed(schema), table
+
+
+def test_ingest_reads_delist_events_once(data_root, data_source):
+    """Both return panels and both delist raw snapshots come from one
+    read of the source's delist events."""
+    assert data_source.delist_reads == 1
+
+
+def test_canon_raises_on_a_missing_catalog_column(spark):
+    from quantlab_data_pipeline_spark.ingestion.pipeline import _canon
+
+    df = spark.createDataFrame([], "date date, asset_id long, ticker string")
+    with pytest.raises(ValueError, match="ret_1d"):
+        _canon(df, "returns_daily")
 
 
 def test_manifests_written(data_root):
@@ -288,7 +318,9 @@ def test_consensus_first_non_null_dedup(handler):
 def test_ratings_history_keys(handler):
     h = handler.get_analyst_ratings_history(["CHRL"], start_date=START, end_date=END)
     assert len(h) > 0
-    assert not h.duplicated(subset=["date", "asset_id", "analyst_id"]).any()
+    key = list(CATALOG["analyst_ratings_history"].key)
+    assert not h.duplicated(subset=key).any()
+    assert h[key].equals(h[key].sort_values(key).reset_index(drop=True))
     assert set(h["rating"].dropna()) <= {1.0, 2.0, 3.0, 4.0, 5.0}
 
 
@@ -355,9 +387,7 @@ def test_monthly_returns_shape(handler, data_root, spark):
     rm = spark.read.parquet(
         str(data_root / CATALOG["returns_monthly"].path)
     ).toPandas()
-    assert list(rm.columns) == [
-        "date", "asset_id", "ret", "price", "volume", "shrout", "ret_1m"
-    ]
+    assert list(rm.columns) == SCHEMAS["returns_monthly"].names
     assert len(rm) > 0
 
 
@@ -605,7 +635,7 @@ def test_ingest_completes_with_degraded_optional_branches(spark, tmp_path_factor
     for name in empty:
         df = spark.read.parquet(str(out / CATALOG[name].path))
         assert df.count() == 0, name
-        assert df.columns == list(SCHEMAS[name].fieldNames()), name
+        assert _typed(df.schema) == _typed(SCHEMAS[name]), name
     # core branches unaffected
     assert spark.read.parquet(str(out / CATALOG["prices_daily"].path)).count() > 0
     assert spark.read.parquet(str(out / CATALOG["returns_daily"].path)).count() > 0
@@ -683,7 +713,7 @@ def test_ratings_history_handles_det_rec_shape(spark):
     import datetime as dt
 
     from quantlab_data_pipeline_spark.ingestion.pipeline import (
-        build_idxref, build_ratings_history,
+        _canon, build_idxref, build_ratings_history,
     )
 
     class DetRecSource(SyntheticWrdsSource):
@@ -706,6 +736,9 @@ def test_ratings_history_handles_det_rec_shape(spark):
     assert rows["IB0"]["analyst_id"] == 123  # amaskcd probed
     assert rows["IB0"]["rating"] == 2.0      # rec probed
     assert rows["IB0"]["rating_text"] is None  # itext absent -> null
+    # absent candidates are untyped nulls; the table is written typed
+    written = _canon(out, "analyst_ratings_history").schema
+    assert _typed(written) == _typed(SCHEMAS["analyst_ratings_history"])
 
 
 def test_bucketed_tables_are_root_scoped(spark, tmp_path_factory):

@@ -13,7 +13,7 @@ from quantlab_data_pipeline_spark.operators import (
     clean_dividends,
     cumulative_index,
     dedupe_assets_master,
-    dedupe_consensus,
+    dedupe_first_non_null,
     delist_adjust,
     explode_membership,
     interval_overlap_join,
@@ -23,6 +23,7 @@ from quantlab_data_pipeline_spark.operators import (
     trading_calendar,
     with_adj_close,
 )
+from quantlab_data_pipeline_spark.schemas import CATALOG
 
 
 def _d(s: str) -> dt.date:
@@ -113,7 +114,8 @@ def test_dedupe_consensus_first_non_null(spark):
         ],
         "date date, asset_id long, mean_rating double, median_rating double, seq int",
     )
-    out = dedupe_consensus(df, order="seq").collect()
+    key = CATALOG["analyst_consensus"].key
+    out = dedupe_first_non_null(df, key, order="seq").collect()
     assert len(out) == 1
     row = out[0]
     assert row["mean_rating"] == 2.5  # first non-null in seq order

@@ -274,49 +274,6 @@ def test_csv_corpus_reads_declared_schema(spark, tmp_path):
     assert quarantine.count() == 1
 
 
-def test_fred_python_datasource_matches_driver_path(spark):
-    """The V2 Python Data Source (one InputPartition per series, reject
-    semantics in the partition reader) must return exactly the rows the
-    driver-side fetch_macro path produces with the same synthetic
-    fetcher, and fan out one partition per requested series."""
-    from quantlab_data_pipeline_spark.sources.fred import (
-        fetch_macro,
-        synthetic_fred_fetcher,
-    )
-    from quantlab_data_pipeline_spark.sources.fred_datasource import FredDataSource
-
-    spark.dataSource.register(FredDataSource)
-    df = (
-        spark.read.format("fred")
-        .option("series", "CPIAUCSL,UNRATE")
-        .option("start", "2020-01-01")
-        .option("end", "2020-12-31")
-        .option("mode", "synthetic")
-        .load()
-    )
-    assert df.rdd.getNumPartitions() == 2
-    got = {tuple(r) for r in df.collect()}
-    want = {
-        tuple(r)
-        for r in fetch_macro(
-            spark, "2020-01-01", "2020-12-31",
-            series=("CPIAUCSL", "UNRATE"),
-            fetcher=synthetic_fred_fetcher(),
-        ).collect()
-    }
-    assert got == want and len(got) > 0
-
-
-def test_fred_python_datasource_option_validation(spark):
-    from quantlab_data_pipeline_spark.sources.fred_datasource import FredReader
-
-    import pytest as _pytest
-    with _pytest.raises(ValueError, match="start"):
-        FredReader({"series": "UNRATE"})
-    with _pytest.raises(ValueError, match="mode"):
-        FredReader({"start": "2020-01-01", "end": "2020-02-01", "mode": "ftp"})
-
-
 def test_jsonl_export_round_trips_hostile_text(spark, tmp_path):
     """write_jsonl_corpus -> read_jsonl_corpus preserves every row and
     byte of text through JSON escaping: newlines, tabs, quotes,
