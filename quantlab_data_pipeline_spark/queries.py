@@ -4,6 +4,10 @@ ANSI-SQL DuckDB oracle.
 
 Design notes
 ------------
+- Each row is declared once, at its function: ``@row(oracle_sql)``
+  (``queries_ext.row``; ``None`` for a rows-only row). ``SPARK_QUERIES``
+  and ``ORACLE_SQL`` at the end of this module are derived from the
+  declarations here and in ``queries_ext``, in one declared order.
 - Spark side uses the DataFrame API so Catalyst sees a declarative plan
   (pushdown, pruning, join selection); oracles are plain SQL DuckDB runs
   on the same parquet files.
@@ -46,20 +50,47 @@ Operator coverage map (SURVEY §2 -> query):
 
 from __future__ import annotations
 
-from collections.abc import Callable
+import sys
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from . import queries_ext
+from .queries_ext import (
+    _STOP_DE,
+    _STOP_EN,
+    _STOP_ES,
+    _STOP_FR,
+    QueryFn,
+    _ivf_topk_oracle_sql,
+    _lsh_topk_oracle_sql,
+    _minhash_lsh_oracle_sql,
+    _simhash_oracle_sql,
+    declared_rows,
+    row,
+)
 from .sources.testdata import load_table
 
-QueryFn = Callable[[SparkSession, str], DataFrame]
 
 # --------------------------------------------------------------------------
 # TPC-H-style analytical queries
 # --------------------------------------------------------------------------
 
 
+@row("""
+        SELECT l_returnflag, l_linestatus,
+               round(sum(l_quantity), 2)       AS sum_qty,
+               round(sum(l_extendedprice), 2)  AS sum_base_price,
+               round(sum(l_extendedprice * (1 - l_discount)), 2) AS sum_disc_price,
+               round(sum(l_extendedprice * (1 - l_discount) * (1 + l_tax)), 2) AS sum_charge,
+               round(avg(l_quantity), 2)       AS avg_qty,
+               round(avg(l_extendedprice), 2)  AS avg_price,
+               round(avg(l_discount), 4)       AS avg_disc,
+               count(*)                        AS count_order
+        FROM lineitem
+        WHERE l_shipdate <= TIMESTAMP '1998-09-02'
+        GROUP BY l_returnflag, l_linestatus
+    """)
 def q1_pricing_summary(spark: SparkSession, sf: str) -> DataFrame:
     """TPC-H Q1 shape: scan -> filter -> hash agg with derived columns.
 
@@ -84,6 +115,19 @@ def q1_pricing_summary(spark: SparkSession, sf: str) -> DataFrame:
     )
 
 
+@row("""
+        SELECT l_orderkey, o_orderdate, o_orderpriority,
+               round(sum(l_extendedprice * (1 - l_discount)), 2) AS revenue
+        FROM customer
+        JOIN orders   ON c_custkey = o_custkey
+        JOIN lineitem ON l_orderkey = o_orderkey
+        WHERE c_mktsegment = 'BUILDING'
+          AND o_orderdate < TIMESTAMP '1999-03-15'
+          AND l_shipdate  > TIMESTAMP '1999-03-15'
+        GROUP BY l_orderkey, o_orderdate, o_orderpriority
+        ORDER BY revenue DESC, l_orderkey ASC
+        LIMIT 10
+    """)
 def q3_shipping_priority(spark: SparkSession, sf: str) -> DataFrame:
     """TPC-H Q3 shape: 3-way join -> agg -> top-10 (J5, O-topk)."""
     cust = load_table(spark, sf, "customer").filter(
@@ -109,6 +153,20 @@ def q3_shipping_priority(spark: SparkSession, sf: str) -> DataFrame:
     )
 
 
+@row("""
+        SELECT n_name,
+               round(sum(l_extendedprice * (1 - l_discount)), 2) AS revenue
+        FROM lineitem
+        JOIN orders   ON l_orderkey = o_orderkey
+        JOIN customer ON o_custkey = c_custkey
+        JOIN supplier ON l_suppkey = s_suppkey AND c_nationkey = s_nationkey
+        JOIN nation   ON s_nationkey = n_nationkey
+        JOIN region   ON n_regionkey = r_regionkey
+        WHERE r_name = 'ASIA'
+          AND o_orderdate >= TIMESTAMP '1996-01-01'
+          AND o_orderdate <  TIMESTAMP '1998-01-01'
+        GROUP BY n_name
+    """)
 def q5_local_supplier(spark: SparkSession, sf: str) -> DataFrame:
     """TPC-H Q5 shape: 6-way join with small-dim broadcast (J2/J5).
 
@@ -143,6 +201,17 @@ def q5_local_supplier(spark: SparkSession, sf: str) -> DataFrame:
     )
 
 
+@row("""
+        SELECT o_orderpriority, count(*) AS order_count
+        FROM orders
+        WHERE o_orderdate >= TIMESTAMP '1996-07-01'
+          AND o_orderdate <  TIMESTAMP '1996-10-01'
+          AND EXISTS (
+              SELECT 1 FROM lineitem
+              WHERE l_orderkey = o_orderkey AND l_returnflag = 'R'
+          )
+        GROUP BY o_orderpriority
+    """)
 def q4_order_priority(spark: SparkSession, sf: str) -> DataFrame:
     """TPC-H Q4 shape: EXISTS subquery -> left-semi join + agg."""
     orders = load_table(spark, sf, "orders").filter(
@@ -163,6 +232,21 @@ def q4_order_priority(spark: SparkSession, sf: str) -> DataFrame:
     )
 
 
+@row("""
+        SELECT n1.n_name AS supp_nation, n2.n_name AS cust_nation,
+               CAST(year(l_shipdate) AS INT) AS l_year,
+               round(sum(l_extendedprice * (1 - l_discount)), 2) AS revenue
+        FROM lineitem
+        JOIN supplier ON l_suppkey = s_suppkey
+        JOIN orders   ON l_orderkey = o_orderkey
+        JOIN customer ON o_custkey = c_custkey
+        JOIN nation n1 ON s_nationkey = n1.n_nationkey
+        JOIN nation n2 ON c_nationkey = n2.n_nationkey
+        WHERE l_shipdate BETWEEN TIMESTAMP '1996-01-01' AND TIMESTAMP '1997-12-31'
+          AND ((n1.n_name = 'NATION_3' AND n2.n_name = 'NATION_7')
+            OR (n1.n_name = 'NATION_7' AND n2.n_name = 'NATION_3'))
+        GROUP BY 1, 2, 3
+    """)
 def q7_volume_shipping(spark: SparkSession, sf: str) -> DataFrame:
     """TPC-H Q7 shape: nation-pair volume — two dim lineages from the
     same broadcast table, year extraction, grouped revenue."""
@@ -201,6 +285,17 @@ def q7_volume_shipping(spark: SparkSession, sf: str) -> DataFrame:
     )
 
 
+@row("""
+        SELECT round(sum(l_extendedprice) / 7.0, 2) AS avg_yearly,
+               count(*) AS n_lines
+        FROM lineitem
+        JOIN part ON l_partkey = p_partkey
+        WHERE p_brand = 'Brand#9'
+          AND l_quantity < (
+              SELECT 0.8 * avg(l_quantity) FROM lineitem li2
+              WHERE li2.l_partkey = lineitem.l_partkey
+          )
+    """)
 def q17_small_quantity(spark: SparkSession, sf: str) -> DataFrame:
     """TPC-H Q17 shape: per-key scalar aggregate feeding a filter on the
     same fact (correlated scalar subquery -> join against a per-part
@@ -226,6 +321,13 @@ def q17_small_quantity(spark: SparkSession, sf: str) -> DataFrame:
 # --------------------------------------------------------------------------
 
 
+@row("""
+        SELECT o_orderkey, o_custkey, o_orderdate, o_totalprice
+        FROM orders
+        WHERE o_orderdate >= TIMESTAMP '1997-01-01'
+          AND o_orderdate <= TIMESTAMP '1997-12-31'
+          AND o_orderstatus = 'O'
+    """)
 def filter_project(spark: SparkSession, sf: str) -> DataFrame:
     """P1+P2+P4: the DataHandler read spine on testdata.
 
@@ -240,6 +342,13 @@ def filter_project(spark: SparkSession, sf: str) -> DataFrame:
     ).select("o_orderkey", "o_custkey", "o_orderdate", "o_totalprice")
 
 
+@row("""
+        SELECT o_orderkey, o_custkey, o_totalprice
+        FROM orders
+        WHERE o_custkey IN (
+            SELECT c_custkey FROM customer WHERE c_mktsegment = 'BUILDING'
+        )
+    """)
 def semi_join_in_list(spark: SparkSession, sf: str) -> DataFrame:
     """P3/J1: semi-join filter — orders of BUILDING-segment customers."""
     orders = load_table(spark, sf, "orders")
@@ -251,6 +360,14 @@ def semi_join_in_list(spark: SparkSession, sf: str) -> DataFrame:
     ).select("o_orderkey", "o_custkey", "o_totalprice")
 
 
+@row("""
+        SELECT c_custkey, c_name, c_mktsegment
+        FROM customer
+        WHERE c_custkey NOT IN (
+            SELECT o_custkey FROM orders
+            WHERE o_orderdate >= TIMESTAMP '1999-01-01'
+        )
+    """)
 def anti_join_customers(spark: SparkSession, sf: str) -> DataFrame:
     """Anti join: customers with no orders since 1999."""
     cust = load_table(spark, sf, "customer")
@@ -262,6 +379,12 @@ def anti_join_customers(spark: SparkSession, sf: str) -> DataFrame:
     ).select("c_custkey", "c_name", "c_mktsegment")
 
 
+@row("""
+        SELECT s_suppkey, s_name, n_name, r_name
+        FROM supplier
+        LEFT JOIN nation ON s_nationkey = n_nationkey
+        LEFT JOIN region ON n_regionkey = r_regionkey
+    """)
 def broadcast_dim_join(spark: SparkSession, sf: str) -> DataFrame:
     """J2: attach dim attributes via broadcast joins (ticker-attach shape)."""
     supp = load_table(spark, sf, "supplier")
@@ -274,6 +397,18 @@ def broadcast_dim_join(spark: SparkSession, sf: str) -> DataFrame:
     )
 
 
+@row("""
+        SELECT c_custkey,
+               coalesce(n_orders, 0) AS n_orders,
+               round(coalesce(total_spend, 0.0) + c_acctbal, 2) AS lifetime_value
+        FROM customer
+        LEFT JOIN (
+            SELECT o_custkey,
+                   CAST(count(*) AS BIGINT) AS n_orders,
+                   sum(o_totalprice)        AS total_spend
+            FROM orders GROUP BY o_custkey
+        ) per_cust ON c_custkey = o_custkey
+    """)
 def left_join_coalesce(spark: SparkSession, sf: str) -> DataFrame:
     """J3+P9+P12: left join + null-default + derived column.
 
@@ -299,6 +434,16 @@ def left_join_coalesce(spark: SparkSession, sf: str) -> DataFrame:
     )
 
 
+@row("""
+        SELECT o_orderpriority,
+               count(*) AS n_lines,
+               round(sum(l_extendedprice), 2) AS sum_price
+        FROM lineitem
+        JOIN orders ON l_orderkey = o_orderkey
+                   AND l_shipdate >= o_orderdate
+                   AND l_shipdate <  o_orderdate + INTERVAL 120 DAY
+        GROUP BY o_orderpriority
+    """)
 def interval_validity_join(spark: SparkSession, sf: str) -> DataFrame:
     """J4/J6/J7/J8: equi-join + date-interval residual predicate.
 
@@ -326,6 +471,17 @@ def interval_validity_join(spark: SparkSession, sf: str) -> DataFrame:
 # --------------------------------------------------------------------------
 
 
+@row("""
+        SELECT user_id,
+               arg_min(event_type, ts) AS first_event_type,
+               arg_max(event_type, ts) AS last_event_type,
+               min(ts) AS first_ts,
+               max(ts) AS last_ts,
+               count(*) AS n_events,
+               round(sum(value), 2) AS total_value
+        FROM events
+        GROUP BY user_id
+    """)
 def dedup_first_non_null(spark: SparkSession, sf: str) -> DataFrame:
     """A1-A3: keyed dedup with *ordered* first semantics.
 
@@ -344,6 +500,13 @@ def dedup_first_non_null(spark: SparkSession, sf: str) -> DataFrame:
     )
 
 
+@row("""
+        SELECT user_id, event_type,
+               CAST(min(event_id) AS BIGINT) AS first_event_id,
+               count(*) AS n
+        FROM events
+        GROUP BY user_id, event_type
+    """)
 def dedup_keyed(spark: SparkSession, sf: str) -> DataFrame:
     """A4/A6: drop duplicates on a key, keeping the earliest row id."""
     ev = load_table(spark, sf, "events")
@@ -353,6 +516,9 @@ def dedup_keyed(spark: SparkSession, sf: str) -> DataFrame:
     )
 
 
+@row("""
+        SELECT DISTINCT c_mktsegment, c_nationkey FROM customer
+    """)
 def distinct_segments(spark: SparkSession, sf: str) -> DataFrame:
     """A5: SQL DISTINCT."""
     return (
@@ -362,6 +528,12 @@ def distinct_segments(spark: SparkSession, sf: str) -> DataFrame:
     )
 
 
+@row("""
+        SELECT l_orderkey, l_linenumber,
+               greatest(l_tax, l_discount) AS rate_hi,
+               least(l_tax, l_discount)    AS rate_lo
+        FROM lineitem
+    """)
 def greatest_least(spark: SparkSession, sf: str) -> DataFrame:
     """A7: row-wise greatest/least (interval-intersection shape)."""
     li = load_table(spark, sf, "lineitem")
@@ -378,6 +550,15 @@ def greatest_least(spark: SparkSession, sf: str) -> DataFrame:
 # --------------------------------------------------------------------------
 
 
+@row("""
+        SELECT event_id, user_id, pct_change FROM (
+            SELECT event_id, user_id,
+                   floor((value / NULLIF(lag(value) OVER (
+                       PARTITION BY user_id ORDER BY ts), 0) - 1) * 1e6) / 1e6
+                       AS pct_change
+            FROM events
+        ) t WHERE pct_change IS NOT NULL
+    """)
 def window_lag_pct_change(spark: SparkSession, sf: str) -> DataFrame:
     """W2: per-group pct_change via lag window (returns_daily oracle)."""
     ev = load_table(spark, sf, "events")
@@ -400,6 +581,14 @@ def window_lag_pct_change(spark: SparkSession, sf: str) -> DataFrame:
     ).filter(F.col("pct_change").isNotNull())
 
 
+@row("""
+        SELECT event_id, user_id,
+               round(product(1 + value / 10000.0) OVER (
+                   PARTITION BY user_id ORDER BY ts
+                   ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW
+               ) * 100.0, 6) AS level
+        FROM events
+    """)
 def window_cumprod(spark: SparkSession, sf: str) -> DataFrame:
     """W1: cumulative product -> index level (benchmark-level shape).
 
@@ -420,6 +609,16 @@ def window_cumprod(spark: SparkSession, sf: str) -> DataFrame:
     )
 
 
+@row("""
+        SELECT o_orderkey, o_custkey, o_orderdate,
+               round(sum(o_totalprice) OVER w, 2) AS spend_30d,
+               count(*) OVER w AS n_orders_30d
+        FROM orders
+        WINDOW w AS (
+            PARTITION BY o_custkey ORDER BY o_orderdate
+            RANGE BETWEEN INTERVAL 30 DAYS PRECEDING AND CURRENT ROW
+        )
+    """)
 def window_range_frame(spark: SparkSession, sf: str) -> DataFrame:
     """Time-RANGE window frame (not row-count): trailing 30-day spend
     per customer as of each order. rangeBetween over epoch seconds —
@@ -441,6 +640,17 @@ def window_range_frame(spark: SparkSession, sf: str) -> DataFrame:
     )
 
 
+@row("""
+        WITH days AS (
+            SELECT unnest(generate_series(
+                CAST(o_orderdate AS DATE),
+                CAST(o_orderdate AS DATE) + INTERVAL 6 DAY,
+                INTERVAL 1 DAY)) AS d
+            FROM orders
+        )
+        SELECT CAST(d AS DATE) AS d, count(*) AS n_open_orders
+        FROM days GROUP BY 1
+    """)
 def calendar_explode(spark: SparkSession, sf: str) -> DataFrame:
     """W3: interval -> daily explode via sequence+explode.
 
@@ -461,6 +671,19 @@ def calendar_explode(spark: SparkSession, sf: str) -> DataFrame:
     )
 
 
+@row("""
+        WITH long AS (
+            SELECT l_orderkey, 'l_quantity' AS measure, l_quantity AS value FROM lineitem
+            UNION ALL
+            SELECT l_orderkey, 'l_extendedprice', l_extendedprice FROM lineitem
+            UNION ALL
+            SELECT l_orderkey, 'l_discount', l_discount FROM lineitem
+            UNION ALL
+            SELECT l_orderkey, 'l_tax', l_tax FROM lineitem
+        )
+        SELECT measure, count(*) AS n, round(sum(value), 2) AS total
+        FROM long GROUP BY measure
+    """)
 def measure_unpivot(spark: SparkSession, sf: str) -> DataFrame:
     """W4: wide -> long unpivot (factor-melt shape), then re-aggregate."""
     li = load_table(spark, sf, "lineitem")
@@ -476,6 +699,16 @@ def measure_unpivot(spark: SparkSession, sf: str) -> DataFrame:
     )
 
 
+@row("""
+        SELECT user_id,
+               count(*) FILTER (event_type = 'click')    AS n_click,
+               count(*) FILTER (event_type = 'view')     AS n_view,
+               count(*) FILTER (event_type = 'purchase') AS n_purchase,
+               count(*) FILTER (event_type = 'signup')   AS n_signup,
+               count(*) FILTER (event_type = 'error')    AS n_error
+        FROM events
+        GROUP BY user_id
+    """)
 def pivot_event_counts(spark: SparkSession, sf: str) -> DataFrame:
     """Long -> wide pivot (the inverse of W4's unpivot): one column per
     event type. The value list is pinned so the plan is a single pass
@@ -493,6 +726,15 @@ def pivot_event_counts(spark: SparkSession, sf: str) -> DataFrame:
     )
 
 
+@row("""
+        SELECT c_nationkey, rank, c_custkey, c_acctbal FROM (
+            SELECT c_nationkey, c_custkey, c_acctbal,
+                   CAST(row_number() OVER (
+                       PARTITION BY c_nationkey
+                       ORDER BY c_acctbal DESC, c_custkey ASC) AS INT) AS rank
+            FROM customer
+        ) t WHERE rank <= 3
+    """)
 def topk_per_group(spark: SparkSession, sf: str) -> DataFrame:
     """Top-3 customers by balance per nation (row_number window)."""
     cust = load_table(spark, sf, "customer")
@@ -511,6 +753,21 @@ def topk_per_group(spark: SparkSession, sf: str) -> DataFrame:
 # --------------------------------------------------------------------------
 
 
+@row("""
+        SELECT c_mktsegment, rnk,
+               count(*) AS n_at_rank,
+               max(bal_k) AS bal_k
+        FROM (
+            SELECT c_mktsegment,
+                   round(c_acctbal / 1000.0, 0) AS bal_k,
+                   CAST(dense_rank() OVER (
+                       PARTITION BY c_mktsegment
+                       ORDER BY round(c_acctbal / 1000.0, 0) DESC
+                   ) AS INT) AS rnk
+            FROM customer
+        ) t WHERE rnk <= 3
+        GROUP BY c_mktsegment, rnk
+    """)
 def dense_rank_balances(spark: SparkSession, sf: str) -> DataFrame:
     """Tie-aware ranking: dense_rank over rounded balances per segment
     (row_number's tie-broken cousin; rounded so real ties exist)."""
@@ -526,6 +783,12 @@ def dense_rank_balances(spark: SparkSession, sf: str) -> DataFrame:
     )
 
 
+@row("""
+        SELECT event_id,
+               TRY_CAST(regexp_extract(props, '"k":\\s*(\\d+)', 1) AS BIGINT) AS k
+        FROM events
+        WHERE TRY_CAST(regexp_extract(props, '"k":\\s*(\\d+)', 1) AS BIGINT) IS NOT NULL
+    """)
 def json_struct_parse(spark: SparkSession, sf: str) -> DataFrame:
     """from_json with an explicit schema (the JSON parser path, vs
     json_extract_cast's path extraction) -> typed struct field."""
@@ -537,6 +800,13 @@ def json_struct_parse(spark: SparkSession, sf: str) -> DataFrame:
     )
 
 
+@row("""
+        SELECT c_custkey AS party_id, c_name AS party_name,
+               'customer' AS party_type
+        FROM customer
+        UNION ALL
+        SELECT s_suppkey, s_name, 'supplier' FROM supplier
+    """)
 def union_all_parties(spark: SparkSession, sf: str) -> DataFrame:
     """U1: union-all of two homogenized frames (concat shape)."""
     cust = load_table(spark, sf, "customer").select(
@@ -552,6 +822,12 @@ def union_all_parties(spark: SparkSession, sf: str) -> DataFrame:
     return cust.unionByName(supp)
 
 
+@row("""
+        SELECT p_partkey,
+               substring(regexp_replace(CAST(p_type AS VARCHAR),
+                         '[^A-Za-z0-9]', '', 'g'), 1, 8) AS type_code
+        FROM part
+    """)
 def regex_normalize(spark: SparkSession, sf: str) -> DataFrame:
     """F1/F2: CUSIP-normalize shape — strip non-alphanumerics, take 8."""
     part = load_table(spark, sf, "part")
@@ -565,6 +841,12 @@ def regex_normalize(spark: SparkSession, sf: str) -> DataFrame:
     )
 
 
+@row("""
+        SELECT event_id,
+               TRY_CAST(regexp_extract(props, '"k":\\s*(\\d+)', 1) AS BIGINT) AS k
+        FROM events
+        WHERE TRY_CAST(regexp_extract(props, '"k":\\s*(\\d+)', 1) AS BIGINT) IS NOT NULL
+    """)
 def json_extract_cast(spark: SparkSession, sf: str) -> DataFrame:
     """F4: parse-with-reject — JSON prop to number, nulls dropped."""
     ev = load_table(spark, sf, "events")
@@ -575,6 +857,15 @@ def json_extract_cast(spark: SparkSession, sf: str) -> DataFrame:
     )
 
 
+@row("""
+        SELECT r_name, n_name,
+               count(*) AS n_customers,
+               round(sum(c_acctbal), 2) AS total_balance
+        FROM customer
+        JOIN nation ON c_nationkey = n_nationkey
+        JOIN region ON n_regionkey = r_regionkey
+        GROUP BY ROLLUP (r_name, n_name)
+    """)
 def rollup_counts(spark: SparkSession, sf: str) -> DataFrame:
     """Rollup aggregation over the region/nation hierarchy."""
     nation = load_table(spark, sf, "nation")
@@ -589,6 +880,34 @@ def rollup_counts(spark: SparkSession, sf: str) -> DataFrame:
     )
 
 
+@row("""
+        SELECT c_mktsegment,
+               round(quantile_cont(c_acctbal, 0.5), 4)  AS p50,
+               round(quantile_cont(c_acctbal, 0.9), 4)  AS p90,
+               round(quantile_cont(c_acctbal, 0.99), 4) AS p99,
+               count(*) AS n
+        FROM customer
+        GROUP BY c_mktsegment
+    """)
+def revenue_percentiles(spark: SparkSession, sf: str) -> DataFrame:
+    """Exact interpolated percentiles per customer segment (ordered
+    aggregate — one shuffle on the segment key)."""
+    cust = load_table(spark, sf, "customer")
+    return cust.groupBy("c_mktsegment").agg(
+        F.round(F.percentile("c_acctbal", F.lit(0.5)), 4).alias("p50"),
+        F.round(F.percentile("c_acctbal", F.lit(0.9)), 4).alias("p90"),
+        F.round(F.percentile("c_acctbal", F.lit(0.99)), 4).alias("p99"),
+        F.count("*").alias("n"),
+    )
+
+
+@row("""
+        SELECT event_type,
+               CAST(count(DISTINCT user_id) AS BIGINT) AS n_users,
+               count(*) AS n_events
+        FROM events
+        GROUP BY event_type
+    """)
 def distinct_users_exact(spark: SparkSession, sf: str) -> DataFrame:
     """Exact distinct users per event type (shuffles the full key set)."""
     ev = load_table(spark, sf, "events")
@@ -598,6 +917,7 @@ def distinct_users_exact(spark: SparkSession, sf: str) -> DataFrame:
     )
 
 
+@row(None)
 def distinct_users_sketch(spark: SparkSession, sf: str) -> DataFrame:
     """HyperLogLog++ distinct count (rows-only: sketch estimates are
     engine-specific; the exact twin above is the oracle-checked pair).
@@ -613,6 +933,13 @@ def distinct_users_sketch(spark: SparkSession, sf: str) -> DataFrame:
     )
 
 
+@row("""
+        SELECT CAST(date_trunc('hour', ts) AS TIMESTAMP) AS hour, event_type,
+               count(*) AS n,
+               round(sum(value), 2) AS total_value
+        FROM events
+        GROUP BY 1, 2
+    """)
 def hourly_rollup(spark: SparkSession, sf: str) -> DataFrame:
     """Batch equivalent of the streaming tumbling-window aggregation
     (see streaming/events.py for the readStream version)."""
@@ -626,6 +953,13 @@ def hourly_rollup(spark: SparkSession, sf: str) -> DataFrame:
     )
 
 
+@row("""
+        SELECT o_orderstatus, o_orderpriority,
+               count(*) AS n_orders,
+               round(sum(o_totalprice), 2) AS total_price
+        FROM orders
+        GROUP BY CUBE (o_orderstatus, o_orderpriority)
+    """)
 def cube_counts(spark: SparkSession, sf: str) -> DataFrame:
     """CUBE over (status, priority): all four grouping combinations in
     one pass (Expand operator -> single shuffle)."""
@@ -636,18 +970,30 @@ def cube_counts(spark: SparkSession, sf: str) -> DataFrame:
     )
 
 
-def revenue_percentiles(spark: SparkSession, sf: str) -> DataFrame:
-    """Exact interpolated percentiles per customer segment (ordered
-    aggregate — one shuffle on the segment key)."""
-    cust = load_table(spark, sf, "customer")
-    return cust.groupBy("c_mktsegment").agg(
-        F.round(F.percentile("c_acctbal", F.lit(0.5)), 4).alias("p50"),
-        F.round(F.percentile("c_acctbal", F.lit(0.9)), 4).alias("p90"),
-        F.round(F.percentile("c_acctbal", F.lit(0.99)), 4).alias("p99"),
-        F.count("*").alias("n"),
-    )
-
-
+@row("""
+        WITH flagged AS (
+            SELECT user_id, ts, value,
+                   CASE WHEN lag(ts) OVER w IS NULL
+                          OR date_diff('second', lag(ts) OVER w, ts) > 1800
+                        THEN 1 ELSE 0 END AS new_session
+            FROM events
+            WINDOW w AS (PARTITION BY user_id ORDER BY ts)
+        ), numbered AS (
+            SELECT user_id, ts, value,
+                   CAST(sum(new_session) OVER (
+                       PARTITION BY user_id ORDER BY ts
+                       ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW
+                   ) AS BIGINT) AS session_id
+            FROM flagged
+        )
+        SELECT user_id, session_id,
+               min(ts) AS session_start,
+               max(ts) AS session_end,
+               count(*) AS n_events,
+               round(sum(value), 2) AS session_value
+        FROM numbered
+        GROUP BY user_id, session_id
+    """)
 def sessionize_batch(spark: SparkSession, sf: str) -> DataFrame:
     """Batch twin of the streaming session_window (gaps-and-islands):
     a session closes after 30 idle minutes. One shuffle (partition by
@@ -672,6 +1018,15 @@ def sessionize_batch(spark: SparkSession, sf: str) -> DataFrame:
     )
 
 
+@row("""
+        SELECT c.event_id, c.user_id, c.ts,
+               p.ts AS asof_ts, p.value AS asof_value
+        FROM (SELECT event_id, user_id, ts FROM events
+              WHERE event_type = 'click') c
+        ASOF LEFT JOIN (SELECT user_id, ts, value FROM events
+                        WHERE event_type = 'purchase') p
+          ON c.user_id = p.user_id AND c.ts >= p.ts
+    """)
 def asof_join_events(spark: SparkSession, sf: str) -> DataFrame:
     """As-of join: each click event gets the user's most recent
     prior-or-equal purchase (union + ordered-window — one shuffle, no
@@ -688,6 +1043,15 @@ def asof_join_events(spark: SparkSession, sf: str) -> DataFrame:
     return as_of_join(clicks, purchases, on=["user_id"])
 
 
+@row("""
+        SELECT doc_id,
+               'image' AS media_type,
+               CAST(octet_length(encode(text)) AS BIGINT) AS byte_len,
+               sha256(text) AS sha256,
+               CAST(16 + (doc_id % 5) * 8 AS INT) AS width,
+               CAST(16 + (doc_id % 3) * 8 AS INT) AS height
+        FROM documents
+    """)
 def multimodal_meta(spark: SparkSession, sf: str) -> DataFrame:
     """Multimodal column plumbing, oracle-checked half: documents as
     opaque binary payloads with typed metadata (byte length, sha256,
@@ -704,428 +1068,12 @@ def multimodal_meta(spark: SparkSession, sf: str) -> DataFrame:
     )
 
 
-def multimodal_features(spark: SparkSession, sf: str) -> DataFrame:
-    """Multimodal decode path, now a REAL codec round-trip and
-    oracle-checked: each document's bytes tile into a WxH frame and
-    encode as an actual PNG (llm/codecs.py, pure numpy + stdlib zlib),
-    then the Arrow-batched decode kernel parses the PNG back and
-    reduces it to luma features. The DuckDB oracle computes the same
-    statistics straight from the text bytes — a hash match therefore
-    PROVES the encode→decode cycle is lossless, upgrading this row
-    from rows-only. Band means are exact integer-sum/count doubles on
-    both sides (heights divide by 8, so array_split bands are flat
-    byte ranges)."""
-    from .llm.multimodal import extract_image_features, media_from_text
-
-    docs = load_table(spark, sf, "documents")
-    media = media_from_text(docs)
-    feats = extract_image_features(media, decoder="png")
-    return feats.select(
-        "asset_id",
-        "width",
-        "height",
-        "mean_intensity",
-        *[F.col("feature")[b].alias(f"band_{b}") for b in range(8)],
-    )
-
-
-# --------------------------------------------------------------------------
-# Registry
-# --------------------------------------------------------------------------
-
-SPARK_QUERIES: dict[str, QueryFn] = {
-    "q1_pricing_summary": q1_pricing_summary,
-    "q3_shipping_priority": q3_shipping_priority,
-    "q4_order_priority": q4_order_priority,
-    "q5_local_supplier": q5_local_supplier,
-    "q7_volume_shipping": q7_volume_shipping,
-    "q17_small_quantity": q17_small_quantity,
-    "filter_project": filter_project,
-    "semi_join_in_list": semi_join_in_list,
-    "anti_join_customers": anti_join_customers,
-    "broadcast_dim_join": broadcast_dim_join,
-    "left_join_coalesce": left_join_coalesce,
-    "interval_validity_join": interval_validity_join,
-    "dedup_first_non_null": dedup_first_non_null,
-    "dedup_keyed": dedup_keyed,
-    "distinct_segments": distinct_segments,
-    "greatest_least": greatest_least,
-    "window_lag_pct_change": window_lag_pct_change,
-    "window_cumprod": window_cumprod,
-    "window_range_frame": window_range_frame,
-    "calendar_explode": calendar_explode,
-    "measure_unpivot": measure_unpivot,
-    "pivot_event_counts": pivot_event_counts,
-    "topk_per_group": topk_per_group,
-    "dense_rank_balances": dense_rank_balances,
-    "json_struct_parse": json_struct_parse,
-    "union_all_parties": union_all_parties,
-    "regex_normalize": regex_normalize,
-    "json_extract_cast": json_extract_cast,
-    "rollup_counts": rollup_counts,
-    "cube_counts": cube_counts,
-    "revenue_percentiles": revenue_percentiles,
-    "distinct_users_exact": distinct_users_exact,
-    "hourly_rollup": hourly_rollup,
-    "sessionize_batch": sessionize_batch,
-    "asof_join_events": asof_join_events,
-    "multimodal_meta": multimodal_meta,
-    "multimodal_features": multimodal_features,
-}
-
-ORACLE_SQL: dict[str, str] = {
-    "q1_pricing_summary": """
-        SELECT l_returnflag, l_linestatus,
-               round(sum(l_quantity), 2)       AS sum_qty,
-               round(sum(l_extendedprice), 2)  AS sum_base_price,
-               round(sum(l_extendedprice * (1 - l_discount)), 2) AS sum_disc_price,
-               round(sum(l_extendedprice * (1 - l_discount) * (1 + l_tax)), 2) AS sum_charge,
-               round(avg(l_quantity), 2)       AS avg_qty,
-               round(avg(l_extendedprice), 2)  AS avg_price,
-               round(avg(l_discount), 4)       AS avg_disc,
-               count(*)                        AS count_order
-        FROM lineitem
-        WHERE l_shipdate <= TIMESTAMP '1998-09-02'
-        GROUP BY l_returnflag, l_linestatus
-    """,
-    "q3_shipping_priority": """
-        SELECT l_orderkey, o_orderdate, o_orderpriority,
-               round(sum(l_extendedprice * (1 - l_discount)), 2) AS revenue
-        FROM customer
-        JOIN orders   ON c_custkey = o_custkey
-        JOIN lineitem ON l_orderkey = o_orderkey
-        WHERE c_mktsegment = 'BUILDING'
-          AND o_orderdate < TIMESTAMP '1999-03-15'
-          AND l_shipdate  > TIMESTAMP '1999-03-15'
-        GROUP BY l_orderkey, o_orderdate, o_orderpriority
-        ORDER BY revenue DESC, l_orderkey ASC
-        LIMIT 10
-    """,
-    "q5_local_supplier": """
-        SELECT n_name,
-               round(sum(l_extendedprice * (1 - l_discount)), 2) AS revenue
-        FROM lineitem
-        JOIN orders   ON l_orderkey = o_orderkey
-        JOIN customer ON o_custkey = c_custkey
-        JOIN supplier ON l_suppkey = s_suppkey AND c_nationkey = s_nationkey
-        JOIN nation   ON s_nationkey = n_nationkey
-        JOIN region   ON n_regionkey = r_regionkey
-        WHERE r_name = 'ASIA'
-          AND o_orderdate >= TIMESTAMP '1996-01-01'
-          AND o_orderdate <  TIMESTAMP '1998-01-01'
-        GROUP BY n_name
-    """,
-    "q4_order_priority": """
-        SELECT o_orderpriority, count(*) AS order_count
-        FROM orders
-        WHERE o_orderdate >= TIMESTAMP '1996-07-01'
-          AND o_orderdate <  TIMESTAMP '1996-10-01'
-          AND EXISTS (
-              SELECT 1 FROM lineitem
-              WHERE l_orderkey = o_orderkey AND l_returnflag = 'R'
-          )
-        GROUP BY o_orderpriority
-    """,
-    "q7_volume_shipping": """
-        SELECT n1.n_name AS supp_nation, n2.n_name AS cust_nation,
-               CAST(year(l_shipdate) AS INT) AS l_year,
-               round(sum(l_extendedprice * (1 - l_discount)), 2) AS revenue
-        FROM lineitem
-        JOIN supplier ON l_suppkey = s_suppkey
-        JOIN orders   ON l_orderkey = o_orderkey
-        JOIN customer ON o_custkey = c_custkey
-        JOIN nation n1 ON s_nationkey = n1.n_nationkey
-        JOIN nation n2 ON c_nationkey = n2.n_nationkey
-        WHERE l_shipdate BETWEEN TIMESTAMP '1996-01-01' AND TIMESTAMP '1997-12-31'
-          AND ((n1.n_name = 'NATION_3' AND n2.n_name = 'NATION_7')
-            OR (n1.n_name = 'NATION_7' AND n2.n_name = 'NATION_3'))
-        GROUP BY 1, 2, 3
-    """,
-    "q17_small_quantity": """
-        SELECT round(sum(l_extendedprice) / 7.0, 2) AS avg_yearly,
-               count(*) AS n_lines
-        FROM lineitem
-        JOIN part ON l_partkey = p_partkey
-        WHERE p_brand = 'Brand#9'
-          AND l_quantity < (
-              SELECT 0.8 * avg(l_quantity) FROM lineitem li2
-              WHERE li2.l_partkey = lineitem.l_partkey
-          )
-    """,
-    "filter_project": """
-        SELECT o_orderkey, o_custkey, o_orderdate, o_totalprice
-        FROM orders
-        WHERE o_orderdate >= TIMESTAMP '1997-01-01'
-          AND o_orderdate <= TIMESTAMP '1997-12-31'
-          AND o_orderstatus = 'O'
-    """,
-    "semi_join_in_list": """
-        SELECT o_orderkey, o_custkey, o_totalprice
-        FROM orders
-        WHERE o_custkey IN (
-            SELECT c_custkey FROM customer WHERE c_mktsegment = 'BUILDING'
-        )
-    """,
-    "anti_join_customers": """
-        SELECT c_custkey, c_name, c_mktsegment
-        FROM customer
-        WHERE c_custkey NOT IN (
-            SELECT o_custkey FROM orders
-            WHERE o_orderdate >= TIMESTAMP '1999-01-01'
-        )
-    """,
-    "broadcast_dim_join": """
-        SELECT s_suppkey, s_name, n_name, r_name
-        FROM supplier
-        LEFT JOIN nation ON s_nationkey = n_nationkey
-        LEFT JOIN region ON n_regionkey = r_regionkey
-    """,
-    "left_join_coalesce": """
-        SELECT c_custkey,
-               coalesce(n_orders, 0) AS n_orders,
-               round(coalesce(total_spend, 0.0) + c_acctbal, 2) AS lifetime_value
-        FROM customer
-        LEFT JOIN (
-            SELECT o_custkey,
-                   CAST(count(*) AS BIGINT) AS n_orders,
-                   sum(o_totalprice)        AS total_spend
-            FROM orders GROUP BY o_custkey
-        ) per_cust ON c_custkey = o_custkey
-    """,
-    "interval_validity_join": """
-        SELECT o_orderpriority,
-               count(*) AS n_lines,
-               round(sum(l_extendedprice), 2) AS sum_price
-        FROM lineitem
-        JOIN orders ON l_orderkey = o_orderkey
-                   AND l_shipdate >= o_orderdate
-                   AND l_shipdate <  o_orderdate + INTERVAL 120 DAY
-        GROUP BY o_orderpriority
-    """,
-    "dedup_first_non_null": """
-        SELECT user_id,
-               arg_min(event_type, ts) AS first_event_type,
-               arg_max(event_type, ts) AS last_event_type,
-               min(ts) AS first_ts,
-               max(ts) AS last_ts,
-               count(*) AS n_events,
-               round(sum(value), 2) AS total_value
-        FROM events
-        GROUP BY user_id
-    """,
-    "dedup_keyed": """
-        SELECT user_id, event_type,
-               CAST(min(event_id) AS BIGINT) AS first_event_id,
-               count(*) AS n
-        FROM events
-        GROUP BY user_id, event_type
-    """,
-    "distinct_segments": """
-        SELECT DISTINCT c_mktsegment, c_nationkey FROM customer
-    """,
-    "greatest_least": """
-        SELECT l_orderkey, l_linenumber,
-               greatest(l_tax, l_discount) AS rate_hi,
-               least(l_tax, l_discount)    AS rate_lo
-        FROM lineitem
-    """,
-    "window_lag_pct_change": """
-        SELECT event_id, user_id, pct_change FROM (
-            SELECT event_id, user_id,
-                   floor((value / NULLIF(lag(value) OVER (
-                       PARTITION BY user_id ORDER BY ts), 0) - 1) * 1e6) / 1e6
-                       AS pct_change
-            FROM events
-        ) t WHERE pct_change IS NOT NULL
-    """,
-    "window_cumprod": """
-        SELECT event_id, user_id,
-               round(product(1 + value / 10000.0) OVER (
-                   PARTITION BY user_id ORDER BY ts
-                   ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW
-               ) * 100.0, 6) AS level
-        FROM events
-    """,
-    "window_range_frame": """
-        SELECT o_orderkey, o_custkey, o_orderdate,
-               round(sum(o_totalprice) OVER w, 2) AS spend_30d,
-               count(*) OVER w AS n_orders_30d
-        FROM orders
-        WINDOW w AS (
-            PARTITION BY o_custkey ORDER BY o_orderdate
-            RANGE BETWEEN INTERVAL 30 DAYS PRECEDING AND CURRENT ROW
-        )
-    """,
-    "calendar_explode": """
-        WITH days AS (
-            SELECT unnest(generate_series(
-                CAST(o_orderdate AS DATE),
-                CAST(o_orderdate AS DATE) + INTERVAL 6 DAY,
-                INTERVAL 1 DAY)) AS d
-            FROM orders
-        )
-        SELECT CAST(d AS DATE) AS d, count(*) AS n_open_orders
-        FROM days GROUP BY 1
-    """,
-    "measure_unpivot": """
-        WITH long AS (
-            SELECT l_orderkey, 'l_quantity' AS measure, l_quantity AS value FROM lineitem
-            UNION ALL
-            SELECT l_orderkey, 'l_extendedprice', l_extendedprice FROM lineitem
-            UNION ALL
-            SELECT l_orderkey, 'l_discount', l_discount FROM lineitem
-            UNION ALL
-            SELECT l_orderkey, 'l_tax', l_tax FROM lineitem
-        )
-        SELECT measure, count(*) AS n, round(sum(value), 2) AS total
-        FROM long GROUP BY measure
-    """,
-    "pivot_event_counts": """
-        SELECT user_id,
-               count(*) FILTER (event_type = 'click')    AS n_click,
-               count(*) FILTER (event_type = 'view')     AS n_view,
-               count(*) FILTER (event_type = 'purchase') AS n_purchase,
-               count(*) FILTER (event_type = 'signup')   AS n_signup,
-               count(*) FILTER (event_type = 'error')    AS n_error
-        FROM events
-        GROUP BY user_id
-    """,
-    "topk_per_group": """
-        SELECT c_nationkey, rank, c_custkey, c_acctbal FROM (
-            SELECT c_nationkey, c_custkey, c_acctbal,
-                   CAST(row_number() OVER (
-                       PARTITION BY c_nationkey
-                       ORDER BY c_acctbal DESC, c_custkey ASC) AS INT) AS rank
-            FROM customer
-        ) t WHERE rank <= 3
-    """,
-    "dense_rank_balances": """
-        SELECT c_mktsegment, rnk,
-               count(*) AS n_at_rank,
-               max(bal_k) AS bal_k
-        FROM (
-            SELECT c_mktsegment,
-                   round(c_acctbal / 1000.0, 0) AS bal_k,
-                   CAST(dense_rank() OVER (
-                       PARTITION BY c_mktsegment
-                       ORDER BY round(c_acctbal / 1000.0, 0) DESC
-                   ) AS INT) AS rnk
-            FROM customer
-        ) t WHERE rnk <= 3
-        GROUP BY c_mktsegment, rnk
-    """,
-    "json_struct_parse": """
-        SELECT event_id,
-               TRY_CAST(regexp_extract(props, '"k":\\s*(\\d+)', 1) AS BIGINT) AS k
-        FROM events
-        WHERE TRY_CAST(regexp_extract(props, '"k":\\s*(\\d+)', 1) AS BIGINT) IS NOT NULL
-    """,
-    "union_all_parties": """
-        SELECT c_custkey AS party_id, c_name AS party_name,
-               'customer' AS party_type
-        FROM customer
-        UNION ALL
-        SELECT s_suppkey, s_name, 'supplier' FROM supplier
-    """,
-    "regex_normalize": """
-        SELECT p_partkey,
-               substring(regexp_replace(CAST(p_type AS VARCHAR),
-                         '[^A-Za-z0-9]', '', 'g'), 1, 8) AS type_code
-        FROM part
-    """,
-    "json_extract_cast": """
-        SELECT event_id,
-               TRY_CAST(regexp_extract(props, '"k":\\s*(\\d+)', 1) AS BIGINT) AS k
-        FROM events
-        WHERE TRY_CAST(regexp_extract(props, '"k":\\s*(\\d+)', 1) AS BIGINT) IS NOT NULL
-    """,
-    "rollup_counts": """
-        SELECT r_name, n_name,
-               count(*) AS n_customers,
-               round(sum(c_acctbal), 2) AS total_balance
-        FROM customer
-        JOIN nation ON c_nationkey = n_nationkey
-        JOIN region ON n_regionkey = r_regionkey
-        GROUP BY ROLLUP (r_name, n_name)
-    """,
-    "distinct_users_exact": """
-        SELECT event_type,
-               CAST(count(DISTINCT user_id) AS BIGINT) AS n_users,
-               count(*) AS n_events
-        FROM events
-        GROUP BY event_type
-    """,
-    "hourly_rollup": """
-        SELECT CAST(date_trunc('hour', ts) AS TIMESTAMP) AS hour, event_type,
-               count(*) AS n,
-               round(sum(value), 2) AS total_value
-        FROM events
-        GROUP BY 1, 2
-    """,
-    "cube_counts": """
-        SELECT o_orderstatus, o_orderpriority,
-               count(*) AS n_orders,
-               round(sum(o_totalprice), 2) AS total_price
-        FROM orders
-        GROUP BY CUBE (o_orderstatus, o_orderpriority)
-    """,
-    "revenue_percentiles": """
-        SELECT c_mktsegment,
-               round(quantile_cont(c_acctbal, 0.5), 4)  AS p50,
-               round(quantile_cont(c_acctbal, 0.9), 4)  AS p90,
-               round(quantile_cont(c_acctbal, 0.99), 4) AS p99,
-               count(*) AS n
-        FROM customer
-        GROUP BY c_mktsegment
-    """,
-    "sessionize_batch": """
-        WITH flagged AS (
-            SELECT user_id, ts, value,
-                   CASE WHEN lag(ts) OVER w IS NULL
-                          OR date_diff('second', lag(ts) OVER w, ts) > 1800
-                        THEN 1 ELSE 0 END AS new_session
-            FROM events
-            WINDOW w AS (PARTITION BY user_id ORDER BY ts)
-        ), numbered AS (
-            SELECT user_id, ts, value,
-                   CAST(sum(new_session) OVER (
-                       PARTITION BY user_id ORDER BY ts
-                       ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW
-                   ) AS BIGINT) AS session_id
-            FROM flagged
-        )
-        SELECT user_id, session_id,
-               min(ts) AS session_start,
-               max(ts) AS session_end,
-               count(*) AS n_events,
-               round(sum(value), 2) AS session_value
-        FROM numbered
-        GROUP BY user_id, session_id
-    """,
-    "asof_join_events": """
-        SELECT c.event_id, c.user_id, c.ts,
-               p.ts AS asof_ts, p.value AS asof_value
-        FROM (SELECT event_id, user_id, ts FROM events
-              WHERE event_type = 'click') c
-        ASOF LEFT JOIN (SELECT user_id, ts, value FROM events
-                        WHERE event_type = 'purchase') p
-          ON c.user_id = p.user_id AND c.ts >= p.ts
-    """,
-    "multimodal_meta": """
-        SELECT doc_id,
-               'image' AS media_type,
-               CAST(octet_length(encode(text)) AS BIGINT) AS byte_len,
-               sha256(text) AS sha256,
-               CAST(16 + (doc_id % 5) * 8 AS INT) AS width,
-               CAST(16 + (doc_id % 3) * 8 AS INT) AS height
-        FROM documents
-    """,
-    # Straight byte math over the same tiled pixel layout the Spark
-    # side routes through a REAL PNG encode->decode cycle — a hash
-    # match proves the codec round-trip is lossless. The corpus is
-    # ASCII, so ord(char) == utf-8 byte; heights divide by 8, so each
-    # of the 8 row bands is the flat byte range [b*wh/8, (b+1)*wh/8).
-    "multimodal_features": """
+# Straight byte math over the same tiled pixel layout the Spark
+# side routes through a REAL PNG encode->decode cycle — a hash
+# match proves the codec round-trip is lossless. The corpus is
+# ASCII, so ord(char) == utf-8 byte; heights divide by 8, so each
+# of the 8 row bands is the flat byte range [b*wh/8, (b+1)*wh/8).
+@row("""
         WITH d AS (
             SELECT doc_id,
                    CASE WHEN length(text) = 0 THEN chr(0) ELSE text END AS t,
@@ -1154,8 +1102,30 @@ ORACLE_SQL: dict[str, str] = {
                avg(val) FILTER (WHERE band = 6) AS band_6,
                avg(val) FILTER (WHERE band = 7) AS band_7
         FROM v GROUP BY doc_id, w, h
-    """,
-}
+    """)
+def multimodal_features(spark: SparkSession, sf: str) -> DataFrame:
+    """Multimodal decode path, now a REAL codec round-trip and
+    oracle-checked: each document's bytes tile into a WxH frame and
+    encode as an actual PNG (llm/codecs.py, pure numpy + stdlib zlib),
+    then the Arrow-batched decode kernel parses the PNG back and
+    reduces it to luma features. The DuckDB oracle computes the same
+    statistics straight from the text bytes — a hash match therefore
+    PROVES the encode→decode cycle is lossless, upgrading this row
+    from rows-only. Band means are exact integer-sum/count doubles on
+    both sides (heights divide by 8, so array_split bands are flat
+    byte ranges)."""
+    from .llm.multimodal import extract_image_features, media_from_text
+
+    docs = load_table(spark, sf, "documents")
+    media = media_from_text(docs)
+    feats = extract_image_features(media, decoder="png")
+    return feats.select(
+        "asset_id",
+        "width",
+        "height",
+        "mean_intensity",
+        *[F.col("feature")[b].alias(f"band_{b}") for b in range(8)],
+    )
 
 
 # --------------------------------------------------------------------------
@@ -1175,6 +1145,7 @@ from .llm.similarity import (  # noqa: E402
     lsh_topk as _lsh_topk,
 )
 from .llm.text import (  # noqa: E402
+    TOKEN_PATTERN,
     with_fingerprint as _with_fp,
     with_language_id as _with_lang,
     with_quality_score as _with_quality,
@@ -1182,170 +1153,14 @@ from .llm.text import (  # noqa: E402
 )
 
 
-def text_stats(spark: SparkSession, sf: str) -> DataFrame:
-    """Text quality features over documents (native expressions)."""
-    docs = load_table(spark, sf, "documents")
-    return _with_stats(docs).select(
-        "doc_id", "n_tokens", "n_words", "avg_word_len",
-        "punct_ratio", "stopword_ratio",
-    )
-
-
-def text_quality(spark: SparkSession, sf: str) -> DataFrame:
-    """Composite quality score + keep flag."""
-    docs = load_table(spark, sf, "documents")
-    return _with_quality(docs).select("doc_id", "quality_score", "keep")
-
-
-def language_id(spark: SparkSession, sf: str) -> DataFrame:
-    """Stopword/CJK heuristic language classification."""
-    docs = load_table(spark, sf, "documents")
-    return _with_lang(docs).select("doc_id", "lang_pred")
-
-
-def doc_fingerprint(spark: SparkSession, sf: str) -> DataFrame:
-    """md5 fingerprint of normalized text."""
-    docs = load_table(spark, sf, "documents")
-    return _with_fp(docs).select("doc_id", "fingerprint")
-
-
-def pii_scrub(spark: SparkSession, sf: str) -> DataFrame:
-    """URL/email counting + masking over documents (intake cleanup)."""
-    from .llm.text import with_pii_scrub
-
-    docs = load_table(spark, sf, "documents")
-    return with_pii_scrub(docs).select(
-        "doc_id", "n_urls", "n_emails", F.md5("clean_text").alias("clean_hash")
-    )
-
-
-def exact_dedup_docs(spark: SparkSession, sf: str) -> DataFrame:
-    """Exact dedup by content hash: keeper id + copy count per hash."""
-    docs = load_table(spark, sf, "documents")
-    return _exact_dedup(docs)
-
-
-def ngram_jaccard_dedup(spark: SparkSession, sf: str) -> DataFrame:
-    """Exact 3-gram Jaccard near-dup pairs with prefix blocking."""
-    docs = load_table(spark, sf, "documents")
-    return _ngram_pairs(docs, block_chars=40, threshold=0.5)
-
-
-def minhash_lsh_dedup(spark: SparkSession, sf: str) -> DataFrame:
-    """MinHash+LSH near-dup pairs (signature-estimated Jaccard).
-
-    Oracle-checked since round 3: the signature family is md5-base +
-    Carter-Wegman slots (engine-portable), so DuckDB replays the exact
-    signatures and banding — see ``queries_ext._minhash_lsh_oracle_sql``.
-    The exact-Jaccard twin ``ngram_jaccard_dedup`` covers the same
-    semantics without the estimator.
-    """
-    docs = load_table(spark, sf, "documents")
-    return _minhash_pairs(docs, threshold=0.5)
-
-
-def simhash_dedup(spark: SparkSession, sf: str) -> DataFrame:
-    """SimHash near-dup pairs (Hamming <= 3 on 64-bit fingerprints).
-    Oracle-checked since round 3: fingerprint bits derive from md5
-    quarters (engine-portable), so DuckDB replays the exact pipeline —
-    see ``queries_ext._simhash_oracle_sql``. tests/test_llm_ops.py
-    additionally checks the banded blocking recovers every pair a
-    brute-force Hamming scan finds."""
-    docs = load_table(spark, sf, "documents")
-    return _simhash_pairs(_simhash(docs), max_hamming=3)
-
-
-def embedding_cosine_topk(spark: SparkSession, sf: str) -> DataFrame:
-    """Brute-force cosine top-5 for the first 10 query vectors."""
-    emb = load_table(spark, sf, "embeddings")
-    queries_df = emb.filter(F.col("vec_id") < 10)
-    return _bf_topk(queries_df, emb, k=5)
-
-
-def embedding_lsh_topk(spark: SparkSession, sf: str) -> DataFrame:
-    """Banded-LSH approximate top-5: equi-join on (band_idx, band_val),
-    exact re-rank of candidates only (the scale path). Oracle-checked
-    since round 3: the hyperplanes are a fixed md5-derived ±1 matrix
-    (``llm.similarity.sign_matrix``), so DuckDB replays the exact sign
-    bits — see ``queries_ext._lsh_topk_oracle_sql``."""
-    emb = load_table(spark, sf, "embeddings")
-    queries_df = emb.filter(F.col("vec_id") < 10)
-    return _lsh_topk(queries_df, emb, k=5, target_cos=0.25, recall=0.95)
-
-
-def embedding_near_dup(spark: SparkSession, sf: str) -> DataFrame:
-    """Embedding-cosine near-duplicate pairs (score >= 0.4)."""
-    emb = load_table(spark, sf, "embeddings")
-    return _emb_pairs(emb, threshold=0.4)
-
-
-def embedding_ivf_topk(spark: SparkSession, sf: str) -> DataFrame:
-    """IVF approximate top-5: coarse-centroid lists + nprobe search.
-    Oracle-checked since round 3: train_centroids is deterministic, so
-    the whole index (k-means replay + list assignment + nprobe search)
-    replays in DuckDB — see queries_ext._ivf_topk_oracle_sql. The
-    exact twin is embedding_cosine_topk."""
-    from .llm.similarity import ivf_topk as _ivf
-
-    emb = load_table(spark, sf, "embeddings")
-    queries_df = emb.filter(F.col("vec_id") < 10)
-    return _ivf(queries_df, emb, k=5, n_lists=16, nprobe=4)
-
-
-_STOP_EN = "['the','and','of','to','a','in','is','that']"
-_STOP_DE = "['der','die','und','das','ist','ein','nicht','mit']"
-_STOP_ES = "['el','la','de','que','y','en','un','es']"
-_STOP_FR = "['le','la','et','les','des','un','est','que']"
-_TOKEN_PAT = r"[A-Za-z]+|[0-9]+|[^A-Za-z0-9\s]"
-
-SPARK_QUERIES.update(
-    {
-        "text_stats": text_stats,
-        "text_quality": text_quality,
-        "language_id": language_id,
-        "doc_fingerprint": doc_fingerprint,
-        "pii_scrub": pii_scrub,
-        "exact_dedup_docs": exact_dedup_docs,
-        "ngram_jaccard_dedup": ngram_jaccard_dedup,
-        "embedding_cosine_topk": embedding_cosine_topk,
-        "embedding_near_dup": embedding_near_dup,
-    }
-)
-
-from .queries_ext import ORACLE_SQL_EXT, SPARK_QUERIES_EXT  # noqa: E402
-
-SPARK_QUERIES.update(
-    {
-        # Position 51+ (outside the driver window), by design:
-        # distinct_users_sketch is rows-only (HLL, no SQL oracle; exact
-        # twin distinct_users_exact is oracle-checked inside the
-        # window). The four queries below were rows-only in rounds 1-2
-        # (xxhash64-dependent); all four gained full-replay oracles in
-        # round 3 — the hash families moved to engine-portable
-        # md5-derived constructions (see llm.dedup / llm.similarity),
-        # so DuckDB replays signatures, fingerprints, sign bits, and
-        # the IVF index bit-exact.
-        "distinct_users_sketch": distinct_users_sketch,
-        "minhash_lsh_dedup": minhash_lsh_dedup,
-        "simhash_dedup": simhash_dedup,
-        "embedding_lsh_topk": embedding_lsh_topk,
-        "embedding_ivf_topk": embedding_ivf_topk,
-    }
-)
-
-SPARK_QUERIES.update(SPARK_QUERIES_EXT)
-ORACLE_SQL.update(ORACLE_SQL_EXT)
-
-ORACLE_SQL.update(
-    {
-        "text_stats": f"""
+@row(f"""
             WITH t AS (
                 SELECT doc_id, text,
                        regexp_extract_all(lower(text), '[a-z0-9]+') AS words
                 FROM documents
             )
             SELECT doc_id,
-                   CAST(len(regexp_extract_all(text, '{_TOKEN_PAT}')) AS BIGINT) AS n_tokens,
+                   CAST(len(regexp_extract_all(text, '{TOKEN_PATTERN}')) AS BIGINT) AS n_tokens,
                    CAST(len(words) AS BIGINT) AS n_words,
                    round(CASE WHEN len(words) > 0 THEN
                        list_sum(list_transform(words, w -> length(w))) / len(words)
@@ -1355,8 +1170,17 @@ ORACLE_SQL.update(
                    round(len(list_filter(words, w -> list_contains({_STOP_EN}, w)))
                          / greatest(len(words), 1), 6) AS stopword_ratio
             FROM t
-        """,
-        "text_quality": f"""
+        """)
+def text_stats(spark: SparkSession, sf: str) -> DataFrame:
+    """Text quality features over documents (native expressions)."""
+    docs = load_table(spark, sf, "documents")
+    return _with_stats(docs).select(
+        "doc_id", "n_tokens", "n_words", "avg_word_len",
+        "punct_ratio", "stopword_ratio",
+    )
+
+
+@row(f"""
             WITH t AS (
                 SELECT doc_id, text,
                        regexp_extract_all(lower(text), '[a-z0-9]+') AS words
@@ -1387,8 +1211,14 @@ ORACLE_SQL.update(
                      + (CASE WHEN stopword_ratio >= 0.01 THEN 0.25 ELSE 0.0 END)
                    , 6) >= 0.5 AS keep
             FROM s
-        """,
-        "language_id": f"""
+        """)
+def text_quality(spark: SparkSession, sf: str) -> DataFrame:
+    """Composite quality score + keep flag."""
+    docs = load_table(spark, sf, "documents")
+    return _with_quality(docs).select("doc_id", "quality_score", "keep")
+
+
+@row(f"""
             WITH t AS (
                 SELECT doc_id, text,
                        regexp_extract_all(lower(text), '[a-z0-9]+') AS words
@@ -1411,13 +1241,25 @@ ORACLE_SQL.update(
                        ELSE 'fr'
                    END AS lang_pred
             FROM s
-        """,
-        "doc_fingerprint": """
+        """)
+def language_id(spark: SparkSession, sf: str) -> DataFrame:
+    """Stopword/CJK heuristic language classification."""
+    docs = load_table(spark, sf, "documents")
+    return _with_lang(docs).select("doc_id", "lang_pred")
+
+
+@row("""
             SELECT doc_id,
                    md5(trim(regexp_replace(lower(text), '\\s+', ' ', 'g'))) AS fingerprint
             FROM documents
-        """,
-        "pii_scrub": """
+        """)
+def doc_fingerprint(spark: SparkSession, sf: str) -> DataFrame:
+    """md5 fingerprint of normalized text."""
+    docs = load_table(spark, sf, "documents")
+    return _with_fp(docs).select("doc_id", "fingerprint")
+
+
+@row("""
             SELECT doc_id,
                    CAST(len(regexp_extract_all(text, 'https?://[^\\s]+')) AS BIGINT) AS n_urls,
                    CAST(len(regexp_extract_all(text,
@@ -1427,15 +1269,31 @@ ORACLE_SQL.update(
                         '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\\.[A-Za-z]{2,}', '<EMAIL>', 'g'
                    )) AS clean_hash
             FROM documents
-        """,
-        "exact_dedup_docs": """
+        """)
+def pii_scrub(spark: SparkSession, sf: str) -> DataFrame:
+    """URL/email counting + masking over documents (intake cleanup)."""
+    from .llm.text import with_pii_scrub
+
+    docs = load_table(spark, sf, "documents")
+    return with_pii_scrub(docs).select(
+        "doc_id", "n_urls", "n_emails", F.md5("clean_text").alias("clean_hash")
+    )
+
+
+@row("""
             SELECT md5(trim(regexp_replace(lower(text), '\\s+', ' ', 'g'))) AS fingerprint,
                    CAST(min(doc_id) AS BIGINT) AS keeper_id,
                    count(*) AS n_copies
             FROM documents
             GROUP BY 1
-        """,
-        "ngram_jaccard_dedup": """
+        """)
+def exact_dedup_docs(spark: SparkSession, sf: str) -> DataFrame:
+    """Exact dedup by content hash: keeper id + copy count per hash."""
+    docs = load_table(spark, sf, "documents")
+    return _exact_dedup(docs)
+
+
+@row("""
             WITH base AS (
                 SELECT doc_id,
                        substring(text, 1, 40) AS block,
@@ -1455,8 +1313,40 @@ ORACLE_SQL.update(
               ON a.block = b.block AND a.doc_id < b.doc_id
             WHERE round(len(list_intersect(a.sh, b.sh)) /
                         (len(a.sh) + len(b.sh) - len(list_intersect(a.sh, b.sh))), 6) >= 0.5
-        """,
-        "embedding_cosine_topk": """
+        """)
+def ngram_jaccard_dedup(spark: SparkSession, sf: str) -> DataFrame:
+    """Exact 3-gram Jaccard near-dup pairs with prefix blocking."""
+    docs = load_table(spark, sf, "documents")
+    return _ngram_pairs(docs, block_chars=40, threshold=0.5)
+
+
+@row(_minhash_lsh_oracle_sql())
+def minhash_lsh_dedup(spark: SparkSession, sf: str) -> DataFrame:
+    """MinHash+LSH near-dup pairs (signature-estimated Jaccard).
+
+    Oracle-checked since round 3: the signature family is md5-base +
+    Carter-Wegman slots (engine-portable), so DuckDB replays the exact
+    signatures and banding — see ``queries_ext._minhash_lsh_oracle_sql``.
+    The exact-Jaccard twin ``ngram_jaccard_dedup`` covers the same
+    semantics without the estimator.
+    """
+    docs = load_table(spark, sf, "documents")
+    return _minhash_pairs(docs, threshold=0.5)
+
+
+@row(_simhash_oracle_sql())
+def simhash_dedup(spark: SparkSession, sf: str) -> DataFrame:
+    """SimHash near-dup pairs (Hamming <= 3 on 64-bit fingerprints).
+    Oracle-checked since round 3: fingerprint bits derive from md5
+    quarters (engine-portable), so DuckDB replays the exact pipeline —
+    see ``queries_ext._simhash_oracle_sql``. tests/test_llm_ops.py
+    additionally checks the banded blocking recovers every pair a
+    brute-force Hamming scan finds."""
+    docs = load_table(spark, sf, "documents")
+    return _simhash_pairs(_simhash(docs), max_hamming=3)
+
+
+@row("""
             WITH q AS (
                 SELECT vec_id AS query_id, CAST(embedding AS DOUBLE[]) AS qv
                 FROM embeddings WHERE vec_id < 10
@@ -1476,8 +1366,27 @@ ORACLE_SQL.update(
                 ) AS INT) AS rank
                 FROM scored
             ) t WHERE rank <= 5
-        """,
-        "embedding_near_dup": """
+        """)
+def embedding_cosine_topk(spark: SparkSession, sf: str) -> DataFrame:
+    """Brute-force cosine top-5 for the first 10 query vectors."""
+    emb = load_table(spark, sf, "embeddings")
+    queries_df = emb.filter(F.col("vec_id") < 10)
+    return _bf_topk(queries_df, emb, k=5)
+
+
+@row(_lsh_topk_oracle_sql())
+def embedding_lsh_topk(spark: SparkSession, sf: str) -> DataFrame:
+    """Banded-LSH approximate top-5: equi-join on (band_idx, band_val),
+    exact re-rank of candidates only (the scale path). Oracle-checked
+    since round 3: the hyperplanes are a fixed md5-derived ±1 matrix
+    (``llm.similarity.sign_matrix``), so DuckDB replays the exact sign
+    bits — see ``queries_ext._lsh_topk_oracle_sql``."""
+    emb = load_table(spark, sf, "embeddings")
+    queries_df = emb.filter(F.col("vec_id") < 10)
+    return _lsh_topk(queries_df, emb, k=5, target_cos=0.25, recall=0.95)
+
+
+@row("""
             WITH v AS (
                 SELECT vec_id, CAST(embedding AS DOUBLE[]) AS e FROM embeddings
             )
@@ -1489,18 +1398,39 @@ ORACLE_SQL.update(
             WHERE round(list_dot_product(a.e, b.e)
                         / (sqrt(list_dot_product(a.e, a.e))
                            * sqrt(list_dot_product(b.e, b.e))), 6) >= 0.4
-        """,
-    }
-)
+        """)
+def embedding_near_dup(spark: SparkSession, sf: str) -> DataFrame:
+    """Embedding-cosine near-duplicate pairs (score >= 0.4)."""
+    emb = load_table(spark, sf, "embeddings")
+    return _emb_pairs(emb, threshold=0.4)
 
-# ---------------------------------------------------------------------------
+
+@row(_ivf_topk_oracle_sql())
+def embedding_ivf_topk(spark: SparkSession, sf: str) -> DataFrame:
+    """IVF approximate top-5: coarse-centroid lists + nprobe search.
+    Oracle-checked since round 3: train_centroids is deterministic, so
+    the whole index (k-means replay + list assignment + nprobe search)
+    replays in DuckDB — see queries_ext._ivf_topk_oracle_sql. The
+    exact twin is embedding_cosine_topk."""
+    from .llm.similarity import ivf_topk as _ivf
+
+    emb = load_table(spark, sf, "embeddings")
+    queries_df = emb.filter(F.col("vec_id") < 10)
+    return _ivf(queries_df, emb, k=5, n_lists=16, nprobe=4)
+
+
+# --------------------------------------------------------------------------
+# Registry
+# --------------------------------------------------------------------------
+
 # Declared registry order. The driver's correctness harness records rows
 # for the FIRST 50 registry entries only, so those 50 are the rows the
 # driver verifies (each one DuckDB-oracled), followed by the 8 rows
 # parked right behind the window when they left it (each keeps an
 # in-window relative of its operator family; the local mirror,
 # scripts/check_correctness.py, still checks them every round). Every
-# other key follows in registration order.
+# other row follows in declaration order, this module's rows before
+# queries_ext's.
 DRIVER_ORDER = [
     "q1_pricing_summary", "q3_shipping_priority", "q4_order_priority",
     "q5_local_supplier", "q7_volume_shipping", "q17_small_quantity",
@@ -1525,77 +1455,16 @@ DRIVER_ORDER = [
     "pivot_event_counts", "dense_rank_balances", "json_struct_parse",
     "cube_counts", "distinct_users_exact",
 ]
-_registered = dict(SPARK_QUERIES)
-SPARK_QUERIES.clear()
-SPARK_QUERIES.update({k: _registered.pop(k) for k in DRIVER_ORDER})
-SPARK_QUERIES.update(_registered)
-del _registered
 
-# perplexity_bucket_docs oracle lives here (not queries_ext) because it
-# composes the bigram-LM replay with the language-id CASE, whose
-# stopword macros are this module's. Registered AFTER the declared
-# order, so dict order is unaffected (ORACLE_SQL is not
-# order-sensitive).
-ORACLE_SQL["perplexity_bucket_docs"] = f"""
-    WITH toks AS (
-        SELECT doc_id, text,
-               regexp_extract_all(lower(coalesce(text, '')), '[a-z0-9]+') AS w
-        FROM documents
-    ),
-    db AS (
-        SELECT doc_id,
-               unnest(list_transform(
-                   generate_series(1, len(w) - 1),
-                   i -> w[i] || ' ' || w[i+1])) AS bigram
-        FROM toks WHERE len(w) >= 2
-    ),
-    bc AS (SELECT bigram, CAST(count(*) AS DOUBLE) AS c12
-           FROM db GROUP BY bigram),
-    uc AS (SELECT split_part(bigram, ' ', 1) AS w1,
-                  CAST(count(*) AS DOUBLE) AS c1
-           FROM db GROUP BY 1),
-    vv AS (SELECT CAST(count(DISTINCT tok) AS DOUBLE) AS v
-           FROM (SELECT unnest(w) AS tok FROM toks)),
-    lp AS (
-        SELECT bc.bigram, ln((c12 + 0.5) / (c1 + 0.5 * v)) AS lp
-        FROM bc JOIN uc ON split_part(bc.bigram, ' ', 1) = uc.w1
-        CROSS JOIN vv
-    ),
-    sc AS (
-        SELECT doc_id, round(avg(lp), 6) AS avg_logprob
-        FROM db JOIN lp USING (bigram)
-        GROUP BY doc_id
-    ),
-    lang AS (
-        SELECT doc_id,
-               CASE
-                   WHEN regexp_matches(text, '[\\x{{4e00}}-\\x{{9fff}}]') THEN 'zh'
-                   WHEN greatest(s_en, s_de, s_es, s_fr) = 0 THEN 'und'
-                   WHEN s_en = greatest(s_en, s_de, s_es, s_fr) THEN 'en'
-                   WHEN s_de = greatest(s_en, s_de, s_es, s_fr) THEN 'de'
-                   WHEN s_es = greatest(s_en, s_de, s_es, s_fr) THEN 'es'
-                   ELSE 'fr'
-               END AS lang_pred
-        FROM (
-            SELECT doc_id, text,
-                   len(list_filter(w, x -> list_contains({_STOP_EN}, x))) AS s_en,
-                   len(list_filter(w, x -> list_contains({_STOP_DE}, x))) AS s_de,
-                   len(list_filter(w, x -> list_contains({_STOP_ES}, x))) AS s_es,
-                   len(list_filter(w, x -> list_contains({_STOP_FR}, x))) AS s_fr
-            FROM toks
-        )
-    ),
-    r AS (
-        SELECT s.doc_id, l.lang_pred, s.avg_logprob,
-               row_number() OVER (PARTITION BY l.lang_pred
-                                  ORDER BY s.avg_logprob DESC, s.doc_id) AS rn,
-               count(*) OVER (PARTITION BY l.lang_pred) AS n
-        FROM sc s JOIN lang l USING (doc_id)
-    )
-    SELECT doc_id, lang_pred, avg_logprob,
-           CASE WHEN rn <= n // 3 THEN 'head'
-                WHEN rn <= (n * 2) // 3 THEN 'middle'
-                ELSE 'tail' END AS ppl_bucket,
-           rn <= (n * 2) // 3 AS keep
-    FROM r ORDER BY doc_id
-"""
+_DECLARED = {
+    name: (fn, oracle)
+    for module in (sys.modules[__name__], queries_ext)
+    for name, fn, oracle in declared_rows(module)
+}
+SPARK_QUERIES: dict[str, QueryFn] = {
+    name: _DECLARED[name][0]
+    for name in DRIVER_ORDER + [n for n in _DECLARED if n not in DRIVER_ORDER]
+}
+ORACLE_SQL: dict[str, str] = {
+    name: _DECLARED[name][1] for name in SPARK_QUERIES if _DECLARED[name][1] is not None
+}

@@ -2,11 +2,22 @@
 
 The driver's correctness harness records rows for the first 50 registry
 entries only, and those 50 were all green in round 1 — so their names
-and order are frozen. Extension queries must register strictly after
-them, and every oracle must point at a registered query.
+and order are frozen. Extension queries sit after them unless
+``queries.DRIVER_ORDER`` promotes them, every oracle must point at a
+registered query, and the registry is derived from one declaration per
+row (``queries_ext.row``), never mutated after it is built.
 """
 
 from __future__ import annotations
+
+import ast
+import json
+import subprocess
+import sys
+from pathlib import Path
+
+ROOT = Path(__file__).resolve().parents[1]
+PACKAGE = ROOT / "quantlab_data_pipeline_spark"
 
 # The exact first-50 window the driver checks. Round 3 (VERDICT r2
 # item 1): the four rows-only LSH/sketch queries that could never earn
@@ -53,8 +64,8 @@ FROZEN_FIRST_50 = [
 
 
 # Positions 51-191 as registered today. With FROZEN_FIRST_50 this pins
-# the whole registry order, so replacing the rotation code at the end
-# of queries.py with a declared order cannot move a row unnoticed.
+# the whole registry order, so moving a declaration or editing
+# queries.DRIVER_ORDER cannot move a row unnoticed.
 FROZEN_AFTER_50 = [
     "window_range_frame", "doc_fingerprint", "embedding_near_dup",
     "pivot_event_counts", "dense_rank_balances", "json_struct_parse",
@@ -110,9 +121,8 @@ FROZEN_AFTER_50 = [
     "embedding_drift_docs",
 ]
 
-# Extension queries deliberately promoted into the driver window
-# (registered inside queries.py before the bulk ext merge, or rotated
-# in by the round-7 reorder block at the end of queries.py).
+# Extension queries deliberately promoted into the driver window (listed
+# in queries.DRIVER_ORDER).
 PROMOTED_EXT = {
     "asof_forward_events", "merge_intervals_events", "scd2_events",
     "bm25_search_docs", "ml_quality_frozen_docs", "html_extract_docs",
@@ -143,7 +153,6 @@ def test_every_oracle_has_a_query():
 
 def test_extension_queries_register_after_the_window():
     from quantlab_data_pipeline_spark.queries import SPARK_QUERIES
-    from quantlab_data_pipeline_spark.queries_ext import SPARK_QUERIES_EXT
 
     order = list(SPARK_QUERIES)
     # Positions 51-52: the rows displaced by the round-9 rotation
@@ -162,11 +171,134 @@ def test_extension_queries_register_after_the_window():
         "distinct_users_sketch", "minhash_lsh_dedup", "simhash_dedup",
         "embedding_lsh_topk", "embedding_ivf_topk",
     ]
-    for name in SPARK_QUERIES_EXT:
+    ext = [
+        name for name, fn in SPARK_QUERIES.items()
+        if fn.__module__ == "quantlab_data_pipeline_spark.queries_ext"
+    ]
+    assert PROMOTED_EXT <= set(ext)
+    for name in ext:
         if name in PROMOTED_EXT:
             assert order.index(name) < 50
         else:
             assert order.index(name) > 50
+
+
+def test_each_row_is_declared_once():
+    from quantlab_data_pipeline_spark import queries, queries_ext
+
+    declared = [
+        name
+        for module in (queries, queries_ext)
+        for name, _, _ in queries_ext.declared_rows(module)
+    ]
+    assert sorted(declared) == sorted(queries.SPARK_QUERIES)
+
+
+def test_registry_does_not_depend_on_import_order():
+    code = (
+        "import json\n"
+        "import quantlab_data_pipeline_spark.queries_ext\n"
+        "from quantlab_data_pipeline_spark.queries import ORACLE_SQL, SPARK_QUERIES\n"
+        "print(json.dumps([list(SPARK_QUERIES), len(ORACLE_SQL)]))\n"
+    )
+    out = subprocess.run(
+        [sys.executable, "-c", code], cwd=ROOT, capture_output=True, text=True, check=True
+    )
+    order, n_oracles = json.loads(out.stdout.splitlines()[-1])
+    assert order == FROZEN_FIRST_50 + FROZEN_AFTER_50
+    assert n_oracles == 185
+
+
+def _literal_names(path: Path, names: set[str]) -> dict[str, list[str]]:
+    """The entries (keys, for a dict) of the top-level literals ``names``
+    in ``path``, read without importing it."""
+    found = {}
+    for node in ast.parse(path.read_text()).body:
+        if isinstance(node, ast.Assign) and isinstance(node.targets[0], ast.Name):
+            if node.targets[0].id in names:
+                found[node.targets[0].id] = list(ast.literal_eval(node.value))
+    return found
+
+
+def test_every_benched_row_is_registered():
+    """bench.py runs only ``[n for n in SECTION if n in SPARK_QUERIES]``,
+    so a dropped or renamed row would silently shrink a section."""
+    from quantlab_data_pipeline_spark.queries import SPARK_QUERIES
+
+    lists = {
+        "bench.py": {"HEADLINE", "EXTENDED", "CURATION", "INTAKE"},
+        "scripts/dump_plans.py": {"HEADLINE"},
+        "perfbench/curation.py": {"ROW_LAYER"},
+    }
+    for rel, names in lists.items():
+        found = _literal_names(ROOT / rel, names)
+        assert set(found) == names, rel
+        for name, rows in found.items():
+            missing = [r for r in rows if r not in SPARK_QUERIES]
+            assert not missing, f"{rel} {name}: {missing}"
+
+
+_REGISTRY_DICTS = {"SPARK_QUERIES", "ORACLE_SQL"}
+_MUTATORS = {"update", "clear", "pop", "popitem", "setdefault"}
+
+
+def _registry_mutations(source: str) -> list[int]:
+    """Lines of ``source`` that change a registry dict after it is
+    built: a subscript assignment or deletion on ``SPARK_QUERIES`` or
+    ``ORACLE_SQL`` (or an ``*_EXT`` twin), or a call of one of their
+    mutating methods."""
+
+    def registry(node: ast.AST) -> bool:
+        name = (
+            node.id if isinstance(node, ast.Name)
+            else node.attr if isinstance(node, ast.Attribute)
+            else ""
+        )
+        return name.removesuffix("_EXT") in _REGISTRY_DICTS
+
+    lines = []
+    for node in ast.walk(ast.parse(source)):
+        targets = (
+            node.targets if isinstance(node, (ast.Assign, ast.Delete))
+            else [node.target] if isinstance(node, (ast.AugAssign, ast.AnnAssign))
+            else []
+        )
+        if any(isinstance(t, ast.Subscript) and registry(t.value) for t in targets):
+            lines.append(node.lineno)
+        if (
+            isinstance(node, ast.Call)
+            and isinstance(node.func, ast.Attribute)
+            and node.func.attr in _MUTATORS
+            and registry(node.func.value)
+        ):
+            lines.append(node.lineno)
+    return sorted(lines)
+
+
+def test_registry_is_never_mutated():
+    offenders = {
+        p.relative_to(PACKAGE).as_posix(): lines
+        for p in sorted(PACKAGE.rglob("*.py"))
+        if (lines := _registry_mutations(p.read_text()))
+    }
+    assert offenders == {}
+
+
+def test_registry_mutation_guard_sees_each_shape():
+    src = (
+        'SPARK_QUERIES = {"a": f}\n'
+        'SPARK_QUERIES["b"] = g\n'
+        'ORACLE_SQL_EXT["b"] = "SELECT 1"\n'
+        "ORACLE_SQL.update(ORACLE_SQL_EXT)\n"
+        "SPARK_QUERIES.clear()\n"
+        'sql = ORACLE_SQL.get("a")\n'
+        'del ORACLE_SQL["a"]\n'
+        'queries.SPARK_QUERIES.pop("a")\n'
+        'other["a"] = SPARK_QUERIES["a"]\n'
+        "rows = dict(SPARK_QUERIES)\n"
+        'rows.pop("a")\n'
+    )
+    assert _registry_mutations(src) == [2, 3, 4, 5, 7, 8]
 
 
 def test_entry_contract_exposes_full_registry():
@@ -182,7 +314,7 @@ def test_no_cartesian_and_only_whitelisted_nested_loops(spark):
     may plan a CartesianProduct, and BroadcastNestedLoopJoin is allowed
     only where a documented driver-scale frame is broadcast. Runs on a
     cheap non-iterative subset so the full suite stays fast; the script
-    covers all 113."""
+    covers all 191."""
     import __spark_entry__ as entry
     from scripts.plan_audit import BNLJ_WHITELIST
 
